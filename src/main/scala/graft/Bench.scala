@@ -1,33 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same TZ as Verify: window/bucket boundaries on event timestamps
-      // are session-TZ-dependent — the bench must time the SAME plans
-      // the correctness gate verifies
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // STATIC conf, so it must land before the session exists: the
-      // default codegen class cache holds only 100 entries, and a
-      // 176-query bench compiles far more generated classes than that —
-      // under eviction a query's cost swings with whatever ran before
-      // it (r9's 3.0<->7.2s pipeline_html_curate spread). Size the
-      // cache past the whole suite so per-query timings measure the
-      // query, not cache luck.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // managed (bucketed) tables land in tmp, never in the repo tree;
-      // pid-suffixed so a concurrent Verify can't clobber them
-      .config("spark.sql.warehouse.dir", graft.Warehouse.dir)
-      .getOrCreate()
-    // ERROR, not WARN: executor-thread WARNs land on stderr interleaved
-    // with stdout in the harness capture and can push the result line out
-    // of its 2000-char tail window
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
     // surface fixture schema drift up front with one named diff (see
     // Tables.validate), then continue: per-query errors land in the
     // explicit `errored` list, and the stderr report explains them

@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * so `spark.sql(...)` users get them too. Two installation paths:
   *
   * {{{
-  * // at session build (preferred — works via config too):
+  * // at session build (preferred — GraftSession.build does this;
+  * // works via config too):
   * SparkSession.builder().withExtensions(new GraftExtensions)...
   * //   or .config("spark.sql.extensions", "graft.GraftExtensions")
   * // into an already-running session:
@@ -90,13 +91,16 @@ object GraftExtensions {
       }))
 
   /** Install into an existing session (builder extensions only apply at
-    * first session creation). */
+    * first session creation). Idempotent: the optimizer rule is added
+    * only where neither the builder nor an earlier call installed it. */
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (id, inf, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
     }
     val extra = spark.sessionState.experimentalMethods
-    if (!extra.extraOptimizations.contains(graft.plans.RegexPrefixPushdown))
+    val installed = extra.extraOptimizations ++
+      spark.sessionState.optimizer.extendedOperatorOptimizationRules
+    if (!installed.contains(graft.plans.RegexPrefixPushdown))
       extra.extraOptimizations =
         extra.extraOptimizations :+ graft.plans.RegexPrefixPushdown
   }

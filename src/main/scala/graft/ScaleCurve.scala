@@ -18,7 +18,8 @@ import org.apache.spark.sql.SparkSession
   * overhead that biases a full fit toward sub-linear), `exp_fit` is the
   * least-squares log-log slope over all distinct sizes.
   *
-  * Emits one JSON line to stdout and SCALECURVE_r12.json.
+  * Run as `graft.Dev scale sfDir [sfDir ...]`; emits one JSON line to
+  * stdout and `$SPARK_GRAFT_CURVE_OUT`.
   */
 object ScaleCurve {
 
@@ -117,9 +118,7 @@ object ScaleCurve {
     * SCALE.md §14 claim that trainer cost is per-merge flat, measured
     * 4x past the graded 8192-merge datapoint. */
   /** k salted copies of the src0 shard for the suffix-array capacity
-    * probes — ONE builder shared by `probe_suffix_chars` and
-    * [[DevSaProbe]] (r16 ADVICE: two verbatim copies could silently
-    * drift and make manual datapoints incomparable with the curve's).
+    * probe `probe_suffix_chars`.
     *
     * The per-copy salt is a token SUFFIX ("tok_c"), which de-dups
     * every 20-char window that touches a token boundary or a salt; a
@@ -129,7 +128,7 @@ object ScaleCurve {
     * the linear-span-volume claim was fixture-dependent and
     * unchecked) — a fixture change fails the probe loudly instead of
     * silently bending the measured curve quadratic. */
-  private[graft] def saltedSaCorpus(s: SparkSession, dir: String,
+  private def saltedSaCorpus(s: SparkSession, dir: String,
       k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     val src = Tables.documents(s, dir)
@@ -204,24 +203,12 @@ object ScaleCurve {
       Seq((n, chars)).toDF("spans", "chars")
     }))
 
-  def main(args: Array[String]): Unit = {
-    val sfDirs = if (args.nonEmpty) args.toSeq
-      else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-        "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Times every target at each of `sfDirs`, median of
+    * `$SPARK_GRAFT_CURVE_REPS` (default 3) runs. */
+  def run(spark: SparkSession, sfDirs: Seq[String]): Unit = {
     val reps = sys.env.getOrElse("SPARK_GRAFT_CURVE_REPS", "3").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_CURVE_OUT",
       "SCALECURVE_r14.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: codegen cache sized past the suite (static conf)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.warehouse.dir", graft.Warehouse.dir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
 
     val queries = SparkEntry.queries
@@ -294,6 +281,5 @@ object ScaleCurve {
     catch { case e: Throwable =>
       System.err.println(s"[curve] write failed: ${e.getMessage}") }
     println(line)
-    spark.stop()
   }
 }

@@ -1,11 +1,11 @@
 package graft
 
-/** Per-JVM managed-table warehouse location. Bench, Verify, PlanAudit
-  * and DevBench all create bucketed tables with FIXED names
-  * (`graft_bkt_*`) — [[graft.ops.Bucketing.writeBucketed]] clears the
-  * table's managed directory by name before writing, so two JVMs
-  * sharing one warehouse path could delete each other's table
-  * mid-query if run concurrently. Suffixing the warehouse root with
+/** Per-JVM managed-table warehouse location. Every [[GraftSession]]
+  * (Bench, Verify, Dev, the test suite) can create bucketed tables with
+  * FIXED names (`graft_bkt_*`) — [[graft.ops.Bucketing.writeBucketed]]
+  * clears the table's managed directory by name before writing, so
+  * two JVMs sharing one warehouse path could delete each other's
+  * table mid-query if run concurrently. Suffixing the warehouse root with
   * the JVM pid makes each process's catalog state private without
   * renaming any table; the shutdown hook reclaims the tmp space (a
   * kill -9 leaves the directory, which the OS tmp reaper handles —

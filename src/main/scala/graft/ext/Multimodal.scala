@@ -828,10 +828,4 @@ object Multimodal {
         }
     }
   }
-
-  /** Back-compat alias from the rounds where the decode step was a pure
-    * stub; the pipeline now does real PNG/JPEG decode via javax.imageio
-    * with [[Decoder.decodeStub]] as the non-image fallback. */
-  @deprecated("use Decoder — the decode step is real for PNG/JPEG", "r4")
-  def StubDecoder: Decoder.type = Decoder
 }

@@ -709,13 +709,6 @@ object Similarity {
   private def trainOnSlices(s: DataFrame, k: Int, iters: Int): DataFrame =
     booksToDF(s.sparkSession, trainOnSlicesLocal(s, k, iters))
 
-  /** Encode every vector against trained codebooks: (id, sub, code) —
-    * the m-code compressed representation that gets STORED at scale. */
-  def pqEncode(e: DataFrame, books: DataFrame, m: Int = 8,
-      dims: Int = 64): DataFrame =
-    encodeSlices(subspaceSlices(e, m, dims), collectBooks(books))
-      .select("id", "sub", "code")
-
   /** ADC top-k: the query builds an m×k lookup table of per-subspace
     * partial dots and codeword norms against the codebooks (broadcast —
     * it IS the whole model), codes join it keyed on (sub, code), and

@@ -75,17 +75,6 @@ object PathAlg {
         fileNumber.fold(d)(n => enumerateDestinationFileName(d, n))
       case _ => basename(sourceFullPath)
     }
-
-  /** X6 `determine_destination_full_path` — X5 then X2
-    * (`upload_file.py:130-144`). */
-  def determineDestinationFullPath(
-      destinationFolderName: String,
-      destinationFileName: Option[String],
-      sourceFullPath: String,
-      fileNumber: Option[Int] = None): String =
-    combineFolderAndFileName(
-      destinationFolderName,
-      determineDestinationFileName(sourceFullPath, destinationFileName, fileNumber))
 }
 
 object PathFunctions {

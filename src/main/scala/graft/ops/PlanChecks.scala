@@ -97,18 +97,6 @@ object PlanChecks {
           s"\nfull plan:\n$plan")
   }
 
-  /** Fails if the plan references `fragment` anywhere — used with a
-    * file-path fragment (e.g. "documents.parquet") to prove a query's
-    * TAIL reads a derived store rather than re-scanning the raw
-    * corpus: scan locations are the only place paths appear in an
-    * executed plan, so a match means a scan of that source. */
-  def assertNoScanOf(df: DataFrame, fragment: String): Unit = {
-    val plan = executedPlan(df)
-    if (plan.contains(fragment))
-      throw new IllegalStateException(
-        s"plan contract violated: plan scans '$fragment'\n$plan")
-  }
-
   /** Fails unless the plan carries a `WindowGroupLimit` — Spark 4's
     * rank-limit pushdown, the ONLY reason a low-cardinality
     * `row_number ... WHERE rn <= k` window is scale-safe (partial

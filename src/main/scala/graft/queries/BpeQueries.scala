@@ -137,7 +137,7 @@ object BpeQueries {
     * only raise trainLocal's argmax cost, merges x live pairs, which
     * the bench pays 4x per round). The merge-forest exhaustion bound
     * scales ~linearly in `buckets`: the 32k-merge scale probe
-    * (`ScaleCurve` / `DevBpeK`) passes 384.
+    * (`ScaleCurve`'s `probe_bpe_train32k`) passes 384.
     * Deterministic (md5 of token and bucket), map-only derivation.
     * Returns the `(word, freq)` table and the salted corpus re-joined
     * as text, so the encode legs run over exactly the surface the
@@ -1092,8 +1092,8 @@ FROM enc, mc ORDER BY doc_id"""
     // corpus encoded twice with encodeScalable \u2014 under the first 12
     // merges and under all 8192 (`take(12)` IS the k=12 table: the
     // continuation invariant is spec-pinned) \u2014 so the scaling curve
-    // carries a measured >=8k-merge point and DevBpeK can contrast
-    // encode wall-time in k. Correctness is rows-only (an 8192-stage
+    // carries a measured >=8k-merge point (SCALE.md records the encode
+    // wall-time contrast in k). Correctness is rows-only (an 8192-stage
     // DuckDB replay chain is not writable), so the self-consistency
     // invariant is MACHINE-CHECKED in the plan instead: more merges
     // always compress further (n_tokens_kbig < n_tokens_k12 <

@@ -7,14 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsAndAzureSpec extends AnyFunSuite {
 
-  // the shared test session already exists, so use the runtime
-  // registration path (builder .withExtensions only applies at first
-  // session creation — both paths share GraftExtensions.functions)
-  lazy val spark: SparkSession = {
-    val s = TestSpark.spark
-    GraftExtensions.register(s)
-    s
-  }
+  // GraftSession.build installs the extensions
+  lazy val spark: SparkSession = TestSpark.spark
 
   test("regexp_replace_first available from SQL with reference semantics") {
     val got = spark.sql(

@@ -3,22 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM; forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM; forked by sbt):
+  * the [[GraftSession]] the mains run, fixed at 4 cores so plan-shape
+  * specs do not depend on the host's core count. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // managed (bucketed) tables land in tmp, never in the repo tree
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse-test")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val Cores = 4
+  lazy val spark: SparkSession = GraftSession.build(Cores)
 
   /** ONE per-JVM root for every spec temp dir, deleted recursively on
     * JVM exit — the spec suites create ~70 temp dirs per `sbt test`

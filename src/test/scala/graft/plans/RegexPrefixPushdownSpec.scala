@@ -1,15 +1,9 @@
 package graft.plans
 
-import graft.{GraftExtensions, SparkSpec, Tables, TestSpark}
+import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
 class RegexPrefixPushdownSpec extends SparkSpec {
-
-  override lazy val spark = {
-    val s = TestSpark.spark
-    GraftExtensions.register(s)
-    s
-  }
 
   test("literalPrefix extraction") {
     assert(RegexPrefixPushdown.literalPrefix("^logs/2024/.*\\.log") ==
