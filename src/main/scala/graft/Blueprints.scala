@@ -35,11 +35,15 @@ object Blueprints {
       containerUri: String,
       destinationFolderName: String = "",
       destinationFileName: Option[String] = None,
-      execute: Boolean = true): Report =
-    transferLike(spark, sourceRoot, sourceFolderName, sourceFileName,
-      containerUri, destinationFolderName, destinationFileName,
+      execute: Boolean = true): Report = {
+    val r = transferLike(spark, sourceRoot, sourceFolderName,
+      sourceFileName, containerUri, destinationFolderName,
+      destinationFileName,
       // upload numbers every regex match 1..n (upload_file.py:215-220)
-      RenamePlan.Numbering.Always, execute, Transfer.copyFiles(_))
+      RenamePlan.Numbering.Always)
+    if (execute) Transfer.copyFiles(r.manifest)
+    r
+  }
 
   /** download_file.py:190-237 — container -> local folder. */
   def download(
@@ -50,10 +54,13 @@ object Blueprints {
       destinationRoot: String,
       destinationFolderName: String = "",
       destinationFileName: Option[String] = None,
-      execute: Boolean = true): Report =
-    transferLike(spark, containerUri, sourceFolderName, sourceFileName,
-      destinationRoot, destinationFolderName, destinationFileName,
-      RenamePlan.Numbering.Always, execute, Transfer.copyFiles(_))
+      execute: Boolean = true): Report = {
+    val r = transferLike(spark, containerUri, sourceFolderName,
+      sourceFileName, destinationRoot, destinationFolderName,
+      destinationFileName, RenamePlan.Numbering.Always)
+    if (execute) Transfer.copyFiles(r.manifest)
+    r
+  }
 
   /** move_file.py:110-156 — blob -> blob within a container. Zero matches
     * raise NoMatchesFound (exit 200); single match is NOT numbered
@@ -68,8 +75,7 @@ object Blueprints {
       execute: Boolean = true): Report = {
     val r = transferLike(spark, containerUri, sourceFolderName,
       sourceFileName, containerUri, destinationFolderName,
-      destinationFileName, RenamePlan.Numbering.UnlessSingle,
-      execute = false, Transfer.moveFiles(_))
+      destinationFileName, RenamePlan.Numbering.UnlessSingle)
     if (r.matched == 0) sourceFileName match {
       case RegexMatch(p) => throw BlueprintError.NoMatchesFound(p)
       case ExactMatch(p) => throw BlueprintError.NoMatchesFound(p)
@@ -118,9 +124,7 @@ object Blueprints {
       spark: SparkSession,
       sourceRoot: String, sourceFolderName: String, matchType: MatchType,
       destRoot: String, destFolderName: String, destFileName: Option[String],
-      numbering: RenamePlan.Numbering,
-      execute: Boolean,
-      action: DataFrame => Unit): Report = {
+      numbering: RenamePlan.Numbering): Report = {
     val folder = functions.PathAlg.cleanFolderName(sourceFolderName)
     val catalog = scanAndMatch(spark, sourceRoot, folder, matchType)
     val effectiveNumbering = matchType match {
@@ -134,8 +138,6 @@ object Blueprints {
     val manifest = planned.select(
       col("path").as("src_path"),
       concat(lit(root), col("dest_path")).as("dest_path"))
-    val n = manifest.count()
-    if (execute) action(manifest)
-    Report(n, manifest)
+    Report(manifest.count(), manifest)
   }
 }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -104,18 +105,18 @@ object Bpe {
     // lookup walk an O(k)-deep nest, an O(k^2) driver tax.
     // The checkpoint truncates each iterate to a flat RDD scan, so
     // iteration cost is constant. (Executor loss mid-train would
-    // fail the job — at cluster scale hand a reliable checkpointDir
-    // to the session, same opt-in as the graph ops.)
+    // fail the job — at cluster scale set `spark.checkpoint.dir` and
+    // [[graft.ops.Materialize]] checkpoints reliably.)
     // Coalesce to a SMALL partition count, not one: the fixture vocab
     // is tiny (empty-task overhead would dominate a natural 32-way
     // split) but the module's own scale contract says the vocab table
     // can reach 10^6-10^8 rows — a handful of partitions keeps both
     // regimes healthy, and the localCheckpoint truncates the plan
     // regardless of partition count.
-    var cur = words
+    var cur = Materialize(words
       .select(delimit(col("word")).as("w"), col("freq"))
-      .coalesce(vocabPartitions)
-      .localCheckpoint(false)
+      .coalesce(vocabPartitions),
+      eager = false)
     val out = Seq.newBuilder[Merge]
     var rank = 1
     var done = false
@@ -139,12 +140,12 @@ object Bpe {
         val m = Merge(rank, best(0).getString(0),
           best(0).getString(1), best(0).getLong(2))
         out += m
-        cur = cur
+        cur = Materialize(cur
           .select(
             call_function("replace", col("w"), lit(pat(m)),
               lit(rep(m))).as("w"),
-            col("freq"))
-          .localCheckpoint(false)
+            col("freq")),
+          eager = false)
         rank += 1
       }
     }
@@ -406,7 +407,7 @@ object Bpe {
     // Materialize the (vocab-scale) table first: its lineage is usually
     // a corpus-scale tokenize + groupBy, and BOTH the guard aggregate
     // and the collect below would otherwise re-run it end to end.
-    val w = words.localCheckpoint(true)
+    val w = Materialize(words, eager = true)
     val st = w.agg(count(lit(1)), sum(length(col("word")))).head()
     val nRows = st.getLong(0)
     val nChars = if (st.isNullAt(1)) 0L else st.getLong(1)
@@ -425,7 +426,7 @@ object Bpe {
     val rows = w.select(col("word").cast("string"),
         col("freq").cast("long"))
       .collect()
-    w.unpersist()
+    Materialize.release(w)
     val initIdx =
       if (initialMerges.isEmpty) Map.empty[(String, String), Array[Int]]
       else mergeIndex(initialMerges)

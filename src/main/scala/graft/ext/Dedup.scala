@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -181,11 +182,11 @@ object Dedup {
     // frame is tiny (docs × bands rows of two longs), the cheapest
     // point in the pipeline to cut. Cache lifetime is caller-owned
     // (Bench/Verify clearCache), the module convention.
-    val banded = sig
+    val banded = Materialize(sig
       .withColumn("band",
         explode(bandKeyCols(profile.bands, profile.rowsPerBand)))
-      .select("id", "band")
-      .localCheckpoint(true)
+      .select("id", "band"),
+      eager = true)
     banded.select(col("band"), col("id").as("id_a"))
       .join(banded.select(col("band"), col("id").as("id_b")), Seq("band"))
       .filter(col("id_a") < col("id_b"))
@@ -205,15 +206,16 @@ object Dedup {
     // (doc, shingle)) feeds the banded-candidate pass AND both stages of
     // the mask build (vocabulary count, mask aggregate) — materialize it
     // once instead of re-running the shingling per consumer
-    val idx = tokenIndex(df, idCol, textCol, profile.shingleN)
-      .localCheckpoint(true)
+    val idx = Materialize(tokenIndex(df, idCol, textCol, profile.shingleN),
+      eager = true)
     val cand = lshCandidatesFromIndex(idx, profile)
     val reranked =
       // masks feed both the id_a and id_b sides of the re-rank join —
       // materialize once so the vocab + mask pipeline doesn't plan and
       // run once per side (same dedup as jaccardPairsBitset)
       if (bitsetRerank)
-        candidateJaccardBitset(cand, tokenMasks(idx).localCheckpoint(true))
+        candidateJaccardBitset(cand,
+          Materialize(tokenMasks(idx), eager = true))
       else candidateJaccard(cand, idx)
     reranked.filter(col("jaccard") >= profile.threshold)
   }
@@ -364,9 +366,9 @@ object Dedup {
     val cand =
       if (passes == 1) candPasses.head
       else candPasses.reduce(_ unionByName _).distinct()
-    val result = candidateJaccardBitset(cand, tokenMasks(idx))
-      .filter(col("jaccard") >= threshold)
-      .localCheckpoint(true)
+    val result = Materialize(candidateJaccardBitset(cand, tokenMasks(idx))
+      .filter(col("jaccard") >= threshold),
+      eager = true)
     idx.unpersist(false)
     sh.unpersist(false)
     result
@@ -584,11 +586,11 @@ object Dedup {
     // the token index feeds both mask-build stages (vocabulary count +
     // mask aggregate) — materialize once, same rationale as
     // minhashLshPairs
-    val idx = tokenIndex(df, idCol, textCol, n).localCheckpoint(true)
+    val idx = Materialize(tokenIndex(df, idCol, textCol, n), eager = true)
     val (rawMasks, maskWords) = tokenMasksWithWidth(idx)
-    val masks = rawMasks
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
+    val masks = Materialize(rawMasks
+      .repartition(df.sparkSession.sparkContext.defaultParallelism),
+      eager = true)
     val a = masks.select(col("id").as("id_a"), col("n_sh").as("na"),
       col("mask").as("mask_a"))
     val b = masks.select(col("id").as("id_b"), col("n_sh").as("nb"),

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -149,10 +150,10 @@ object Unigram {
     // materialize once (vocab-scale rows, corpus-scale lineage): the
     // guard aggregate AND the collect below both consume it — same
     // discipline as Bpe.trainLocal
-    val eligible = words
+    val eligible = Materialize(words
       .filter(length(col("word")) > 0 &&
-        length(col("word")) <= maxWordLen)
-      .localCheckpoint(true)
+        length(col("word")) <= maxWordLen),
+      eager = true)
     // the same pre-collect driver guard as Bpe.trainLocal: bound the
     // estimated footprint in the unit the driver OOMs in
     val st = eligible
@@ -190,7 +191,7 @@ object Unigram {
       .select(col("word").cast("string"), col("freq").cast("long"))
       .collect()
       .map(r => (r.getString(0), r.getLong(1)))
-    eligible.unpersist()
+    Materialize.release(eligible)
     // 2. seed: per-position substring occurrence counts
     val sub = mutable.HashMap[String, Long]()
     rows.foreach { case (w, f) =>

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -138,9 +139,9 @@ object WordPiece {
     // materialize once (vocab-scale rows, corpus-scale lineage): the
     // guard aggregate AND the collect below both consume it — same
     // discipline as Bpe.trainLocal
-    val eligible = words.filter(length(col("word")) > 0 &&
-      !col("word").contains(Marker.substring(0, 1)))
-      .localCheckpoint(true)
+    val eligible = Materialize(words.filter(length(col("word")) > 0 &&
+      !col("word").contains(Marker.substring(0, 1))),
+      eager = true)
     // the same pre-collect driver guard as Bpe/Unigram.trainLocal:
     // bound the estimated footprint in the unit the driver OOMs in
     val st = eligible
@@ -162,7 +163,7 @@ object WordPiece {
       .select(col("word").cast("string"), col("freq").cast("long"))
       .collect()
       .map(r => (initialSymbols(r.getString(0)), r.getLong(1)))
-    eligible.unpersist()
+    Materialize.release(eligible)
 
     val pairCnt = mutable.HashMap[(String, String), Long]()
     val symCnt = mutable.HashMap[String, Long]()

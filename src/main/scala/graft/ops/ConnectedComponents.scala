@@ -32,46 +32,29 @@ import org.apache.spark.sql.functions._
   * Scale: each round is two shuffles (edge hash-join on vertex id +
   * label self-join), both keyed on vertex id — no cross joins, state is
   * one row per vertex. Rounds checkpoint so the plan/lineage stays O(1)
-  * per round instead of growing exponentially: `localCheckpoint` by
-  * default (fast, executor-memory blocks — executor loss FAILS the job),
-  * or reliable `checkpoint` to a fault-tolerant store when
-  * `checkpointDir` is set (each round restartable from the previous
-  * round's files — the 100 TB/1000-executor option, at the cost of one
-  * distributed write per round).
+  * per round instead of growing exponentially, through [[Materialize]]:
+  * local by default (fast, executor-memory blocks — executor loss FAILS
+  * the job), or reliable into the fault-tolerant store the deployment
+  * names in `spark.checkpoint.dir` (each round restartable from the
+  * previous round's files — the 100 TB/1000-executor option, at the
+  * cost of one distributed write per round).
   */
 object ConnectedComponents {
-
-  /** localCheckpoint (default) or reliable checkpoint when a dir is
-    * opted in. Reliable MUST apply to every round: with localCheckpoint
-    * anywhere in the chain, lineage is truncated to executor-memory
-    * blocks and a lost executor is unrecoverable regardless of any
-    * earlier reliable checkpoints. */
-  private def persistStep(df: DataFrame, eager: Boolean,
-      reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
 
   /** (id, comp) for every vertex in `edges`; comp = min id in the
     * component. Vertices with no edges don't appear (left-join the
     * original entity table and coalesce to self for singletons).
     * Vertex ids must be an integral type ("smallest id" and the Σlabel
-    * convergence test are numeric).
-    *
-    * @param checkpointDir when set, per-round state goes through
-    *        reliable `df.checkpoint` into this directory (survives
-    *        executor loss) instead of `localCheckpoint` */
+    * convergence test are numeric). */
   def components(
       edges: DataFrame, srcCol: String, dstCol: String,
-      maxRounds: Int = 40,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
+      maxRounds: Int = 40): DataFrame = {
     // materialize the edge list once BEFORE symmetrizing: it is
     // re-joined every round, it is usually an expensive pipeline (an LSH
     // or Jaccard similarity join), and the union would otherwise
     // evaluate that pipeline twice (once per direction)
-    val once = persistStep(
-      edges.select(col(srcCol).as("a"), col(dstCol).as("b")),
-      eager = true, reliable)
+    val once = Materialize(
+      edges.select(col(srcCol).as("a"), col(dstCol).as("b")), eager = true)
     // SIZE-ADAPTIVE: a near-dup pair list is a FILTERED artifact (high
     // similarity threshold), not a corpus-scale frame — after LSH even a
     // web-scale corpus usually yields a graph whose edge list fits the
@@ -104,10 +87,10 @@ object ConnectedComponents {
     val sym = once.union(once.select(col("b").as("a"), col("a").as("b")))
     // lazy checkpoints: the convergence aggregate right after is the one
     // action that materializes them — one job per round, not two
-    var labels = persistStep(
+    var labels = Materialize(
       sym.groupBy(col("a").as("id"))
         .agg(least(min(col("b")), col("a")).as("p")),
-      eager = false, reliable)
+      eager = false)
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
@@ -127,16 +110,16 @@ object ConnectedComponents {
       val jump = labels
         .join(labels.select(col("id").as("p"), col("p").as("pj")), Seq("p"))
         .select(col("id"), col("pj").as("p"), lit(false).as("__cur"))
-      // lazy checkpoint as before: the convergence aggregate right after
+      // lazy checkpoint: the convergence aggregate right after
       // is the one action that materializes it — one job per round
-      val stepped = persistStep(
+      val stepped = Materialize(
         hook.unionByName(jump)
           .unionByName(labels.select(col("id"), col("p"),
             lit(true).as("__cur")))
           .groupBy("id")
           .agg(min(col("p")).as("p"),
             max(when(col("__cur"), col("p"))).as("__pold")),
-        eager = false, reliable)
+        eager = false)
       // labels only decrease => zero strict decreases is a fixpoint;
       // a count can't overflow/alias the way a Σ-labels probe could
       val changed = stepped
@@ -225,19 +208,16 @@ object ConnectedComponents {
     * `pairs` become singleton clusters of themselves. */
   def assignClusters(
       entities: DataFrame, idCol: String, pairs: DataFrame,
-      srcCol: String, dstCol: String,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val comps = components(pairs, srcCol, dstCol,
-        checkpointDir = checkpointDir)
+      srcCol: String, dstCol: String): DataFrame = {
+    val comps = components(pairs, srcCol, dstCol)
       .select(col("id").as(idCol), col("comp"))
     // assigned feeds the size aggregate AND the final join — two tiny
     // columns per entity, materialize once (the labels underneath are
     // already checkpointed; this avoids re-running the entity join)
-    val assigned = entities.select(col(idCol))
+    val assigned = Materialize(entities.select(col(idCol))
       .join(comps, Seq(idCol), "left")
       .withColumn("cluster_rep", coalesce(col("comp"), col(idCol)))
-      .drop("comp")
-      .localCheckpoint(true)
+      .drop("comp"), eager = true)
     val sizes = assigned.groupBy(col("cluster_rep"))
       .agg(count(lit(1)).as("cluster_size"))
     assigned.join(sizes, Seq("cluster_rep"))

@@ -27,8 +27,12 @@ import org.apache.spark.sql.functions._
   * Overflow headroom: araw·scale < 2^63 requires Σ_in(w)·scale² < 2^63,
   * i.e. total in-weight per node below ~9·10^6 at the default 10^6
   * scale; shrink `scale` for heavier graphs (same dial as PageRank's).
-  * Lineage grows linearly in `iters`; pass `checkpointDir` for the
-  * reliable per-round cut (same opt-in as [[ConnectedComponents]]).
+  * Every round boundary is an eager [[Materialize]] — reliable when the
+  * deployment sets `spark.checkpoint.dir`. Unlike [[PageRank]], HITS
+  * runs a per-round ACTION anyway (the scalar maxima), so without
+  * materialization every action re-executes its whole prefix chain —
+  * quadratic wall-clock that measured 5.7 s vs ~2 s materialized at
+  * sf0.1.
   *
   * Returns (node, auth_fp, hub_fp) at the fixed scale — the round's
   * hottest authority/hub sit exactly at `scale`, sources with no
@@ -38,33 +42,19 @@ object Hits {
 
   val Scale = 1000000L
 
-  /** Round boundary: reliable `checkpoint` when opted in (survives
-    * executor loss), eager `localCheckpoint` otherwise. Unlike
-    * [[PageRank]], HITS runs a per-round ACTION anyway (the scalar
-    * maxima), so without materialization every action re-executes its
-    * whole prefix chain — quadratic wall-clock that measured 5.7 s vs
-    * ~2 s materialized at sf0.1. The local variant trades executor-loss
-    * recovery for that speed, exactly the trade the per-round action
-    * already forces; pass `checkpointDir` when recovery matters. */
-  private def step(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-
   def scores(edges: DataFrame, iters: Int = 3,
       srcCol: String = "src", dstCol: String = "dst", wCol: String = "w",
-      scale: Long = Scale,
-      checkpointDir: Option[String] = None): DataFrame = {
+      scale: Long = Scale): DataFrame = {
     require(iters >= 1, s"hits: iters >= 1 ($iters)")
     require(scale >= 1L, s"hits: scale >= 1 ($scale)")
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
     // materialize the edge list and node set once: `e` feeds the node
     // union (twice) plus TWO joins per round, `nodes` two more — an
     // expensive upstream pipeline would otherwise re-evaluate
     // 2 + 2·iters times (the ConnectedComponents edge-input discipline)
-    val e = step(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).cast("long").as("w")), reliable)
-    val nodes = step(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), reliable)
+    val e = Materialize(edges.select(col(srcCol).as("src"),
+      col(dstCol).as("dst"), col(wCol).cast("long").as("w")), eager = true)
+    val nodes = Materialize(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct(), eager = true)
     // SPARSE state: after each normalization a node absent from the raw
     // aggregate would carry 0, and a zero score contributes exactly 0 to
     // the next round's weighted sums — so the per-round frames keep only
@@ -86,19 +76,19 @@ object Hits {
     // quadratic-in-iters cost on node-sized aggregates that stays
     // negligible for the small fixed iteration counts HITS needs.
     for (_ <- 1 to iters) {
-      val araw = step(
+      val araw = Materialize(
         e.join(h.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node"), (col("h") * col("w")).as("x"))
           .groupBy("node").agg(sum("x").as("ar")),
-        reliable)
+        eager = true)
       val amx = math.max(1L,
         araw.agg(coalesce(max("ar"), lit(0L))).head().getLong(0))
       a = araw.select(col("node"), expr(s"(ar * $scale) div $amx").as("a"))
-      val hraw = step(
+      val hraw = Materialize(
         e.join(a.withColumnRenamed("node", "dst"), Seq("dst"))
           .select(col("src").as("node"), (col("a") * col("w")).as("x"))
           .groupBy("node").agg(sum("x").as("hr")),
-        reliable)
+        eager = true)
       val hmx = math.max(1L,
         hraw.agg(coalesce(max("hr"), lit(0L))).head().getLong(0))
       h = hraw.select(col("node"), expr(s"(hr * $scale) div $hmx").as("h"))

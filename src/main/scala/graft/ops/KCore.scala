@@ -34,8 +34,8 @@ object KCore {
     // union's two branches would otherwise evaluate the (usually
     // expensive similarity-join) input twice, the same edge-input
     // discipline as ConnectedComponents
-    val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .localCheckpoint(true)
+    val e0 = Materialize(
+      edges.select(col(srcCol).as("a"), col(dstCol).as("b")), eager = true)
     val nEdges = e0.count()
     // SIZE-ADAPTIVE: like ConnectedComponents, the input is a FILTERED
     // pair artifact, not a corpus-scale frame. Below the bound the
@@ -52,8 +52,8 @@ object KCore {
       if (local.isDefined) return local.get
       // fall through (null endpoint seen): distributed loop below
     }
-    var sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
+    var sym = Materialize(
+      e0.union(e0.select(col("b").as("a"), col("a").as("b"))), eager = true)
     var edgeCount = sym.count()
     var round = 0
     var converged = false
@@ -64,11 +64,11 @@ object KCore {
     while (!converged && round < maxRounds + 1) {
       val deg = sym.groupBy("a").agg(count(lit(1)).as("d"))
       val alive = deg.filter(col("d") >= k).select(col("a"))
-      val next = sym
+      val next = Materialize(sym
         .join(alive, Seq("a"), "left_semi")
         .join(alive.select(col("a").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint(true)
+        .select("a", "b"),
+        eager = true)
       // peel fixpoint: no edge was removed this round (edges only ever
       // shrink, so one running count per round suffices)
       val nextCount = next.count()

@@ -20,11 +20,9 @@ import org.apache.spark.sql.functions._
   * edge-count rows, the same per-round shape that survives a
   * 1000-executor graph). The edge input is materialized once before the
   * symmetrizing union and the label state is checkpointed every round
-  * (local on the default path), so neither the upstream similarity join
-  * nor earlier rounds are ever recomputed; pass `checkpointDir` for a
-  * reliable per-round `df.checkpoint`, the same opt-in as
-  * [[ConnectedComponents]] and [[PageRank]], when executors are
-  * preemptible.
+  * through [[Materialize]], so neither the upstream similarity join nor
+  * earlier rounds are ever recomputed; the checkpoints are reliable when
+  * the deployment sets `spark.checkpoint.dir` (preemptible executors).
   */
 object LabelPropagation {
 
@@ -33,17 +31,14 @@ object LabelPropagation {
     * listed once; both directions are derived. */
   def run(nodes: DataFrame, idCol: String, labelCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int, checkpointDir: Option[String] = None): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1 ($rounds)")
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
     // materialize the edge list once BEFORE symmetrizing — same trap as
     // ConnectedComponents: the input is usually an expensive similarity
     // join, it is re-joined every round, and the two-direction union
     // would otherwise evaluate that pipeline twice per round
-    def step(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    val once = step(edges.select(col(srcCol).as("u"), col(dstCol).as("v")))
+    val once = Materialize(
+      edges.select(col(srcCol).as("u"), col(dstCol).as("v")), eager = true)
     val sym = once.union(once.select(col("v").as("u"), col("u").as("v")))
     var lab = nodes.select(col(idCol).as("id"), col(labelCol).as("label"))
     for (_ <- 1 to rounds) {
@@ -58,11 +53,10 @@ object LabelPropagation {
       lab = lab.join(best, lab("id") === best("u"), "left")
         .select(col("id"),
           coalesce(col("next_label"), col("label")).as("label"))
-      // eager checkpoint per round on BOTH paths (local on the default
-      // path) — truncates the O(rounds) lineage so round k never
-      // recomputes rounds 1..k-1, and survives executor loss when
-      // reliable (there is no per-round action to piggyback a lazy one on)
-      lab = step(lab)
+      // eager checkpoint per round — truncates the O(rounds) lineage so
+      // round k never recomputes rounds 1..k-1 (there is no per-round
+      // action to piggyback a lazy one on)
+      lab = Materialize(lab, eager = true)
     }
     lab.select(col("id").as(idCol), col("label").as(labelCol))
   }

@@ -1,0 +1,45 @@
+package graft.ops
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+
+/** The one owner of how a frame is materialized — every checkpoint in
+  * the engine goes through here.
+  *
+  * Mode comes from the deployment, not from call sites: with no
+  * checkpoint directory (the default) a frame is `localCheckpoint`ed —
+  * fast executor-storage blocks, so a lost executor FAILS the job
+  * rather than recomputing. When the SparkContext has a checkpoint
+  * directory (Spark's own `spark.checkpoint.dir` setting) every frame
+  * goes through reliable `checkpoint` into it instead and survives
+  * executor loss. One global switch is the only form of the
+  * fault-tolerant mode that can hold: a single local checkpoint
+  * anywhere upstream truncates lineage to executor blocks and voids
+  * every reliable checkpoint downstream of it.
+  */
+object Materialize {
+
+  /** True when materializations are reliable checkpoints (the
+    * SparkContext has a checkpoint directory). */
+  def faultTolerant(spark: SparkSession): Boolean =
+    spark.sparkContext.getCheckpointDir.isDefined
+
+  /** `df` truncated to a checkpoint: reliable when [[faultTolerant]],
+    * local otherwise. `eager` materializes it now (one job); lazy
+    * leaves that to the frame's first action. */
+  def apply(df: DataFrame, eager: Boolean): DataFrame =
+    if (faultTolerant(df.sparkSession)) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
+
+  /** Frees the blocks under a frame returned by [[apply]]. Call it after
+    * the frame's LAST action: a released local checkpoint cannot be
+    * recomputed. `Dataset.unpersist` does not do this — it only drops
+    * cache-manager entries, and a checkpoint's blocks belong to the RDD
+    * under its `LogicalRDD` leaf, which neither `unpersist` nor
+    * `clearCache()` reaches. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = true); ()
+    case other => throw new IllegalArgumentException(
+      s"Materialize.release: not a checkpointed frame (${other.nodeName})")
+  }
+}

@@ -28,9 +28,11 @@ import org.apache.spark.sql.functions._
   * aggregate on `dst`, then a left join back to the node set — with the
   * broadcast-sized `out` table joined map-side when small. Lineage
   * grows linearly in `iters` on the default path (fixed and small);
-  * pass `checkpointDir` to cut it with a reliable per-round
-  * `df.checkpoint` — same opt-in as `ConnectedComponents`, for the
-  * many-round / flaky-executor regime. Overflow
+  * when the deployment sets `spark.checkpoint.dir`
+  * ([[Materialize.faultTolerant]]) every round is cut by an eager
+  * reliable checkpoint — for the many-round / flaky-executor regime.
+  * Eager, because the rank chain has no per-round action of its own
+  * to materialize a lazy one. Overflow
   * headroom: Σ pr ≤ n·Scale, so int64 is safe below ~9·10^6 nodes at
   * Scale=10^12; shrink `scale` for larger graphs (the judge-visible
   * invariant is `dampPct·Σ contrib < 2^63`).
@@ -41,29 +43,24 @@ object PageRank {
 
   val Scale = 1000000000000L
 
-  /** Reliable per-round checkpoint when opted in: truncates the
-    * O(iters) lineage AND survives executor loss (localCheckpoint
-    * would do only the former and make recovery impossible — see
-    * [[ConnectedComponents]]). Eager, because the rank chain has no
-    * per-round action of its own to materialize a lazy one. */
-  private def step(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint(true) else df
+  /** Per-round cut: an eager reliable checkpoint in fault-tolerant
+    * mode, the lazy frame itself otherwise (see the object doc). */
+  private def step(df: DataFrame): DataFrame =
+    if (Materialize.faultTolerant(df.sparkSession))
+      Materialize(df, eager = true)
+    else df
 
   def ranks(edges: DataFrame, iters: Int = 3, dampPct: Int = 85,
       srcCol: String = "src", dstCol: String = "dst",
-      wCol: String = "w", scale: Long = Scale,
-      checkpointDir: Option[String] = None): DataFrame = {
+      wCol: String = "w", scale: Long = Scale): DataFrame = {
     require(iters >= 1, s"pageRank: iters >= 1 ($iters)")
     require(dampPct >= 0 && dampPct <= 100,
       s"pageRank: dampPct in [0,100] ($dampPct)")
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
     // materialize the edge list once: it feeds the out-weight agg, the
     // node union (twice), and one join PER ITERATION — without this an
     // expensive upstream pipeline re-evaluates 3 + iters times
-    val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).cast("long").as("w"))
-    val e = if (reliable) eRaw.checkpoint(true) else eRaw.localCheckpoint(true)
+    val e = Materialize(edges.select(col(srcCol).as("src"),
+      col(dstCol).as("dst"), col(wCol).cast("long").as("w")), eager = true)
     val out = e.groupBy("src").agg(sum("w").as("outw"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
@@ -81,8 +78,7 @@ object PageRank {
         nodes.join(contribs, Seq("node"), "left_outer")
           .select(col("node"),
             (base + expr(s"($dampPct * coalesce(cs, 0L)) div 100"))
-              .as("pr")),
-        reliable)
+              .as("pr")))
     }
     pr
   }
@@ -97,19 +93,15 @@ object PageRank {
     * as a one-row literal (never a driver collect of node state). */
   def ranksConserving(edges: DataFrame, iters: Int = 3, dampPct: Int = 85,
       srcCol: String = "src", dstCol: String = "dst",
-      wCol: String = "w", scale: Long = Scale,
-      checkpointDir: Option[String] = None): DataFrame = {
+      wCol: String = "w", scale: Long = Scale): DataFrame = {
     require(iters >= 1, s"pageRank: iters >= 1 ($iters)")
     require(dampPct >= 0 && dampPct <= 100,
       s"pageRank: dampPct in [0,100] ($dampPct)")
-    val reliable = checkpointDir.isDefined
-    checkpointDir.foreach(edges.sparkSession.sparkContext.setCheckpointDir)
     // materialize the edge list once: it feeds the out-weight agg, the
     // node union (twice), and one join PER ITERATION — without this an
     // expensive upstream pipeline re-evaluates 3 + iters times
-    val eRaw = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).cast("long").as("w"))
-    val e = if (reliable) eRaw.checkpoint(true) else eRaw.localCheckpoint(true)
+    val e = Materialize(edges.select(col(srcCol).as("src"),
+      col(dstCol).as("dst"), col(wCol).cast("long").as("w")), eager = true)
     val out = e.groupBy("src").agg(sum("w").as("outw"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
@@ -134,8 +126,7 @@ object PageRank {
           .select(col("node"),
             (base + expr(
               s"($dampPct * (coalesce(cs, 0L) + dm div nn)) div 100"))
-              .as("pr")),
-        reliable)
+              .as("pr")))
     }
     pr
   }

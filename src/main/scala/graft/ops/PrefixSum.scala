@@ -42,12 +42,12 @@ object PrefixSum {
         .getOrElse(spark.sparkContext.defaultParallelism)
     // materialize once so the stats job and the output read the SAME
     // partition boundaries (see ZipIndex for the ReuseExchange rationale)
-    val ranged = df
+    val ranged = Materialize(df
       .withColumn("__w", weight.cast("long"))
       .repartitionByRange(n, orderBy: _*)
       .sortWithinPartitions(orderBy: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
+      .withColumn("__pid", spark_partition_id()),
+      eager = false)
     // local inclusive running total: window keyed by the physical
     // partition id — numParts window partitions, fully parallel
     val w = Window.partitionBy(col("__pid")).orderBy(orderBy: _*)
@@ -110,12 +110,12 @@ object PrefixSum {
         .filter(_ > 0)
         .getOrElse(spark.sparkContext.defaultParallelism)
     val keys = groupCols.map(col) ++ orderBy
-    val ranged = df
+    val ranged = Materialize(df
       .withColumn("__w", weight.cast("long"))
       .repartitionByRange(n, keys: _*)
       .sortWithinPartitions(keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
+      .withColumn("__pid", spark_partition_id()),
+      eager = false)
     val w = Window
       .partitionBy(col("__pid") +: groupCols.map(col): _*)
       .orderBy(orderBy: _*)

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * Scale note: the global ordinal is a total order, but it is NOT computed
   * with a single-partition window — [[ZipIndex.withOrdinal]] range-partitions
   * on the sort key and adds per-partition offsets, so enumeration of a
-  * 100M-file manifest stays parallel. The `UnlessSingle` total count is a
-  * scalar aggregate broadcast back (no `count() OVER ()` global window).
+  * 100M-file manifest stays parallel. The `UnlessSingle` total count comes
+  * free from the same enumeration (no `count() OVER ()` global window,
+  * no second scan of the catalog).
   */
 object RenamePlan {
 
@@ -58,13 +59,11 @@ object RenamePlan {
         ZipIndex.withOrdinal(catalog, "file_number", Seq(p))
           .withColumn("file_number", col("file_number").cast("int"))
       case Numbering.UnlessSingle =>
-        val total = catalog.agg(count(lit(1)).as("__total"))
-        ZipIndex.withOrdinal(catalog, "__ord", Seq(p))
-          .crossJoin(broadcast(total))
-          .withColumn("file_number",
-            when(col("__total") === 1, lit(null).cast("int"))
-              .otherwise(col("__ord").cast("int")))
-          .drop("__ord", "__total")
+        val (ordered, total) =
+          ZipIndex.withOrdinalCounted(catalog, "file_number", Seq(p))
+        ordered.withColumn("file_number",
+          if (total == 1L) lit(null).cast("int")
+          else col("file_number").cast("int"))
     }
     numbered
       .withColumn("dest_path",

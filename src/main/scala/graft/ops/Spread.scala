@@ -28,11 +28,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     default parallelism — never true for an at-scale scan, so at
   *     100 TB this helper is an identity and no payload byte ever
   *     moves for it;
-  *  2. the optimizer's size estimate for the input is above
-  *     `spark.graft.spread.minBytes` (default 256 KiB) — a floor under
-  *     which one task finishes the work faster than an exchange can be
-  *     scheduled, which also keeps literal/test relations and tiny
-  *     fixtures on their contractual map-only plans.
+  *  2. the optimizer's size estimate for the input is at least
+  *     [[minBytes]] — a floor under which one task finishes the work
+  *     faster than an exchange can be scheduled, which also keeps
+  *     literal/test relations and tiny fixtures on their contractual
+  *     map-only plans.
   *
   * When it does fire, the exchange is keyed on the caller-supplied row
   * id (no round-robin pre-sort, no retry-nondeterminism —
@@ -41,14 +41,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Spread {
 
-  /** Default for `spark.graft.spread.minBytes`: inputs estimated below
-    * this never spread (exchange overhead exceeds the serial work).
+  /** Inputs estimated below this never spread (exchange overhead
+    * exceeds the serial work).
     * 64 KiB: width-scaled projection estimates over a small corpus
     * shrink well below the raw scan bytes, and the callers' per-row
     * work (regex/HTML parse, tokenizer merge walks, gzip inflate) is
     * expensive enough that even tens of KiB of serialized input carry
     * whole seconds of serial compute. */
-  val defaultMinBytes: Long = 64L * 1024L
+  val minBytes: Long = 64L * 1024L
 
   /** Repartition `df` to the session's default parallelism, hashed on
     * `keys` (callers pass the row id so placement is deterministic) —
@@ -56,8 +56,7 @@ object Spread {
     * session parallelism and estimated large enough to pay for the
     * exchange (scaladoc above). */
   def forCompute(df: DataFrame, keys: Column*): DataFrame = {
-    val spark = df.sparkSession
-    val p = spark.sparkContext.defaultParallelism
+    val p = df.sparkSession.sparkContext.defaultParallelism
     // a streaming frame has no planned partition count to inspect (and
     // micro-batch parallelism is the source's business) — identity, so
     // the encode paths stay streaming-native stateless projections
@@ -75,15 +74,9 @@ object Spread {
     // planned (pre-AQE) partition count: exact for file scans and local
     // relations — the two shapes this helper exists to rebalance
     else if (df.rdd.getNumPartitions >= p) df
-    else {
-      val minBytes = scala.util.Try(
-        spark.conf.get("spark.graft.spread.minBytes").toLong)
-        .getOrElse(defaultMinBytes)
-      val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (estBytes < minBytes) df
-      else if (keys.isEmpty) df.repartition(p)
-      else df.repartition(p, keys: _*)
-    }
+    else if (df.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes) df
+    else if (keys.isEmpty) df.repartition(p)
+    else df.repartition(p, keys: _*)
   }
 
   /** True iff the logical plan is exchange-free by construction — only

@@ -35,8 +35,8 @@ object Triangles {
     // expensive similarity-join pipeline and feeds the degree union
     // TWICE plus the orientation join — the same re-evaluation trap
     // ConnectedComponents/LabelPropagation guard against
-    val e = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-      .localCheckpoint(true)
+    val e = Materialize(edges.select(col(aCol).as("a"), col(bCol).as("b")),
+      eager = true)
     val deg = e.select(col("a").as("u"))
       .union(e.select(col("b").as("u")))
       .groupBy("u").agg(count(lit(1)).as("d"))
@@ -78,9 +78,9 @@ object Triangles {
     // post-AQE orientation output is sized by its tiny byte volume
     // (one partition at fixture scale) and would otherwise run the
     // whole enumerate→close→count pipeline in ONE task.
-    val dir = orient(edges, aCol, bCol)
-      .repartition(edges.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
+    val dir = Materialize(orient(edges, aCol, bCol)
+      .repartition(edges.sparkSession.sparkContext.defaultParallelism),
+      eager = true)
     val e1 = dir.select(col("src").as("x"), col("dst").as("y"),
       col("dstKey").as("yk"))
     val e2 = dir.select(col("src").as("x"), col("dst").as("z"),

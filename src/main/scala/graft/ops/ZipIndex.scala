@@ -31,45 +31,36 @@ object ZipIndex {
     * @param numParts range partitions; defaults to
     *                 spark.sql.shuffle.partitions (or defaultParallelism
     *                 when that conf is non-numeric, e.g. "auto")
-    * @param checkpointDir when set, the materialized ranged frame goes
-    *                 through reliable `df.checkpoint` into this
-    *                 directory — enumeration survives executor loss
-    *                 (the localCheckpoint default fails the job) */
+    *
+    * The ranged frame is materialized through [[Materialize]], so the
+    * enumeration survives executor loss exactly when the deployment
+    * sets `spark.checkpoint.dir`. */
   def withOrdinal(df: DataFrame, ordCol: String, orderBy: Seq[Column],
-      numParts: Int = 0, checkpointDir: Option[String] = None): DataFrame =
-    withOrdinalCounted(df, ordCol, orderBy, numParts, checkpointDir)._1
+      numParts: Int = 0): DataFrame =
+    withOrdinalCounted(df, ordCol, orderBy, numParts)._1
 
   /** [[withOrdinal]] plus the input's row count — FREE: the ordinal
     * assignment already collects per-partition counts for the offset
     * prefix sum, so iterative callers (SuffixArray's termination
     * test) save one count job per round. */
   def withOrdinalCounted(df: DataFrame, ordCol: String,
-      orderBy: Seq[Column], numParts: Int = 0,
-      checkpointDir: Option[String] = None): (DataFrame, Long) = {
+      orderBy: Seq[Column], numParts: Int = 0): (DataFrame, Long) = {
     val spark = df.sparkSession
     val n = if (numParts > 0) numParts
       else scala.util.Try(
         spark.conf.get("spark.sql.shuffle.partitions").toInt)
         .filter(_ > 0)
         .getOrElse(spark.sparkContext.defaultParallelism)
-    // localCheckpoint: the stats job and the output both consume `ranged`;
-    // materializing it once makes them read the SAME partition boundaries
+    // the stats job and the output both consume `ranged`; materializing
+    // it once makes them read the SAME partition boundaries
     // by construction, rather than relying on ReuseExchange to dedup two
     // range shuffles (if reuse ever failed to fire, two independently
     // sampled RangePartitioners could disagree and the offsets would
-    // silently mismatch the pids). Costs one cached copy; with the
-    // default localCheckpoint lineage is truncated to executor-memory
-    // blocks, so executor loss fails the job rather than recomputing —
-    // acceptable for manifest/vocabulary enumeration; opt into
-    // `checkpointDir` for a fault-tolerant reliable checkpoint instead.
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    val prepared = df.repartitionByRange(n, orderBy: _*)
+    // silently mismatch the pids). Costs one stored copy.
+    val ranged = Materialize(df.repartitionByRange(n, orderBy: _*)
       .sortWithinPartitions(orderBy: _*)
       .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-    val ranged =
-      if (checkpointDir.isDefined) prepared.checkpoint(false)
-      else prepared.localCheckpoint(false)
+      .withColumn("__mid", monotonically_increasing_id()), eager = false)
     // per-partition (count, min mid, max mid): map-side combine => one row
     // per partition on the wire, ≤ numParts rows total — driver-sized
     val stats = ranged.groupBy(col("__pid"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.ops.BatchAssembly
+import graft.ops.{BatchAssembly, Materialize}
 import org.apache.spark.sql.functions._
 
 /** Length-bucketed batch assembly — the padding-minimizing batching
@@ -186,13 +186,13 @@ SELECT strategy, units, slots, payload_tokens,
   dropped_tokens,
   CAST(1000 * payload_tokens // slots AS BIGINT) AS eff_permil
 FROM u ORDER BY strategy""") { (s, d) =>
-      val lens = Tables.documents(s, d)
+      val lens = Materialize(Tables.documents(s, d)
         .select(col("doc_id"),
           size(filter(graft.ext.TextAnalysis.tokens(col("text")),
             w => length(w) > 0)).cast("long").as("n_tokens"))
-        .filter(col("n_tokens") > 0L)
+        .filter(col("n_tokens") > 0L),
         // three strategies fold the same frame — one scan
-        .localCheckpoint(false)
+        eager = false)
       val ctx = 2048L
       val s1 = lens
         .agg(sum("n_tokens").as("p"))

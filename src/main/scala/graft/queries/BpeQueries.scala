@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ext.{Bpe, TextAnalysis}
+import graft.ops.Materialize
 import org.apache.spark.sql.functions._
 
 /** BPE tokenizer-training suite: the [[graft.ext.Bpe]] learn loop and
@@ -1110,8 +1111,8 @@ FROM enc, mc ORDER BY doc_id"""
       // once so the salted tokenize runs one time, not four. Same for
       // the salted document surface: TWO encode passes (k=12, k=8192)
       // would each re-run the per-token md5 transform
-      val words = words0.localCheckpoint(true)
-      val docs2 = docs20.localCheckpoint(true)
+      val words = Materialize(words0, eager = true)
+      val docs2 = Materialize(docs20, eager = true)
       val nChars = words
         .agg(sum(col("freq") * length(col("word")))).head().getLong(0)
       val big = Bpe.trainLocal(words, 8192)
@@ -1133,8 +1134,8 @@ FROM enc, mc ORDER BY doc_id"""
         Seq((big.size.toLong, words.count(), nChars, t12, tBig))
           .toDF("merges_learned", "vocab_rows", "n_chars",
             "n_tokens_k12", "n_tokens_kbig"))
-      words.unpersist()
-      docs2.unpersist()
+      Materialize.release(words)
+      Materialize.release(docs2)
       out
     },
 
@@ -1193,11 +1194,11 @@ FROM enc, mc ORDER BY doc_id"""
       // the frozen corpus feeds THREE consumers (tokenizer train,
       // encode, manifest join) \u2014 checkpoint so the gate+dedup prefix
       // computes once
-      val frozen = s3.select("doc_id", "source")
+      val frozen = Materialize(s3.select("doc_id", "source")
         .join(span.filter(length(col("kept_text")) > 0)
           .select(col("doc_id"), col("kept_text").as("text")),
-          Seq("doc_id"))
-        .localCheckpoint(false)
+          Seq("doc_id")),
+        eager = false)
       // stage 5: tokenizer trained on the frozen src0 slice, whole
       // freeze encoded map-only
       val merges = Bpe.trainLocal(
@@ -1289,11 +1290,11 @@ FROM enc, mc ORDER BY doc_id"""
         val span = graft.ext.Dedup.spanDedup(
           s3.select(col("doc_id"), plantedCol.as("__p")), "doc_id",
           "__p")
-        val frozenB = s3.select("doc_id", "source")
+        val frozenB = Materialize(s3.select("doc_id", "source")
           .join(span.filter(length(col("kept_text")) > 0)
             .select(col("doc_id"), col("kept_text").as("text")),
-            Seq("doc_id"))
-          .localCheckpoint(false)
+            Seq("doc_id")),
+          eager = false)
         val trained = Bpe.trainLocal(
           Bpe.wordFreq(frozenB.filter(col("source") === "src0"),
             "text"), K)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ext.{Dedup, TextAnalysis}
+import graft.ops.Materialize
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite over `documents` (SURVEY.md north-star ops). The
@@ -389,12 +390,12 @@ object DedupQueries {
       // action at any data size (measured), and this frame feeds three
       // actions. The tiny result is lazily checkpointed so those
       // actions share one computation.
-      val probes = Dedup.minhashSignatures(
+      val probes = Materialize(Dedup.minhashSignatures(
         Dedup.tokenIndex(docs.filter(col("doc_id") % 50 === 0),
           "doc_id", "text", 1), 32)
         .select(col("id").as("doc_id"),
-          explode(Dedup.bandKeyCols(2, 16)).as("band"))
-        .localCheckpoint(false)
+          explode(Dedup.bandKeyCols(2, 16)).as("band")),
+        eager = false)
       val probeBuckets = probes.select((col("band") % 64L).as("b"))
         .distinct().collect().map(_.getLong(0)).toSeq
       val cand = stored.filter(col("bucket").isin(probeBuckets: _*))
@@ -1313,15 +1314,15 @@ object DedupQueries {
         concat(Seq("a", "b", "c", "d", "e", "f", "g", "h").map(sfx =>
           concat(lit(" xs"), k, lit(sfx))): _*))
         .otherwise(lit(""))
-      val docs = Tables.documents(s, d)
+      val docs = Materialize(Tables.documents(s, d)
         .filter(col("source") === "src0")
         .select(col("doc_id"),
           (call_function("div", col("doc_id"), lit(20L)) % 2)
             .as("shard"),
-          concat(coalesce(col("text"), lit("")), plant).as("text"))
+          concat(coalesce(col("text"), lit("")), plant).as("text")),
         // read by two per-shard SA jobs + the final stats joins —
         // materialize the planted corpus once
-        .localCheckpoint(false)
+        eager = false)
       // stage 1: one independent ExactSubstr job PER SHARD — Lee et
       // al.'s placement, composed instead of waived. The shard jobs
       // share nothing (that IS the placement), so submit them
@@ -1341,11 +1342,12 @@ object DedupQueries {
               spans)
           }
         }
-        jobs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-          .reduce(_ unionByName _)
-      }
         // stage 2 + the final join both read it
-        .localCheckpoint(false)
+        Materialize(
+          jobs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
+            .reduce(_ unionByName _),
+          eager = false)
+      }
       // stage 2: cross-shard fixed-L token-gram pass over the union
       // of shard survivors (keep-first; one keyed gram shuffle)
       val fin = graft.ext.Dedup.substringDedup(

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ext.{Bpe, Sft}
+import graft.ops.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -165,10 +166,10 @@ FROM st ORDER BY source, chosen_id"""
       // pairing query is the contract; this composes it — ONE shared
       // implementation, so the funnel-free grouped-ordinal pairing
       // cannot drift between the two queries)
-      val pairs = TextQueries.dpoPairsOf(docs)
+      val pairs = Materialize(TextQueries.dpoPairsOf(docs),
         // three unit derivations + the final join read it — cut the
         // LM-scoring prefix so it computes once
-        .localCheckpoint(false)
+        eager = false)
       // one encode pass over all three units per pair (composite key:
       // pair id × {0 prompt, 1 chosen, 2 rejected})
       val units = pairs

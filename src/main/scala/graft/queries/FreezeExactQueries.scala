@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ext.{Bpe, SuffixArray, TextAnalysis}
+import graft.ops.Materialize
 import org.apache.spark.sql.functions._
 
 /** Data-freeze flagship v2: the curation lineage whose dedup stage is
@@ -151,13 +152,13 @@ object FreezeExactQueries {
         .filter(length(col("clean_text")) > 0)
         .select(col("doc_id"), col("clean_text").as("text"))
       // keeper resolution on the cleaned residue (min-doc_id per text)
-      val frozen = cleaned.join(
+      val frozen = Materialize(cleaned.join(
           cleaned.groupBy("text").agg(min("doc_id").as("doc_id"))
             .select("doc_id"),
-          Seq("doc_id"), "left_semi")
+          Seq("doc_id"), "left_semi"),
         // three consumers (train, encode, manifest join) — cut the
         // gate+suffix-array prefix so it computes once
-        .localCheckpoint(false)
+        eager = false)
       // trainLocal's vocab collect is the first action: it forces the
       // lazy checkpoint of `frozen` WHILE the spans cache is still
       // live; only then drop it (the Verify/Bench clearCache contract

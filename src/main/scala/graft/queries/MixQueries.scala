@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ext.TextAnalysis
+import graft.ops.Materialize
 import org.apache.spark.sql.functions._
 
 /** Training-run data-ORDER and data-MIX planning — the two decisions
@@ -233,12 +234,12 @@ object MixQueries {
         |  p.rate_permil, s.kept_docs, s.kept_tokens
         |FROM plan p JOIN sel s ON s.source = p.source
         |ORDER BY p.source""".stripMargin) { (s, d) =>
-      val t = Tables.documents(s, d)
+      val t = Materialize(Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           size(filter(split(coalesce(col("text"), lit("")), " "),
-            w => length(w) > 0)).cast("long").as("n_tok"))
+            w => length(w) > 0)).cast("long").as("n_tok")),
         // two keyed aggs + the selection read it — one scan
-        .localCheckpoint(false)
+        eager = false)
       val nat = t.groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tok")).as("natural_tokens"))
@@ -320,11 +321,11 @@ object MixQueries {
         |FROM plan p JOIN sel s
         |  ON s.epoch = p.epoch AND s.source = p.source
         |ORDER BY p.epoch, p.source""".stripMargin) { (s, d) =>
-      val t = Tables.documents(s, d)
+      val t = Materialize(Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           size(filter(split(coalesce(col("text"), lit("")), " "),
-            w => length(w) > 0)).cast("long").as("n_tok"))
-        .localCheckpoint(false)
+            w => length(w) > 0)).cast("long").as("n_tok")),
+        eager = false)
       val nat = t.groupBy("source")
         .agg(sum(col("n_tok")).as("natural_tokens"))
       val tot = nat.agg(sum(col("natural_tokens")).as("total"),
@@ -557,7 +558,7 @@ object MixQueries {
         .select(col("doc_id"),
           size(filter(split(coalesce(col("text"), lit("")), " "),
             w => length(w) > 0)).cast("long").as("n_tok"))
-      val pieces = graft.ops.PrefixSum.packIntoBins(counts,
+      val pieces = Materialize(graft.ops.PrefixSum.packIntoBins(counts,
           weight = col("n_tok"), budget = ctx,
           orderBy = Seq(col("doc_id")))
         .filter(col("n_tok") > 0L)
@@ -570,9 +571,9 @@ object MixQueries {
           (greatest(col("s"), col("chunk_id") * ctx) -
             col("chunk_id") * ctx).as("ls"),
           (least(col("e"), (col("chunk_id") + 1L) * ctx) -
-            col("chunk_id") * ctx).as("le"))
+            col("chunk_id") * ctx).as("le")),
         // the core and halo explodes both read it — one scan
-        .localCheckpoint(false)
+        eager = false)
       val core = pieces
         .select(col("doc_id"), col("chunk_id"), col("ls"), col("le"),
           explode(sequence(expr(s"ls div $rw"),
@@ -741,11 +742,11 @@ object MixQueries {
         |  CAST(max(bin) AS BIGINT) AS last_bin
         |FROM ba GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin) {
       (s, d) =>
-      val t = Tables.documents(s, d)
+      val t = Materialize(Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           size(filter(split(coalesce(col("text"), lit("")), " "),
-            w => length(w) > 0)).cast("long").as("n_tok"))
-        .localCheckpoint(false)
+            w => length(w) > 0)).cast("long").as("n_tok")),
+        eager = false)
       val nat = t.groupBy("source")
         .agg(sum(col("n_tok")).as("natural_tokens"))
       val tot = nat.agg(sum(col("natural_tokens")).as("total"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.ext.TextAnalysis
+import graft.ops.Materialize
 import org.apache.spark.sql.functions._
 
 /** Text-analysis suite over `documents`: token statistics, quality
@@ -731,14 +732,14 @@ object TextQueries {
          |    AS share_permil
          |FROM a, tot ORDER BY a.threshold_permil""".stripMargin) {
       (s, d) =>
-      val scored = Tables.documents(s, d)
+      val scored = Materialize(Tables.documents(s, d)
         .select(col("doc_id"),
           TextAnalysis.nTokens(col("text")).as("nt"),
           floor(lit(1000000.0) *
             TextAnalysis.qualityScore(col("text")))
-            .cast("long").as("qm"))
+            .cast("long").as("qm")),
         // the sweep and the total both fold it — one scan
-        .localCheckpoint(false)
+        eager = false)
       val tot = scored.agg(sum("nt").cast("long").as("tt"))
       val kept = col("qm") >= col("thr") * 1000L
       scored

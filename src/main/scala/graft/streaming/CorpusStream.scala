@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ext.Dedup
+import graft.ops.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -270,7 +271,7 @@ object CorpusStream {
     // one eager snapshot for the stream's lifetime (foreachBatch
     // re-evaluates its plan per trigger — a live lineage would re-read
     // and could drift mid-stream)
-    val frozen = words.localCheckpoint(true)
+    val frozen = Materialize(words, eager = true)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -303,7 +304,7 @@ object CorpusStream {
       idCol: String = "doc_id", htmlCol: String = "html",
       maxLinkPermil: Int = 200)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val frozen = stopwords.localCheckpoint(true)
+    val frozen = Materialize(stopwords, eager = true)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -337,7 +338,7 @@ object CorpusStream {
       idCol: String = "doc_id", textCol: String = "text",
       dim: Int = 1024)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val frozen = model.localCheckpoint(true)
+    val frozen = Materialize(model, eager = true)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -489,7 +490,7 @@ object CorpusStream {
     // the whole seed corpus every micro-batch (and drift if the seed
     // source mutates) — one eager checkpoint makes the profile table a
     // stable nLangs×dim snapshot for the stream's lifetime
-    val frozen = model.localCheckpoint(true)
+    val frozen = Materialize(model, eager = true)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -531,7 +532,7 @@ object CorpusStream {
       storeDir: String, checkpointDir: String,
       idCol: String = "doc_id", sourceCol: String = "source")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val frozen = plan.localCheckpoint(true)
+    val frozen = Materialize(plan, eager = true)
     require(frozen.columns.contains(sourceCol) &&
       frozen.columns.contains("rate_permil"),
       s"mixtureGateBatches: plan needs ($sourceCol, rate_permil)")
@@ -964,10 +965,10 @@ object CorpusStream {
     // dedup, and transitively every downstream write) — checkpoint so
     // the gate + hash + two-anti-join prefix computes once per batch,
     // mirroring the batch flagship's own checkpoint
-    val exact = keepFirst
+    val exact = Materialize(keepFirst
       .join(textHist.distinct(), Seq("h1", "h2", "len"), "left_anti")
-      .select(col(idCol), col(textCol))
-      .localCheckpoint(false)
+      .select(col(idCol), col(textCol)),
+      eager = false)
     writeKeys(keyed.select("h1", "h2", "len").distinct()
       .join(textHist.distinct(), Seq("h1", "h2", "len"), "left_anti"),
       textStoreDir)
@@ -995,7 +996,7 @@ object CorpusStream {
         size(col("tokens")).cast("long").as("n_tokens"))
     // two consumers (frozen-doc write + manifest): checkpoint so the
     // span-dedup shuffle and the encode run once per batch
-    val out = frozen.join(enc, Seq(idCol)).localCheckpoint(false)
+    val out = Materialize(frozen.join(enc, Seq(idCol)), eager = false)
     out.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

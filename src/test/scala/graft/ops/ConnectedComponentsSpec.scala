@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.WithCheckpointDir
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -56,21 +57,23 @@ class ConnectedComponentsSpec extends SparkSpec {
     val dir = specTempDir("cc-ckpt").toString
     try {
       val chain = (1L until 30L).map(i => (i, i + 1))
-      val got = ConnectedComponents.components(
-          chain.toDF("u", "v"), "u", "v", checkpointDir = Some(dir))
-        .as[(Long, Long)].collect().toMap
+      val got = WithCheckpointDir(dir) {
+        ConnectedComponents.components(chain.toDF("u", "v"), "u", "v")
+          .as[(Long, Long)].collect().toMap
+      }
       assert(got == cc(chain), "reliable path must reach the same fixpoint")
-      // the opt-in must really go through df.checkpoint: reliable
-      // checkpoint files land under <dir>/<uuid>/rdd-*
+      // the checkpoint dir must really route through df.checkpoint:
+      // reliable checkpoint files land under <dir>/<uuid>/rdd-*
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .anyMatch(p => p.getFileName.toString.startsWith("rdd-"))
       assert(wrote, s"no rdd-* checkpoint dirs under $dir")
       // end-to-end through assignClusters too
       val entities = (1L to 30L).toDF("doc_id")
-      val assigned = ConnectedComponents.assignClusters(entities, "doc_id",
-          chain.toDF("id_a", "id_b"), "id_a", "id_b",
-          checkpointDir = Some(dir))
-        .as[(Long, Long, Long)].collect()
+      val assigned = WithCheckpointDir(dir) {
+        ConnectedComponents.assignClusters(entities, "doc_id",
+            chain.toDF("id_a", "id_b"), "id_a", "id_b")
+          .as[(Long, Long, Long)].collect()
+      }
       assert(assigned.forall { case (_, rep, size) => rep == 1L && size == 30L })
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.WithCheckpointDir
 
 class HitsSpec extends SparkSpec {
   import spark.implicits._
@@ -57,8 +58,10 @@ class HitsSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
     val dir = specTempDir("hits-ck").toString
     try {
-      val ck = Hits.scores(edges, iters = 3, checkpointDir = Some(dir))
-        .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+      val ck = WithCheckpointDir(dir) {
+        Hits.scores(edges, iters = 3)
+          .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+      }
       assert(ck == plain, "checkpointing must not change scores")
       val wrote = new java.io.File(dir).listFiles().exists(f =>
         f.isDirectory && f.listFiles().exists(_.getName.startsWith("rdd-")))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.WithCheckpointDir
 
 class LabelPropagationSpec extends SparkSpec {
   import spark.implicits._
@@ -56,10 +57,11 @@ class LabelPropagationSpec extends SparkSpec {
       val plain = LabelPropagation
         .run(n, "id", "community", e, "src", "dst", rounds = 3)
         .as[(Long, Long)].collect().toMap
-      val ck = LabelPropagation
-        .run(n, "id", "community", e, "src", "dst", rounds = 3,
-          checkpointDir = Some(dir))
-        .as[(Long, Long)].collect().toMap
+      val ck = WithCheckpointDir(dir) {
+        LabelPropagation
+          .run(n, "id", "community", e, "src", "dst", rounds = 3)
+          .as[(Long, Long)].collect().toMap
+      }
       assert(ck == plain, s"ck=$ck plain=$plain")
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .anyMatch(p => p.getFileName.toString.startsWith("rdd-"))

@@ -1,0 +1,63 @@
+package graft.ops
+
+import graft.SparkSpec
+import org.apache.spark.WithCheckpointDir
+import org.apache.spark.sql.execution.LogicalRDD
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+class MaterializeSpec extends SparkSpec {
+
+  private def cachedRdds: Set[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  private def checkpointRdd(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+
+  test("release frees the blocks that Dataset.unpersist leaves resident") {
+    val baseline = cachedRdds
+    val m = Materialize(spark.range(0, 200000).toDF("id"), eager = true)
+    assert(cachedRdds != baseline, "eager local checkpoint stores blocks")
+    m.unpersist(blocking = true)
+    assert(cachedRdds.contains(checkpointRdd(m).id),
+      "Dataset.unpersist does not reach the checkpoint's RDD")
+    Materialize.release(m)
+    assert(cachedRdds == baseline)
+    intercept[IllegalArgumentException](
+      Materialize.release(spark.range(3).toDF("id")))
+  }
+
+  test("a checkpoint dir selects reliable checkpoint files") {
+    val local = Materialize(spark.range(0, 1000).toDF("id"), eager = true)
+    assert(!Materialize.faultTolerant(spark))
+    assert(checkpointRdd(local).getCheckpointFile.isEmpty)
+    Materialize.release(local)
+    val dir = specTempDir("materialize-ckpt").toString
+    WithCheckpointDir(dir) {
+      assert(Materialize.faultTolerant(spark))
+      val m = Materialize(spark.range(0, 1000).toDF("id"), eager = true)
+      assert(m.count() == 1000L)
+      assert(checkpointRdd(m).getCheckpointFile.isDefined)
+      val wrote = Files.walk(Paths.get(dir))
+        .anyMatch(p => p.getFileName.toString.startsWith("rdd-"))
+      assert(wrote, s"no rdd-* checkpoint dirs under $dir")
+    }
+    assert(!Materialize.faultTolerant(spark), "previous dir restored")
+  }
+
+  test("only Materialize checkpoints: no other main source calls the " +
+    "checkpoint API") {
+    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    val owner = root.resolve(Paths.get("graft", "ops", "Materialize.scala"))
+    assert(Files.isRegularFile(owner), s"$owner missing")
+    val banned = Seq(".localCheckpoint(", ".checkpoint(", "setCheckpointDir")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != owner)
+      .flatMap { p =>
+        val text = new String(Files.readAllBytes(p), "UTF-8")
+        banned.filter(text.contains).map(b => s"${root.relativize(p)}: $b")
+      }.toList
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+}

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.WithCheckpointDir
 import org.apache.spark.sql.functions._
 
 class PageRankSpec extends SparkSpec {
@@ -36,15 +37,16 @@ class PageRankSpec extends SparkSpec {
         .toDF("src", "dst", "w")
       val plain = PageRank.ranks(edges, iters = 4)
         .as[(String, Long)].collect().toMap
-      val ck = PageRank.ranks(edges, iters = 4,
-          checkpointDir = Some(dir))
-        .as[(String, Long)].collect().toMap
+      val ck = WithCheckpointDir(dir) {
+        PageRank.ranks(edges, iters = 4).as[(String, Long)].collect().toMap
+      }
       assert(ck == plain, s"ck=$ck plain=$plain")
       val cons = PageRank.ranksConserving(edges, iters = 4)
         .as[(String, Long)].collect().toMap
-      val consCk = PageRank.ranksConserving(edges, iters = 4,
-          checkpointDir = Some(dir))
-        .as[(String, Long)].collect().toMap
+      val consCk = WithCheckpointDir(dir) {
+        PageRank.ranksConserving(edges, iters = 4)
+          .as[(String, Long)].collect().toMap
+      }
       assert(consCk == cons, s"ck=$consCk plain=$cons")
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .anyMatch(p => p.getFileName.toString.startsWith("rdd-"))

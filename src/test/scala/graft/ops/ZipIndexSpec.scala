@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.WithCheckpointDir
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +26,10 @@ class ZipIndexSpec extends SparkSpec {
       val df = (1 to 200).map(i => (i * 7 % 1000, i)).toDF("k", "v")
       val plain = ZipIndex.withOrdinal(df, "ord", Seq(col("k"), col("v")))
         .select("v", "ord").as[(Int, Long)].collect().toMap
-      val reliable = ZipIndex.withOrdinal(df, "ord", Seq(col("k"), col("v")),
-          checkpointDir = Some(dir))
-        .select("v", "ord").as[(Int, Long)].collect().toMap
+      val reliable = WithCheckpointDir(dir) {
+        ZipIndex.withOrdinal(df, "ord", Seq(col("k"), col("v")))
+          .select("v", "ord").as[(Int, Long)].collect().toMap
+      }
       assert(reliable == plain)
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .anyMatch(p => p.getFileName.toString.startsWith("rdd-"))
