@@ -92,8 +92,12 @@ object Blueprints {
       sourceFileName: MatchType,
       execute: Boolean = true): Report = {
     val folder = functions.PathAlg.cleanFolderName(sourceFolderName)
-    val catalog = scanAndMatch(spark, containerUri, folder, sourceFileName)
-    val manifest = catalog.select(col("path"))
+    // one listing, snapshotted: the count, the deletes and the report
+    // all read the same rows (a lazy manifest would re-list the
+    // namespace after the deletes and report what is left)
+    val manifest = Materialize(
+      scanAndMatch(spark, containerUri, folder, sourceFileName)
+        .select(col("path")), eager = true)
     val n = manifest.count()
     if (n == 0) sourceFileName match {
       case RegexMatch(p) => throw BlueprintError.NoMatchesFound(p)
@@ -131,13 +135,13 @@ object Blueprints {
       case _: ExactMatch => RenamePlan.Numbering.Never
       case _ => numbering
     }
-    val planned = RenamePlan.planify(catalog,
+    val (planned, n) = RenamePlan.planifyCounted(catalog,
       destFolder = destFolderName, destName = destFileName,
       numbering = effectiveNumbering)
     val root = if (destRoot.endsWith("/")) destRoot else destRoot + "/"
     val manifest = planned.select(
       col("path").as("src_path"),
       concat(lit(root), col("dest_path")).as("dest_path"))
-    Report(manifest.count(), manifest)
+    Report(n, manifest)
   }
 }

@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   * Scale note: the global ordinal is a total order, but it is NOT computed
   * with a single-partition window — [[ZipIndex.withOrdinal]] range-partitions
   * on the sort key and adds per-partition offsets, so enumeration of a
-  * 100M-file manifest stays parallel. The `UnlessSingle` total count comes
-  * free from the same enumeration (no `count() OVER ()` global window,
-  * no second scan of the catalog).
+  * 100M-file manifest stays parallel. The total count comes free from the
+  * same enumeration (no `count() OVER ()` global window, no second scan
+  * of the catalog): `UnlessSingle` reads it, [[planifyCounted]] returns it.
   */
 object RenamePlan {
 
@@ -50,27 +50,49 @@ object RenamePlan {
       destFolder: String,
       destName: Option[String],
       numbering: Numbering,
-      pathCol: String = "path"): DataFrame = {
+      pathCol: String = "path"): DataFrame =
+    planned(catalog, destFolder, destName, numbering, pathCol)._1
+
+  /** [[planify]] plus the catalog's row count. For `Always` and
+    * `UnlessSingle` the count is FREE ([[ZipIndex.withOrdinalCounted]]
+    * already totals the partitions); `Never` (the exact-match branch,
+    * a driver-built frame of at most one row) counts its frame. */
+  def planifyCounted(
+      catalog: DataFrame,
+      destFolder: String,
+      destName: Option[String],
+      numbering: Numbering,
+      pathCol: String = "path"): (DataFrame, Long) = {
+    val (out, total) = planned(catalog, destFolder, destName, numbering, pathCol)
+    (out, total.getOrElse(catalog.count()))
+  }
+
+  /** The plan and, when the numbering enumerated the catalog, its row
+    * count; `Never` enumerates nothing and stays lazy. */
+  private def planned(
+      catalog: DataFrame,
+      destFolder: String,
+      destName: Option[String],
+      numbering: Numbering,
+      pathCol: String): (DataFrame, Option[Long]) = {
     val p = col(pathCol)
-    val numbered = numbering match {
+    val (numbered, total) = numbering match {
       case Numbering.Never =>
-        catalog.withColumn("file_number", lit(null).cast("int"))
-      case Numbering.Always =>
-        ZipIndex.withOrdinal(catalog, "file_number", Seq(p))
-          .withColumn("file_number", col("file_number").cast("int"))
-      case Numbering.UnlessSingle =>
+        (catalog.withColumn("file_number", lit(null).cast("int")), None)
+      case _ =>
         val (ordered, total) =
           ZipIndex.withOrdinalCounted(catalog, "file_number", Seq(p))
-        ordered.withColumn("file_number",
-          if (total == 1L) lit(null).cast("int")
-          else col("file_number").cast("int"))
+        val single = numbering == Numbering.UnlessSingle && total == 1L
+        (ordered.withColumn("file_number",
+          if (single) lit(null).cast("int")
+          else col("file_number").cast("int")), Some(total))
     }
-    numbered
+    (numbered
       .withColumn("dest_path",
         destFullPathCol(
           lit(destFolder),
           destName.map(lit).getOrElse(lit(null).cast("string")),
           p,
-          col("file_number")))
+          col("file_number"))), total)
   }
 }

@@ -87,6 +87,24 @@ class BlueprintsSpec extends SparkSpec {
     }
   }
 
+  test("delete: the report is the deleted set, nested matches included") {
+    val c = specTempDir("bp-del")
+    Seq("in/a.csv", "in/deep/b.csv", "in/deep/er/c.csv", "in/keep.log")
+      .foreach { rel =>
+        val p = c.resolve(rel)
+        Files.createDirectories(p.getParent)
+        Files.writeString(p, rel)
+      }
+    val r = Blueprints.delete(spark, c.toUri.toString, "in",
+      RegexMatch("\\.csv$"))
+    assert(r.matched == 3)
+    assert(ls(c) == Set("in/keep.log"))
+    // read after the deletes: still the three deleted paths
+    assert(r.manifest.count() == r.matched)
+    val names = r.manifest.collect().map(_.getString(0).split('/').last)
+    assert(names.toSet == Set("a.csv", "b.csv", "c.csv"))
+  }
+
   test("manifest-only mode (execute=false) plans without side effects") {
     val src = mkSrc()
     val dst = specTempDir("bp-dst")
