@@ -94,11 +94,11 @@ object Blueprints {
     val folder = functions.PathAlg.cleanFolderName(sourceFolderName)
     // one listing, snapshotted: the count, the deletes and the report
     // all read the same rows (a lazy manifest would re-list the
-    // namespace after the deletes and report what is left)
-    val manifest = Materialize(
+    // namespace after the deletes and report what is left); the job
+    // that stores the snapshot also counts it
+    val (manifest, n) = Materialize.counted(
       scanAndMatch(spark, containerUri, folder, sourceFileName)
-        .select(col("path")), eager = true)
-    val n = manifest.count()
+        .select(col("path")))
     if (n == 0) sourceFileName match {
       case RegexMatch(p) => throw BlueprintError.NoMatchesFound(p)
       case ExactMatch(p) => throw BlueprintError.NoMatchesFound(p)

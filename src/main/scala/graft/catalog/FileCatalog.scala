@@ -122,7 +122,11 @@ object FileCatalog {
             }
           }
       }
-    val all = spark.sparkContext.parallelize(topRows, 1) ++ subtreeRows
+    // a scan with no top-level files adds no (empty) partition: it
+    // would cost a task in every stage over the catalog
+    val all =
+      if (topRows.isEmpty) subtreeRows
+      else spark.sparkContext.parallelize(topRows, 1) ++ subtreeRows
     spark.createDataFrame(all, schema)
   }
 

@@ -588,9 +588,8 @@ object Dedup {
     // minhashLshPairs
     val idx = Materialize(tokenIndex(df, idCol, textCol, n), eager = true)
     val (rawMasks, maskWords) = tokenMasksWithWidth(idx)
-    val masks = Materialize(rawMasks
-      .repartition(df.sparkSession.sparkContext.defaultParallelism),
-      eager = true)
+    val (masks, nDocs) = Materialize.counted(rawMasks
+      .repartition(df.sparkSession.sparkContext.defaultParallelism))
     val a = masks.select(col("id").as("id_a"), col("n_sh").as("na"),
       col("mask").as("mask_a"))
     val b = masks.select(col("id").as("id_b"), col("n_sh").as("nb"),
@@ -600,14 +599,13 @@ object Dedup {
     // numWords longs each — fine for the blocked/small-n corpora this
     // exact all-pairs operator is contracted for, fatal (driver/executor
     // OOM, 8 GB relation cap) if a large-n caller ever reaches it. The
-    // count is a cheap action over the just-checkpointed blocks and the
-    // width is driver-known from the mask build; past the bound the
+    // count comes from the job that stored the masks and the width is
+    // driver-known from the mask build; past the bound the
     // hint is dropped and the planner degrades to its own non-equi
     // strategy (cartesian — slow but memory-safe) instead of OOMing.
     val maxBcastBytes = scala.util.Try(df.sparkSession.conf
       .get("spark.graft.bitsetBroadcast.maxBytes").toLong)
       .getOrElse(256L * 1024L * 1024L)
-    val nDocs = masks.count()
     val estBytes = nDocs * (maskWords.toLong * 8L + 48L)
     val bSide = if (estBytes <= maxBcastBytes) broadcast(b) else b
     a.join(bSide,

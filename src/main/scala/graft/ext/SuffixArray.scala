@@ -79,12 +79,15 @@ object SuffixArray {
     * multiplications inside stats estimation (measured 400+ s at
     * sf0.01 vs ~20 s of real work). Rebuilding from the row RDD cuts
     * BOTH: a fresh LogicalRDD leaf with constant default stats, then
-    * persist + count so the cache carries the MEASURED byte size. */
-  private def materialize(df: DataFrame): DataFrame = {
+    * persist, and one row-RDD count over the cached plan builds every
+    * cache batch, so the cache carries the MEASURED byte size (and row
+    * count) from then on. That count is returned: it is the one job
+    * of the materialization (`Dataset.count` would plan an aggregate
+    * exchange on top — two more jobs under AQE). */
+  private def materialize(df: DataFrame): (DataFrame, Long) = {
     val cut = df.sparkSession.createDataFrame(df.rdd, df.schema)
     val p = cut.persist(StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
+    (p, p.queryExecution.toRdd.count())
   }
 
   /** One doubling level: `ranks` holds (id, pos, r) where `r`
@@ -130,7 +133,7 @@ object SuffixArray {
       .select(col(idCol).cast("long").as("id"),
         coalesce(length(col(textCol)), lit(0)).cast("long").as("pos"),
         lit(null).cast("string").as("sub"))
-    materialize(chars.unionByName(sentinels))
+    materialize(chars.unionByName(sentinels))._1
   }
 
   /** Prefix-doubling rank tables over `pos` (a [[positions]] frame).
@@ -159,9 +162,9 @@ object SuffixArray {
         .as("k"))
     val (k0, k0Count) = ZipIndex.withOrdinalCounted(
       keyed.select("k").distinct(), "r", Seq(col("k")))
-    var cur = timed("seed ranks")(materialize(keyed.join(k0, Seq("k"))
-      .select(col("id"), col("pos"), col("r"))))
-    val total = cur.count()
+    val (seed, total) = timed("seed ranks")(materialize(
+      keyed.join(k0, Seq("k")).select(col("id"), col("pos"), col("r"))))
+    var cur = seed
     val levels = Seq.newBuilder[Level]
     levels += Level(InitWidth.toLong, cur)
     var width = InitWidth.toLong
@@ -181,7 +184,7 @@ object SuffixArray {
       distinctRanks = pkCount
       cur = timed(s"round w=$width")(materialize(
         paired.join(pk, Seq("pk"))
-          .select(col("id"), col("pos"), col("r"))))
+          .select(col("id"), col("pos"), col("r"))))._1
       width *= 2
       levels += Level(width, cur)
       rounds += 1
@@ -234,7 +237,7 @@ object SuffixArray {
           "__qa", "__qb")
       sinceMaterialize += 1
       if (sinceMaterialize == 3) { // bound the chained-join plan depth
-        p = timed(s"lcp materialize w=${lvl.width}")(materialize(p))
+        p = timed(s"lcp materialize w=${lvl.width}")(materialize(p))._1
         prev.foreach(_.unpersist())
         prev = Some(p)
         sinceMaterialize = 0
@@ -262,7 +265,7 @@ object SuffixArray {
           .otherwise(graft.functions.CommonPrefixLength(
             col("__sa"), col("__sb"))))
       .select(col("id_a"), col("pos_a"), col("id_b"), col("pos_b"),
-        col("lcp")))
+        col("lcp")))._1
     prev.foreach(_.unpersist())
     out
   }
@@ -307,7 +310,7 @@ object SuffixArray {
       .agg(min(col("pos")).as("span_start"),
         (max(col("end")) - min(col("pos"))).as("span_len"))
       .select(col("id"), col("span_start"), col("span_len"))
-    val out = materialize(spans)
+    val out = materialize(spans)._1
     lcp.unpersist()
     unpersistLevels(levels)
     pos.unpersist()

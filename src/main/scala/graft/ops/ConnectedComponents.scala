@@ -53,8 +53,8 @@ object ConnectedComponents {
     // re-joined every round, it is usually an expensive pipeline (an LSH
     // or Jaccard similarity join), and the union would otherwise
     // evaluate that pipeline twice (once per direction)
-    val once = Materialize(
-      edges.select(col(srcCol).as("a"), col(dstCol).as("b")), eager = true)
+    val (once, nEdges) = Materialize.counted(
+      edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
     // SIZE-ADAPTIVE: a near-dup pair list is a FILTERED artifact (high
     // similarity threshold), not a corpus-scale frame — after LSH even a
     // web-scale corpus usually yields a graph whose edge list fits the
@@ -64,13 +64,12 @@ object ConnectedComponents {
     // is UNIQUE, so both paths return byte-identical labels
     // (differential spec in ConnectedComponentsSpec). Above the bound —
     // or if any endpoint is null — the distributed loop below is the
-    // 100 TB path, unchanged. The count() is served from the checkpoint
-    // just materialized and replaces the old labels.isEmpty probe job.
+    // 100 TB path, unchanged. The edge count comes from the job that
+    // stored `once` and replaces the old labels.isEmpty probe job.
     val spark = edges.sparkSession
     val localMax =
       spark.conf.getOption("spark.graft.cc.localMaxEdges")
         .map(_.toLong).getOrElse(1000000L)
-    val nEdges = once.count()
     if (nEdges == 0L) {
       // edgeless graph (the common clean-corpus case): nothing to do;
       // preserve the distributed path's output schema exactly

@@ -33,10 +33,10 @@ object KCore {
     // materialize the edge pipeline ONCE before symmetrizing — the
     // union's two branches would otherwise evaluate the (usually
     // expensive similarity-join) input twice, the same edge-input
-    // discipline as ConnectedComponents
-    val e0 = Materialize(
-      edges.select(col(srcCol).as("a"), col(dstCol).as("b")), eager = true)
-    val nEdges = e0.count()
+    // discipline as ConnectedComponents; the job that stores it also
+    // counts it
+    val (e0, nEdges) = Materialize.counted(
+      edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
     // SIZE-ADAPTIVE: like ConnectedComponents, the input is a FILTERED
     // pair artifact, not a corpus-scale frame. Below the bound the
     // synchronous peel runs on the driver (same rounds, same
@@ -52,9 +52,8 @@ object KCore {
       if (local.isDefined) return local.get
       // fall through (null endpoint seen): distributed loop below
     }
-    var sym = Materialize(
-      e0.union(e0.select(col("b").as("a"), col("a").as("b"))), eager = true)
-    var edgeCount = sym.count()
+    var (sym, edgeCount) = Materialize.counted(
+      e0.union(e0.select(col("b").as("a"), col("a").as("b"))))
     var round = 0
     var converged = false
     // maxRounds + 1 loop iterations: `maxRounds` PRODUCTIVE peels plus
@@ -64,14 +63,13 @@ object KCore {
     while (!converged && round < maxRounds + 1) {
       val deg = sym.groupBy("a").agg(count(lit(1)).as("d"))
       val alive = deg.filter(col("d") >= k).select(col("a"))
-      val next = Materialize(sym
+      // peel fixpoint: no edge was removed this round (edges only ever
+      // shrink, so one running count per round suffices — taken by the
+      // job that stores the round)
+      val (next, nextCount) = Materialize.counted(sym
         .join(alive, Seq("a"), "left_semi")
         .join(alive.select(col("a").as("b")), Seq("b"), "left_semi")
-        .select("a", "b"),
-        eager = true)
-      // peel fixpoint: no edge was removed this round (edges only ever
-      // shrink, so one running count per round suffices)
-      val nextCount = next.count()
+        .select("a", "b"))
       converged = nextCount == edgeCount
       edgeCount = nextCount
       sym = next

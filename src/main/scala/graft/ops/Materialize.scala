@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
 
 /** The one owner of how a frame is materialized — every checkpoint in
   * the engine goes through here.
@@ -30,6 +31,24 @@ object Materialize {
   def apply(df: DataFrame, eager: Boolean): DataFrame =
     if (faultTolerant(df.sparkSession)) df.checkpoint(eager)
     else df.localCheckpoint(eager)
+
+  /** [[apply]] `eager`, plus the frame's row count from the SAME job.
+    * The count rides along as an observed metric (`Dataset.observe`)
+    * on the rows the checkpoint stores, so there is no follow-up
+    * `count()`: that would cost one more job over the blocks (two
+    * under AQE, whose aggregate plans an exchange). One job fills
+    * either mode — the local checkpoint's block job or the reliable
+    * checkpoint's file-write job. Result-task metric updates are
+    * applied once per partition, so retries do not double count. One
+    * metric name serves every call: the observed frame never escapes,
+    * and the checkpoint's `LogicalRDD` leaf hides it from later plans. */
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val observed = df.observe(CountMetric, count(lit(1)))
+    val out = apply(observed, eager = true)
+    (out, observed.queryExecution.observedMetrics(CountMetric).getLong(0))
+  }
+
+  private val CountMetric = "__graft_materialize_count"
 
   /** Frees the blocks under a frame returned by [[apply]]. Call it after
     * the frame's LAST action: a released local checkpoint cannot be

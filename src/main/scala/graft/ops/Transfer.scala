@@ -1,8 +1,12 @@
 package graft.ops
 
 import graft.catalog.SerializableHadoopConf
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, FileUtil, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row}
+
+import java.nio.file.{FileAlreadyExistsException, Files,
+  StandardCopyOption}
 
 /** Distributed file-transfer actions (SURVEY.md §2.1 S3-S6): the engine's
   * replacement for the reference's sequential per-file HTTPS loops
@@ -24,6 +28,12 @@ import org.apache.spark.sql.{DataFrame, Row}
   *    copy+delete (`move_file.py:78-107`);
   *  - delete of a missing file raises [[BlueprintError.DeleteError]]
   *    (`delete_file.py:259-261`).
+  *
+  * A copy INTO a local file system (every download, and tests) is
+  * written with `java.nio.file.Files.copy` ([[copyOne]]): Hadoop's
+  * `RawLocalFileSystem.create` always sets the new file's permission,
+  * which without libhadoop forks a `chmod` per file. No `.crc` sidecar
+  * is written next to the copy either way.
   */
 object Transfer {
 
@@ -37,13 +47,8 @@ object Transfer {
         rows.foreach { r =>
           val src = new Path(r.getString(0))
           val dst = new Path(r.getString(1))
-          val srcFs = cache.get(src)
-          val dstFs = cache.get(dst)
-          if (!overwrite && dstFs.exists(dst))
-            throw BlueprintError.DestinationExists(dst.toString)
-          val parent = dst.getParent
-          if (parent != null && !dstFs.exists(parent)) dstFs.mkdirs(parent)
-          FileUtil.copy(srcFs, src, dstFs, dst, false, overwrite, conf.value)
+          copyOne(cache.get(src), src, cache.get(dst), dst, overwrite,
+            conf.value)
         }
     }
   }
@@ -62,14 +67,15 @@ object Transfer {
           val srcFs = cache.get(src)
           val dstFs = cache.get(dst)
           try {
-            val parent = dst.getParent
-            if (parent != null && !dstFs.exists(parent)) dstFs.mkdirs(parent)
+            mkParent(dstFs, dst)
             // rename is only defined within one file system; cross-store
             // moves go straight to copy+delete (the reference's own shape)
             val sameStore = srcFs.getUri == dstFs.getUri
             val renamed = sameStore && srcFs.rename(src, dst)
             if (!renamed) {
-              FileUtil.copy(srcFs, src, dstFs, dst, true, false, conf.value)
+              copyOne(srcFs, src, dstFs, dst, overwrite = false, conf.value)
+              if (!srcFs.delete(src, false)) throw new java.io.IOException(
+                s"copied, but could not delete the source $src")
             }
           } catch {
             case e: Exception => throw BlueprintError.MoveError(
@@ -179,19 +185,50 @@ object Transfer {
         col("group_id"))
   }
 
+  /** Copies one file, creating the destination's parent directories.
+    * Without `overwrite` an existing destination raises
+    * [[BlueprintError.DestinationExists]]; on a local destination the
+    * exclusive create of `Files.copy` enforces that, with no separate
+    * existence probe. */
+  private def copyOne(srcFs: FileSystem, src: Path, dstFs: FileSystem,
+      dst: Path, overwrite: Boolean, conf: Configuration): Unit =
+    dstFs match {
+      case local: LocalFileSystem =>
+        val target = local.pathToFile(dst).toPath
+        Files.createDirectories(target.getParent)
+        val in = srcFs.open(src)
+        try {
+          if (overwrite)
+            Files.copy(in, target, StandardCopyOption.REPLACE_EXISTING)
+          else Files.copy(in, target)
+        } catch {
+          case _: FileAlreadyExistsException =>
+            throw BlueprintError.DestinationExists(dst.toString)
+        } finally in.close()
+        // a sidecar left by an earlier Hadoop write of this name would
+        // fail every checksummed read of the new bytes (Hadoop's own
+        // checksum-less create deletes it too)
+        Files.deleteIfExists(local.pathToFile(local.getChecksumFile(dst))
+          .toPath)
+      case _ =>
+        if (!overwrite && dstFs.exists(dst))
+          throw BlueprintError.DestinationExists(dst.toString)
+        mkParent(dstFs, dst)
+        FileUtil.copy(srcFs, src, dstFs, dst, false, overwrite, conf)
+    }
+
+  private def mkParent(fs: FileSystem, p: Path): Unit = {
+    val parent = p.getParent
+    if (parent != null && !fs.exists(parent)) fs.mkdirs(parent)
+  }
+
   /** One `FileSystem` per (scheme, authority) per task. */
   private final class FsCache(conf: SerializableHadoopConf) {
     private val m = scala.collection.mutable.HashMap.empty[String, FileSystem]
     def get(p: Path): FileSystem = {
       val uri = p.toUri
-      val key = s"${uri.getScheme}://${uri.getAuthority}"
-      m.getOrElseUpdate(key, {
-        val fs = p.getFileSystem(conf.value)
-        // ChecksumFileSystem (file://) would write .crc sidecars next to
-        // every copy — not a real transfer artifact on any object store.
-        fs.setWriteChecksum(false)
-        fs
-      })
+      m.getOrElseUpdate(s"${uri.getScheme}://${uri.getAuthority}",
+        p.getFileSystem(conf.value))
     }
   }
 

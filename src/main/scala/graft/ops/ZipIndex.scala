@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Scalable global enumeration — the distributed replacement for
   * `row_number() OVER (ORDER BY ...)`, which moves the whole input to ONE
@@ -20,8 +19,16 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * within a partition" is assumed, not the pid<<33 bit layout, and that
   * assumption is ASSERTED per partition (max-min+1 == count) so engine
   * drift fails loudly instead of silently corrupting ordinals. Offsets
-  * are a prefix sum over the per-partition counts — ≤ numParts rows,
-  * computed on the driver and broadcast back.
+  * are a prefix sum over the per-partition counts — ≤ numParts values,
+  * computed on the driver and applied as an array literal indexed by
+  * partition id (no join, no broadcast job).
+  *
+  * Jobs: the range exchange costs two (the partitioner's sample and the
+  * map stage, both run when the lazy checkpoint is planned), then ONE
+  * RDD-level job reads the sorted partitions, fills the checkpoint and
+  * returns each partition's (count, min id, max id). The output reads
+  * the stored partitions; a shuffle-free input is enumerated in three
+  * jobs before its first action.
   */
 object ZipIndex {
 
@@ -41,8 +48,8 @@ object ZipIndex {
 
   /** [[withOrdinal]] plus the input's row count — FREE: the ordinal
     * assignment already collects per-partition counts for the offset
-    * prefix sum, so iterative callers (SuffixArray's termination
-    * test) save one count job per round. */
+    * prefix sum, so callers (SuffixArray's termination test, the
+    * blueprints' match count) run no count job of their own. */
   def withOrdinalCounted(df: DataFrame, ordCol: String,
       orderBy: Seq[Column], numParts: Int = 0): (DataFrame, Long) = {
     val spark = df.sparkSession
@@ -52,24 +59,38 @@ object ZipIndex {
         .filter(_ > 0)
         .getOrElse(spark.sparkContext.defaultParallelism)
     // the stats job and the output both consume `ranged`; materializing
-    // it once makes them read the SAME partition boundaries
-    // by construction, rather than relying on ReuseExchange to dedup two
-    // range shuffles (if reuse ever failed to fire, two independently
-    // sampled RangePartitioners could disagree and the offsets would
-    // silently mismatch the pids). Costs one stored copy.
+    // it once makes them read the SAME partition boundaries by
+    // construction — two independently sampled RangePartitioners could
+    // disagree and the offsets would silently mismatch the pids. The
+    // lazy checkpoint is filled by the stats job itself, so the stored
+    // copy costs no job of its own.
     val ranged = Materialize(df.repartitionByRange(n, orderBy: _*)
       .sortWithinPartitions(orderBy: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__mid", monotonically_increasing_id()), eager = false)
-    // per-partition (count, min mid, max mid): map-side combine => one row
-    // per partition on the wire, ≤ numParts rows total — driver-sized
-    val stats = ranged.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("__cnt"), min(col("__mid")).as("__base"),
-        max(col("__mid")).as("__maxmid"))
-      .collect()
-    stats.foreach { r =>
-      val (pid, cnt, base, maxMid) =
-        (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    // per-partition (pid, count, min mid, max mid) in ONE job over the
+    // stored partitions: no aggregate exchange, ≤ numParts tuples on
+    // the wire; an empty partition yields none (its pid is never read)
+    val pidAt = ranged.schema.fieldIndex("__pid")
+    val midAt = ranged.schema.fieldIndex("__mid")
+    val stats = ranged.queryExecution.toRdd.mapPartitions { rows =>
+      if (!rows.hasNext) Iterator.empty
+      else {
+        val first = rows.next()
+        val pid = first.getInt(pidAt)
+        var lo = first.getLong(midAt)
+        var hi = lo
+        var cnt = 1L
+        rows.foreach { r =>
+          val m = r.getLong(midAt)
+          if (m < lo) lo = m
+          if (m > hi) hi = m
+          cnt += 1
+        }
+        Iterator.single((pid, cnt, lo, hi))
+      }
+    }.collect().sortBy(_._1)
+    stats.foreach { case (pid, cnt, base, maxMid) =>
       // loud guard on the one implementation detail we lean on:
       // monotonically_increasing_id is consecutive within a partition
       require(maxMid - base + 1 == cnt,
@@ -77,23 +98,18 @@ object ZipIndex {
           s"partition $pid (count=$cnt, id span=${maxMid - base + 1}); " +
           "engine id-assignment changed — ordinals would be corrupt")
     }
-    // prefix sum in pid order on the driver (≤ numParts entries)
-    val sorted = stats.sortBy(_.getInt(0))
+    // prefix sum in pid order on the driver, folded with each
+    // partition's base id into one delta per pid: ordinal = mid + delta
+    val delta = new Array[Long](stats.lastOption.fold(0)(_._1 + 1))
     var acc = 0L
-    val rows = sorted.map { r =>
-      val off = acc; acc += r.getLong(1)
-      Row(r.getInt(0), r.getLong(2), off)
+    stats.foreach { case (pid, cnt, base, _) =>
+      delta(pid) = acc - base + 1L
+      acc += cnt
     }
-    val offSchema = StructType(Seq(
-      StructField("__pid", IntegerType, nullable = false),
-      StructField("__base", LongType, nullable = false),
-      StructField("__offset", LongType, nullable = false)))
-    val offsets = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), offSchema)
-    val out = ranged.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(ordCol,
-        col("__offset") + (col("__mid") - col("__base")) + 1L)
-      .drop("__mid", "__pid", "__base", "__offset")
+    val out = ranged
+      .withColumn(ordCol, col("__mid") +
+        element_at(typedLit(delta.toSeq), col("__pid") + 1))
+      .drop("__mid", "__pid")
     (out, acc)
   }
 
@@ -120,9 +136,9 @@ object ZipIndex {
       " — use withOrdinal for a global ordinal")
     // two consumers (group agg + rejoin) read `keyed`, but NO second
     // materialization is needed: withOrdinal already checkpointed the
-    // ranged frame, and everything on top of it (broadcast-join +
-    // ordinal arithmetic) is deterministic — both consumers recompute
-    // the same cheap tail over the same checkpointed partitions.
+    // ranged frame, and everything on top of it (the offset literal's
+    // arithmetic) is deterministic — both consumers recompute the same
+    // cheap tail over the same checkpointed partitions.
     val keyed = withOrdinal(df, "__gord",
       groupCols.map(col) ++ orderBy, numParts)
     val mins = keyed.groupBy(groupCols.map(col): _*)

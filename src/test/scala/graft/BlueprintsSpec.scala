@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{BlueprintError, ExactMatch, RegexMatch}
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.CountJobs
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
@@ -112,5 +112,26 @@ class BlueprintsSpec extends SparkSpec {
       RegexMatch("\\.csv$"), dst.toUri.toString, execute = false)
     assert(r.matched == 2 && ls(dst).isEmpty)
     assert(r.manifest.columns.toSeq == Seq("src_path", "dest_path"))
+  }
+
+  test("job floor: regex upload 4 jobs, dry run 3, delete 2") {
+    // upload: the range exchange's sample + map stage, one ordinal
+    // stats pass that also fills the enumerated manifest, the copy;
+    // delete: the snapshot job (which counts) and the deletes
+    val src = mkSrc()
+    val dst = specTempDir("bp-dst")
+    val (up, upJobs) = CountJobs(Blueprints.upload(spark,
+      src.toUri.toString, "in", RegexMatch("\\.csv$"), dst.toUri.toString,
+      destinationFolderName = "up", destinationFileName = Some("f.csv")))
+    assert(up.matched == 2 && ls(dst) == Set("up/f_1.csv", "up/f_2.csv"))
+    assert(upJobs == 4, s"upload ran $upJobs jobs")
+    val (dry, dryJobs) = CountJobs(Blueprints.upload(spark,
+      src.toUri.toString, "in", RegexMatch("\\.csv$"), dst.toUri.toString,
+      destinationFolderName = "dry", execute = false))
+    assert(dry.matched == 2 && dryJobs == 3, s"dry run ran $dryJobs jobs")
+    val (del, delJobs) = CountJobs(Blueprints.delete(spark,
+      dst.toUri.toString, "up", RegexMatch("\\.csv$")))
+    assert(del.matched == 2 && ls(dst).isEmpty)
+    assert(delJobs == 2, s"delete ran $delJobs jobs")
   }
 }

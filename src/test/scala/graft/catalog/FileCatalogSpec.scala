@@ -1,7 +1,7 @@
 package graft.catalog
 
 import graft.SparkSpec
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -15,24 +15,20 @@ class FileCatalogSpec extends SparkSpec {
 
   /** Written through Hadoop's local file system, so every data file gets
     * a real `.crc` sidecar; `_SUCCESS` and a dotfile are ordinary files
-    * to both listings. The writer is a fresh instance: the shared cached
-    * one may have sidecar writes switched off (`Transfer` does that). */
+    * to both listings. */
   private lazy val (root, fs) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(specTempDir("catalog").toUri.toString)
-    val writer = FileSystem.newInstance(root.toUri, conf)
-    try {
-      Seq("top.csv", "lo_top.csv", "lo1/a.csv", "lo1/mid/b.csv",
-          "lo1/mid/deep/c.csv", "lo1/mid/deep/d.bin", "lo2/_SUCCESS",
-          "lo2/.hidden", "hi/x.txt", "hi/y/z.txt").zipWithIndex
-        .foreach { case (rel, i) =>
-          val out = writer.create(new Path(root, rel))
-          out.write(Array.fill[Byte](10 * i + 1)('x'.toByte))
-          out.close()
-        }
-      writer.mkdirs(new Path(root, "lo1/empty"))
-    } finally writer.close()
     val fs = root.getFileSystem(conf)
+    Seq("top.csv", "lo_top.csv", "lo1/a.csv", "lo1/mid/b.csv",
+        "lo1/mid/deep/c.csv", "lo1/mid/deep/d.bin", "lo2/_SUCCESS",
+        "lo2/.hidden", "hi/x.txt", "hi/y/z.txt").zipWithIndex
+      .foreach { case (rel, i) =>
+        val out = fs.create(new Path(root, rel))
+        out.write(Array.fill[Byte](10 * i + 1)('x'.toByte))
+        out.close()
+      }
+    fs.mkdirs(new Path(root, "lo1/empty"))
     (fs.makeQualified(root), fs)
   }
 
@@ -73,6 +69,15 @@ class FileCatalogSpec extends SparkSpec {
       assert(catalog(prefix) == want, s"prefix '$prefix'")
     }
     assert(catalog("lo").size == 7)
+  }
+
+  test("one partition per listed subtree, plus one only when the scan " +
+    "has top-level files") {
+    // lo1/m: the single subdirectory `mid`, no top-level file
+    assert(FileCatalog.list(spark, root.toString, "lo1/m").rdd
+      .getNumPartitions == 1)
+    // root: top.csv and lo_top.csv beside three subtrees
+    assert(FileCatalog.list(spark, root.toString).rdd.getNumPartitions == 4)
   }
 
   test("no main source lists through LocatedFileStatus") {

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 /** Suffix-array exact-substring dedup vs ground truth: spans are
@@ -52,6 +53,36 @@ class SuffixArraySpec extends SparkSpec {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
+
+  test("round state carries the measured cache size and row count " +
+    "(the stats trap materialize avoids)") {
+    // a positions frame by hand: every InitWidth-char window plus one
+    // sentinel per document; the repeats force doubling rounds
+    val docs = Seq((1L, "abc" * 30), (2L, "xyz" + "abc" * 20))
+    val rows = docs.flatMap { case (id, t) =>
+      (0 until t.length).map { p =>
+        (id, p.toLong, Option(t.substring(p,
+          math.min(t.length, p + SuffixArray.InitWidth))))
+      } :+ ((id, t.length.toLong, Option.empty[String]))
+    }
+    val levels = SuffixArray.suffixLevels(rows.toDF("id", "pos", "sub"))
+    try {
+      assert(levels.size > 1, "fixture must run doubling rounds")
+      levels.foreach { lvl =>
+        val qe = lvl.ranks.queryExecution
+        val cached = qe.withCachedData.collectFirst {
+          case r: InMemoryRelation => r.cacheBuilder
+        }.getOrElse(fail(s"width ${lvl.width}: round state not cached"))
+        assert(cached.isCachedColumnBuffersLoaded,
+          s"width ${lvl.width}: cache batches not built")
+        val stats = qe.optimizedPlan.stats
+        assert(stats.sizeInBytes ==
+          BigInt(cached.sizeInBytesStats.value.longValue))
+        assert(stats.sizeInBytes < BigInt(1L << 20), stats.sizeInBytes)
+        assert(stats.rowCount.contains(BigInt(rows.size)))
+      }
+    } finally SuffixArray.unpersistLevels(levels)
+  }
 
   test("planted duplicates: exact maximal extents, cross-doc and " +
     "within-doc, against brute force") {

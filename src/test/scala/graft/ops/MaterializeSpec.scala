@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.WithCheckpointDir
+import org.apache.spark.{CountJobs, WithCheckpointDir}
 import org.apache.spark.sql.execution.LogicalRDD
 
 import java.nio.file.{Files, Paths}
@@ -44,6 +44,30 @@ class MaterializeSpec extends SparkSpec {
       assert(wrote, s"no rdd-* checkpoint dirs under $dir")
     }
     assert(!Materialize.faultTolerant(spark), "previous dir restored")
+  }
+
+  test("counted: the exact row count from the one job that fills the " +
+    "checkpoint, local and reliable") {
+    // a shuffle under AQE: its map stage is a job of its own, so the
+    // input is cut first and the checkpoint's own job is what counts
+    val src = Materialize(spark.range(0, 5000, 1, 6).toDF("id")
+      .groupBy((org.apache.spark.sql.functions.col("id") % 997).as("k"))
+      .count(), eager = true)
+    val ((local, n), jobs) = CountJobs(Materialize.counted(src))
+    assert(n == 997L && jobs == 1, s"count $n in $jobs jobs")
+    assert(checkpointRdd(local).getCheckpointFile.isEmpty)
+    assert(local.count() == n)
+    val (empty, emptyJobs) =
+      CountJobs(Materialize.counted(spark.range(0).toDF("id")))
+    assert(empty._2 == 0L && emptyJobs <= 1)
+    val dir = specTempDir("materialize-counted").toString
+    WithCheckpointDir(dir) {
+      val ((reliable, m), rjobs) = CountJobs(Materialize.counted(src))
+      assert(m == 997L && rjobs == 1, s"count $m in $rjobs jobs")
+      assert(checkpointRdd(reliable).getCheckpointFile.isDefined)
+      assert(reliable.count() == 997L)
+    }
+    Seq(src, local, empty._1).foreach(Materialize.release)
   }
 
   test("only Materialize checkpoints: no other main source calls the " +

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.catalog.FileCatalog
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 
@@ -31,6 +32,89 @@ class TransferSpec extends SparkSpec {
     Files.walk(root).iterator().asScala
       .filter(Files.isRegularFile(_))
       .map(p => root.relativize(p).toString).toSet
+
+  private def pairs(ps: (Path, Path)*) =
+    ps.map { case (a, b) => (a.toUri.toString, b.toUri.toString) }
+      .toDF("src_path", "dest_path")
+
+  private def causedBy[E <: Throwable](e: Throwable)(
+      implicit tag: scala.reflect.ClassTag[E]): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(tag.runtimeClass.isInstance)
+
+  /** A `viewfs://` store whose `/m` mount is `dir`: same disk, but a
+    * different file-system URI than `file:///`, so a move into or out
+    * of it is cross-store (copy + delete, no rename). */
+  private def viewStore(dir: Path): String = {
+    val name = s"xfer${System.nanoTime()}"
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.viewfs.mounttable.$name.link./m", dir.toUri.toString)
+    s"viewfs://$name/m/"
+  }
+
+  test("a copy into file:// leaves checksums on for the JVM's shared " +
+    "local file system") {
+    val src = mkContainer()
+    val dst = specTempDir("graft-dst")
+    Transfer.copyFiles(pairs(src.resolve("data.csv") -> dst.resolve(
+      "c/data.csv")))
+    assert(Files.readString(dst.resolve("c/data.csv")) ==
+      "content of data.csv")
+    assert(!Files.exists(dst.resolve("c/.data.csv.crc")),
+      "a transferred copy carries no sidecar")
+    val later = new HPath(dst.resolve("later.txt").toUri)
+    val fs = FileSystem.get(later.toUri, spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(later)
+    out.write(Array[Byte](1, 2, 3))
+    out.close()
+    assert(Files.exists(dst.resolve(".later.txt.crc")),
+      "a later Hadoop write in the same JVM lost its .crc sidecar")
+  }
+
+  test("copy: overwrite = false refuses an existing destination, " +
+    "overwrite = true replaces its bytes") {
+    val src = mkContainer()
+    val dst = specTempDir("graft-dst")
+    val target = dst.resolve("d/data.csv")
+    // the old bytes come from a checksummed Hadoop write (with sidecar)
+    val hTarget = new HPath(target.toUri)
+    val fs = FileSystem.get(hTarget.toUri, spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(hTarget)
+    out.write("old bytes, longer than the new ones".getBytes("UTF-8"))
+    out.close()
+    assert(Files.exists(dst.resolve("d/.data.csv.crc")))
+    val e = intercept[SparkException] {
+      Transfer.copyFiles(pairs(src.resolve("data.csv") -> target))
+    }
+    assert(causedBy[BlueprintError.DestinationExists](e), e.toString)
+    assert(Files.readString(target) == "old bytes, longer than the new ones")
+    Transfer.copyFiles(pairs(src.resolve("data.csv") -> target),
+      overwrite = true)
+    assert(Files.readString(target) == "content of data.csv")
+    // a checksummed read agrees: no stale sidecar was left behind
+    val in = fs.open(hTarget)
+    try assert(new String(in.readAllBytes(), "UTF-8") == "content of data.csv")
+    finally in.close()
+  }
+
+  test("cross-store move: copy + delete, source gone, both directions") {
+    val root = mkContainer()
+    val other = specTempDir("graft-other")
+    val view = viewStore(other)
+    // file:// -> viewfs:// (the destination is not a local FS)
+    Transfer.moveFiles(Seq((root.resolve("data.csv").toUri.toString,
+      view + "in/data.csv")).toDF("src_path", "dest_path"))
+    assert(!Files.exists(root.resolve("data.csv")))
+    assert(Files.readString(other.resolve("in/data.csv")) ==
+      "content of data.csv")
+    // viewfs:// -> file:// (a local destination)
+    Transfer.moveFiles(Seq((view + "in/data.csv",
+      root.resolve("back/data.csv").toUri.toString))
+      .toDF("src_path", "dest_path"))
+    assert(!Files.exists(other.resolve("in/data.csv")))
+    assert(Files.readString(root.resolve("back/data.csv")) ==
+      "content of data.csv")
+  }
 
   test("S1+F1: catalog scan + regex filter matches reference glob+re.search") {
     val root = mkContainer()

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.WithCheckpointDir
+import org.apache.spark.{CountJobs, WithCheckpointDir}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,6 +18,48 @@ class ZipIndexSpec extends SparkSpec {
     val got = ZipIndex.withOrdinal(df, "ord", Seq(col("k"), col("s")))
       .select("k", "ord").as[(Int, Long)].collect().toMap
     assert(got == want)
+  }
+
+  private def rowNumbers(df: org.apache.spark.sql.DataFrame,
+      key: String, order: Seq[String]): Map[Any, Long] =
+    df.withColumn("ord",
+        row_number().over(Window.orderBy(order.map(col): _*)).cast("long"))
+      .select(key, "ord").collect().map(r => r.get(0) -> r.getLong(1)).toMap
+
+  test("withOrdinalCounted over a shuffle-free input: three jobs " +
+    "(range sample, map stage, one stats pass over the stored " +
+    "partitions)") {
+    val df = spark.range(0, 2000, 1, 5).toDF("id")
+      .withColumn("k", pmod(col("id") * 7919L, lit(1009)))
+    val ((out, n), jobs) = CountJobs(
+      ZipIndex.withOrdinalCounted(df, "ord", Seq(col("k"), col("id")), 6))
+    assert(n == 2000L)
+    assert(jobs == 3, s"$jobs jobs")
+    val got = out.select("id", "ord").collect()
+      .map(r => (r.getLong(0): Any) -> r.getLong(1)).toMap
+    assert(got == rowNumbers(df, "id", Seq("k", "id")))
+  }
+
+  test("fewer range partitions than requested: all sort keys equal, " +
+    "and fewer rows than numParts") {
+    // one distinct key: the range partitioner collapses to ONE
+    // partition; any order of the tied rows is a valid row_number, so
+    // the ordinals must be exactly 1..n
+    val same = spark.range(0, 300, 1, 4).toDF("id").withColumn("k", lit(5))
+    val (tied, tiedN) =
+      ZipIndex.withOrdinalCounted(same, "ord", Seq(col("k")), 8)
+    assert(tiedN == 300L)
+    assert(tied.select("ord").as[Long].collect().sorted.toSeq ==
+      (1L to 300L))
+    assert(tied.rdd.getNumPartitions < 8)
+    // three rows over eight requested partitions
+    val few = Seq((3, "c"), (1, "a"), (2, "b")).toDF("k", "s")
+    val (ords, fewN) =
+      ZipIndex.withOrdinalCounted(few, "ord", Seq(col("k")), 8)
+    assert(fewN == 3L)
+    val got = ords.select("s", "ord").collect()
+      .map(r => (r.getString(0): Any) -> r.getLong(1)).toMap
+    assert(got == rowNumbers(few, "s", Seq("k")))
   }
 
   test("reliable checkpoint path: same ordinals, files written") {
