@@ -303,7 +303,7 @@ object Dedup {
 
   /** Sorted-neighborhood candidate pairs + exact re-rank: sort the corpus
     * by a locality-preserving key (SimHash, doc id as tiebreak), assign
-    * parallel ordinals ([[graft.ops.ZipIndex]] — no single-partition
+    * parallel ordinals ([[graft.ops.PrefixSum]] — no single-partition
     * window), and compare only docs within `window` positions of each
     * other. Classic bounded-comparison dedup: candidates are |corpus| ×
     * window instead of all pairs, at the cost of recall for near-dups the
@@ -335,7 +335,7 @@ object Dedup {
     require(window > 0 && passes >= 1 && passes <= 24)
     val w = window.toLong
     // persist the two stages every pass re-reads: `idx` feeds the SimHash
-    // pass AND the bitset re-rank, `sh` feeds one ZipIndex per pass —
+    // pass AND the bitset re-rank, `sh` feeds one PrefixSum per pass —
     // without these the tokenize pipeline re-evaluates passes+1 times.
     // The method is made eager (result localCheckpoint) so both can be
     // unpersisted before returning — no cache entries leak to the caller.
@@ -349,7 +349,7 @@ object Dedup {
         if (rot == 0) col("simhash")
         else (shiftleft(col("simhash"), rot) % (1L << 24)) +
           shiftright(col("simhash"), 24 - rot)
-      val ord = graft.ops.ZipIndex.withOrdinal(
+      val ord = graft.ops.PrefixSum.withOrdinal(
         sh.select(col("id"), key.as("__key")), "r",
         Seq(col("__key"), col("id")))
       val a = ord.select(col("id").as("ida"), col("r").as("ra"))
@@ -517,7 +517,7 @@ object Dedup {
     // rows a row_number() window is ONE task over a trivially bounded
     // input (constant work at ANY corpus scale — the vocabulary, not
     // the corpus, is what's sorted) and costs one exchange; above that
-    // the range-partitioned ZipIndex ordinal takes over so the sort
+    // the range-partitioned PrefixSum ordinal takes over so the sort
     // never funnels — 2^20 rows on one task is real serial time and
     // the exact shape WindowExec warns about. Both assign bit =
     // sorted position - 1, so masks are byte-identical either way.
@@ -527,7 +527,7 @@ object Dedup {
           row_number().over(Window.orderBy("shingle")) - 1)
           .select(col("shingle"), col("bit").cast("long").as("bit"))
       else
-        graft.ops.ZipIndex.withOrdinal(distinctSh, "__ord",
+        graft.ops.PrefixSum.withOrdinal(distinctSh, "__ord",
             Seq(col("shingle")))
           .select(col("shingle"), (col("__ord") - 1L).as("bit"))
     val numWords = ((nVocab + 63) / 64).toInt

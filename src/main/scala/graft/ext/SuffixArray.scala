@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.ops.ZipIndex
+import graft.ops.PrefixSum
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   * log2(InitWidth) rounds replaced by one distinct-and-rank pass):
   * O(log maxRepeat) rounds total, each a keyed self-join (rank at
   * `pos` paired with rank at `pos + width`) plus a dense re-rank via
-  * the range-partitioned [[ZipIndex]] — every step is a keyed
+  * the range-partitioned [[PrefixSum]] — every step is a keyed
   * shuffle; nothing ever sits in one partition. Suffixes are PER
   * DOCUMENT (never crossing a document boundary); a suffix shorter
   * than the current width gets a rank key carrying its document id
@@ -160,7 +160,7 @@ object SuffixArray {
           length(col("sub")) < InitWidth, col("pos")).otherwise(0L)
           .as("p"))
         .as("k"))
-    val (k0, k0Count) = ZipIndex.withOrdinalCounted(
+    val (k0, k0Count) = PrefixSum.withOrdinalCounted(
       keyed.select("k").distinct(), "r", Seq(col("k")))
     val (seed, total) = timed("seed ranks")(materialize(
       keyed.join(k0, Seq("k")).select(col("id"), col("pos"), col("r"))))
@@ -179,7 +179,7 @@ object SuffixArray {
         .select(col("id"), col("pos"),
           struct(col("r"), coalesce(col("r2"), lit(-1L)).as("r2"))
             .as("pk"))
-      val (pk, pkCount) = ZipIndex.withOrdinalCounted(
+      val (pk, pkCount) = PrefixSum.withOrdinalCounted(
         paired.select("pk").distinct(), "r", Seq(col("pk")))
       distinctRanks = pkCount
       cur = timed(s"round w=$width")(materialize(

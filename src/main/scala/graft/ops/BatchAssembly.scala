@@ -20,13 +20,14 @@ import org.apache.spark.sql.functions._
   *  - BATCH: fixed `batchSize` rows per batch in that order; the last
   *    batch of each bucket may run short.
   *
-  * SCALE SHAPE: the ordinal comes from [[PrefixSum.withRunningTotal]]
-  * — one range shuffle on (bucket, len, tie) and a driver prefix sum
-  * over ≤ numParts partition stats — NEVER a single-partition window
-  * (a bucket can hold billions of rows; `row_number() OVER
-  * (PARTITION BY bucket)` would funnel each bucket through one
-  * reducer). Bucket start offsets are a ≤ 64-row broadcast (bucket
-  * ids are binary digit counts of a long).
+  * SCALE SHAPE: the ordinal is the grouped ordinal of
+  * [[PrefixSum.withGroupedRunningTotal]] (weight 1, group `bucket`) —
+  * one range shuffle on (bucket, len, tie), one scan of the sorted
+  * partitions and a driver prefix sum over ≤ numParts partition
+  * totals — NEVER a single-partition window (a bucket can hold
+  * billions of rows; `row_number() OVER (PARTITION BY bucket)` would
+  * funnel each bucket through one reducer). Bucket bases are a ≤ 64-row
+  * broadcast (bucket ids are binary digit counts of a long).
   *
   * Rows with `len <= 0` (empty or null documents) are EXCLUDED —
   * there is nothing to train on and no length band to place them in;
@@ -53,18 +54,12 @@ object BatchAssembly {
       .withColumn("__len", len.cast("long"))
       .filter(col("__len") > 0L)
       .withColumn("bucket", length(bin(col("__len"))).cast("int"))
-    val ranked = PrefixSum.withRunningTotal(withBucket, "__rank",
-      lit(1L), Seq(col("bucket"), col("__len"), tie))
-    // first global ordinal per bucket (≤ 64 rows — bucket ids are
-    // binary digit counts of a long) re-bases ranks to bucket-local
-    val offs = ranked.groupBy("bucket")
-      .agg(min(col("__rank")).as("__b0"))
-    ranked.join(broadcast(offs), Seq("bucket"))
-      .withColumn("seq_in_bucket", col("__rank") - col("__b0") + 1L)
+    PrefixSum.withGroupedRunningTotal(withBucket, "seq_in_bucket",
+        Seq("bucket"), lit(1L), Seq(col("__len"), tie))
       // (seq-1)/B via double division is exact to 2^53 — same
       // carve-out as PrefixSum.packIntoBins' floor(offset / budget)
       .withColumn("batch_idx",
         floor((col("seq_in_bucket") - 1L) / batchSize).cast("long"))
-      .drop("__rank", "__b0", "__len")
+      .drop("__len")
   }
 }

@@ -64,9 +64,9 @@ object Frontier {
     *  2. global: inclusive running cost over the survivors in the
     *     global fetch order `(slot_sec, fetch_wave, fetch_tie,
     *     tieBreak…)` (`global_cum`) via the DISTRIBUTED prefix sum
-    *     ([[PrefixSum.withRunningTotal]] — range-partitioned local
-    *     sums + a ≤numPartitions-row driver offset pass, never a
-    *     single-reducer window); keep while `global_cum <=
+    *     ([[PrefixSum.withRunningTotal]] — one scan of the range-
+    *     partitioned, sorted input + a ≤numPartitions-value driver
+    *     offset pass, never a window); keep while `global_cum <=
     *     globalBudget`.
     *
     * Budgets are hard caps: an item whose cost alone exceeds the

@@ -76,24 +76,20 @@ object PlanChecks {
         s"plan contract violated: '$op' not inside WholeStageCodegen\n$plan")
   }
 
-  /** Fails on any `Window` operator NOT keyed by the engine's own
-    * physical-partition id (`__pid`, [[PrefixSum]]'s per-partition
-    * local running totals — numParts parallel window partitions).
-    * Any other WindowExec gives each key ONE task; over a corpus-scale
-    * frame keyed by a low-cardinality column (`source` has a handful
-    * of values) that is a single-task sort funnel at 100 TB. Queries
-    * that replaced such windows with the ZipIndex grouped ordinal
-    * assert this so a refactor cannot silently reintroduce one.
-    * (`WindowGroupLimit` nodes are not windows and don't match.) */
+  /** Fails on any `Window` operator. A WindowExec gives each key ONE
+    * task; over a corpus-scale frame keyed by a low-cardinality column
+    * (`source` has a handful of values) that is a single-task sort
+    * funnel at 100 TB. Queries that replaced such windows with the
+    * [[PrefixSum]] grouped ordinal assert this so a refactor cannot
+    * silently reintroduce one. (`WindowGroupLimit` nodes are not
+    * windows and don't match.) */
   def assertNoWideWindow(df: DataFrame): Unit = {
     val plan = executedPlan(df)
-    val bad = plan.linesIterator
-      .filter(l => l.contains("Window [") && !l.contains("__pid"))
-      .toList
+    val bad = plan.linesIterator.filter(_.contains("Window [")).toList
     if (bad.nonEmpty)
       throw new IllegalStateException(
-        "plan contract violated: Window not keyed by __pid — a " +
-          "per-key single-task sort funnel:\n" + bad.mkString("\n") +
+        "plan contract violated: Window — a per-key single-task " +
+          "sort funnel:\n" + bad.mkString("\n") +
           s"\nfull plan:\n$plan")
   }
 

@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
   * deterministic under any partitioning (SURVEY.md §2.5 A3).
   *
   * Scale note: the global ordinal is a total order, but it is NOT computed
-  * with a single-partition window — [[ZipIndex.withOrdinal]] range-partitions
-  * on the sort key and adds per-partition offsets, so enumeration of a
+  * with a single-partition window — [[PrefixSum.withOrdinal]] range-partitions
+  * on the sort key, scans each partition and adds per-partition offsets
+  * (the running total of weight 1), so enumeration of a
   * 100M-file manifest stays parallel. The total count comes free from the
   * same enumeration (no `count() OVER ()` global window, no second scan
   * of the catalog): `UnlessSingle` reads it, [[planifyCounted]] returns it.
@@ -54,7 +55,7 @@ object RenamePlan {
     planned(catalog, destFolder, destName, numbering, pathCol)._1
 
   /** [[planify]] plus the catalog's row count. For `Always` and
-    * `UnlessSingle` the count is FREE ([[ZipIndex.withOrdinalCounted]]
+    * `UnlessSingle` the count is FREE ([[PrefixSum.withOrdinalCounted]]
     * already totals the partitions); `Never` (the exact-match branch,
     * a driver-built frame of at most one row) counts its frame. */
   def planifyCounted(
@@ -81,7 +82,7 @@ object RenamePlan {
         (catalog.withColumn("file_number", lit(null).cast("int")), None)
       case _ =>
         val (ordered, total) =
-          ZipIndex.withOrdinalCounted(catalog, "file_number", Seq(p))
+          PrefixSum.withOrdinalCounted(catalog, "file_number", Seq(p))
         val single = numbering == Numbering.UnlessSingle && total == 1L
         (ordered.withColumn("file_number",
           if (single) lit(null).cast("int")

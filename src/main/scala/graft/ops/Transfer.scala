@@ -167,8 +167,9 @@ object Transfer {
 
   /** Distributed compaction PLAN over an arbitrary file catalog: assign
     * every file to a merge group of ~`targetBytes` by cumulative size in
-    * path order ([[PrefixSum.packIntoBins]] — range partition + per-
-    * partition window + a ≤numParts-row driver offset sum). Where
+    * path order ([[PrefixSum.packIntoBins]] — range partition, one
+    * scan of the sorted partitions, a ≤numParts-value driver offset
+    * sum). Where
     * [[compact]] physically rewrites ONE directory it can list on the
     * driver, this plans a whole-catalog maintenance pass: 10^8 catalog
     * rows stay distributed end to end, and each group is an independent

@@ -47,9 +47,9 @@ object MixQueries {
       .withColumn("h", TextAnalysis.tokenHash31(concat(
         lit("ep"), col("epoch").cast("string"), lit("#"),
         col("doc_id").cast("string"))))
-    graft.ops.PrefixSum.packIntoGroupedBins(e, Seq("epoch"),
-      weight = col("n_tok"), budget = 2048L,
-      orderBy = Seq(col("h"), col("doc_id")))
+    graft.ops.PrefixSum.packIntoBins(e, weight = col("n_tok"),
+      budget = 2048L, orderBy = Seq(col("h"), col("doc_id")),
+      groupCols = Seq("epoch"))
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -86,8 +86,8 @@ object MixQueries {
         .withColumn("h", TextAnalysis.tokenHash31(concat(
           lit("ep"), col("epoch").cast("string"), lit("#"),
           col("doc_id").cast("string"))))
-      graft.ops.ZipIndex.withGroupedOrdinal(e, "pos", Seq("epoch"),
-          Seq(col("h"), col("doc_id")))
+      graft.ops.PrefixSum.withGroupedRunningTotal(e, "pos", Seq("epoch"),
+          lit(1L), Seq(col("h"), col("doc_id")))
         .select(col("epoch"), col("doc_id"), col("h"), col("pos"),
           call_function("div", col("pos") - 1L, lit(64L)).as("batch"))
         .orderBy("epoch", "pos")
@@ -99,9 +99,9 @@ object MixQueries {
     // fixed-2048-token micro-batches by cumulative start offset.
     // `sum(n_tok) OVER (PARTITION BY epoch ORDER BY h)` is the oracle
     // spelling; the engine uses the grouped PREFIX SUM
-    // (PrefixSum.packIntoGroupedBins — range partition over (epoch,
-    // h, doc_id), per-(pid, epoch) local windows, driver per-group
-    // offset fold) because epoch is a 3-value key and a window would
+    // (PrefixSum.packIntoBins with groupCols — one ordered scan over
+    // (epoch, h, doc_id), then a 3-row per-epoch base aggregate
+    // broadcast back) because epoch is a 3-value key and a window would
     // funnel ~corpus/3 rows into one task. Bins restart at 0 per
     // epoch; the batch boundary lands mid-document exactly where the
     // running total says — one token off anywhere shifts every later
@@ -767,9 +767,9 @@ object MixQueries {
         .withColumn("h", TextAnalysis.tokenHash31(concat(
           lit("ep"), col("epoch").cast("string"), lit("#"),
           col("doc_id").cast("string"))))
-      graft.ops.PrefixSum.packIntoGroupedBins(e, Seq("epoch"),
-          weight = col("n_tok"), budget = 2048L,
-          orderBy = Seq(col("h"), col("doc_id")))
+      graft.ops.PrefixSum.packIntoBins(e, weight = col("n_tok"),
+          budget = 2048L, orderBy = Seq(col("h"), col("doc_id")),
+          groupCols = Seq("epoch"))
         .groupBy(col("epoch"), col("bin").cast("long").as("bin"))
         .agg(count(lit(1)).as("nd"), sum(col("n_tok")).as("tk"))
         .groupBy(col("epoch"),

@@ -23,10 +23,33 @@ object TextQueries {
     * within each source; higher bigram-LM micro-average wins, ties to
     * the smaller doc_id; odd tails drop. Scale shape: NO source-keyed
     * window — per-source ordinals come from the range-partitioned
-    * [[graft.ops.ZipIndex.withGroupedOrdinal]] (a 3-value window key
+    * [[graft.ops.PrefixSum.withGroupedRunningTotal]] (a 3-value window key
     * would sort ~corpus/3 rows in one task), and adjacent pairing is
     * a hash agg on the high-cardinality (source, ordinal div 2) key.
     * Returns (source, chosen_id, rejected_id, margin). */
+  /** DSIR systematic resampling, shared by `text_dsir_resample` and
+    * `pipeline_dsir_select`: weights quantized to integer micro-units
+    * (+1 so every doc keeps mass), the running total over doc_id
+    * order, and every doc whose cumulative interval (cum - w, cum]
+    * contains a multiple of step = max(total / 50, 1). The scan returns
+    * the total weight with the running totals, so the step is a driver
+    * literal — re-aggregating the weights would execute the whole DSIR
+    * weight pipeline a second time. Returns (doc_id, w, cum). */
+  private def dsirResample(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val wts = TextAnalysis.dsirWeights(docs,
+      docs.filter(col("source").isin("src0", "src1")),
+      "doc_id", "text", buckets = 256)
+    val wi = wts.select(col("doc_id"),
+      (floor(col("weight") * lit(1000000.0d)).cast("long") + lit(1L))
+        .as("w"))
+    val (cum, total) = graft.ops.PrefixSum.runningTotal(
+      wi, "cum", col("w"), Seq(col("doc_id")))
+    val step = math.max(total / 50, 1L)
+    cum.filter(expr(s"cum div $step > (cum - w) div $step"))
+      .select("doc_id", "w", "cum")
+  }
+
   private[queries] def dpoPairsOf(
       docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -34,9 +57,9 @@ object TextQueries {
         TextAnalysis.bigramModel(docs, "text"))
       .select(col("doc_id"),
         expr("lm_sum_micro div n_bigrams").as("avg_mi"))
-    val orded = graft.ops.ZipIndex.withGroupedOrdinal(
+    val orded = graft.ops.PrefixSum.withGroupedRunningTotal(
       docs.select(col("doc_id"), col("source")).join(sc, Seq("doc_id")),
-      "__ord", Seq("source"), Seq(col("doc_id")))
+      "__ord", Seq("source"), lit(1L), Seq(col("doc_id")))
     orded
       .withColumn("__pair",
         call_function("div", col("__ord") - 1L, lit(2L)))
@@ -623,8 +646,8 @@ object TextQueries {
 
     // sequence packing: assign docs to 4096-token training bins by
     // cumulative token count in corpus order — the distributed prefix
-    // sum (ops.PrefixSum: range partition + per-partition window +
-    // broadcast offsets), NEVER a single-partition global window
+    // sum (ops.PrefixSum: range partition + one scan of the sorted
+    // partitions + driver offsets), NEVER a single-partition window
     QueryDef("text_packing",
       """WITH t AS (
         |  SELECT doc_id,
@@ -768,11 +791,11 @@ object TextQueries {
     // quality order runs through the range-partitioned PrefixSum —
     // (quality DESC, doc_id) is a corpus-scale total order and a
     // window over it would funnel the corpus into one task; the
-    // running total costs one range exchange + per-partition windows
-    // + a driver offset fold, the same machinery as every other
-    // global enumeration here. Graded per source: how many documents
-    // and tokens survive and the worst quality admitted — the
-    // selection's whole observable effect, one keyed agg over the
+    // running total costs one range exchange + one scan of the sorted
+    // partitions + a driver offset fold, the same machinery as every
+    // other global enumeration here. Graded per source: how many
+    // documents and tokens survive and the worst quality admitted —
+    // the selection's whole observable effect, one keyed agg over the
     // selected set.
     QueryDef("pipeline_budget_select",
       s"""WITH t AS (
@@ -808,13 +831,13 @@ object TextQueries {
           floor(lit(1000000.0) *
             TextAnalysis.qualityScore(col("text")))
             .cast("long").as("qm"))
-      val tot = scored.agg(sum("nt").cast("long").as("tt"))
-      graft.ops.PrefixSum.withRunningTotal(scored, "running",
-          weight = col("nt"),
-          orderBy = Seq(col("qm").desc, col("doc_id")))
-        .crossJoin(broadcast(tot))
-        .filter(col("running") - col("nt") <
-          call_function("div", col("tt"), lit(2L)))
+      // the scan returns the corpus' token total with the running
+      // totals; aggregating `scored` would run the whole nTokens /
+      // qualityScore pipeline a second time
+      val (ranked, total) = graft.ops.PrefixSum.runningTotal(scored,
+        "running", weight = col("nt"),
+        orderBy = Seq(col("qm").desc, col("doc_id")))
+      ranked.filter(col("running") - col("nt") < lit(total / 2))
         .groupBy("source")
         .agg(count(lit(1)).as("n_sel"),
           sum("nt").cast("long").as("sel_tokens"),
@@ -1487,25 +1510,7 @@ object TextQueries {
          |SELECT doc_id, w, cum FROM cum, st
          |WHERE cum // step > (cum - w) // step
          |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val wts = TextAnalysis.dsirWeights(docs,
-        docs.filter(col("source").isin("src0", "src1")),
-        "doc_id", "text", buckets = 256)
-      val wi = wts.select(col("doc_id"),
-        (floor(col("weight") * lit(1000000.0d)).cast("long") + lit(1L))
-          .as("w"))
-      val cum = graft.ops.PrefixSum.withRunningTotal(
-        wi, "cum", col("w"), Seq(col("doc_id")))
-      // total = max(cum): the prefix-summed frame is already
-      // materialized (PrefixSum localCheckpoints), so deriving the step
-      // from it costs one cheap aggregate — re-aggregating `wi` would
-      // execute the whole DSIR weight pipeline a second time
-      val st = cum.agg(max("cum").cast("long").as("t"))
-        .select(greatest(expr("t div 50"), lit(1L)).as("step"))
-      cum.crossJoin(broadcast(st))
-        .filter(expr("cum div step > (cum - w) div step"))
-        .select(col("doc_id"), col("w"), col("cum"))
-        .orderBy("doc_id")
+      dsirResample(Tables.documents(s, d)).orderBy("doc_id")
     },
 
     // trained language ID (hashed-linear, fasttext-shaped): per-language
@@ -1609,22 +1614,7 @@ object TextQueries {
          |    AS bin
          |FROM rr ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
-      val wts = TextAnalysis.dsirWeights(docs,
-        docs.filter(col("source").isin("src0", "src1")),
-        "doc_id", "text", buckets = 256)
-      val wi = wts.select(col("doc_id"),
-        (floor(col("weight") * lit(1000000.0d)).cast("long") + lit(1L))
-          .as("w"))
-      val cum = graft.ops.PrefixSum.withRunningTotal(
-        wi, "cum", col("w"), Seq(col("doc_id")))
-      // step from max(cum) — the prefix-summed frame is materialized
-      // (PrefixSum localCheckpoints), so this avoids re-running the
-      // whole DSIR weight pipeline for the total (see text_dsir_resample)
-      val st = cum.agg(max("cum").cast("long").as("t"))
-        .select(greatest(expr("t div 50"), lit(1L)).as("step"))
-      val sel = cum.crossJoin(broadcast(st))
-        .filter(expr("cum div step > (cum - w) div step"))
-        .select("doc_id", "w", "cum")
+      val sel = dsirResample(docs)
       // ~50 selected rows join back for token counts — broadcastable by
       // construction (|sel| ≈ step count, corpus-size independent)
       val withTok = sel.join(docs.select(col("doc_id"),
@@ -2905,7 +2895,7 @@ object TextQueries {
     // way: `source` has a handful of values, so a source-keyed
     // WindowExec sorts ~corpus/|sources| rows in ONE task at 100 TB.
     // Instead: per-source ranks via the range-partitioned
-    // ZipIndex grouped ordinal (every source spread across all
+    // PrefixSum grouped ordinal (every source spread across all
     // partitions), then the ntile bucket replayed arithmetically from
     // (rank, source count) — remainder-to-first-buckets exactly.
     // Hashes unchanged; the single-task sort funnel gone
@@ -2944,13 +2934,13 @@ object TextQueries {
           TextAnalysis.bigramModel(docs, "text"))
         .select(col("doc_id"),
           expr("lm_sum_micro div n_bigrams").as("avg_mi"))
-      val ranked = graft.ops.ZipIndex.withGroupedOrdinal(
+      val ranked = graft.ops.PrefixSum.withGroupedRunningTotal(
         docs.select(col("doc_id"), col("source")).join(sc, Seq("doc_id")),
-        "__rank", Seq("source"),
+        "__rank", Seq("source"), lit(1L),
         Seq(col("avg_mi").desc, col("doc_id")), cntCol = Some("__n"))
       ranked
         .withColumn("b",
-          graft.ops.ZipIndex.ntileFromRank(col("__rank"), col("__n"), 3))
+          graft.ops.PrefixSum.ntileFromRank(col("__rank"), col("__n"), 3))
         .select(col("doc_id"), col("source"), col("avg_mi"),
           when(col("b") === 1, "head").when(col("b") === 2, "middle")
             .otherwise("tail").as("bucket"))
@@ -3196,7 +3186,7 @@ object TextQueries {
     // `row_number/lead OVER (PARTITION BY source)`, but with a
     // handful of sources that window funnels ~corpus/|sources| rows
     // into one sorting task at 100 TB — the engine instead assigns
-    // per-source ordinals with the range-partitioned ZipIndex grouped
+    // per-source ordinals with the range-partitioned PrefixSum grouped
     // ordinal and pairs by `(ordinal-1) div 2` through a keyed agg
     // (pair keys are high-cardinality, hash-partitioned). Hashes
     // unchanged; shared with pipeline_dpo_shards via [[dpoPairsOf]].

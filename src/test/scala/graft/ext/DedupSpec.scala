@@ -577,7 +577,7 @@ class DedupSpec extends SparkSpec {
 
   test("wide-vocab (>4096 shingles) masks: vocabulary numbered without " +
     "an unpartitioned window, fallback equals the posting-list join") {
-    // 5000-token vocabulary => the range-partitioned ZipIndex ordinal
+    // 5000-token vocabulary => the range-partitioned PrefixSum ordinal
     // (no one-task sort funnel) and numWords > 64 => the collect_list +
     // long_bitset_from_positions path (not the conditional-agg fast
     // path). Deterministic coverage: 100 docs of 50 disjoint tokens

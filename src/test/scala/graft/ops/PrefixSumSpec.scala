@@ -1,8 +1,12 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.{CountJobs, WithCheckpointDir}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class PrefixSumSpec extends SparkSpec {
   import spark.implicits._
@@ -89,8 +93,8 @@ class PrefixSumSpec extends SparkSpec {
     val df = Seq(("a", 1, 600L), ("a", 2, 600L), ("a", 3, 600L),
       ("b", 1, 100L), ("b", 2, 2000L), ("b", 3, 5L))
       .toDF("g", "k", "w")
-    val got = PrefixSum.packIntoGroupedBins(df, Seq("g"), col("w"),
-        budget = 1000L, orderBy = Seq(col("k")))
+    val got = PrefixSum.packIntoBins(df, col("w"),
+        budget = 1000L, orderBy = Seq(col("k")), groupCols = Seq("g"))
       .select("g", "k", "start_offset", "bin")
       .as[(String, Int, Long, Long)].collect()
       .map(t => (t._1, t._2) -> (t._3, t._4)).toMap
@@ -99,5 +103,65 @@ class PrefixSumSpec extends SparkSpec {
       ("a", 3) -> (1200L, 1L),
       ("b", 1) -> (0L, 0L), ("b", 2) -> (100L, 0L),
       ("b", 3) -> (2100L, 2L)))
+  }
+
+  test("withRunningTotal over a shuffle-free input: three jobs (range " +
+    "sample, map stage, one stats pass over the stored partitions)") {
+    val df = spark.range(0, 2000, 1, 5).toDF("id")
+      .withColumn("k", pmod(col("id") * 7919L, lit(1009)))
+      .withColumn("w", pmod(col("id"), lit(13)))
+    val (out, jobs) = CountJobs(PrefixSum.withRunningTotal(df, "run",
+      col("w"), Seq(col("k"), col("id")), numParts = 6))
+    assert(jobs == 3, s"$jobs jobs")
+    val want = df.withColumn("run", sum(col("w")).over(
+        Window.orderBy(col("k"), col("id"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select("id", "run").as[(Long, Long)].collect().toMap
+    assert(out.select("id", "run").as[(Long, Long)].collect().toMap == want)
+  }
+
+  test("runningTotal returns the grand total; the output plans no " +
+    "Exchange and no Window above the checkpoint leaf") {
+    val df = (1 to 300).map(i => (i, (i % 17).toLong)).toDF("k", "w")
+    val (out, total) = PrefixSum.runningTotal(df, "run", col("w"),
+      Seq(col("k")), numParts = 4)
+    assert(total == (1 to 300).map(_ % 17).sum.toLong)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("Scan ExistingRDD"), plan)
+    assert(!plan.contains("Exchange") && !plan.contains("Window"), plan)
+  }
+
+  test("reliable checkpoint path: same running totals, files written") {
+    val dir = specTempDir("prefix-ckpt").toString
+    try {
+      val df = (1 to 200).map(i => (i * 7 % 1000, i.toLong)).toDF("k", "w")
+      val plain = PrefixSum.withRunningTotal(df, "run", col("w"),
+          Seq(col("k"), col("w")))
+        .select("w", "run").as[(Long, Long)].collect().toMap
+      val reliable = WithCheckpointDir(dir) {
+        PrefixSum.withRunningTotal(df, "run", col("w"),
+            Seq(col("k"), col("w")))
+          .select("w", "run").as[(Long, Long)].collect().toMap
+      }
+      assert(reliable == plain)
+      val wrote = Files.walk(Paths.get(dir))
+        .anyMatch(p => p.getFileName.toString.startsWith("rdd-"))
+      assert(wrote, s"no rdd-* checkpoint dirs under $dir")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("only PrefixSum scans by partition offsets: no other main " +
+    "source calls spark_partition_id") {
+    val root = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    val owner = root.resolve(Paths.get("graft", "ops", "PrefixSum.scala"))
+    assert(Files.isRegularFile(owner), s"$owner missing")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != owner)
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8")
+        .contains("spark_partition_id("))
+      .map(root.relativize(_).toString).toList
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.{CountJobs, WithCheckpointDir}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+/** The ordinal entry points of [[PrefixSum]] — its running total with
+  * weight 1 — and the ntile replay over their ranks. */
 class ZipIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,7 +17,7 @@ class ZipIndexSpec extends SparkSpec {
     val want = df.withColumn("ord",
         row_number().over(Window.orderBy(col("k"), col("s"))).cast("long"))
       .select("k", "ord").as[(Int, Long)].collect().toMap
-    val got = ZipIndex.withOrdinal(df, "ord", Seq(col("k"), col("s")))
+    val got = PrefixSum.withOrdinal(df, "ord", Seq(col("k"), col("s")))
       .select("k", "ord").as[(Int, Long)].collect().toMap
     assert(got == want)
   }
@@ -32,7 +34,7 @@ class ZipIndexSpec extends SparkSpec {
     val df = spark.range(0, 2000, 1, 5).toDF("id")
       .withColumn("k", pmod(col("id") * 7919L, lit(1009)))
     val ((out, n), jobs) = CountJobs(
-      ZipIndex.withOrdinalCounted(df, "ord", Seq(col("k"), col("id")), 6))
+      PrefixSum.withOrdinalCounted(df, "ord", Seq(col("k"), col("id")), 6))
     assert(n == 2000L)
     assert(jobs == 3, s"$jobs jobs")
     val got = out.select("id", "ord").collect()
@@ -47,7 +49,7 @@ class ZipIndexSpec extends SparkSpec {
     // the ordinals must be exactly 1..n
     val same = spark.range(0, 300, 1, 4).toDF("id").withColumn("k", lit(5))
     val (tied, tiedN) =
-      ZipIndex.withOrdinalCounted(same, "ord", Seq(col("k")), 8)
+      PrefixSum.withOrdinalCounted(same, "ord", Seq(col("k")), 8)
     assert(tiedN == 300L)
     assert(tied.select("ord").as[Long].collect().sorted.toSeq ==
       (1L to 300L))
@@ -55,7 +57,7 @@ class ZipIndexSpec extends SparkSpec {
     // three rows over eight requested partitions
     val few = Seq((3, "c"), (1, "a"), (2, "b")).toDF("k", "s")
     val (ords, fewN) =
-      ZipIndex.withOrdinalCounted(few, "ord", Seq(col("k")), 8)
+      PrefixSum.withOrdinalCounted(few, "ord", Seq(col("k")), 8)
     assert(fewN == 3L)
     val got = ords.select("s", "ord").collect()
       .map(r => (r.getString(0): Any) -> r.getLong(1)).toMap
@@ -66,10 +68,10 @@ class ZipIndexSpec extends SparkSpec {
     val dir = specTempDir("zip-ckpt").toString
     try {
       val df = (1 to 200).map(i => (i * 7 % 1000, i)).toDF("k", "v")
-      val plain = ZipIndex.withOrdinal(df, "ord", Seq(col("k"), col("v")))
+      val plain = PrefixSum.withOrdinal(df, "ord", Seq(col("k"), col("v")))
         .select("v", "ord").as[(Int, Long)].collect().toMap
       val reliable = WithCheckpointDir(dir) {
-        ZipIndex.withOrdinal(df, "ord", Seq(col("k"), col("v")))
+        PrefixSum.withOrdinal(df, "ord", Seq(col("k"), col("v")))
           .select("v", "ord").as[(Int, Long)].collect().toMap
       }
       assert(reliable == plain)
@@ -83,15 +85,15 @@ class ZipIndexSpec extends SparkSpec {
 
   test("no single-partition WindowExec in the plan") {
     val df = spark.range(100).toDF("id")
-    val plan = ZipIndex.withOrdinal(df, "ord", Seq(col("id")))
+    val plan = PrefixSum.withOrdinal(df, "ord", Seq(col("id")))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"))
   }
 
   test("empty input and single row") {
     val empty = spark.range(0).toDF("id")
-    assert(ZipIndex.withOrdinal(empty, "ord", Seq(col("id"))).count() == 0)
-    val one = ZipIndex.withOrdinal(spark.range(1).toDF("id"), "ord",
+    assert(PrefixSum.withOrdinal(empty, "ord", Seq(col("id"))).count() == 0)
+    val one = PrefixSum.withOrdinal(spark.range(1).toDF("id"), "ord",
       Seq(col("id"))).select("ord").as[Long].collect()
     assert(one.toSeq == Seq(1L))
   }
@@ -99,7 +101,7 @@ class ZipIndexSpec extends SparkSpec {
   test("dense 1..n with skewed input partitioning") {
     val df = spark.range(0, 1000, 1, 13).toDF("id")
       .withColumn("k", pmod(col("id") * 2654435761L, lit(997)))
-    val ords = ZipIndex.withOrdinal(df, "ord", Seq(col("k"), col("id")), 8)
+    val ords = PrefixSum.withOrdinal(df, "ord", Seq(col("k"), col("id")), 8)
       .select("ord").as[Long].collect().sorted
     assert(ords.toSeq == (1L to 1000L))
   }
@@ -118,8 +120,8 @@ class ZipIndexSpec extends SparkSpec {
         .over(Window.partitionBy("g")))
       .select("v", "ord", "n").as[(Int, Long, Long)].collect()
       .map(t => t._1 -> (t._2, t._3)).toMap
-    val out = ZipIndex.withGroupedOrdinal(df, "ord", Seq("g"),
-      Seq(col("k"), col("v")), cntCol = Some("n"), numParts = 8)
+    val out = PrefixSum.withGroupedRunningTotal(df, "ord", Seq("g"),
+      lit(1L), Seq(col("k"), col("v")), cntCol = Some("n"), numParts = 8)
     val got = out.select("v", "ord", "n").as[(Int, Long, Long)]
       .collect().map(t => t._1 -> (t._2, t._3)).toMap
     assert(got == want)
@@ -131,14 +133,14 @@ class ZipIndexSpec extends SparkSpec {
     "groups") {
     val df = Seq(("a", 10), ("a", 7), ("a", 99), ("b", 5))
       .toDF("g", "k")
-    val got = ZipIndex.withGroupedOrdinal(df, "ord", Seq("g"),
-        Seq(col("k").desc), cntCol = Some("n"))
+    val got = PrefixSum.withGroupedRunningTotal(df, "ord", Seq("g"),
+        lit(1L), Seq(col("k").desc), cntCol = Some("n"))
       .select("g", "k", "ord", "n").as[(String, Int, Long, Long)]
       .collect().toSet
     assert(got == Set(("a", 99, 1L, 3L), ("a", 10, 2L, 3L),
       ("a", 7, 3L, 3L), ("b", 5, 1L, 1L)))
-    assert(ZipIndex.withGroupedOrdinal(spark.range(0).toDF("g"), "ord",
-      Seq("g"), Seq(col("g"))).count() == 0)
+    assert(PrefixSum.withGroupedRunningTotal(spark.range(0).toDF("g"),
+      "ord", Seq("g"), lit(1L), Seq(col("g"))).count() == 0)
   }
 
   test("ntileFromRank replays SQL ntile remainder semantics for " +
@@ -147,7 +149,7 @@ class ZipIndexSpec extends SparkSpec {
     val df = rows.toDF("n", "r")
     for (k <- 1 to 5) {
       val got = df.withColumn("b",
-          ZipIndex.ntileFromRank(col("r"), col("n"), k))
+          PrefixSum.ntileFromRank(col("r"), col("n"), k))
         .select("n", "r", "b").as[(Long, Long, Int)].collect()
         .map(t => (t._1, t._2) -> t._3).toMap
       // reference: ntile over an n-row frame, per n
@@ -172,7 +174,7 @@ class ZipIndexSpec extends SparkSpec {
       .withColumn("want", ntile(3).over(w))
       .withColumn("r", row_number().over(w).cast("long"))
       .withColumn("n", count(lit(1)).over(Window.partitionBy("g")))
-      .withColumn("got", ZipIndex.ntileFromRank(col("r"), col("n"), 3))
+      .withColumn("got", PrefixSum.ntileFromRank(col("r"), col("n"), 3))
     assert(both.filter(col("want") =!= col("got")).count() == 0)
   }
 }

@@ -11,7 +11,7 @@ import graft.ops.PlanChecks
   *
   *  - `pipeline_ccnet_buckets` / `train_dpo_pairs` /
   *    `pipeline_dpo_shards` eliminated their `source`-keyed windows
-  *    outright (ZipIndex grouped ordinals + arithmetic ntile /
+  *    outright (PrefixSum grouped ordinals + arithmetic ntile /
   *    pair-key aggs) — asserted via [[PlanChecks.assertNoWideWindow]]
   *    so a refactor cannot quietly reintroduce a per-source
   *    single-task sort.

@@ -18,7 +18,7 @@ class SplitLeakageSpec extends SparkSpec {
     // the LSH bitset re-rank's vocabulary numbering is size-adaptive:
     // a one-task window only while the vocabulary is <= 4096 rows
     // (constant work at any corpus scale), the range-partitioned
-    // ZipIndex ordinal above that — so no corpus-scale sort ever
+    // PrefixSum ordinal above that — so no corpus-scale sort ever
     // funnels. The masks stage runs behind an eager localCheckpoint so
     // the final plan can't witness it; the no-wide-window contract is
     // asserted on the tokenMasks frame itself in DedupSpec
