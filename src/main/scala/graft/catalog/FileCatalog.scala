@@ -1,9 +1,12 @@
 package graft.catalog
 
+import graft.ops.PrefixSum
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftx.RangedRelation
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
 import java.sql.Timestamp
@@ -53,6 +56,19 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   * hide `.crc` sidecars). The one thing the walk gives up is S3A's flat
   * recursive listing (one paged LIST per subtree instead of one per
   * directory); there is one walk for every scheme.
+  *
+  * Order: partition i holds only paths below those of partition i + 1,
+  * in Spark's `StringType` order. The driver sorts the first level, so
+  * each listing unit (a subtree, or a chunk of top-level files) is one
+  * contiguous range of paths, and one `parallelize` over the sorted
+  * units keeps them in contiguous, ordered partitions. Rows within a
+  * partition stay in listing order: [[walk]] streams each directory as
+  * the store returns it. The frame states this range partitioning in
+  * its plan (`RangedRelation.claim`), so [[graft.ops.PrefixSum]] numbers
+  * it with an in-task sort and no range shuffle, and checks the claim
+  * in the pass that numbers it. Spark's own operators trust the claim
+  * unchecked: a later `orderBy("path")`, window or aggregate on a
+  * listing plans no exchange for it.
   */
 object FileCatalog {
 
@@ -90,44 +106,43 @@ object FileCatalog {
     val scanRoot =
       if (dirPart.isEmpty) qualifiedRoot else new Path(qualifiedRoot, dirPart)
 
-    if (!fs.exists(scanRoot)) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-
-    // Driver lists one level; subtrees fan out to executors.
-    val firstLevel: Array[FileStatus] = fs.listStatus(scanRoot)
-    val matching = firstLevel.filter { st =>
-      residual.isEmpty || st.getPath.getName.startsWith(residual)
+    // The driver lists one level, sorted (none when the scan root is
+    // missing); subtrees fan out to executors. Runs of files are cut
+    // into chunks that share the partitions the subtrees leave of
+    // PrefixSum's n, so a flat prefix lists and numbers in parallel too.
+    val firstLevel =
+      if (fs.exists(scanRoot)) fs.listStatus(scanRoot) else Array.empty[FileStatus]
+    val entries = byPath(firstLevel.filter { st =>
+      (residual.isEmpty || st.getPath.getName.startsWith(residual)) &&
+        (recursive || !st.isDirectory)
+    })
+    val n = PrefixSum.defaultParts(spark)
+    val subtrees = entries.count(_.isDirectory)
+    val share = math.max(n - subtrees, 1)
+    val chunk = math.max(1, (entries.length - subtrees + share - 1) / share)
+    val units = Vector.newBuilder[Either[String, Seq[Row]]]
+    var run = Vector.empty[Row]
+    def flush(): Unit = {
+      run.grouped(chunk).foreach(c => units += Right(c))
+      run = Vector.empty
     }
-    val (dirs, files) = matching.partition(_.isDirectory)
-
-    def toRow(st: FileStatus): Row = {
-      val p = st.getPath.toString
-      val rel = relName(p, rootStr)
-      Row(p, rel, st.getLen, new Timestamp(st.getModificationTime))
+    entries.foreach { st =>
+      if (st.isDirectory) { flush(); units += Left(st.getPath.toString) }
+      else run :+= toRow(st, rootStr)
     }
-
-    val topRows = files.map(toRow).toSeq
-    val subtreeRows =
-      if (!recursive || dirs.isEmpty) spark.sparkContext.emptyRDD[Row]
-      else {
-        val dirPaths = dirs.map(_.getPath.toString).toSeq
-        spark.sparkContext
-          .parallelize(dirPaths, math.min(dirPaths.size, 64))
-          .flatMap { d =>
-            val p = new Path(d)
-            walk(p.getFileSystem(conf.value), p).map { st =>
-              val path = st.getPath.toString
-              Row(path, relName(path, rootStr), st.getLen,
-                new Timestamp(st.getModificationTime))
-            }
-          }
-      }
-    // a scan with no top-level files adds no (empty) partition: it
-    // would cost a task in every stage over the catalog
-    val all =
-      if (topRows.isEmpty) subtreeRows
-      else spark.sparkContext.parallelize(topRows, 1) ++ subtreeRows
-    spark.createDataFrame(all, schema)
+    flush()
+    val sorted = units.result()
+    // one partition per unit, up to 64 (or n when larger); `parallelize`
+    // slices contiguously, so partition i holds only paths below those
+    // of partition i + 1
+    val slices = math.max(1, math.min(sorted.size, math.max(n, 64)))
+    val rows = spark.sparkContext.parallelize(sorted, slices).flatMap {
+      case Right(files) => files
+      case Left(d) =>
+        val p = new Path(d)
+        walk(p.getFileSystem(conf.value), p).map(toRow(_, rootStr))
+    }
+    RangedRelation.claim(spark.createDataFrame(rows, schema), "path")
   }
 
   /** Point lookup (F2 `exact_match` — no listing, `delete_file.py:134-139`). */
@@ -151,6 +166,23 @@ object FileCatalog {
     Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).flatMap {
       st => if (st.isDirectory) walk(fs, st.getPath) else Iterator.single(st)
     }
+  }
+
+  /** One directory's entries in the order Spark's `StringType` sorts
+    * the paths below them: unsigned UTF-8 bytes, which `String.compareTo`
+    * (UTF-16 units) contradicts above U+FFFF. A directory sorts by its
+    * path plus "/", the prefix of every path it holds: `a-b/x` <
+    * `a.txt` < `a/x`. */
+  private def byPath(entries: Array[FileStatus]): Array[FileStatus] =
+    entries.map { st =>
+      val p = st.getPath.toString
+      (UTF8String.fromString(if (st.isDirectory) p + "/" else p), st)
+    }.sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
+
+  private def toRow(st: FileStatus, rootStr: String): Row = {
+    val p = st.getPath.toString
+    Row(p, relName(p, rootStr), st.getLen,
+      new Timestamp(st.getModificationTime))
   }
 
   private def relName(path: String, rootStr: String): String = {

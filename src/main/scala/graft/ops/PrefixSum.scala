@@ -1,7 +1,12 @@
 package graft.ops
 
 import graft.functions.PartitionRunningSum
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.plans.physical.{OrderedDistribution, RangePartitioning}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** The engine's one ORDERED SCAN: ordinals and weighted running totals
@@ -19,10 +24,20 @@ import org.apache.spark.sql.functions._
   * prefix sum of ≤ numParts partition totals, are computed on the
   * driver and applied as an array literal indexed by partition id.
   *
+  * Ranged input: when the input's plan already states that it is
+  * range-partitioned on the key, as a [[graft.catalog.FileCatalog]]
+  * listing is on `path`, the range shuffle is skipped: each of the
+  * input's own partitions is sorted in its task (a sort Spark drops
+  * when the input is sorted already) and scanned. Such a claim is
+  * checked, not trusted: the stats pass returns each partition's first
+  * and last rows and the driver compares each partition's last row
+  * with the next one's first, so a false claim fails naming the
+  * partition instead of misnumbering rows.
+  *
   * Jobs: two for the range exchange (sample, map stage), then ONE job
   * over the stored partitions fills the checkpoint and returns each
   * partition's total — three before the first action on a shuffle-free
-  * input, with the grand total free.
+  * input, ONE on a ranged input, with the grand total free.
   *
   * Weights are cast to LONG: exact integer sums commute across
   * partitions and replay bit for bit in a SQL oracle. A null weight
@@ -35,51 +50,113 @@ object PrefixSum {
     * `orderBy` (which must be a total order for deterministic results)
     * and returns the grand total with it.
     *
-    * @param numParts range partitions; defaults to
-    *                 spark.sql.shuffle.partitions (or defaultParallelism
-    *                 when that conf is non-numeric, e.g. "auto") */
+    * An input whose plan is already range-partitioned on `orderBy` (see
+    * [[claimed]]) is sorted within its own partitions, with no range
+    * shuffle; the stats pass then checks the partitions' order and
+    * fails on the first partition that breaks it.
+    *
+    * @param numParts range partitions when the input is shuffled;
+    *                 defaults to [[defaultParts]] */
   def runningTotal(df: DataFrame, totalCol: String, weight: Column,
       orderBy: Seq[Column], numParts: Int = 0): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    val n = if (numParts > 0) numParts
-      else scala.util.Try(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt)
-        .filter(_ > 0)
-        .getOrElse(spark.sparkContext.defaultParallelism)
+    val order = claimed(df, orderBy)
+    val sorted = (if (order.nonEmpty) df else {
+      val n = if (numParts > 0) numParts else defaultParts(df.sparkSession)
+      df.repartitionByRange(n, orderBy: _*)
+    }).sortWithinPartitions(orderBy: _*)
     // the stats job and the output both consume `ranged`; materializing
     // it once makes them read the SAME partition boundaries and the
     // SAME local totals by construction — two independently sampled
     // RangePartitioners could disagree and the offsets would silently
-    // mismatch the pids. The lazy checkpoint is filled by the stats job
-    // itself, so the stored copy costs no job of its own.
-    val ranged = Materialize(df.repartitionByRange(n, orderBy: _*)
-      .sortWithinPartitions(orderBy: _*)
+    // mismatch the pids (and a ranged source would be listed twice).
+    // The lazy checkpoint is filled by the stats job itself, so the
+    // stored copy costs no job of its own.
+    val ranged = Materialize(sorted
       .withColumn("__local", PartitionRunningSum(weight))
       .withColumn("__pid", spark_partition_id()), eager = false)
     // per-partition (pid, total) in ONE job over the stored partitions:
     // a partition's total is its last local running total; an empty
-    // partition yields none (its pid is never read)
+    // partition yields none (its pid is never read). On a claimed range
+    // partitioning the same pass keeps the partition's first and last
+    // rows for the driver to chain.
     val pidAt = ranged.schema.fieldIndex("__pid")
     val localAt = ranged.schema.fieldIndex("__local")
+    // the input's columns lead `ranged`'s rows, so the order binds there
+    val check = if (order.isEmpty) None else Some(new InterpretedOrdering(
+      order.map(BindReferences.bindReference(_, df.queryExecution.analyzed.output))))
+    val claim = order.map(_.sql).mkString(", ")
+    val keep = check.nonEmpty
     val stats = ranged.queryExecution.toRdd.mapPartitions { rows =>
       if (!rows.hasNext) Iterator.empty
       else {
         val first = rows.next()
         val pid = first.getInt(pidAt)
-        var last = first.getLong(localAt)
-        while (rows.hasNext) last = rows.next().getLong(localAt)
-        Iterator.single((pid, last))
+        val head = if (keep) first.copy() else null
+        var row = first
+        while (rows.hasNext) row = rows.next()
+        Iterator.single(PartStats(pid, row.getLong(localAt), head,
+          if (keep) row.copy() else null))
       }
-    }.collect().sortBy(_._1)
+    }.collect().sortBy(_.pid)
+    check.foreach { ord =>
+      stats.zip(stats.drop(1)).foreach { case (a, b) =>
+        require(ord.compare(a.last, b.first) <= 0, "PrefixSum: the input " +
+          s"claims range partitioning on $claim but partition ${b.pid} " +
+          "breaks it")
+      }
+    }
     // exclusive prefix sum in pid order on the driver
-    val offset = new Array[Long](stats.lastOption.fold(0)(_._1 + 1))
+    val offset = new Array[Long](stats.lastOption.fold(0)(_.pid + 1))
     var acc = 0L
-    stats.foreach { case (pid, tot) => offset(pid) = acc; acc += tot }
+    stats.foreach { s => offset(s.pid) = acc; acc += s.total }
     val out = ranged
       .withColumn(totalCol, col("__local") +
         element_at(typedLit(offset.toSeq), col("__pid") + 1))
       .drop("__local", "__pid")
     (out, acc)
+  }
+
+  /** One stored partition of the scan: its id, its total, and (on a
+    * claimed range partitioning only, else null) its first and last
+    * rows. */
+  private final case class PartStats(pid: Int, total: Long,
+      first: InternalRow, last: InternalRow)
+
+  /** The range partition count when the caller gives none:
+    * spark.sql.shuffle.partitions, or defaultParallelism when that conf
+    * is non-numeric (e.g. "auto"). [[graft.catalog.FileCatalog]] spreads
+    * top-level files over the same count. */
+  def defaultParts(spark: SparkSession): Int =
+    scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .filter(_ > 0)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+
+  /** `orderBy` resolved against `df` when `df`'s analyzed plan is
+    * already range-partitioned on it — an RDD leaf, reached through
+    * `Project`s and `Filter`s only, whose partitioning satisfies
+    * `OrderedDistribution(orderBy)` (a [[graft.catalog.FileCatalog]]
+    * listing, a checkpoint of a frame already ranged on the same key) —
+    * else empty. Reads the plan the Dataset already holds: nothing is
+    * optimized or planned again. */
+  private def claimed(df: DataFrame, orderBy: Seq[Column]): Seq[SortOrder] = {
+    def leaf(p: LogicalPlan): Option[LogicalRDD] = p match {
+      case r: LogicalRDD => Some(r)
+      case Project(_, child) => leaf(child)
+      case Filter(_, child) => leaf(child)
+      case _ => None
+    }
+    leaf(df.queryExecution.analyzed) match {
+      case Some(r) if r.outputPartitioning.isInstanceOf[RangePartitioning] =>
+        val order = df.sortWithinPartitions(orderBy: _*)
+          .queryExecution.analyzed.asInstanceOf[Sort].order
+        // an attribute of the leaf that reaches `df` unchanged keeps its
+        // id through every Project above it
+        val holds = order.nonEmpty &&
+          order.forall(_.references.subsetOf(r.outputSet)) &&
+          r.outputPartitioning.satisfies(OrderedDistribution(order))
+        if (holds) order else Nil
+      case _ => Nil
+    }
   }
 
   /** [[runningTotal]] without the grand total. */

@@ -24,12 +24,18 @@ import org.apache.spark.sql.functions._
   * deterministic under any partitioning (SURVEY.md §2.5 A3).
   *
   * Scale note: the global ordinal is a total order, but it is NOT computed
-  * with a single-partition window — [[PrefixSum.withOrdinal]] range-partitions
-  * on the sort key, scans each partition and adds per-partition offsets
-  * (the running total of weight 1), so enumeration of a
-  * 100M-file manifest stays parallel. The total count comes free from the
-  * same enumeration (no `count() OVER ()` global window, no second scan
-  * of the catalog): `UnlessSingle` reads it, [[planifyCounted]] returns it.
+  * with a single-partition window — [[PrefixSum.withOrdinal]] scans each
+  * partition in order and adds per-partition offsets (the running total
+  * of weight 1), so enumeration of a 100M-file manifest stays parallel.
+  * A [[graft.catalog.FileCatalog]] listing (filtered or projected) is
+  * already range-partitioned on the path and says so in its plan, so it
+  * is numbered where it was listed, each partition sorted in its task:
+  * ONE job that lists, numbers and stores the manifest, no range
+  * shuffle. Any other catalog (a table, a union of listings) is
+  * range-partitioned on the path first. The total count comes free from
+  * the same enumeration (no `count() OVER ()` global window, no second
+  * scan of the catalog): `UnlessSingle` reads it, [[planifyCounted]]
+  * returns it.
   */
 object RenamePlan {
 

@@ -3,6 +3,7 @@ package graft.ops
 import graft.catalog.SerializableHadoopConf
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, FileUtil, LocalFileSystem, Path}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 
 import java.nio.file.{FileAlreadyExistsException, Files,
@@ -16,7 +17,11 @@ import java.nio.file.{FileAlreadyExistsException, Files,
   * Execution model: the (src, dest) manifest is a DataFrame; the side
   * effect runs in `foreachPartition`, one Hadoop `FileSystem` handle per
   * task, so transfer parallelism = min(#files, cluster task slots) instead
-  * of the reference's 1. All four clouds' stores (abfss/s3a/gs/file) share
+  * of the reference's 1. Copies and moves first deal the manifest's rows
+  * round-robin over the task slots ([[spread]]): a manifest numbered
+  * where it was listed keeps the listing's partitions, one per subtree,
+  * and a subtree holding most of the files would otherwise be
+  * transferred by one task. All four clouds' stores (abfss/s3a/gs/file) share
   * the `FileSystem` API, so tests run against `file://` temp dirs with the
   * exact code paths production would use.
   *
@@ -41,15 +46,14 @@ object Transfer {
     * download — direction is just which side is remote. */
   def copyFiles(manifest: DataFrame, overwrite: Boolean = false): Unit = {
     val conf = serializableConf(manifest)
-    manifest.select("src_path", "dest_path").foreachPartition {
-      (rows: Iterator[Row]) =>
-        val cache = new FsCache(conf)
-        rows.foreach { r =>
-          val src = new Path(r.getString(0))
-          val dst = new Path(r.getString(1))
-          copyOne(cache.get(src), src, cache.get(dst), dst, overwrite,
-            conf.value)
-        }
+    spread(manifest).foreachPartition { rows =>
+      val cache = new FsCache(conf)
+      rows.foreach { r =>
+        val src = new Path(r.getString(0))
+        val dst = new Path(r.getString(1))
+        copyOne(cache.get(src), src, cache.get(dst), dst, overwrite,
+          conf.value)
+      }
     }
   }
 
@@ -58,32 +62,39 @@ object Transfer {
     * exactly the reference's copy-then-delete with the fast path added. */
   def moveFiles(manifest: DataFrame): Unit = {
     val conf = serializableConf(manifest)
-    manifest.select("src_path", "dest_path").foreachPartition {
-      (rows: Iterator[Row]) =>
-        val cache = new FsCache(conf)
-        rows.foreach { r =>
-          val src = new Path(r.getString(0))
-          val dst = new Path(r.getString(1))
-          val srcFs = cache.get(src)
-          val dstFs = cache.get(dst)
-          try {
-            mkParent(dstFs, dst)
-            // rename is only defined within one file system; cross-store
-            // moves go straight to copy+delete (the reference's own shape)
-            val sameStore = srcFs.getUri == dstFs.getUri
-            val renamed = sameStore && srcFs.rename(src, dst)
-            if (!renamed) {
-              copyOne(srcFs, src, dstFs, dst, overwrite = false, conf.value)
-              if (!srcFs.delete(src, false)) throw new java.io.IOException(
-                s"copied, but could not delete the source $src")
-            }
-          } catch {
-            case e: Exception => throw BlueprintError.MoveError(
-              src.toString, dst.toString, e)
+    spread(manifest).foreachPartition { rows =>
+      val cache = new FsCache(conf)
+      rows.foreach { r =>
+        val src = new Path(r.getString(0))
+        val dst = new Path(r.getString(1))
+        val srcFs = cache.get(src)
+        val dstFs = cache.get(dst)
+        try {
+          mkParent(dstFs, dst)
+          // rename is only defined within one file system; cross-store
+          // moves go straight to copy+delete (the reference's own shape)
+          val sameStore = srcFs.getUri == dstFs.getUri
+          val renamed = sameStore && srcFs.rename(src, dst)
+          if (!renamed) {
+            copyOne(srcFs, src, dstFs, dst, overwrite = false, conf.value)
+            if (!srcFs.delete(src, false)) throw new java.io.IOException(
+              s"copied, but could not delete the source $src")
           }
+        } catch {
+          case e: Exception => throw BlueprintError.MoveError(
+            src.toString, dst.toString, e)
         }
+      }
     }
   }
+
+  /** The manifest's (`src_path`, `dest_path`) rows dealt round-robin
+    * over the cluster's task slots: an RDD shuffle inside the transfer's
+    * own job (a DataFrame `repartition` would plan an exchange that
+    * adaptive execution runs as a job of its own). */
+  private def spread(manifest: DataFrame): RDD[Row] =
+    manifest.select("src_path", "dest_path").rdd.repartition(
+      manifest.sparkSession.sparkContext.defaultParallelism)
 
   /** Delete every `path` row. */
   def deleteFiles(manifest: DataFrame): Unit = {

@@ -1,7 +1,7 @@
 package graft
 
-import graft.ops.{BlueprintError, ExactMatch, RegexMatch}
-import org.apache.spark.CountJobs
+import graft.ops.{BlueprintError, ExactMatch, RegexMatch, Transfer}
+import org.apache.spark.{CountJobs, ResultTaskReads}
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
@@ -114,24 +114,59 @@ class BlueprintsSpec extends SparkSpec {
     assert(r.manifest.columns.toSeq == Seq("src_path", "dest_path"))
   }
 
-  test("job floor: regex upload 4 jobs, dry run 3, delete 2") {
-    // upload: the range exchange's sample + map stage, one ordinal
-    // stats pass that also fills the enumerated manifest, the copy;
-    // delete: the snapshot job (which counts) and the deletes
+  test("job floor: upload 2, dry run 1, download 2, move 2, delete 2") {
+    // a regex upload, download or move: ONE job lists, numbers and
+    // stores the manifest (the listing arrives in path order, so no
+    // range shuffle), then the transfer; a dry run stops after the
+    // first. Delete: the snapshot job (which counts) and the deletes
     val src = mkSrc()
     val dst = specTempDir("bp-dst")
     val (up, upJobs) = CountJobs(Blueprints.upload(spark,
       src.toUri.toString, "in", RegexMatch("\\.csv$"), dst.toUri.toString,
       destinationFolderName = "up", destinationFileName = Some("f.csv")))
     assert(up.matched == 2 && ls(dst) == Set("up/f_1.csv", "up/f_2.csv"))
-    assert(upJobs == 4, s"upload ran $upJobs jobs")
+    assert(upJobs == 2, s"upload ran $upJobs jobs")
     val (dry, dryJobs) = CountJobs(Blueprints.upload(spark,
       src.toUri.toString, "in", RegexMatch("\\.csv$"), dst.toUri.toString,
       destinationFolderName = "dry", execute = false))
-    assert(dry.matched == 2 && dryJobs == 3, s"dry run ran $dryJobs jobs")
+    assert(dry.matched == 2 && dryJobs == 1, s"dry run ran $dryJobs jobs")
+    val local = specTempDir("bp-down")
+    val (down, downJobs) = CountJobs(Blueprints.download(spark,
+      dst.toUri.toString, "up", RegexMatch("\\.csv$"), local.toUri.toString,
+      destinationFolderName = "got", destinationFileName = Some("g.csv")))
+    assert(down.matched == 2 && ls(local) == Set("got/g_1.csv", "got/g_2.csv"))
+    assert(downJobs == 2, s"download ran $downJobs jobs")
+    val (mv, mvJobs) = CountJobs(Blueprints.move(spark, local.toUri.toString,
+      "got", RegexMatch("\\.csv$"), destinationFolderName = "moved",
+      destinationFileName = Some("m.csv")))
+    assert(mv.matched == 2 && ls(local) == Set("moved/m_1.csv", "moved/m_2.csv"))
+    assert(mvJobs == 2, s"move ran $mvJobs jobs")
     val (del, delJobs) = CountJobs(Blueprints.delete(spark,
       dst.toUri.toString, "up", RegexMatch("\\.csv$")))
     assert(del.matched == 2 && ls(dst).isEmpty)
     assert(delJobs == 2, s"delete ran $delJobs jobs")
+  }
+
+  test("a copy spreads over every task slot, however skewed the tree") {
+    // six top-level files beside one directory of 60: the listing gives
+    // `big` one partition of its own, and the copy must not inherit it
+    val src = specTempDir("bp-skew")
+    Files.createDirectories(src.resolve("in/big"))
+    (0 until 6).foreach(i => Files.writeString(src.resolve(s"in/t$i.csv"), "t"))
+    (0 until 60).foreach(i =>
+      Files.writeString(src.resolve(f"in/big/b$i%02d.csv"), "b"))
+    val dst = specTempDir("bp-skew-dst")
+    val plan = Blueprints.upload(spark, src.toUri.toString, "in",
+      RegexMatch("\\.csv$"), dst.toUri.toString,
+      destinationFolderName = "up", destinationFileName = Some("f.csv"),
+      execute = false)
+    assert(plan.manifest.rdd.getNumPartitions == 4)
+    val (_, reads) = ResultTaskReads(Transfer.copyFiles(plan.manifest))
+    assert(plan.matched == 66 && ls(dst).size == 66)
+    // the copy's tasks read the dealt rows: 16 or 17 each, give or take
+    // one per listing partition; unspread, one task would copy all of big
+    val slots = spark.sparkContext.defaultParallelism
+    assert(reads.size == slots && reads.sum == 66 && reads.max <= 21,
+      reads.mkString(", "))
   }
 }

@@ -80,6 +80,19 @@ class FileCatalogSpec extends SparkSpec {
     assert(FileCatalog.list(spark, root.toString).rdd.getNumPartitions == 4)
   }
 
+  test("at Spark's default of 200 partitions the driver lists one level") {
+    // root: three subtrees, and top.csv and lo_top.csv cut into one-file
+    // chunks; nothing below the first level is listed on the driver
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try {
+      assert(FileCatalog.list(spark, root.toString).rdd.getNumPartitions == 5)
+      assert(FileCatalog.list(spark, root.toString, "lo1/m").rdd
+        .getNumPartitions == 1)
+      assert(catalog("") == oracle)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("no main source lists through LocatedFileStatus") {
     // Hadoop's listFiles(path, recursive) and listLocatedStatus build a
     // LocatedFileStatus per file; java.io.File.listFiles() takes at most

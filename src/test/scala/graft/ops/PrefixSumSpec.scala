@@ -2,8 +2,11 @@ package graft.ops
 
 import graft.SparkSpec
 import org.apache.spark.{CountJobs, WithCheckpointDir}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.RangedRelation
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -129,6 +132,28 @@ class PrefixSumSpec extends SparkSpec {
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("Scan ExistingRDD"), plan)
     assert(!plan.contains("Exchange") && !plan.contains("Window"), plan)
+  }
+
+  test("an input already range-partitioned on the key: ONE job before " +
+    "the first action, and no Exchange planned") {
+    // a frame whose plan states range partitioning on `k`, as a
+    // FileCatalog listing states it on `path`; `parallelize` slices the
+    // 500 keys into 4 runs of 125, each reversed, so only the in-task
+    // sort puts a partition in order
+    val keys = (0 until 500).map(i => f"k$i%04d")
+    val df = RangedRelation.claim(spark.createDataFrame(
+        spark.sparkContext.parallelize(
+          keys.grouped(125).flatMap(_.reverse).map(Row(_)).toSeq, 4),
+        StructType(Seq(StructField("k", StringType)))), "k")
+    val ((out, n), jobs) = CountJobs(
+      PrefixSum.withOrdinalCounted(df, "ord", Seq(col("k"))))
+    // a range exchange costs a sample job and a map-stage job of its own
+    assert(jobs == 1 && n == 500, s"$jobs jobs, $n rows")
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert(out.rdd.getNumPartitions == 4)
+    assert(out.select("k", "ord").as[(String, Long)].collect().toMap ==
+      keys.zipWithIndex.map { case (k, i) => k -> (i + 1L) }.toMap)
   }
 
   test("reliable checkpoint path: same running totals, files written") {
