@@ -30,6 +30,12 @@ import org.apache.spark.sql.SparkSession
   * `--container-uri` plus optional `--connection-string` mapped through
   * [[graft.catalog.AzureConf]] — URIs make the same binary work against
   * file://, hdfs://, s3a:// and abfss://.)
+  *
+  * A local tree with non-ASCII file names needs a UTF-8 locale in every
+  * JVM that lists it: under the POSIX locale Java decodes such names as
+  * `?`. Set `LC_ALL` for the driver and for the executors, e.g.
+  * `LC_ALL=C.UTF-8 spark-submit --conf spark.executorEnv.LC_ALL=C.UTF-8 …`
+  * (`sbt run` sets it from `build.sbt`).
   */
 object BlueprintCli {
 

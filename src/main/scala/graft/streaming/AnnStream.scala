@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ext.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Streaming ANN index maintenance — the IVF-PQ lifecycle on an
   * unbounded embedding stream (the streaming twin of
@@ -13,15 +12,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * existing corpus) and written into a cluster-partitioned parquet
   * store that serving reads with partition pruning.
   *
-  * Crash safety WITHOUT a band-store-style swap dance: rows are
-  * partitioned by (batch_id, cluster_id) and written with DYNAMIC
-  * partition overwrite, so a replayed batch (foreachBatch may re-run
-  * the last uncommitted batch) rewrites exactly its own partitions —
-  * encoding is deterministic, the replay produces a superset of
-  * whatever a partial first attempt managed to write, and no orphan
-  * rows survive. Retraining (a new [[Similarity.ivfPqBuild]]) happens
-  * out of band when drift accumulates; until then every batch is two
-  * broadcast joins.
+  * Crash safety is [[BatchStore]]'s replay contract, with no
+  * band-store-style swap dance: rows are partitioned by (batch_id,
+  * cluster_id), so a replayed batch rewrites exactly its own partitions.
+  * Retraining (a new [[Similarity.ivfPqBuild]]) happens out of band when
+  * drift accumulates; until then every batch is two broadcast joins.
   */
 object AnnStream {
 
@@ -32,81 +27,44 @@ object AnnStream {
     * prunes at file listing exactly as on the build store.
     *
     * Every `compactEvery` batches (0 disables) the accumulated history
-    * is physically folded ([[StoreCompaction]] park-aside swap): all
-    * partitions with `batch_id < current` collapse to ONE merged
-    * `batch_id = current-1` partition set after applying the id-keyed
-    * last-write-wins [[readCodes]] performs at read time — so the fold
-    * changes no served result, and the store's partition count is
-    * bounded by `compactEvery + 1` instead of stream lifetime. A
-    * crashed first attempt's own partial partitions are excluded from
-    * the fold and dropped by the rewrite; the replay rewrites them
-    * (see [[StoreCompaction]]'s replay-safety rule). */
+    * is physically folded ([[BatchStore.compact]]): all partitions with
+    * `batch_id < current` collapse to ONE merged `batch_id = current-1`
+    * partition set after applying the id-keyed last-write-wins
+    * [[readCodes]] performs at read time — so the fold changes no
+    * served result, and the store's partition count is bounded by
+    * `compactEvery + 1` instead of stream lifetime. */
   def indexBatches(emb: DataFrame, model: Similarity.IvfPqModel,
       storeDir: String, checkpointDir: String,
       idCol: String = "vec_id", embCol: String = "embedding",
       compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        StoreCompaction.recoverParked(spark, storeDir)
-        if (StoreCompaction.due(batchId, compactEvery))
-          StoreCompaction.swapRewrite(spark, storeDir)(
-            dir => readStoreRaw(spark, dir),
-            all => {
-              val hist = all.filter(col("batch_id") < batchId)
-              val newest = hist.groupBy("id")
-                .agg(max("batch_id").as("batch_id"))
-              // after the per-id fold exactly one encoding per id
-              // remains, so re-stamping the merged set to one batch id
-              // preserves last-write-wins against all FUTURE batches
-              hist.join(newest, Seq("id", "batch_id"))
-                .withColumn("batch_id", lit(batchId - 1))
-            },
-            (df, dir) => df.write.mode("overwrite")
-              .partitionBy("batch_id", "cluster_id").parquet(dir))
-        val codes = Similarity.ivfPqAdd(model, batch, idCol, embCol)
-          .withColumn("batch_id", lit(batchId))
-        // dynamic overwrite: only the partitions PRESENT in this
-        // batch's codes are replaced — the idempotent-replay mechanism.
-        // The mode rides as a WRITER-scoped option (not a set/restore of
-        // the session conf, which would race concurrent writers sharing
-        // the session).
-        codes.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "cluster_id")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
+    BatchStore.start(emb.writeStream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // after the per-id fold exactly one encoding per id remains, so
+      // re-stamping the merged set to one batch id preserves
+      // last-write-wins against all FUTURE batches
+      BatchStore.compact(spark, storeDir, Schema, batchId, compactEvery,
+        "cluster_id")(BatchStore.newest(_, "id"))
+      BatchStore.write(Similarity.ivfPqAdd(model, batch, idCol, embCol),
+        batchId, storeDir, "cluster_id")
+    }
 
-  /** Read the store back in `model.codes` schema/column order (explicit
-    * schema keeps the partition columns LongType — inference would
-    * int-ify the directory values).
+  /** The store's physical row shape. */
+  private val Schema =
+    "id LONG, sub LONG, code LONG, batch_id LONG, cluster_id LONG"
+
+  /** Read the store back in `model.codes` schema/column order.
     *
     * LAST WRITE WINS per vector: a vector id re-emitted in a later
     * batch (a recomputed embedding) leaves BOTH encodings in the
     * append-only store; serving over both would double the ADC partial
     * sums (same cluster) or return the id twice (different clusters).
-    * The read keeps only each id's newest batch — an id-keyed max +
-    * semi-join, the standard compacted-log read. Ids must be unique
-    * WITHIN a batch (one embedding per id per micro-batch). */
-  def readCodes(spark: SparkSession, storeDir: String): DataFrame = {
-    val all = readStoreRaw(spark, storeDir)
-    val newest = all.groupBy("id").agg(max("batch_id").as("batch_id"))
-    all.join(newest, Seq("id", "batch_id"))
+    * The read keeps only each id's newest batch ([[BatchStore.newest]]),
+    * the standard compacted-log read. Ids must be unique WITHIN a batch
+    * (one embedding per id per micro-batch). */
+  def readCodes(spark: SparkSession, storeDir: String): DataFrame =
+    BatchStore.newest(BatchStore.read(spark, storeDir, Schema), "id")
       .select("id", "cluster_id", "sub", "code")
-  }
-
-  /** The store in its physical row shape, explicit schema (shared by
-    * [[readCodes]] and the compaction fold). */
-  private def readStoreRaw(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.schema(StructType(Seq(
-        StructField("id", LongType), StructField("sub", LongType),
-        StructField("code", LongType), StructField("batch_id", LongType),
-        StructField("cluster_id", LongType))))
-      .parquet(storeDir)
 
   /** Union build-time codes with stream codes for serving, id-keyed
     * NEWEST WINS across the build/stream boundary: an id present in

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.ops.{RegexMatch, RenamePlan, Transfer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -55,20 +55,18 @@ object BlueprintStream {
       new org.apache.hadoop.fs.Path(rootPart).toUri.getPath.stripSuffix("/") + "/"
     val name = col("path")
       .substr(locate(marker, col("path")) + marker.length, lit(1 << 20))
-    files
+    val selected = files
       .withColumn("name", name)
       .filter(RegexMatch(pattern).predicate(col("name")))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val manifest = RenamePlan.planify(
-            batch.select("path"), destFolder, None,
-            RenamePlan.Numbering.Never)
-          .select(col("path").as("src_path"),
-            concat(lit(root), col("dest_path")).as("dest_path"))
-        Transfer.copyFiles(manifest, overwrite = true)
-      }
-      .start()
+    BatchStore.start(
+        selected.writeStream.trigger(Trigger.ProcessingTime("1 second")),
+        checkpointDir) { (batch, _) =>
+      val manifest = RenamePlan.planify(
+          batch.select("path"), destFolder, None,
+          RenamePlan.Numbering.Never)
+        .select(col("path").as("src_path"),
+          concat(lit(root), col("dest_path")).as("dest_path"))
+      Transfer.copyFiles(manifest, overwrite = true)
+    }
   }
 }

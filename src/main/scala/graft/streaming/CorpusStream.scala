@@ -73,69 +73,55 @@ object CorpusStream {
     * partition key itself is constant within the frame so it cannot
     * break ties), then replaces matching snapshot keys and appends the
     * rest — exactly `q45_merge_upsert`'s join shape, driven by a
-    * stream. The swap is write-to-side-dir + rename-aside: the live
-    * dir is renamed to `__old`, the side dir renamed into place, then
-    * `__old` deleted — so a COMPLETE table exists on disk at every
-    * instant except the sub-second window between the two renames, and
-    * a crash anywhere is recoverable: on batch start, a missing live
-    * dir with a surviving `__old` is renamed back before merging
-    * (production table formats replace the renames with a
-    * manifest-pointer flip, same plan underneath). foreachBatch may
+    * stream. The merged snapshot is written to a side dir and swapped in
+    * by [[StoreCompaction]]'s park-aside renames, so a COMPLETE table
+    * exists on disk at every instant except the sub-second window
+    * between the two renames, and a crash anywhere is recoverable on
+    * the next batch start (production table formats replace the
+    * renames with a manifest-pointer flip, same plan underneath). foreachBatch may
     * replay a batch after recovery; the merge is idempotent (left-anti
     * + union on the same keys), so a replay converges to the same
     * snapshot. Returns the started query. */
   def upsertBatches(docs: DataFrame, snapshotDir: String, keyCol: String,
       verCol: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // tiebreak version ties on a content hash of the non-key
-        // columns: row-content-determined, never partition-layout-
-        // determined (keyCol is the partition key — constant in the
-        // frame, useless as a tiebreaker)
-        val tieCols = batch.columns.filterNot(c => c == keyCol)
-          .map(col).toIndexedSeq
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keyCol)
-          .orderBy(col(verCol).desc, xxhash64(tieCols: _*))
-        val latest = batch
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-        val conf = spark.sparkContext.hadoopConfiguration
-        val snap = new org.apache.hadoop.fs.Path(snapshotDir)
-        val old = new org.apache.hadoop.fs.Path(snapshotDir + "__old")
-        val fs = snap.getFileSystem(conf)
-        // recovery: a crash between the two renames below left the
-        // complete previous snapshot parked at __old — restore it so
-        // the merge base (and readers) never see a missing table
-        if (!fs.exists(snap) && fs.exists(old)) fs.rename(old, snap)
-        // a crash BEFORE the rename leaves an orphaned side dir; it is
-        // never the live snapshot, so sweep all of them on batch start
-        // (this batch's own tmp is written after this point)
-        Option(fs.globStatus(
-            new org.apache.hadoop.fs.Path(snapshotDir + "__tmp-*")))
-          .foreach(_.foreach(s => fs.delete(s.getPath, true)))
-        val merged =
-          if (fs.exists(snap))
-            spark.read.parquet(snapshotDir)
-              .join(latest.select(keyCol), Seq(keyCol), "left_anti")
-              .unionByName(latest)
-          else latest
-        val tmp = new org.apache.hadoop.fs.Path(
-          snapshotDir + s"__tmp-$batchId")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        // swap: park the live dir aside, promote the side dir, then
-        // drop the parked copy — at no point is the ONLY complete
-        // snapshot deleted before its replacement is in place
-        if (fs.exists(old)) fs.delete(old, true)
-        if (fs.exists(snap)) fs.rename(snap, old)
-        fs.rename(tmp, snap)
-        if (fs.exists(old)) fs.delete(old, true)
-        ()
-      }
-      .start()
+    BatchStore.start(docs.writeStream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // tiebreak version ties on a content hash of the non-key columns:
+      // row-content-determined, never partition-layout-determined
+      // (keyCol is the partition key — constant in the frame, useless
+      // as a tiebreaker)
+      val tieCols = batch.columns.filterNot(c => c == keyCol)
+        .map(col).toIndexedSeq
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(keyCol)
+        .orderBy(col(verCol).desc, xxhash64(tieCols: _*))
+      val latest = batch
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      val snap = new org.apache.hadoop.fs.Path(snapshotDir)
+      val fs = snap.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // a crash between the swap's two renames left the complete
+      // previous snapshot parked at __old — restore it so the merge
+      // base (and readers) never see a missing table
+      StoreCompaction.recoverParked(spark, snapshotDir)
+      // a crash BEFORE the rename leaves an orphaned side dir; it is
+      // never the live snapshot, so sweep all of them on batch start
+      // (this batch's own tmp is written after this point)
+      Option(fs.globStatus(
+          new org.apache.hadoop.fs.Path(snapshotDir + "__tmp-*")))
+        .foreach(_.foreach(s => fs.delete(s.getPath, true)))
+      val merged =
+        if (fs.exists(snap))
+          spark.read.parquet(snapshotDir)
+            .join(latest.select(keyCol), Seq(keyCol), "left_anti")
+            .unionByName(latest)
+        else latest
+      val tmp = new org.apache.hadoop.fs.Path(
+        snapshotDir + s"__tmp-$batchId")
+      merged.write.mode("overwrite").parquet(tmp.toString)
+      StoreCompaction.swapIn(fs, snapshotDir, tmp)
+    }
 
   /** Streaming NEAR-dup dedup against an accumulating band-key store —
     * the LSH companion to [[incrementalDedup]]'s exact signatures: each
@@ -181,65 +167,60 @@ object CorpusStream {
       profile: graft.ext.DedupProfile = graft.ext.DedupProfile.default,
       retentionBatches: Option[Long] = None, compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val keyed = Dedup.minhashSignatures(
-            Dedup.tokenIndex(batch, idCol, textCol, profile.shingleN),
-            profile.bands * profile.rowsPerBand)
-          .select(col("id"), explode(
-            Dedup.bandKeyCols(profile.bands, profile.rowsPerBand))
-            .as("band"))
-        val conf = spark.sparkContext.hadoopConfiguration
-        val store = new org.apache.hadoop.fs.Path(storeDir)
-        val fs = store.getFileSystem(conf)
-        // recover a compaction crash, then (under a retention window)
-        // physically rewrite the store without expired rows — the
-        // shared park-aside swap contract ([[StoreCompaction]], also
-        // the AnnStream/DsirStream compactor). Unlike those stores this
-        // fold need not exclude the current batch: a crashed attempt's
-        // re-appended band rows are harmless duplicates (the store is
-        // read `distinct`), per the replay-safety note above.
-        StoreCompaction.recoverParked(spark, storeDir)
-        retentionBatches.foreach { r =>
-          if (StoreCompaction.due(batchId, compactEvery))
-            StoreCompaction.swapRewrite(spark, storeDir)(
-              dir => spark.read.parquet(dir),
-              all => all.filter(col("batch_id") >= batchId - r),
-              (df, dir) => df.write.mode("overwrite").parquet(dir))
-        }
-        val histBase =
-          if (fs.exists(store)) spark.read.parquet(storeDir)
-          else keyed.select("band").limit(0)
-            .withColumn("batch_id", lit(-1L))
-        val inWindow = retentionBatches.fold(histBase)(r =>
-          histBase.filter(col("batch_id") >= batchId - r))
-        val hist = inWindow
-          // replay safety: a previous ATTEMPT of this same batch may
-          // have appended already — its rows are not history
-          .filter(col("batch_id") =!= batchId)
-          .select("band").distinct()
-          .withColumn("__seen", lit(1))
-        val claims = keyed.groupBy("band").agg(min("id").as("__first"))
-        val flags = keyed
-          .join(hist, Seq("band"), "left_outer")
-          .join(claims, Seq("band"))
-          .groupBy("id")
-          .agg(max(when(col("__seen").isNotNull ||
-            col("__first") < col("id"), 1).otherwise(0)).as("__dup"))
-        val survivors = batch.join(
-          flags.filter(col("__dup") === 0)
-            .select(col("id").as(idCol)), Seq(idCol), "left_semi")
-        survivors.write.mode("overwrite")
-          .parquet(s"$survivorsDir/batch-$batchId")
-        keyed.select("band").distinct()
-          .join(hist, Seq("band"), "left_anti")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(storeDir)
-        ()
+    BatchStore.start(docs.writeStream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val keyed = Dedup.minhashSignatures(
+          Dedup.tokenIndex(batch, idCol, textCol, profile.shingleN),
+          profile.bands * profile.rowsPerBand)
+        .select(col("id"), explode(
+          Dedup.bandKeyCols(profile.bands, profile.rowsPerBand))
+          .as("band"))
+      val store = new org.apache.hadoop.fs.Path(storeDir)
+      val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // recover a compaction crash, then (under a retention window)
+      // physically rewrite the store without expired rows — the
+      // shared park-aside swap contract ([[StoreCompaction]], also
+      // the AnnStream/DsirStream compactor). Unlike those stores this
+      // fold need not exclude the current batch: a crashed attempt's
+      // re-appended band rows are harmless duplicates (the store is
+      // read `distinct`), per the replay-safety note above.
+      StoreCompaction.recoverParked(spark, storeDir)
+      retentionBatches.foreach { r =>
+        if (StoreCompaction.due(batchId, compactEvery))
+          StoreCompaction.swapRewrite(spark, storeDir)(
+            dir => spark.read.parquet(dir),
+            all => all.filter(col("batch_id") >= batchId - r),
+            (df, dir) => df.write.mode("overwrite").parquet(dir))
       }
-      .start()
+      val histBase =
+        if (fs.exists(store)) spark.read.parquet(storeDir)
+        else keyed.select("band").limit(0)
+          .withColumn("batch_id", lit(-1L))
+      val inWindow = retentionBatches.fold(histBase)(r =>
+        histBase.filter(col("batch_id") >= batchId - r))
+      val hist = inWindow
+        // replay safety: a previous ATTEMPT of this same batch may
+        // have appended already — its rows are not history
+        .filter(col("batch_id") =!= batchId)
+        .select("band").distinct()
+        .withColumn("__seen", lit(1))
+      val claims = keyed.groupBy("band").agg(min("id").as("__first"))
+      val flags = keyed
+        .join(hist, Seq("band"), "left_outer")
+        .join(claims, Seq("band"))
+        .groupBy("id")
+        .agg(max(when(col("__seen").isNotNull ||
+          col("__first") < col("id"), 1).otherwise(0)).as("__dup"))
+      val survivors = batch.join(
+        flags.filter(col("__dup") === 0)
+          .select(col("id").as(idCol)), Seq(idCol), "left_semi")
+      survivors.write.mode("overwrite")
+        .parquet(s"$survivorsDir/batch-$batchId")
+      keyed.select("band").distinct()
+        .join(hist, Seq("band"), "left_anti")
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(storeDir)
+    }
 
   /** Streaming PII scrub: [[graft.ext.TextAnalysis.piiRedact]] plus the
     * per-category counts, applied to a document stream. Entirely
@@ -259,197 +240,103 @@ object CorpusStream {
     * become a stateful agg; batch-scoped it is the ordinary
     * [[graft.ext.TextAnalysis.wordlistFilter]] plan with the wordlist
     * frozen at stream start — swap the list out of band like the ANN
-    * model / language profiles). Survivors land in a
-    * `batch_id`-partitioned store under DYNAMIC partition overwrite —
-    * the idempotent-crash-replay contract shared with
-    * [[langIdGateBatches]] and [[AnnStream.indexBatches]]. */
+    * model / language profiles). Survivors land in a [[BatchStore]]
+    * (replay contract there). */
   def wordlistGateBatches(docs: DataFrame, words: DataFrame,
       storeDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       maxPermil: Int = 0)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one eager snapshot for the stream's lifetime (foreachBatch
-    // re-evaluates its plan per trigger — a live lineage would re-read
-    // and could drift mid-stream)
-    val frozen = Materialize(words, eager = true)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.TextAnalysis
-          .wordlistFilter(batch, idCol, textCol, frozen, maxPermil)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.sinkWith(docs, words, storeDir, checkpointDir) {
+      (batch, frozen) => graft.ext.TextAnalysis
+        .wordlistFilter(batch, idCol, textCol, frozen, maxPermil)
+    }
 
   /** Streaming jusText extraction — markup arrives, boilerplate-free
     * prose lands: [[graft.ext.HtmlExtract.justextText]] per
     * micro-batch (classification is map-only, the context revision is
     * one batch-scoped doc-keyed window, the reassembly one doc-keyed
     * agg — documents never span micro-batches, so nothing is stateful
-    * mid-stream). The stopword list is frozen at stream start (the
-    * [[wordlistGateBatches]] contract and for the same reason —
-    * foreachBatch re-evaluates its plan per trigger). All-boilerplate
-    * documents drop inside the batch, survivors carry
-    * `(n_blocks, n_kept, text)` into the shared `batch_id`-partitioned
-    * DYNAMIC-overwrite store — the idempotent crash-replay contract
-    * shared with every other gate store. */
+    * mid-stream). The stopword list is frozen at stream start.
+    * All-boilerplate documents drop inside the batch, survivors carry
+    * `(n_blocks, n_kept, text)` into a [[BatchStore]] (replay contract
+    * there). */
   def justextExtractBatches(docs: DataFrame, stopwords: DataFrame,
       storeDir: String, checkpointDir: String,
       idCol: String = "doc_id", htmlCol: String = "html",
       maxLinkPermil: Int = 200)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val frozen = Materialize(stopwords, eager = true)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.HtmlExtract
-          .justextText(batch, idCol, htmlCol, frozen,
-            maxLinkPermil = maxLinkPermil)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.sinkWith(docs, stopwords, storeDir, checkpointDir) {
+      (batch, frozen) => graft.ext.HtmlExtract
+        .justextText(batch, idCol, htmlCol, frozen,
+          maxLinkPermil = maxLinkPermil)
+    }
 
   /** Streaming trained-quality gate — the GD-trained logistic model
     * ([[graft.ext.TextAnalysis.logisticTrain]]) applied per
     * micro-batch: survivors are documents the model accepts
     * (margin ≥ 0). The model is frozen at stream start (retrain out of
-    * band and restart, the [[langIdGateBatches]] contract — and for
-    * the same reason: foreachBatch re-evaluates its plan per trigger,
-    * so a live training lineage would re-run the whole GD loop every
-    * micro-batch). `dim` MUST match training (hashed buckets disagree
-    * silently otherwise — the same visible-at-call-site contract as
-    * the langId gate). Survivors carry `margin_fp` and `prob` for
-    * downstream mixture accounting and land in the shared
-    * `batch_id`-partitioned dynamic-overwrite store. */
+    * band and restart; a live training lineage would re-run the whole
+    * GD loop every micro-batch). `dim` MUST match training (hashed
+    * buckets disagree silently otherwise — the same
+    * visible-at-call-site contract as the langId gate). Survivors carry
+    * `margin_fp` and `prob` for downstream mixture accounting and land
+    * in a [[BatchStore]] (replay contract there). */
   def qualityGateBatches(docs: DataFrame, model: DataFrame,
       storeDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       dim: Int = 1024)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val frozen = Materialize(model, eager = true)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BatchStore.sinkWith(docs, model, storeDir, checkpointDir) {
+      (batch, frozen) =>
         val scored = graft.ext.TextAnalysis
           .logisticScore(batch, idCol, textCol, frozen, dim)
           .filter(col("accept"))
           .select(col(idCol), col("margin_fp"), col("prob"))
         batch.join(scored, Seq(idCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
-  }
+    }
 
   /** Streaming WET ingest — the crawl front door as a stream: binary
     * WARC/WET blobs arrive (one row per fetched file/chunk),
     * [[graft.ext.Warc.wetRecords]] extracts the records per micro-batch
     * — a map-only stage, so the only cluster cost at any rate is the
-    * record store write — and records land in a `batch_id`-partitioned
-    * store under DYNAMIC partition overwrite (the idempotent
-    * crash-replay contract shared with [[langIdGateBatches]] /
-    * [[AnnStream.indexBatches]]: a replayed micro-batch rewrites
-    * exactly its own partition).
+    * record store write — and records land in a [[BatchStore]] (replay
+    * contract there).
     *
     * Re-crawls: a blob id re-emitted in a later batch (the crawler
     * refreshed the page set) leaves BOTH record sets in the store;
     * [[readWetStore]] applies blob-keyed last-write-wins, and the
     * compaction fold applies the same rule physically — every
     * `compactEvery` batches (0 disables) history collapses to ONE
-    * merged `batch_id = current-1` partition via the shared
-    * [[StoreCompaction]] park-aside swap, so the partition count is
-    * bounded by `compactEvery + 1` instead of stream lifetime. The
-    * fold excludes the current batch's rows (a crashed first attempt's
-    * partial partition is dropped and rewritten by the replay). */
+    * merged `batch_id = current-1` partition ([[BatchStore.compact]]),
+    * so the partition count is bounded by `compactEvery + 1` instead of
+    * stream lifetime. */
   def wetIngestBatches(blobs: DataFrame, storeDir: String,
       checkpointDir: String, idCol: String = "blob_id",
       binCol: String = "payload", compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    blobs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        StoreCompaction.recoverParked(spark, storeDir)
-        if (StoreCompaction.due(batchId, compactEvery))
-          StoreCompaction.swapRewrite(spark, storeDir)(
-            dir => readWetRaw(spark, dir),
-            all => {
-              val hist = all.filter(col("batch_id") < batchId)
-              val newest = hist.groupBy("blob_id")
-                .agg(max("batch_id").as("batch_id"))
-              hist.join(newest, Seq("blob_id", "batch_id"))
-                .withColumn("batch_id", lit(batchId - 1))
-            },
-            (df, dir) => df.write.mode("overwrite")
-              .partitionBy("batch_id").parquet(dir))
-        graft.ext.Warc.wetRecords(batch, idCol, binCol).toDF()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
+    BatchStore.start(blobs.writeStream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      BatchStore.compact(spark, storeDir, WetSchema, batchId,
+        compactEvery)(BatchStore.newest(_, "blob_id"))
+      BatchStore.write(graft.ext.Warc.wetRecords(batch, idCol, binCol).toDF(),
+        batchId, storeDir)
+    }
 
   /** The WET record store with blob-keyed LAST WRITE WINS applied (the
     * compacted-log read shared with [[AnnStream.readCodes]]): only each
     * blob's newest batch is visible, so a re-crawled page set fully
-    * replaces its old records. Explicit schema — partition-directory
-    * inference would int-ify `batch_id`. */
+    * replaces its old records. */
   def readWetStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val all = readWetRaw(spark, storeDir)
-    val newest = all.groupBy("blob_id").agg(max("batch_id").as("batch_id"))
-    all.join(newest, Seq("blob_id", "batch_id"))
+      storeDir: String): DataFrame =
+    BatchStore.newest(BatchStore.read(spark, storeDir, WetSchema), "blob_id")
       .select("blob_id", "rec_index", "warc_type", "target_uri",
         "warc_date", "record_id", "content_length", "text")
-  }
 
-  private def readWetRaw(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.read.schema(StructType(Seq(
-        StructField("blob_id", LongType),
-        StructField("rec_index", IntegerType),
-        StructField("warc_type", StringType),
-        StructField("target_uri", StringType),
-        StructField("warc_date", StringType),
-        StructField("record_id", StringType),
-        StructField("content_length", LongType),
-        StructField("text", StringType),
-        StructField("batch_id", LongType))))
-      .parquet(storeDir)
-  }
+  private val WetSchema = "blob_id LONG, rec_index INT, " +
+    "warc_type STRING, target_uri STRING, warc_date STRING, " +
+    "record_id STRING, content_length LONG, text STRING, batch_id LONG"
 
-  /** Streaming language gate — the crawl-ingest stage that keeps only
-    * target-language documents using the TRAINED hashed-linear
-    * classifier ([[graft.ext.TextAnalysis.langIdLinear]], model frozen
-    * at stream start; retrain out of band like the ANN index). The
-    * classifier's per-document argmax is a plain window, unsupported
-    * mid-stream, so classification runs inside `foreachBatch` (every
-    * stage there is the ordinary batch operator — nothing forked) and
-    * survivors land in a `batch_id`-partitioned store with DYNAMIC
-    * partition overwrite: a replayed micro-batch rewrites exactly its
-    * own partition, the same idempotent-crash-replay contract as
-    * [[AnnStream.indexBatches]]. Kept rows carry `predicted` and
-    * `score` for downstream mixture accounting. */
   /** Streaming decontamination gate — the Bloom probe of
     * [[graft.ext.Decontamination.bloomClean]] applied per micro-batch
     * against a benchmark bitmap FROZEN at stream start (the bitmap is
@@ -458,60 +345,47 @@ object CorpusStream {
     * the ANN index and the langId model). The probe is a map-only
     * filter with no false negatives, so every document with real
     * benchmark n-gram overlap is guaranteed dropped mid-stream; clean
-    * rows land in a `batch_id`-partitioned store with dynamic
-    * partition overwrite (idempotent crash replay — the
-    * [[AnnStream.indexBatches]] contract). */
+    * rows land in a [[BatchStore]] (replay contract there). */
   def bloomGateBatches(docs: DataFrame, bits: Array[Long], mBits: Int,
       k: Int, n: Int, storeDir: String, checkpointDir: String,
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.Decontamination
-          .bloomClean(batch, textCol, bits, mBits, k, n)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
+    BatchStore.sink(docs, storeDir, checkpointDir) { batch =>
+      graft.ext.Decontamination
+        .bloomClean(batch, textCol, bits, mBits, k, n)
+    }
 
+  /** Streaming language gate — the crawl-ingest stage that keeps only
+    * target-language documents using the TRAINED hashed-linear
+    * classifier ([[graft.ext.TextAnalysis.langIdLinear]], model frozen
+    * at stream start; retrain out of band like the ANN index). The
+    * classifier's per-document argmax is a plain window, unsupported
+    * mid-stream, so classification runs inside `foreachBatch` (every
+    * stage there is the ordinary batch operator — nothing forked) and
+    * survivors land in a [[BatchStore]] (replay contract there). The
+    * model is frozen here, not in every caller: a live `langIdTrain`
+    * lineage would re-tokenize the whole seed corpus every micro-batch.
+    * Kept rows carry `predicted` and `score` for downstream mixture
+    * accounting. */
   def langIdGateBatches(docs: DataFrame, model: DataFrame,
       keepLangs: Set[String], storeDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       dim: Int = 256, n: Int = 3)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(keepLangs.nonEmpty, "langIdGateBatches: empty language set")
-    // freeze HERE, not in every caller: foreachBatch re-evaluates its
-    // plan per trigger, so a live langIdTrain lineage would re-tokenize
-    // the whole seed corpus every micro-batch (and drift if the seed
-    // source mutates) — one eager checkpoint makes the profile table a
-    // stable nLangs×dim snapshot for the stream's lifetime
-    val frozen = Materialize(model, eager = true)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // dim/n MUST match what the model was trained with: grams hash
-        // into a dim-sized bucket space at train AND apply time, so a
-        // mismatched pair silently mis-scores every document (no error
-        // is possible — the buckets just disagree). The parameters ride
-        // the call signature rather than the model frame so the
-        // contract is visible at the call site.
+    // dim/n MUST match what the model was trained with: grams hash into
+    // a dim-sized bucket space at train AND apply time, so a mismatched
+    // pair silently mis-scores every document (no error is possible —
+    // the buckets just disagree). The parameters ride the call
+    // signature rather than the model frame so the contract is visible
+    // at the call site.
+    BatchStore.sinkWith(docs, model, storeDir, checkpointDir) {
+      (batch, frozen) =>
         val pred = graft.ext.TextAnalysis
           .langIdLinear(batch, idCol, textCol, frozen, dim, n)
           .filter(col("predicted").isin(keepLangs.toSeq: _*))
         batch.join(pred, Seq(idCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
+    }
   }
 
   /** Streaming mixture gate — `pipeline_mixture_schedule`'s selection
@@ -524,21 +398,16 @@ object CorpusStream {
     * selection itself is a STATELESS map-only predicate — the same
     * expression a 1000-executor batch fleet evaluates, so stream and
     * batch keep literally identical document sets (differential
-    * spec). Output partitions by `batch_id` with dynamic overwrite:
-    * a replayed batch replaces its own partition (the store
-    * idempotency contract shared with every other streaming store
-    * here). */
+    * spec). Output lands in a [[BatchStore]] (replay contract there). */
   def mixtureGateBatches(docs: DataFrame, plan: DataFrame,
       storeDir: String, checkpointDir: String,
       idCol: String = "doc_id", sourceCol: String = "source")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val frozen = Materialize(plan, eager = true)
-    require(frozen.columns.contains(sourceCol) &&
-      frozen.columns.contains("rate_permil"),
+    require(plan.columns.contains(sourceCol) &&
+      plan.columns.contains("rate_permil"),
       s"mixtureGateBatches: plan needs ($sourceCol, rate_permil)")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    BatchStore.sinkWith(docs, plan, storeDir, checkpointDir) {
+      (batch, frozen) =>
         val keep = graft.ext.TextAnalysis.tokenHash31(
           concat(lit("mix#"), col(idCol).cast("string"))) % 1000L <
           col("rate_permil")
@@ -547,14 +416,7 @@ object CorpusStream {
             col("rate_permil"))), Seq(sourceCol))
           .filter(keep)
           .drop("rate_permil")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
+    }
   }
 
   final case class DomainSeen(n: Long)
@@ -605,34 +467,23 @@ object CorpusStream {
     * first occurrence of a span is then always in the earliest batch,
     * which is exactly the batch form's `(doc_id, position)` keeper.
     *
-    * Replay safety (the band-store contract): the history read
-    * EXCLUDES rows of the current `batch_id` (a crashed attempt's
-    * written keys are not history), appended keys are anti-joined
-    * against history (the store holds each span key once), and BOTH
-    * writes — the cleaned output and the span keys — are `batch_id`
-    * dynamic partition overwrites, so a re-run of the same batch
-    * replaces its own partition instead of appending a second copy of
-    * its keys (a plain append would double every key of a crashed
-    * attempt; replayed-batch idempotency is spec-pinned). Store
-    * growth is the number of DISTINCT spans — the corpus's novel-text
-    * volume, not its raw volume. */
+    * Both the cleaned output and the span keys are [[BatchStore]]s
+    * (replay contract there); appended keys are anti-joined against
+    * history, so the store holds each span key once (a plain append
+    * would double every key of a crashed attempt; replayed-batch
+    * idempotency is spec-pinned). Store growth is the number of
+    * DISTINCT spans — the corpus's novel-text volume, not its raw
+    * volume. */
   def spanDedupBatches(docs: DataFrame, spanStoreDir: String,
       storeDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       spanSents: Int = 3)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        spanDedupBatch(batch, batchId, spanStoreDir, storeDir,
-          idCol, textCol, spanSents)
-      }
-      .start()
+    BatchStore.start(docs.writeStream, checkpointDir) { (batch, batchId) =>
+      spanDedupBatch(batch, batchId, spanStoreDir, storeDir,
+        idCol, textCol, spanSents)
+    }
 
-  /** One [[spanDedupBatches]] micro-batch — package-visible so the
-    * crash-replay contract (same `batchId` re-run leaves both stores
-    * byte-identical) is directly testable without faking a checkpoint
-    * crash. */
   /** STORE-FORMAT guard for the r13 span-store layout change: the
     * store moved from plain-append part files at the root (batch_id
     * as a data column) to `batch_id=`-partitioned dynamic overwrite.
@@ -642,12 +493,13 @@ object CorpusStream {
     * FIRST with the upgrade instruction instead: one root listing per
     * micro-batch, trivial next to the batch itself. */
   private def requirePartitionedKeyStore(
-      fs: org.apache.hadoop.fs.FileSystem,
-      store: org.apache.hadoop.fs.Path, what: String): Unit = {
-    val legacy = fs.listStatus(store).exists(st =>
+      spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    val store = new org.apache.hadoop.fs.Path(dir)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val legacy = fs.exists(store) && fs.listStatus(store).exists(st =>
       st.isFile && st.getPath.getName.startsWith("part-"))
     require(!legacy,
-      s"$what at $store was written by the pre-r13 plain-append " +
+      s"span-key store at $store was written by the pre-r13 plain-append " +
         "layout (part files at the store root); the current layout " +
         "is batch_id-partitioned dynamic overwrite and the two " +
         "cannot mix. Point the stream at a fresh store dir (history " +
@@ -661,7 +513,7 @@ object CorpusStream {
     * pre-r14 store would surface `len` as null, the history anti-join
     * would match nothing, and exact dedup would silently re-admit
     * every historical duplicate — fail loudly instead. Costs one
-    * parquet footer read per micro-batch; an unreadable/empty store
+    * parquet footer read per micro-batch; a missing or empty store
     * (zero part files) has no history to mis-read and passes. */
   private def requireTextKeyStoreCurrent(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
@@ -677,46 +529,28 @@ object CorpusStream {
     }
   }
 
+  /** One [[spanDedupBatches]] micro-batch — package-visible so the
+    * crash-replay contract (same `batchId` re-run leaves both stores
+    * byte-identical) is directly testable without faking a checkpoint
+    * crash. */
   private[graft] def spanDedupBatch(batch: DataFrame, batchId: Long,
       spanStoreDir: String, storeDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       spanSents: Int = 3): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val store = new org.apache.hadoop.fs.Path(spanStoreDir)
-    val fs = store.getFileSystem(conf)
     val batchKeys = graft.ext.Dedup
       .spanKeys(batch, idCol, textCol, spanSents)
       .select("h1", "h2").distinct()
-    // explicit schema: a first batch with no spans (all-short docs)
-    // writes a store directory with zero part files, and a
-    // schema-less read of it would throw 'Unable to infer schema' —
-    // permanently wedging the stream, since every checkpoint replay
-    // re-hits it. (Also keeps batch_id LONG: partition-dir inference
-    // would int-ify it.)
-    val hist =
-      if (fs.exists(store)) {
-        requirePartitionedKeyStore(fs, store, "span-key store")
-        spark.read
-          .schema("h1 LONG, h2 LONG, batch_id LONG").parquet(spanStoreDir)
-          .filter(col("batch_id") =!= batchId)
-          .select("h1", "h2")
-      } else batchKeys.limit(0)
-    graft.ext.Dedup
-      .spanDedupAgainst(batch, idCol, textCol, hist, spanSents)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
-    batchKeys
-      .join(hist.distinct(), Seq("h1", "h2"), "left_anti")
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(spanStoreDir)
-    ()
+    requirePartitionedKeyStore(spark, spanStoreDir)
+    val hist = BatchStore.history(spark, spanStoreDir,
+        "h1 LONG, h2 LONG, batch_id LONG", batchId)
+      .fold(batchKeys.limit(0))(_.select("h1", "h2"))
+    BatchStore.write(graft.ext.Dedup
+      .spanDedupAgainst(batch, idCol, textCol, hist, spanSents),
+      batchId, storeDir)
+    BatchStore.write(
+      batchKeys.join(hist.distinct(), Seq("h1", "h2"), "left_anti"),
+      batchId, spanStoreDir)
   }
 
   final case class DomainSpent(cum: Long)
@@ -773,8 +607,7 @@ object CorpusStream {
     * input — no inference job, no exception path); typed rows land in
     * the corpus store, and every malformed or identity-less line lands
     * in a quarantine store with the RAW line preserved for replay.
-    * Both stores are batch_id-partitioned dynamic overwrites
-    * (idempotent crash replay). Map-only per batch — a parse split,
+    * Both are [[BatchStore]]s (replay contract there). Map-only per batch — a parse split,
     * two writes, no shuffle. */
   def jsonlIngestBatches(lines: DataFrame, storeDir: String,
       quarantineDir: String, checkpointDir: String,
@@ -782,30 +615,17 @@ object CorpusStream {
         graft.sources.JsonlCorpus.schema,
       lineCol: String = "line")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    lines.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val parsed = batch.withColumn("__p",
-          from_json(col(lineCol), docSchema))
-        val bad = col("__p").isNull || col("__p.doc_id").isNull
-        parsed.filter(!bad)
+    BatchStore.start(lines.writeStream, checkpointDir) { (batch, batchId) =>
+      val parsed = batch.withColumn("__p",
+        from_json(col(lineCol), docSchema))
+      val bad = col("__p").isNull || col("__p.doc_id").isNull
+      BatchStore.write(parsed.filter(!bad)
           .select(docSchema.fieldNames.toIndexedSeq
-            .map(f => col("__p." + f)): _*)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        parsed.filter(bad)
-          .select(col(lineCol).as("raw"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(quarantineDir)
-        ()
-      }
-      .start()
+            .map(f => col("__p." + f)): _*),
+        batchId, storeDir)
+      BatchStore.write(parsed.filter(bad).select(col(lineCol).as("raw")),
+        batchId, quarantineDir)
+    }
 
   /** Streaming export-integrity manifest — one manifest row per
     * (batch, shard) appended per micro-batch. Because the checksum is
@@ -823,18 +643,14 @@ object CorpusStream {
       checkpointDir: String, seed: String, numShards: Int,
       idCol: String = "doc_id", textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.ShardShuffle.integrityManifest(batch, idCol, textCol,
-            graft.ext.TextAnalysis.nTokens(col(textCol)), seed,
-            numShards)
-          .select(lit(batchId).as("batch_id"), col("shard_id"),
-            col("n_docs"), col("total_tokens"), col("checksum"))
-          .write.mode("append").parquet(storeDir)
-        ()
-      }
-      .start()
+    BatchStore.start(docs.writeStream, checkpointDir) { (batch, batchId) =>
+      graft.ops.ShardShuffle.integrityManifest(batch, idCol, textCol,
+          graft.ext.TextAnalysis.nTokens(col(textCol)), seed,
+          numShards)
+        .select(lit(batchId).as("batch_id"), col("shard_id"),
+          col("n_docs"), col("total_tokens"), col("checksum"))
+        .write.mode("append").parquet(storeDir)
+    }
 
   /** Fold a [[manifestBatches]] store to per-shard totals (distinct on
     * (batch_id, shard_id) first — replays are bit-identical, so dedup
@@ -868,11 +684,10 @@ object CorpusStream {
     * are a global-prefix-order construct the batch freeze assigns at
     * export time over the frozen store.
     *
-    * Replay safety throughout: every store write (text keys, span
-    * keys, frozen docs, manifest rows) is a `batch_id` dynamic
-    * partition overwrite and both history reads EXCLUDE the current
-    * batch_id — a crash-replayed batch replaces its own partitions
-    * byte-identically (spec-pinned). Store growth: text keys ≤
+    * Every store (text keys, span keys, frozen docs, manifest rows) is
+    * a [[BatchStore]] (replay contract there): a crash-replayed batch
+    * replaces its own partitions byte-identically (spec-pinned). Store
+    * growth: text keys ≤
     * distinct documents, span keys ≤ distinct spans (novel-text
     * volume), manifest rows = batches × shards.
     *
@@ -890,17 +705,15 @@ object CorpusStream {
       idCol: String = "doc_id", textCol: String = "text",
       spanSents: Int = 3)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        freezeBatch(batch, batchId, gate, merges, textStoreDir,
-          spanStoreDir, storeDir, manifestDir, seed, numShards,
-          idCol, textCol, spanSents)
-      }
-      .start()
+    BatchStore.start(docs.writeStream, checkpointDir) { (batch, batchId) =>
+      freezeBatch(batch, batchId, gate, merges, textStoreDir,
+        spanStoreDir, storeDir, manifestDir, seed, numShards,
+        idCol, textCol, spanSents)
+    }
 
   /** One [[freezeBatches]] micro-batch — package-visible so the
-    * crash-replay contract is directly testable. */
+    * crash-replay contract is directly testable. Both per-batch
+    * checkpoints are released after the batch's last write. */
   private[graft] def freezeBatch(batch: DataFrame, batchId: Long,
       gate: org.apache.spark.sql.Column,
       merges: Seq[graft.ext.Bpe.Merge],
@@ -909,16 +722,8 @@ object CorpusStream {
       idCol: String = "doc_id", textCol: String = "text",
       spanSents: Int = 3): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    def existing(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(conf).exists(p)
-    }
-    def writeKeys(keys: DataFrame, dir: String): Unit =
-      keys.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(dir)
+    def writeStore(keys: DataFrame, dir: String): Unit =
+      BatchStore.write(keys, batchId, dir)
     // 1. curation gate — map-only. Null-text rows are dropped HERE,
     // explicitly: a text freeze cannot key, span or encode a null
     // (null hash keys would otherwise vanish silently in the dedup
@@ -944,20 +749,11 @@ object CorpusStream {
         graft.ext.TextAnalysis.tokenHash31(concat(col(textCol),
           lit("#"))))
       .withColumn("len", length(col(textCol)).cast("long"))
-    // explicit schemas on BOTH history reads: a first batch that is
-    // entirely gated out (text keys) or all-short (span keys) writes
-    // a store with zero part files; a schema-less read of it throws
-    // 'Unable to infer schema' and wedges the stream on every replay
-    val textKeySchema = "h1 LONG, h2 LONG, len LONG, batch_id LONG"
-    val keySchema = "h1 LONG, h2 LONG, batch_id LONG"
-    val textHist =
-      if (existing(textStoreDir)) {
-        requireTextKeyStoreCurrent(spark, textStoreDir)
-        spark.read.schema(textKeySchema)
-          .parquet(textStoreDir)
-          .filter(col("batch_id") =!= batchId)
-          .select("h1", "h2", "len")
-      } else keyed.select("h1", "h2", "len").limit(0)
+    requireTextKeyStoreCurrent(spark, textStoreDir)
+    val textHist = BatchStore.history(spark, textStoreDir,
+        "h1 LONG, h2 LONG, len LONG, batch_id LONG", batchId)
+      .fold(keyed.select("h1", "h2", "len").limit(0))(
+        _.select("h1", "h2", "len"))
     val keepFirst = keyed.join(
       keyed.groupBy("h1", "h2", "len").agg(min(col(idCol)).as(idCol)),
       Seq("h1", "h2", "len", idCol), "left_semi")
@@ -969,22 +765,19 @@ object CorpusStream {
       .join(textHist.distinct(), Seq("h1", "h2", "len"), "left_anti")
       .select(col(idCol), col(textCol)),
       eager = false)
-    writeKeys(keyed.select("h1", "h2", "len").distinct()
+    writeStore(keyed.select("h1", "h2", "len").distinct()
       .join(textHist.distinct(), Seq("h1", "h2", "len"), "left_anti"),
       textStoreDir)
     // 3. C4 span dedup against the span store
     val spanKeysB = graft.ext.Dedup
       .spanKeys(exact, idCol, textCol, spanSents)
       .select("h1", "h2").distinct()
-    val spanHist =
-      if (existing(spanStoreDir)) spark.read.schema(keySchema)
-        .parquet(spanStoreDir)
-        .filter(col("batch_id") =!= batchId)
-        .select("h1", "h2")
-      else spanKeysB.limit(0)
+    val spanHist = BatchStore.history(spark, spanStoreDir,
+        "h1 LONG, h2 LONG, batch_id LONG", batchId)
+      .fold(spanKeysB.limit(0))(_.select("h1", "h2"))
     val cleaned = graft.ext.Dedup
       .spanDedupAgainst(exact, idCol, textCol, spanHist, spanSents)
-    writeKeys(spanKeysB
+    writeStore(spanKeysB
       .join(spanHist.distinct(), Seq("h1", "h2"), "left_anti"),
       spanStoreDir)
     // 4. frozen docs, encoded under the FIXED merge table (map-only)
@@ -997,18 +790,13 @@ object CorpusStream {
     // two consumers (frozen-doc write + manifest): checkpoint so the
     // span-dedup shuffle and the encode run once per batch
     val out = Materialize(frozen.join(enc, Seq(idCol)), eager = false)
-    out.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storeDir)
+    writeStore(out, storeDir)
     // 5. foldable integrity manifest, token-weighted
-    graft.ops.ShardShuffle.integrityManifest(out, idCol, textCol,
+    writeStore(graft.ops.ShardShuffle.integrityManifest(out, idCol, textCol,
         col("n_tokens"), seed, numShards)
-      .select(lit(batchId).as("batch_id"), col("shard_id"),
-        col("n_docs"), col("total_tokens"), col("checksum"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(manifestDir)
-    ()
+      .select(col("shard_id"), col("n_docs"), col("total_tokens"),
+        col("checksum")), manifestDir)
+    // the batch's last write is done: free both per-batch checkpoints
+    Seq(exact, out).foreach(Materialize.release)
   }
 }

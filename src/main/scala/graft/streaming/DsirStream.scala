@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ext.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Streaming maintenance of the DSIR raw-corpus feature distribution —
   * the statistics half of importance resampling kept fresh as the crawl
@@ -19,11 +18,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the batch [[TextAnalysis.dsirWeights]] bit for bit on the same
   * corpus (spec-pinned differential).
   *
-  * Crash safety is the store-layout contract shared with
-  * [[AnnStream.indexBatches]] / [[CorpusStream.langIdGateBatches]]:
-  * rows land in a `batch_id` partition under DYNAMIC partition
-  * overwrite, so a replayed micro-batch rewrites exactly its own
-  * partition and double-counting is impossible.
+  * Crash safety is [[BatchStore]]'s replay contract: a replayed
+  * micro-batch rewrites exactly its own `batch_id` partition, so
+  * double-counting is impossible.
   */
 object DsirStream {
 
@@ -31,57 +28,34 @@ object DsirStream {
     * feature counts land in `storeDir/batch_id=N/`.
     *
     * Every `compactEvery` batches (0 disables) the accumulated
-    * partitions fold physically ([[StoreCompaction]] park-aside swap):
+    * partitions fold physically (park-aside swap):
     * counts are mergeable by SUM in any order, so compaction is the
     * EXACT per-bucket sum of all `batch_id < current` partitions,
     * re-stamped as one `batch_id = current-1` partition — at most
     * `buckets` rows, and [[readCounts]]' merge is unchanged by
-    * construction. A crashed first attempt's own partition is excluded
-    * and dropped; the replay rewrites it (see [[StoreCompaction]]). */
+    * construction ([[BatchStore.compact]]). */
   def countBatches(docs: DataFrame, storeDir: String,
       checkpointDir: String, textCol: String = "text",
       buckets: Int = 256, compactEvery: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        StoreCompaction.recoverParked(spark, storeDir)
-        if (StoreCompaction.due(batchId, compactEvery))
-          StoreCompaction.swapRewrite(spark, storeDir)(
-            dir => readStoreRaw(spark, dir),
-            all => all.filter(col("batch_id") < batchId)
-              .groupBy("f").agg(sum("cnt").as("cnt"))
-              .withColumn("batch_id", lit(batchId - 1)),
-            (df, dir) => df.write.mode("overwrite")
-              .partitionBy("batch_id").parquet(dir))
-        batch
+    BatchStore.start(docs.writeStream, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      BatchStore.compact(spark, storeDir, Schema, batchId, compactEvery)(
+        _.groupBy("f").agg(sum("cnt").as("cnt")))
+      BatchStore.write(batch
           .select(explode(
             TextAnalysis.dsirFeatures(col(textCol), buckets)).as("f"))
-          .groupBy("f").agg(count(lit(1)).as("cnt"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(storeDir)
-        ()
-      }
-      .start()
+          .groupBy("f").agg(count(lit(1)).as("cnt")),
+        batchId, storeDir)
+    }
+
+  /** The store's physical row shape. */
+  private val Schema = "f LONG, cnt LONG, batch_id LONG"
 
   /** Merged raw-count table (f, rcnt) from the store — exact integer
     * sums across batch partitions, the shape
-    * [[TextAnalysis.dsirScoreAgainstCounts]] consumes. Explicit schema
-    * keeps `f`/`batch_id` LongType (partition-dir inference would
-    * int-ify). */
+    * [[TextAnalysis.dsirScoreAgainstCounts]] consumes. */
   def readCounts(spark: SparkSession, storeDir: String): DataFrame =
-    readStoreRaw(spark, storeDir)
+    BatchStore.read(spark, storeDir, Schema)
       .groupBy("f").agg(sum("cnt").as("rcnt"))
-
-  /** The store in its physical row shape, explicit schema (shared by
-    * [[readCounts]] and the compaction fold). */
-  private def readStoreRaw(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.schema(StructType(Seq(
-        StructField("f", LongType), StructField("cnt", LongType),
-        StructField("batch_id", LongType))))
-      .parquet(storeDir)
 }
