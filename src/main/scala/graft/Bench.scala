@@ -113,11 +113,12 @@ object Bench {
             spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum /
               (1024L * 1024L))
           // cache hygiene: queries that persist() an internal stage
-          // (pqTopK's slice table, the crawl flagship's survivors) hand
-          // the cache entry's lifetime to the caller — the harness IS
-          // that caller, and dropping it here keeps one query's cached
-          // tables from occupying executor memory (or worse, serving)
-          // during the next query's timing
+          // (a PQ model's slice table, the crawl flagship's survivors)
+          // return lazy frames that still read it, so the cache entry's
+          // lifetime is the caller's — the harness IS that caller, and
+          // dropping it here keeps one query's cached tables from
+          // occupying executor memory (or worse, serving) during the
+          // next query's timing
           spark.catalog.clearCache()
         }
       }

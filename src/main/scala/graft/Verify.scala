@@ -32,8 +32,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       finally
-        // queries that persist() internal stages delegate the cache
-        // lifetime to their caller (see Bench) — drop between queries
+        // queries that persist() internal stages (a PQ model's slice
+        // table) delegate the cache lifetime to their caller (see
+        // Bench) — drop between queries
         spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

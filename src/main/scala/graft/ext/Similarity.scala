@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`Array[Float]`).
@@ -16,9 +17,11 @@ import org.apache.spark.sql.functions._
   *    far below 2^63 (64 dims * (2^21)^2 = 2^47).
   *
   * Scale paths:
-  *  - [[annTopK]]: brute-force top-k for one query vector — a single
-  *    narrow map + TakeOrdered; at 100 TB this is the per-query scan you
-  *    accept, or the re-rank stage after [[lshBands]] pre-filtering.
+  *  - [[exactIndex]] + [[topK]]: brute-force top-k for one query
+  *    vector — a single narrow map + TakeOrdered; at 100 TB this is the
+  *    per-query scan you accept, or the re-rank stage after banding;
+  *    [[ivfBuild]], [[pqBuild]] and [[ivfPqBuild]] are the trained
+  *    indexes behind the same [[topK]] / [[topKMulti]] serve path.
   *  - [[bandedPairs]]: sign-random-projection LSH banding for all-pairs
   *    near-dup — candidates are same-band joins (shuffle on band key, no
   *    cross join), then exact re-rank.
@@ -136,38 +139,13 @@ object Similarity {
     * explicitly and own the cost. */
   private def guardBaseline(emb: DataFrame, maxRows: Long, op: String,
       alternative: String): Unit = {
-    val n = emb.count()
+    // a plain RDD count is one job; Dataset.count's aggregate exchange
+    // is two under adaptive execution
+    val n = emb.select(lit(1)).rdd.count()
     require(n <= maxRows,
       s"$op is a differential BASELINE limited to maxRows=$maxRows input " +
         s"vectors (got $n). At scale use $alternative instead, or raise " +
         "maxRows explicitly if you accept the full cost.")
-  }
-
-  /** Brute-force top-k nearest neighbours of one stored vector.
-    * Quantization+norm are per-row projections (computed once per input
-    * row, under the join); only the codegen'd dot runs per pair. The
-    * top-k is a TakeOrdered — no global sort materialization. Guarded:
-    * this is the exact full-scan baseline — [[ivfTopK]] is the scale
-    * path that scans only the probed clusters. */
-  def annTopK(
-      emb: DataFrame, queryVecId: Long, k: Int,
-      idCol: String = "vec_id", embCol: String = "embedding",
-      maxRows: Long = 10000000L): DataFrame = {
-    guardBaseline(emb, maxRows, "annTopK (full-scan exact baseline)",
-      "ivfTopK (probes nProbe/nCentroids of the data)")
-    val q = emb.filter(col(idCol) === queryVecId)
-      .select(quantize(col(embCol)).as("qq"))
-      .withColumn("qn2", qnorm2(col("qq")))
-    emb.filter(col(idCol) =!= queryVecId)
-      .select(col(idCol), quantize(col(embCol)).as("qe"))
-      .withColumn("en2", qnorm2(col("qe")))
-      .crossJoin(broadcast(q))
-      .select(col(idCol),
-        (qdot(col("qe"), col("qq")).cast("double") /
-          sqrt(col("en2").cast("double") * col("qn2").cast("double")))
-          .as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
   }
 
   /** Sign-random-projection band keys. The "hyperplanes" are the
@@ -310,20 +288,23 @@ object Similarity {
       .filter(col("score") >= threshold)
   }
 
-  /** Centroids of quantized vectors grouped by an existing `assigned`
-    * label column: (clabel, qc array<long>), qc_d = floor(Σ q_d / n).
-    * Exactness of the floor: see [[labelCentroids]]. Clusters that lost
-    * all members simply disappear (k shrinks) — deterministic in any
-    * engine, no RNG re-seeding. */
-  private def recomputeCentroids(assigned: DataFrame, qCol: String,
-      labelCol: String): DataFrame =
-    assigned
-      .select(col(labelCol).as("clabel"), posexplode(col(qCol)))
-      .groupBy("clabel", "pos")
+  /** The Lloyd update of every k-means and PQ round: per `keys` group,
+    * the floor-mean of the `vec` arrays, qc_d = floor(Σ v_d / n), as
+    * (keys…, qc array<long>). The floor of the double division is exact:
+    * when n divides S the quotient is an integer < 2^53; when it
+    * doesn't, the true value sits >= 1/n away from any integer, far
+    * beyond double rounding error — so both engines floor identically.
+    * Integer centroids keep every later distance computation exact.
+    * Groups that lost all members simply disappear (k shrinks) —
+    * deterministic in any engine, no RNG re-seeding. */
+  private def floorMeans(rows: DataFrame, keys: Seq[String],
+      vec: String): DataFrame =
+    rows.select(keys.map(col) :+ posexplode(col(vec)): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
       .agg(sum("col").as("s"), count(lit(1)).as("n"))
       .withColumn("c",
         floor(col("s").cast("double") / col("n")).cast("long"))
-      .groupBy("clabel")
+      .groupBy(keys.map(col): _*)
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
         s => s.getField("c")).as("qc"))
 
@@ -332,8 +313,8 @@ object Similarity {
     *  - seeds = the first `nCentroids` vectors by id (no RNG);
     *  - assignment = exact integer squared distance, ties to the
     *    smallest centroid label ([[assignNearest]]);
-    *  - update = floor(mean) per dim — exact integers (see
-    *    [[labelCentroids]] for the floor-exactness argument).
+    *  - update = floor(mean) per dim — exact integers
+    *    ([[floorMeans]]).
     * Between iterations the k×dims model is collected to the driver and
     * re-literalized — the canonical Spark iterative-ML shape (only the
     * model state ever moves; lineage stays flat regardless of `iters`).
@@ -346,72 +327,21 @@ object Similarity {
       .select(col("id").cast("long").as("clabel"), col("q").as("qc"))
     for (_ <- 1 to iters) {
       val assigned = assignNearest(e.select("id", "q"), "q", cents)
-      val next = recomputeCentroids(assigned, "q", "assigned")
+      val next = floorMeans(
+          assigned.select(col("assigned").as("clabel"), col("q")),
+          Seq("clabel"), "q")
         .as[(Long, Seq[Long])].collect().toSeq.sortBy(_._1)
       cents = next.toDF("clabel", "qc")
     }
     cents
   }
 
-  /** IVF-style partitioned ANN: k-means-trained centroids
-    * ([[trainCentroids]] — deterministic seeds + `kmeansIters` Lloyd
-    * rounds), every vector assigned to its nearest centroid by exact
-    * integer squared distance, the query probes its `nProbe` closest
-    * centroids, and only those clusters are scanned with the exact
-    * cosine re-rank. At scale the assignment is a write-time partition
-    * key => a top-k query scans nProbe/nCentroids of the data instead
-    * of all of it, and trained (not arbitrary) centroids are what keep
-    * recall high under that pruning. */
-  def ivfTopK(
-      emb: DataFrame, queryVecId: Long, k: Int,
-      nCentroids: Int = 16, nProbe: Int = 4, kmeansIters: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val e = emb.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-    val cents = trainCentroids(e, nCentroids, kmeansIters)
-    val assign = assignNearest(e.select("id", "q"), "q", cents)
-      .select(col("id"), col("q"), col("assigned").as("cluster_id"))
-    val cn = cents.withColumn("__cn2", qnorm2(col("qc")))
-    val q = e.filter(col("id") === queryVecId)
-      .withColumn("__vn2", qnorm2(col("q")))
-    val probes = q.crossJoin(broadcast(cn))
-      .select(col("clabel").as("cluster_id"),
-        (col("__vn2") + col("__cn2") - lit(2L) * qdot(col("q"), col("qc")))
-          .as("__d2"))
-      .orderBy(col("__d2"), col("cluster_id"))
-      .limit(nProbe)
-      .select("cluster_id")
-    val qv = q.select(col("q").as("qq"), col("__vn2").as("qn2"))
-    assign
-      .join(broadcast(probes), Seq("cluster_id"))
-      .filter(col("id") =!= queryVecId)
-      .crossJoin(broadcast(qv))
-      .select(col("id"), col("cluster_id"),
-        (qdot(col("q"), col("qq")).cast("double") /
-          sqrt(qnorm2(col("q")).cast("double") * col("qn2").cast("double")))
-          .as("score"))
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-  }
-
   /** Per-label centroids of quantized vectors: (clabel, qc array<long>),
-    * qc_d = floor(Σ qv_d / n). The floor of the double division is exact
-    * here: when n divides S the quotient is an integer < 2^53; when it
-    * doesn't, the true value sits >= 1/n away from any integer, far
-    * beyond double rounding error — so both engines floor identically.
-    * Integer centroids keep every later distance computation exact. */
+    * qc_d = floor(Σ q_d / n) ([[floorMeans]]). */
   def labelCentroids(emb: DataFrame, labelCol: String,
-      embCol: String): DataFrame = {
-    val exploded = emb.select(col(labelCol).as("clabel"),
-        posexplode(quantize(col(embCol))))
-      .withColumnsRenamed(Map("pos" -> "d", "col" -> "qv"))
-    exploded.groupBy("clabel", "d")
-      .agg(sum("qv").as("s"), count(lit(1)).as("n"))
-      .withColumn("c",
-        floor(col("s").cast("double") / col("n")).cast("long"))
-      .groupBy("clabel")
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("c")))),
-        s => s.getField("c")).as("qc"))
-  }
+      embCol: String): DataFrame =
+    floorMeans(emb.select(col(labelCol).as("clabel"),
+      quantize(col(embCol)).as("q")), Seq("clabel"), "q")
 
   /** One k-means ASSIGNMENT step: each vector to its nearest centroid by
     * exact integer squared distance (|v-c|² = |v|² + |c|² - 2·v·c). ALL
@@ -468,52 +398,9 @@ object Similarity {
       .drop("__best")
   }
 
-  /** Multi-query IVF: the amortization argument for training — centroids
-    * are trained ONCE, every query probes its own `nProbe` clusters, and
-    * the per-query scan cost is nProbe/nCentroids of the corpus. Query
-    * vectors ride in one broadcast; per-query ranking is a window keyed
-    * on query id (high-cardinality at real QPS — scale-safe). Returns
-    * (query_id, id, score, rn) for rn <= k. */
-  def ivfTopKMulti(
-      emb: DataFrame, queryIds: Seq[Long], k: Int,
-      nCentroids: Int = 16, nProbe: Int = 4, kmeansIters: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(queryIds.nonEmpty, "ivfTopKMulti: at least one query id")
-    val e = emb.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-    val cents = trainCentroids(e, nCentroids, kmeansIters)
-    val assign = assignNearest(e.select("id", "q"), "q", cents)
-      .select(col("id"), col("q"), col("assigned").as("cluster_id"))
-    val cn = cents.withColumn("__cn2", qnorm2(col("qc")))
-    val qs = e.filter(col("id").isin(queryIds: _*))
-      .select(col("id").as("query_id"), col("q").as("qq"))
-      .withColumn("qn2", qnorm2(col("qq")))
-    val byQuery = Window.partitionBy("query_id")
-    val probes = qs.crossJoin(broadcast(cn))
-      .select(col("query_id"),
-        col("clabel").as("cluster_id"),
-        (qnorm2(col("qq")) + col("__cn2") - lit(2L) * qdot(col("qq"), col("qc")))
-          .as("__d2"))
-      .withColumn("rn", row_number().over(
-        byQuery.orderBy(col("__d2"), col("cluster_id"))))
-      .filter(col("rn") <= nProbe)
-      .select("query_id", "cluster_id")
-    assign
-      .join(broadcast(probes), Seq("cluster_id"))
-      .join(broadcast(qs), Seq("query_id"))
-      .filter(col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id"),
-        (qdot(col("q"), col("qq")).cast("double") /
-          sqrt(qnorm2(col("q")).cast("double") * col("qn2").cast("double")))
-          .as("score"))
-      .withColumn("rn", row_number().over(
-        byQuery.orderBy(col("score").desc, col("id"))))
-      .filter(col("rn") <= k)
-  }
-
   /** SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540):
-    * k-means the embedding space ([[trainCentroids]] — deterministic
-    * Lloyd rounds), then compare pairs ONLY within a cluster; any vector
+    * k-means the embedding space ([[ivfBuild]] — deterministic Lloyd
+    * rounds), then compare pairs ONLY within a cluster; any vector
     * with a lower-id same-cluster neighbour at cosine >= `threshold` is
     * dropped (the same keep-lowest convention as
     * `dedup_embedding_survivors`). The cluster key bounds the pairwise
@@ -529,7 +416,8 @@ object Similarity {
       emb: DataFrame, threshold: Double,
       nCentroids: Int = 16, kmeansIters: Int = 2,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val assign = clusterAssign(emb, nCentroids, kmeansIters, idCol, embCol)
+    val assign = ivfBuild(emb, nCentroids, kmeansIters = kmeansIters,
+      idCol = idCol, embCol = embCol).assign
     val dropped = pairsWithinClusters(assign, threshold)
       .select(col("id_b").as("id")).distinct()
     assign
@@ -546,18 +434,8 @@ object Similarity {
       emb: DataFrame, threshold: Double,
       nCentroids: Int = 16, kmeansIters: Int = 2,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
-    pairsWithinClusters(
-      clusterAssign(emb, nCentroids, kmeansIters, idCol, embCol), threshold)
-
-  /** Train + assign: every vector to its nearest trained centroid.
-    * Returns (id, q, cluster_id). */
-  private def clusterAssign(emb: DataFrame, nCentroids: Int,
-      kmeansIters: Int, idCol: String, embCol: String): DataFrame = {
-    val e = emb.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-    val cents = trainCentroids(e, nCentroids, kmeansIters)
-    assignNearest(e.select("id", "q"), "q", cents)
-      .select(col("id"), col("q"), col("assigned").as("cluster_id"))
-  }
+    pairsWithinClusters(ivfBuild(emb, nCentroids, kmeansIters = kmeansIters,
+      idCol = idCol, embCol = embCol).assign, threshold)
 
   /** Cosine-threshold pairs restricted to one cluster — an equi-join on
     * `cluster_id`, never a cartesian. */
@@ -599,301 +477,275 @@ object Similarity {
       .filter(col("score") >= threshold)
   }
 
-  // -------- Product quantization (PQ / ADC) --------
-  //
-  // The memory-compression path of ANN: each vector is stored as m
-  // small codes (one per disjoint subspace) instead of `dims` floats —
-  // at m=8, k=16 a 64-dim vector is 8 nibbles, a 64x compression — and
-  // queries score against codebook reconstructions through an m×k
-  // lookup table (asymmetric distance computation), never touching the
-  // raw vectors. Same determinism contract as [[trainCentroids]]: seed
-  // codewords are the first k vectors' slices, Lloyd updates are
-  // floor-means, assignment ties break to the smallest codeword label —
-  // so the whole train → encode → score pipeline is integer-exact and a
-  // SQL oracle replays it (Jégou et al., "Product Quantization for
-  // Nearest Neighbor Search", TPAMI 2011, is the construction; the
-  // arithmetic discipline is this repo's).
+  /** A built ANN index — build once, serve many. Every index is a build
+    * returning a model; every query is served by [[topK]] (one query)
+    * or [[topKMulti]] (a batch) over the model's `score`: (query_id,
+    * vec_id[, cluster_id], score) for every candidate of every query in
+    * `queryIds`, query vectors read from `emb` by id (the build's
+    * `idCol` / `embCol`), a query's own vector never scoring. Training,
+    * encoding and the corpus pass are paid once per build; the
+    * per-query marginal cost is the model's scan. `release()`
+    * unpersists exactly what the build persisted; served frames are
+    * lazy and read those caches, so release after the last action, or
+    * leave it to `spark.catalog.clearCache()` (what Bench and Verify do
+    * between queries). */
+  sealed trait AnnModel {
+    def idCol: String
+    def embCol: String
+    def score(emb: DataFrame, queryIds: Seq[Long]): DataFrame
+    def release(): Unit = ()
 
-  /** The m disjoint slices of each quantized vector: (id[, extra...],
-    * sub, qs). `extraCols` ride along unchanged (the IVF-PQ path keeps
-    * `cluster_id` on every slice so the encoded codes stay
-    * cluster-addressable). */
-  private def subspaceSlices(e: DataFrame, m: Int, dims: Int,
-      extraCols: Seq[String] = Nil): DataFrame = {
-    require(m >= 1 && dims % m == 0,
-      s"subspaceSlices: dims ($dims) must divide into m ($m) subspaces")
-    val d = dims / m
-    val keep = col("id") +: extraCols.map(col)
-    e.select(keep :+ explode(array((0 until m).map { sb =>
-        struct(lit(sb.toLong).as("sub"),
-          slice(col("q"), sb * d + 1, d).as("qs"))
-      }: _*)).as("__s"): _*)
-      .select(keep ++ Seq(col("__s.sub").as("sub"),
-        col("__s.qs").as("qs")): _*)
+    /** The query batch (query_id, q), quantized. */
+    protected def queries(emb: DataFrame, queryIds: Seq[Long]): DataFrame =
+      emb.filter(col(idCol).isin(queryIds: _*))
+        .select(col(idCol).as("query_id"), quantize(col(embCol)).as("q"))
   }
 
-  /** Nearest codeword per (vector, subspace) against a DRIVER-LOCAL
-    * codebook — one [[graft.functions.NearestCode]] projection: the
-    * codebook (bounded model state, m·k·(dims/m) longs) rides the plan
-    * as a literal, so encoding is map-only codegen with no k× row
-    * blowup through a join+aggregate (the measured hotspot of every
-    * Lloyd round and every encode pass at k=64). `keyCols` are carried
-    * through to the output (the IVF-PQ path adds `cluster_id`). */
-  private def encodeSlices(s: DataFrame,
-      books: Seq[(Long, Long, Seq[Long])],
-      keyCols: Seq[String] = Seq("id", "sub", "qs")): DataFrame =
-    s.withColumn("__best",
-        graft.functions.NearestCode(col("qs"), col("sub"), books))
-      .select(keyCols.map(col) :+ col("__best.assigned").as("code"): _*)
+  /** Top-`k` neighbours of ONE query: (vec_id[, cluster_id], score) by
+    * score desc, vec_id. The orderBy + limit is a TakeOrdered — no rank
+    * window, no global sort materialization. */
+  def topK(model: AnnModel, emb: DataFrame, queryId: Long, k: Int)
+      : DataFrame =
+    model.score(emb, Seq(queryId)).drop("query_id")
+      .orderBy(col("score").desc, col("vec_id"))
+      .limit(k)
 
-  /** Collect a `(sub, clabel, qc)` codebook frame to the driver — the
-    * bounded-model boundary every serve/encode call crosses once. */
-  private def collectBooks(books: DataFrame): Seq[(Long, Long, Seq[Long])] = {
-    val spark = books.sparkSession
-    import spark.implicits._
-    books.select(col("sub"), col("clabel"), col("qc"))
-      .as[(Long, Long, Seq[Long])].collect().toSeq
+  /** Top-`k` neighbours of every query in a batch, ranked by a window
+    * keyed on query id (high-cardinality at real QPS — scale-safe):
+    * (query_id, vec_id[, cluster_id], score, rn) for rn <= k. A
+    * one-query batch reproduces [[topK]] exactly. */
+  def topKMulti(model: AnnModel, emb: DataFrame, queryIds: Seq[Long],
+      k: Int): DataFrame = {
+    require(queryIds.nonEmpty, "topKMulti: at least one query id")
+    model.score(emb, queryIds)
+      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col("score").desc, col("vec_id"))))
+      .filter(col("rn") <= k)
   }
 
-  /** Per-subspace codebooks via deterministic Lloyd rounds, all m
-    * subspaces trained in ONE sub-keyed job per round (not m jobs).
-    * Only the m×k×(dims/m) = k×dims model crosses to the driver between
-    * rounds. Returns (sub, clabel, qc). */
-  def pqTrain(e: DataFrame, m: Int = 8, dims: Int = 64, k: Int = 16,
-      iters: Int = 2): DataFrame =
-    trainOnSlices(subspaceSlices(e, m, dims), k, iters)
+  /** The exact full-scan index: the quantized corpus (vec_id, qe),
+    * nothing trained. Quantization is a per-row projection; only the
+    * codegen'd dot runs per pair, against a broadcast query batch. */
+  final case class ExactIndex(corpus: DataFrame, idCol: String,
+      embCol: String) extends AnnModel {
+    def score(emb: DataFrame, queryIds: Seq[Long]): DataFrame =
+      corpus.crossJoin(broadcast(queries(emb, queryIds)))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"),
+          cosineQ(col("qe"), col("q")).as("score"))
+  }
 
-  /** Lloyd rounds over an (id, sub, qs) slice table — split out so
-    * [[pqTopK]] can persist ONE slice table across the train rounds AND
-    * the encode pass instead of recomputing scan+explode per pass.
-    * Returns the DRIVER-LOCAL codebook (m·k rows, bounded model state —
-    * it crosses to the driver between rounds anyway); each round's
-    * assignment is one [[encodeSlices]] map-only pass. */
-  private def trainOnSlicesLocal(s: DataFrame, k: Int,
-      iters: Int): Seq[(Long, Long, Seq[Long])] = {
-    val spark = s.sparkSession
-    import spark.implicits._
-    var books: Seq[(Long, Long, Seq[Long])] = s.filter(col("id") < k)
-      .select(col("sub"), col("id").cast("long").as("clabel"),
-        col("qs").as("qc"))
-      .as[(Long, Long, Seq[Long])].collect().toSeq
-      .sortBy(t => (t._1, t._2))
-    for (_ <- 1 to iters) {
-      val a = encodeSlices(s, books)
-      val next = a
-        .select(col("sub"), col("code").as("clabel"), posexplode(col("qs")))
-        .groupBy("sub", "clabel", "pos")
-        .agg(sum("col").as("sv"), count(lit(1)).as("n"))
-        .withColumn("c",
-          floor(col("sv").cast("double") / col("n")).cast("long"))
-        .groupBy("sub", "clabel")
-        .agg(transform(
-          array_sort(collect_list(struct(col("pos"), col("c")))),
-          x => x.getField("c")).as("qc"))
-        .as[(Long, Long, Seq[Long])].collect().toSeq
-        .sortBy(t => (t._1, t._2))
-      books = next
+  /** Build the [[ExactIndex]]. Guarded: it is the full-scan baseline —
+    * [[ivfBuild]] is the scale path that scans only probed clusters. */
+  def exactIndex(emb: DataFrame, maxRows: Long = 10000000L,
+      idCol: String = "vec_id", embCol: String = "embedding"): ExactIndex = {
+    guardBaseline(emb, maxRows, "exactIndex (full-scan exact baseline)",
+      "ivfBuild (probes nProbe/nCentroids of the data)")
+    ExactIndex(emb.select(col(idCol).as("vec_id"),
+      quantize(col(embCol)).as("qe")), idCol, embCol)
+  }
+
+  /** IVF: k-means-trained `centroids` (clabel, qc) ([[trainCentroids]])
+    * and the corpus `assign`ed to its nearest centroid by exact integer
+    * squared distance (id, q, cluster_id). A query probes its `nProbe`
+    * closest centroids, and only those clusters are scanned with the
+    * exact cosine re-rank. At scale the assignment is a write-time
+    * partition key, so a query scans nProbe/nCentroids of the data;
+    * trained (not arbitrary) centroids keep recall high under that
+    * pruning. */
+  final case class IvfModel(centroids: DataFrame, assign: DataFrame,
+      nProbe: Int, idCol: String, embCol: String) extends AnnModel {
+    def score(emb: DataFrame, queryIds: Seq[Long]): DataFrame = {
+      val (qs, pairs) = probe(queries(emb, queryIds), centroids, nProbe)
+      probed(assign, pairs)
+        .join(broadcast(qs.withColumnRenamed("q", "qq")), Seq("query_id"))
+        .select(col("query_id"), col("id").as("vec_id"), col("cluster_id"),
+          cosineQ(col("q"), col("qq")).as("score"))
     }
-    books
   }
 
-  /** A driver-local codebook as a `(sub, clabel, qc)` frame, for the
-    * serve paths that join it into broadcast LUTs. */
-  private def booksToDF(spark: SparkSession,
-      books: Seq[(Long, Long, Seq[Long])]): DataFrame = {
+  /** Build an [[IvfModel]]: train the centroids, assign the corpus. */
+  def ivfBuild(emb: DataFrame, nCentroids: Int = 16, nProbe: Int = 4,
+      kmeansIters: Int = 2, idCol: String = "vec_id",
+      embCol: String = "embedding"): IvfModel =
+    ivfTrain(quantized(emb, idCol, embCol), nCentroids, nProbe,
+      kmeansIters, idCol, embCol)
+
+  /** [[ivfBuild]] over a quantized corpus `e` (id, q) — [[ivfPqBuild]]
+    * passes the copy it persists. */
+  private def ivfTrain(e: DataFrame, nCentroids: Int, nProbe: Int,
+      kmeansIters: Int, idCol: String, embCol: String): IvfModel = {
+    val cents = trainCentroids(e, nCentroids, kmeansIters)
+    IvfModel(cents, assignTo(e, cents), nProbe, idCol, embCol)
+  }
+
+  private def quantized(emb: DataFrame, idCol: String,
+      embCol: String): DataFrame =
+    emb.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
+
+  /** Every vector of `e` (id, q) to its nearest centroid: (id, q,
+    * cluster_id). */
+  private def assignTo(e: DataFrame, cents: DataFrame): DataFrame =
+    assignNearest(e.select("id", "q"), "q", cents)
+      .select(col("id"), col("q"), col("assigned").as("cluster_id"))
+
+  /** The probe step of the IVF serves, on the driver: the query batch
+    * is collected ONCE (Q vectors, bounded query state) and comes back
+    * as a local frame that every later use reads instead of rescanning
+    * the corpus, with each query's `nProbe` nearest centroids (exact
+    * integer squared distance, ties to the smaller label) as
+    * (query_id, cluster_id) pairs. */
+  private def probe(qs: DataFrame, centroids: DataFrame,
+      nProbe: Int): (DataFrame, Seq[(Long, Long)]) = {
+    val spark = qs.sparkSession
     import spark.implicits._
-    books.toDF("sub", "clabel", "qc")
+    val batch = qs.as[(Long, Seq[Long])].collect().toSeq
+    val cents = centroids.as[(Long, Seq[Long])].collect().toSeq
+    val pairs = for {
+      (qid, q) <- batch
+      (_, label) <- cents.map { case (l, c) =>
+        (q.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum, l)
+      }.sorted.take(nProbe)
+    } yield (qid, label)
+    (batch.toDF("query_id", "q"), pairs)
   }
 
-  /** [[trainOnSlicesLocal]] as a frame (see [[booksToDF]]). */
-  private def trainOnSlices(s: DataFrame, k: Int, iters: Int): DataFrame =
-    booksToDF(s.sparkSession, trainOnSlicesLocal(s, k, iters))
-
-  /** ADC top-k: the query builds an m×k lookup table of per-subspace
-    * partial dots and codeword norms against the codebooks (broadcast —
-    * it IS the whole model), codes join it keyed on (sub, code), and
-    * one id-keyed aggregate folds the m partials into the approximate
-    * cosine dot(q, reconstruct(v)) / (|q|·|reconstruct(v)|). The stored
-    * vectors are never read at query time — the PQ promise.
-    *
-    * Cache lifetime: the internal slice table is persist()ed (it feeds
-    * 2·iters train jobs plus the encode pass) and CANNOT be unpersisted
-    * here — the returned frame is lazy and still reads it. The CALLER
-    * owns the entry: run your action, then `spark.catalog.clearCache()`
-    * (what Bench/Verify do between queries) or keep it hot for repeat
-    * queries — that is the useful case, since the codes it feeds are
-    * exactly what a vector store keeps resident. */
-  def pqTopK(emb: DataFrame, queryVecId: Long, topK: Int,
-      m: Int = 8, dims: Int = 64, k: Int = 16, iters: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val e = emb.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-    // one slice table feeds the iters train passes AND the encode pass —
-    // persisted so the scan+explode chain runs once, not 1+iters
-    // times (n·m short rows: negligible memory, large plan-depth win)
-    val s = subspaceSlices(e, m, dims).persist()
-    val booksLocal = trainOnSlicesLocal(s, k, iters)
-    val books = booksToDF(emb.sparkSession, booksLocal)
-    val codes = encodeSlices(s, booksLocal).select("id", "sub", "code")
-    val qs = subspaceSlices(e.filter(col("id") === queryVecId), m, dims)
-      .select(col("sub"), col("qs").as("qq"))
-    val lut = broadcast(books.join(qs, Seq("sub"))
-      .select(col("sub"), col("clabel").as("code"),
-        qdot(col("qq"), col("qc")).as("pd"),
-        qnorm2(col("qc")).as("pn")))
-    val qn2 = e.filter(col("id") === queryVecId)
-      .select(qnorm2(col("q")).as("qn2"))
-    codes.filter(col("id") =!= queryVecId)
-      .join(lut, Seq("sub", "code"))
-      .groupBy("id")
-      .agg(sum("pd").as("dot"), sum("pn").as("rn2"))
-      .crossJoin(broadcast(qn2))
-      .select(col("id").as("vec_id"),
-        (col("dot").cast("double") /
-          sqrt(col("rn2").cast("double") * col("qn2").cast("double")))
-          .as("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(topK)
-  }
-
-  /** Multi-query PQ — the amortization twin of [[ivfTopKMulti]] for the
-    * compression path: codebooks are trained ONCE, the corpus is
-    * encoded ONCE, and a whole batch of queries rides one broadcast
-    * Q×m×k lookup table through a single pass over the code table
-    * (one keyed aggregate, one query-keyed rank window — never Q
-    * separate scans). That single-pass batching is the PQ serving
-    * shape at scale: the per-query marginal cost is the ADC fold, not
-    * training, encoding, or an extra corpus read. Cache lifetime of
-    * the internal slice table is caller-owned (see [[pqTopK]]).
-    * Returns (query_id, vec_id, score, rn) for rn <= topK. */
-  def pqTopKMulti(emb: DataFrame, queryIds: Seq[Long], topK: Int,
-      m: Int = 8, dims: Int = 64, k: Int = 16, iters: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(queryIds.nonEmpty, "pqTopKMulti: at least one query id")
-    val e = emb.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-    val s = subspaceSlices(e, m, dims).persist()
-    val booksLocal = trainOnSlicesLocal(s, k, iters)
-    val books = booksToDF(emb.sparkSession, booksLocal)
-    val codes = encodeSlices(s, booksLocal).select("id", "sub", "code")
-    val qs = subspaceSlices(e.filter(col("id").isin(queryIds: _*)), m, dims)
-      .select(col("id").as("query_id"), col("sub"), col("qs").as("qq"))
-    val lut = broadcast(books.join(qs, Seq("sub"))
-      .select(col("query_id"), col("sub"), col("clabel").as("code"),
-        qdot(col("qq"), col("qc")).as("pd"),
-        qnorm2(col("qc")).as("pn")))
-    val qn = broadcast(e.filter(col("id").isin(queryIds: _*))
-      .select(col("id").as("query_id"), qnorm2(col("q")).as("qn2")))
-    val byQuery = Window.partitionBy("query_id")
-    codes
-      .join(lut, Seq("sub", "code"))
+  /** The `rows` (id, cluster_id, …) of the probed clusters fanned out
+    * to the queries probing them, each query's own id left out. The
+    * scan filter is the literal union `cluster_id IN (...)`: on a
+    * cluster-partitioned store it prunes at file listing. */
+  private def probed(rows: DataFrame, pairs: Seq[(Long, Long)]): DataFrame =
+    rows.filter(col("cluster_id").isin(pairs.map(_._2).distinct: _*))
+      .join(pairFrame(rows.sparkSession, pairs), Seq("cluster_id"))
       .filter(col("id") =!= col("query_id"))
-      .groupBy("query_id", "id")
-      .agg(sum("pd").as("dot"), sum("pn").as("rn2"))
-      .join(qn, Seq("query_id"))
-      .select(col("query_id"), col("id").as("vec_id"),
-        (col("dot").cast("double") /
-          sqrt(col("rn2").cast("double") * col("qn2").cast("double")))
-          .as("score"))
-      .withColumn("rn", row_number().over(
-        byQuery.orderBy(col("score").desc, col("vec_id"))))
-      .filter(col("rn") <= topK)
+
+  private def pairFrame(spark: SparkSession,
+      pairs: Seq[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    broadcast(pairs.toDF("query_id", "cluster_id"))
   }
 
-  /** IVF-PQ composed ANN (the IVFADC construction of Jégou et al.,
-    * TPAMI 2011): the scale path that [[ivfTopK]] and [[pqTopK]] each
-    * carry one half of —
-    *
-    *  1. COARSE: k-means centroids ([[trainCentroids]]) partition the
-    *     corpus; every vector is assigned to its nearest centroid and
-    *     its RESIDUAL `r = q - c` is what gets product-quantized
-    *     (residuals are smaller than raw vectors, so the same codebook
-    *     budget quantizes them finer — the reason IVFADC encodes
-    *     residuals, not vectors; exact long subtraction keeps the whole
-    *     pipeline integer-deterministic);
-    *  2. FINE: one set of per-subspace codebooks is trained over ALL
-    *     residuals pooled ([[pqTrain]] discipline: deterministic seeds,
-    *     floor-mean Lloyd updates, smallest-label ties) and every
-    *     vector stores m codes — at scale this codes table is written
-    *     PARTITIONED BY `cluster_id`;
-    *  3. QUERY: the query probes its `nProbe` nearest coarse centroids
-    *     — the probe list is collected to the driver (nProbe longs, the
-    *     same bounded-model discipline as the centroids themselves) and
-    *     applied as a LITERAL `cluster_id IN (...)` predicate, so
-    *     against a cluster-partitioned store it prunes at file listing
-    *     and the ADC scan reads nProbe/nCentroids of the codes instead
-    *     of all of them (the flat-scan gap of [[pqTopK]], closed);
-    *  4. ADC: scores fold from a broadcast nProbe×m×k lookup table.
-    *     With v̂ = c + r̂ the approximate cosine needs three code-keyed
-    *     partials per subspace — pd = q_s·r̂_s, crs = c_s·r̂_s,
-    *     pn = |r̂_s|² — plus two per-cluster scalars cdot = q·c,
-    *     cn2 = |c|²: dot(q,v̂) = cdot + Σpd and |v̂|² = cn2 + 2Σcrs + Σpn,
-    *     all exact integers until the final one-division cosine.
-    *
-    * Returns (vec_id, cluster_id, score) top-`topK`. Thin wrapper:
-    * [[ivfPqBuild]] once, [[ivfPqTopKMulti]] with a one-query batch. */
-  def ivfPqTopK(emb: DataFrame, queryVecId: Long, topK: Int,
-      nCentroids: Int = 16, nProbe: Int = 4, kmeansIters: Int = 2,
-      m: Int = 16, dims: Int = 64, k: Int = 64, iters: Int = 2,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val model = ivfPqBuild(emb, nCentroids, kmeansIters, m, dims, k, iters,
-      idCol, embCol)
-    ivfPqTopKMulti(model, emb, Seq(queryVecId), topK, nProbe, idCol, embCol)
-      .select(col("vec_id"), col("cluster_id"), col("score"))
-      .orderBy(col("score").desc, col("vec_id"))
-      .limit(topK)
+  /** Product quantization (PQ / ADC), the memory-compression path of
+    * ANN (Jégou et al., "Product Quantization for Nearest Neighbor
+    * Search", TPAMI 2011, is the construction; the arithmetic
+    * discipline is this repo's). Each vector is stored as m codes, one
+    * per disjoint subspace — at m=8, k=16 a 64-dim vector is 8 nibbles,
+    * a 64x compression: `codes` (id, sub, code) against per-subspace
+    * codebooks `books` (sub, clabel, qc), built over the slice table
+    * `cache` the build persisted. Same determinism contract as
+    * [[trainCentroids]] (seed codewords are the first k vectors'
+    * slices, floor-mean updates, smallest-label ties), so train →
+    * encode → score is integer-exact and a SQL oracle replays it. A
+    * query batch builds one broadcast Q×m×k lookup table of partial
+    * dots and codeword norms, codes join it on (sub, code), and one
+    * (query, id)-keyed aggregate folds the m partials into the
+    * approximate cosine dot(q, v̂) / (|q|·|v̂|): one pass over the codes
+    * for the whole batch, never reading the stored vectors. */
+  final case class PqModel(books: DataFrame, codes: DataFrame, m: Int,
+      dims: Int, cache: DataFrame, idCol: String, embCol: String)
+      extends AnnModel {
+    def score(emb: DataFrame, queryIds: Seq[Long]): DataFrame = {
+      val qs = queries(emb, queryIds)
+      codes
+        .join(queryLut(books, qs, m, dims), Seq("sub", "code"))
+        .filter(col("id") =!= col("query_id"))
+        .groupBy("query_id", "id")
+        .agg(sum("pd").as("dot"), sum("pn").as("rn2"))
+        .join(queryNorms(qs), Seq("query_id"))
+        .select(col("query_id"), col("id").as("vec_id"),
+          (col("dot").cast("double") /
+            sqrt(col("rn2").cast("double") * col("qn2").cast("double")))
+            .as("score"))
+    }
+    override def release(): Unit = { cache.unpersist(); () }
   }
 
-  /** A built IVF-PQ index, the cacheable/writable artifact the serve
-    * path scores against: coarse `centroids` (clabel, qc), pooled
-    * residual `books` (sub, clabel, qc), and the coded corpus `codes`
-    * (id, cluster_id, sub, code). At scale `codes` is written
-    * PARTITIONED BY cluster_id, so a serve call's literal
-    * `cluster_id IN (probes)` predicate prunes at file listing; the
-    * other two are bounded model state (nCentroids and m×k rows). The
-    * geometry (m, dims) travels with the model so serve calls slice
-    * query vectors identically to the build. */
-  final case class IvfPqModel(
-      centroids: DataFrame, books: DataFrame, codes: DataFrame,
-      m: Int, dims: Int)
+  /** Build a [[PqModel]]: slice, train `iters` Lloyd rounds of `k`
+    * codewords per subspace, encode. */
+  def pqBuild(emb: DataFrame, m: Int = 8, dims: Int = 64, k: Int = 16,
+      iters: Int = 2, idCol: String = "vec_id",
+      embCol: String = "embedding"): PqModel = {
+    val (cache, books, codes) =
+      trainAndEncode(quantized(emb, idCol, embCol), m, dims, k, iters)
+    PqModel(books, codes, m, dims, cache, idCol, embCol)
+  }
 
-  /** Build phase of [[ivfPqTopK]] (steps 1-2 of the IVFADC scaladoc):
-    * coarse k-means, exact long residuals r = q - c, pooled residual
-    * codebooks, per-vector codes. Everything downstream of this is
-    * query serving — train once, serve any number of batches. */
+  /** IVF-PQ, the IVFADC construction of Jégou et al. (TPAMI 2011): an
+    * [[IvfModel]]'s coarse `centroids` (clabel, qc) partition the
+    * corpus, and one set of PQ codebooks `books` (sub, clabel, qc),
+    * trained over ALL residuals r = q - c pooled, codes every vector as
+    * `codes` (id, cluster_id, sub, code). Residuals are smaller than
+    * raw vectors, so the same codebook budget quantizes them finer;
+    * exact long subtraction keeps the pipeline integer-deterministic.
+    * At scale `codes` is written PARTITIONED BY cluster_id; the other
+    * two are bounded model state, and (m, dims) travel with the model
+    * so a serve slices query vectors as the build did.
+    *
+    * A query reads only the codes of its `nProbe` nearest centroids.
+    * With v̂ = c + r̂ the approximate cosine needs three code-keyed
+    * partials per subspace — pd = q_s·r̂_s, crs = c_s·r̂_s,
+    * pn = |r̂_s|² — from two broadcast LUTs keyed (query_id, sub, code)
+    * and (cluster_id, sub, code), plus two per-(query, cluster)
+    * scalars cdot = q·c and cn2 = |c|²: dot(q, v̂) = cdot + Σpd and
+    * |v̂|² = cn2 + 2Σcrs + Σpn, all exact integers until the final
+    * one-division cosine. */
+  final case class IvfPqModel(centroids: DataFrame, books: DataFrame,
+      codes: DataFrame, m: Int, dims: Int, nProbe: Int, cache: DataFrame,
+      idCol: String, embCol: String) extends AnnModel {
+    def score(emb: DataFrame, queryIds: Seq[Long]): DataFrame = {
+      val (qs, pairs) = probe(queries(emb, queryIds), centroids, nProbe)
+      val probedCents = centroids
+        .filter(col("clabel").isin(pairs.map(_._2).distinct: _*))
+      val csl = subspaceSlices(
+          probedCents.select(col("clabel").as("id"), col("qc").as("q")),
+          m, dims)
+        .select(col("id").as("cluster_id"), col("sub"), col("qs").as("cs"))
+      val cLut = broadcast(books.join(csl, Seq("sub"))
+        .select(col("cluster_id"), col("sub"), col("clabel").as("code"),
+          qdot(col("cs"), col("qc")).as("crs")))
+      val coarse = broadcast(pairFrame(emb.sparkSession, pairs)
+        .join(probedCents.withColumnRenamed("clabel", "cluster_id"),
+          Seq("cluster_id"))
+        .join(qs.withColumnRenamed("q", "qq"), Seq("query_id"))
+        .select(col("query_id"), col("cluster_id"),
+          qdot(col("qq"), col("qc")).as("cdot"),
+          qnorm2(col("qc")).as("cn2")))
+      probed(codes, pairs)
+        .join(queryLut(books, qs, m, dims), Seq("query_id", "sub", "code"))
+        .join(cLut, Seq("cluster_id", "sub", "code"))
+        .groupBy("query_id", "id", "cluster_id")
+        .agg(sum("pd").as("rdot"), sum("crs").as("crs"), sum("pn").as("rn2p"))
+        .join(coarse, Seq("query_id", "cluster_id"))
+        .join(queryNorms(qs), Seq("query_id"))
+        .select(col("query_id"), col("id").as("vec_id"), col("cluster_id"),
+          ((col("cdot") + col("rdot")).cast("double") /
+            sqrt((col("cn2") + lit(2L) * col("crs") + col("rn2p"))
+              .cast("double") * col("qn2").cast("double"))).as("score"))
+    }
+    override def release(): Unit = { cache.unpersist(); () }
+  }
+
+  /** Build an [[IvfPqModel]]: the [[ivfBuild]] steps, exact long
+    * residuals, then the [[pqBuild]] steps over the residuals with
+    * `cluster_id` carried. */
   def ivfPqBuild(emb: DataFrame,
-      nCentroids: Int = 16, kmeansIters: Int = 2,
+      nCentroids: Int = 16, nProbe: Int = 4, kmeansIters: Int = 2,
       m: Int = 16, dims: Int = 64, k: Int = 64, iters: Int = 2,
       idCol: String = "vec_id", embCol: String = "embedding"): IvfPqModel = {
     // quantized corpus feeds EVERY Lloyd round of the coarse training
     // AND the assignment pass — persisted so the parquet scan + quantize
-    // runs once, not kmeansIters+1 times (the same silent-multi-scan
-    // pattern as the slice table below)
-    val e = emb.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-      .persist()
-    val cents = trainCentroids(e, nCentroids, kmeansIters)
-    val assign = assignNearest(e.select("id", "q"), "q", cents)
-      .select(col("id"), col("q"), col("assigned").as("cluster_id"))
-    // residual per vector: r = q - c, exact long subtraction (the frame
-    // renames r back to "q" so the shared slice/train machinery applies)
-    val resid = assign
-      .join(broadcast(cents.withColumnRenamed("clabel", "cluster_id")),
-        Seq("cluster_id"))
-      .select(col("id"), col("cluster_id"),
-        zip_with(col("q"), col("qc"), (a, b) => a - b).as("q"))
-    // one persisted slice table feeds the train rounds AND the encode
-    // pass (same caller-owned cache lifetime as pqTopK)
-    val s = subspaceSlices(resid, m, dims, extraCols = Seq("cluster_id"))
-      .persist()
-    val booksLocal = trainOnSlicesLocal(s, k, iters)
-    // the train rounds materialized `s`, so everything downstream (the
-    // encode pass, every serve call) reads the slice cache — the
+    // runs once, not kmeansIters+1 times
+    val e = quantized(emb, idCol, embCol).persist()
+    val ivf = ivfTrain(e, nCentroids, nProbe, kmeansIters, idCol, embCol)
+    val (cache, books, codes) = trainAndEncode(
+      residuals(ivf.assign, ivf.centroids), m, dims, k, iters,
+      extraCols = Seq("cluster_id"))
+    // the train rounds materialized the slice cache, so everything
+    // downstream (the encode pass, every serve call) reads it — the
     // quantized corpus frame is no longer reachable
     e.unpersist()
-    val codes = encodeSlices(s, booksLocal,
-        keyCols = Seq("id", "cluster_id", "sub", "qs"))
-      .select("id", "cluster_id", "sub", "code")
-    IvfPqModel(cents, booksToDF(emb.sparkSession, booksLocal), codes,
-      m, dims)
+    IvfPqModel(ivf.centroids, books, codes, m, dims, nProbe, cache,
+      idCol, embCol)
   }
 
   /** Incremental index maintenance: encode NEW vectors into an existing
@@ -917,109 +769,105 @@ object Similarity {
     * newest-wins covers only rows WITHIN the stream store. */
   def ivfPqAdd(model: IvfPqModel, newEmb: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val e = newEmb.select(col(idCol).as("id"), quantize(col(embCol)).as("q"))
-    val assign = assignNearest(e.select("id", "q"), "q", model.centroids)
-      .select(col("id"), col("q"), col("assigned").as("cluster_id"))
-    val resid = assign
-      .join(broadcast(model.centroids.withColumnRenamed("clabel", "cluster_id")),
+    val spark = newEmb.sparkSession
+    import spark.implicits._
+    val e = quantized(newEmb, idCol, embCol)
+    val resid = residuals(assignTo(e, model.centroids), model.centroids)
+    encodeSlices(subspaceSlices(resid, model.m, model.dims,
+        extraCols = Seq("cluster_id")),
+      model.books.as[(Long, Long, Seq[Long])].collect().toSeq).drop("qs")
+  }
+
+  /** Residual per vector, r = q - c by exact long subtraction, as
+    * (id, cluster_id, q) — `r` keeps the name `q` so the slice/train
+    * machinery applies. */
+  private def residuals(assign: DataFrame, cents: DataFrame): DataFrame =
+    assign
+      .join(broadcast(cents.withColumnRenamed("clabel", "cluster_id")),
         Seq("cluster_id"))
       .select(col("id"), col("cluster_id"),
         zip_with(col("q"), col("qc"), (a, b) => a - b).as("q"))
-    val s = subspaceSlices(resid, model.m, model.dims,
-        extraCols = Seq("cluster_id"))
-    encodeSlices(s, collectBooks(model.books),
-        keyCols = Seq("id", "cluster_id", "sub", "qs"))
-      .select("id", "cluster_id", "sub", "code")
+
+  /** The one slice → persist → train → encode step of [[pqBuild]] and
+    * [[ivfPqBuild]]. The slice table feeds the `iters` train rounds AND
+    * the encode pass, so it is persisted: the scan+explode chain runs
+    * once, not 1+iters times (n·m short rows). Returns (the persisted
+    * slice table — the model's `cache`, the codebook frame, the lazy
+    * codes (id, extra…, sub, code)). */
+  private def trainAndEncode(e: DataFrame, m: Int, dims: Int, k: Int,
+      iters: Int, extraCols: Seq[String] = Nil)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val s = subspaceSlices(e, m, dims, extraCols).persist()
+    val books = trainOnSlicesLocal(s, k, iters)
+    (s, books.toDF("sub", "clabel", "qc"), encodeSlices(s, books).drop("qs"))
   }
 
-  /** Serve phase: score a whole batch of queries against a built
-    * [[IvfPqModel]] in ONE pass over the (probe-pruned) code table —
-    * the IVFADC twin of [[pqTopKMulti]]'s amortization. Each query
-    * probes its own `nProbe` coarse clusters; the probe pairs are
-    * collected (Q×nProbe rows, bounded query-plan state) so the scan
-    * filter is the literal union `cluster_id IN (...)` — pushable
-    * partition pruning on a cluster-partitioned store — and the
-    * per-query probe membership rides a broadcast (query_id,
-    * cluster_id) fan-out join. ADC partials come from two broadcast
-    * LUTs: (query_id, sub, code) → pd, pn and (cluster_id, sub, code)
-    * → crs — identical integer folds to the single-query path, so a
-    * one-query batch reproduces [[ivfPqTopK]] bit for bit. The
-    * per-query marginal cost is the ADC fold over the probed codes;
-    * training, encoding, and the corpus pass are paid once per batch.
-    * Returns (query_id, vec_id, cluster_id, score, rn), rn <= topK. */
-  def ivfPqTopKMulti(model: IvfPqModel, emb: DataFrame,
-      queryIds: Seq[Long], topK: Int, nProbe: Int = 4,
-      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(queryIds.nonEmpty, "ivfPqTopKMulti: at least one query id")
-    val spark = emb.sparkSession
-    val m = model.m
-    val dims = model.dims
-    val qRows = emb.filter(col(idCol).isin(queryIds: _*))
-      .select(col(idCol).as("query_id"), quantize(col(embCol)).as("q"))
-    // per-query probe lists in ONE collect: Q×nProbe (query, cluster)
-    // pairs — the same bounded-model discipline as the centroids
-    val probePairs: Seq[(Long, Long)] = qRows
-      .crossJoin(broadcast(model.centroids))
-      .select(col("query_id"), col("clabel"),
-        (qnorm2(col("q")) + qnorm2(col("qc"))
-          - lit(2L) * qdot(col("q"), col("qc"))).as("__d2"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("__d2"), col("clabel"))))
-      .filter(col("__rn") <= nProbe)
-      .select("query_id", "clabel")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toIndexedSeq
-    val allProbeIds = probePairs.map(_._2).distinct
-    val probed = {
-      import spark.implicits._
-      broadcast(probePairs.toDF("query_id", "cluster_id"))
-    }
-    val probedCents = model.centroids.filter(col("clabel").isin(allProbeIds: _*))
+  /** The per-query ADC lookup table, broadcast — Q×m×k rows, the whole
+    * per-batch model: (query_id, sub, code) → pd = q_s·c, pn = |c|². */
+  private def queryLut(books: DataFrame, qs: DataFrame, m: Int,
+      dims: Int): DataFrame = {
     val qsl = subspaceSlices(
-        qRows.select(col("query_id").as("id"), col("q")), m, dims)
+        qs.select(col("query_id").as("id"), col("q")), m, dims)
       .select(col("id").as("query_id"), col("sub"), col("qs").as("qq"))
-    val csl = subspaceSlices(
-        probedCents.select(col("clabel").as("id"), col("qc").as("q")),
-        m, dims)
-      .select(col("id").as("cluster_id"), col("sub"), col("qs").as("cs"))
-    // Q×m×k and nProbe'×m×k LUTs — the whole per-batch model, broadcast
-    val qLut = broadcast(model.books.join(qsl, Seq("sub"))
+    broadcast(books.join(qsl, Seq("sub"))
       .select(col("query_id"), col("sub"), col("clabel").as("code"),
         qdot(col("qq"), col("qc")).as("pd"),
         qnorm2(col("qc")).as("pn")))
-    val cLut = broadcast(model.books.join(csl, Seq("sub"))
-      .select(col("cluster_id"), col("sub"), col("clabel").as("code"),
-        qdot(col("cs"), col("qc")).as("crs")))
-    val coarse = broadcast(probed
-      .join(probedCents.withColumnRenamed("clabel", "cluster_id"),
-        Seq("cluster_id"))
-      .join(qRows.select(col("query_id"), col("q").as("qq")),
-        Seq("query_id"))
-      .select(col("query_id"), col("cluster_id"),
-        qdot(col("qq"), col("qc")).as("cdot"),
-        qnorm2(col("qc")).as("cn2")))
-    val qn2 = broadcast(qRows.select(col("query_id"),
-      qnorm2(col("q")).as("qn2")))
-    model.codes
-      // THE pruning: a literal predicate on the storage partition key —
-      // only the union of probed clusters survives the scan
-      .filter(col("cluster_id").isin(allProbeIds: _*))
-      // fan each surviving code row out to exactly the queries probing
-      // its cluster (broadcast Q×nProbe pairs)
-      .join(probed, Seq("cluster_id"))
-      .filter(col("id") =!= col("query_id"))
-      .join(qLut, Seq("query_id", "sub", "code"))
-      .join(cLut, Seq("cluster_id", "sub", "code"))
-      .groupBy("query_id", "id", "cluster_id")
-      .agg(sum("pd").as("rdot"), sum("crs").as("crs"), sum("pn").as("rn2p"))
-      .join(coarse, Seq("query_id", "cluster_id"))
-      .join(qn2, Seq("query_id"))
-      .select(col("query_id"), col("id").as("vec_id"), col("cluster_id"),
-        ((col("cdot") + col("rdot")).cast("double") /
-          sqrt((col("cn2") + lit(2L) * col("crs") + col("rn2p"))
-            .cast("double") * col("qn2").cast("double"))).as("score"))
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("score").desc, col("vec_id"))))
-      .filter(col("rn") <= topK)
+  }
+
+  private def queryNorms(qs: DataFrame): DataFrame =
+    broadcast(qs.select(col("query_id"), qnorm2(col("q")).as("qn2")))
+
+  /** The m disjoint slices of each quantized vector: (id[, extra...],
+    * sub, qs). `extraCols` ride along unchanged (IVF-PQ keeps
+    * `cluster_id` on every slice so the codes stay cluster-addressable). */
+  private def subspaceSlices(e: DataFrame, m: Int, dims: Int,
+      extraCols: Seq[String] = Nil): DataFrame = {
+    require(m >= 1 && dims % m == 0,
+      s"subspaceSlices: dims ($dims) must divide into m ($m) subspaces")
+    val d = dims / m
+    val keep = col("id") +: extraCols.map(col)
+    e.select(keep :+ explode(array((0 until m).map { sb =>
+        struct(lit(sb.toLong).as("sub"),
+          slice(col("q"), sb * d + 1, d).as("qs"))
+      }: _*)).as("__s"): _*)
+      .select(keep ++ Seq(col("__s.sub").as("sub"),
+        col("__s.qs").as("qs")): _*)
+  }
+
+  /** Nearest codeword per (vector, subspace) against a DRIVER-LOCAL
+    * codebook, added as `code` — one [[graft.functions.NearestCode]]
+    * projection: the codebook (bounded model state, m·k·(dims/m) longs)
+    * rides the plan as a literal, so encoding is map-only codegen with
+    * no k× row blowup through a join+aggregate (the measured hotspot of
+    * every Lloyd round and every encode pass at k=64). */
+  private def encodeSlices(s: DataFrame,
+      books: Seq[(Long, Long, Seq[Long])]): DataFrame =
+    s.withColumn("code", graft.functions.NearestCode(col("qs"), col("sub"),
+      books).getField("assigned"))
+
+  /** Per-subspace Lloyd rounds over an (id, sub, qs[, extra…]) slice
+    * table, all m subspaces in ONE sub-keyed job per round (not m
+    * jobs). Returns the DRIVER-LOCAL codebook (m·k rows, bounded model
+    * state — it crosses to the driver between rounds anyway); each
+    * round's assignment is one [[encodeSlices]] map-only pass. */
+  private def trainOnSlicesLocal(s: DataFrame, k: Int,
+      iters: Int): Seq[(Long, Long, Seq[Long])] = {
+    val spark = s.sparkSession
+    import spark.implicits._
+    var books: Seq[(Long, Long, Seq[Long])] = s.filter(col("id") < k)
+      .select(col("sub"), col("id").cast("long").as("clabel"),
+        col("qs").as("qc"))
+      .as[(Long, Long, Seq[Long])].collect().toSeq
+      .sortBy(t => (t._1, t._2))
+    for (_ <- 1 to iters)
+      books = floorMeans(encodeSlices(s, books)
+          .select(col("sub"), col("code").as("clabel"), col("qs")),
+          Seq("sub", "clabel"), "qs")
+        .as[(Long, Long, Seq[Long])].collect().toSeq
+        .sortBy(t => (t._1, t._2))
+    books
   }
 }

@@ -81,10 +81,10 @@ object SimilarityQueries {
   /** One deterministic sub-keyed PQ Lloyd round as CTEs, over a slice
     * table literally named `s` (id, sub, qs[, extras]): assign every
     * slice to its nearest codeword in `cin`, emit updated codebooks
-    * `cout` (floor-mean per dim) — mirrors Similarity.trainOnSlices.
-    * Shared by ann_pq_topk (raw-vector slices) and ann_ivfpq_topk
-    * (residual slices) — the Lloyd discipline is identical, only the
-    * `s` CTE feeding it differs. */
+    * `cout` (floor-mean per dim) — mirrors one round of
+    * Similarity.trainOnSlicesLocal. Shared by ann_pq_topk (raw-vector
+    * slices) and ann_ivfpq_topk (residual slices) — the Lloyd
+    * discipline is identical, only the `s` CTE feeding it differs. */
   private def sqlPqRound(t: Int, cin: String, cout: String): String =
     s"""pa$t AS (
        |  SELECT id, sub, qs, clabel FROM (
@@ -211,7 +211,8 @@ object SimilarityQueries {
          |SELECT vec_id, ${sqlCosine("qe", "qq")} AS score
          |FROM e, q
          |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
-      Similarity.annTopK(Tables.embeddings(s, d), queryVecId = 0L, k = 10)
+      val emb = Tables.embeddings(s, d)
+      Similarity.topK(Similarity.exactIndex(emb), emb, queryId = 0L, k = 10)
     },
 
     // top-5 neighbours for each of the first 8 query vectors (broadcast
@@ -233,19 +234,8 @@ object SimilarityQueries {
          |SELECT query_id, vec_id, score, rn FROM ranked WHERE rn <= 5
          |ORDER BY query_id, rn""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val q = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          Similarity.quantize(col("embedding")).as("qq"))
-      val e = emb.select(col("vec_id"),
-        Similarity.quantize(col("embedding")).as("qe"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("score").desc, col("vec_id"))
-      e.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          Similarity.cosineQ(col("qe"), col("qq")).as("score"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
+      Similarity.topKMulti(Similarity.exactIndex(emb), emb,
+          queryIds = (0L until 8L).toSeq, k = 5)
         .orderBy("query_id", "rn")
     },
 
@@ -479,8 +469,10 @@ object SimilarityQueries {
          |  CAST(dot AS DOUBLE) / sqrt(CAST(rn2 AS DOUBLE) * CAST(qn.qn2 AS DOUBLE)) AS score
          |FROM sc, qn ORDER BY score DESC, vec_id LIMIT 10""".stripMargin
     }) { (s, d) =>
-      Similarity.pqTopK(Tables.embeddings(s, d), queryVecId = 0L,
-        topK = 10, m = 16, dims = 64, k = 64, iters = 2)
+      val emb = Tables.embeddings(s, d)
+      Similarity.topK(
+        Similarity.pqBuild(emb, m = 16, dims = 64, k = 64, iters = 2),
+        emb, queryId = 0L, k = 10)
     },
 
     QueryDef("ann_ivf_topk",
@@ -497,9 +489,10 @@ object SimilarityQueries {
          |FROM assign a JOIN probes p ON a.cluster_id = p.cluster_id, qv
          |WHERE a.id <> 0
          |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
-      Similarity.ivfTopK(Tables.embeddings(s, d), queryVecId = 0L, k = 10,
-          nCentroids = 16, nProbe = 4, kmeansIters = 2)
-        .withColumnRenamed("id", "vec_id")
+      val emb = Tables.embeddings(s, d)
+      Similarity.topK(Similarity.ivfBuild(emb,
+          nCentroids = 16, nProbe = 4, kmeansIters = 2),
+        emb, queryId = 0L, k = 10)
     },
 
     // IVF-PQ composed ANN (IVFADC, Jégou et al. TPAMI 2011): coarse
@@ -509,7 +502,7 @@ object SimilarityQueries {
     // identical m=16 geometry on sf0.001), and the query's 4 probed
     // clusters are the ONLY codes the ADC fold reads — the literal
     // cluster_id IN (...) predicate that prunes a cluster-partitioned
-    // code store at file listing, closing pqTopK's flat-scan gap. The
+    // code store at file listing, where flat PQ scans every code. The
     // oracle unrolls coarse Lloyd, residuals, sub-keyed residual Lloyd,
     // probe pruning, and the 5-term ADC fold (dot = q·c + Σ q_s·r̂_s;
     // |v̂|² = |c|² + 2Σ c_s·r̂_s + Σ|r̂_s|²) — integer-exact throughout.
@@ -585,9 +578,11 @@ object SimilarityQueries {
          |           * CAST(qn.qn2 AS DOUBLE)) AS score
          |FROM sc JOIN coarse co ON co.cluster_id = sc.cluster_id, qn
          |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin) { (s, d) =>
-      Similarity.ivfPqTopK(Tables.embeddings(s, d), queryVecId = 0L,
-        topK = 10, nCentroids = 16, nProbe = 4, kmeansIters = 2,
-        m = 16, dims = 64, k = 64, iters = 2)
+      val emb = Tables.embeddings(s, d)
+      Similarity.topK(Similarity.ivfPqBuild(emb,
+          nCentroids = 16, nProbe = 4, kmeansIters = 2,
+          m = 16, dims = 64, k = 64, iters = 2),
+        emb, queryId = 0L, k = 10)
     },
 
     // multi-query IVF-PQ: ONE build (coarse Lloyd + residual codebooks +
@@ -598,9 +593,8 @@ object SimilarityQueries {
     // ann_ivfpq_topk bit for bit (spec-pinned)
     QueryDef("ann_ivfpq_multi", sqlIvfPqMultiOracle) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val model = Similarity.ivfPqBuild(emb)
-      Similarity.ivfPqTopKMulti(model, emb,
-          queryIds = (0L until 4L).toSeq, topK = 5, nProbe = 4)
+      Similarity.topKMulti(Similarity.ivfPqBuild(emb, nProbe = 4), emb,
+          queryIds = (0L until 4L).toSeq, k = 5)
         .orderBy("query_id", "rn")
     },
 
@@ -615,7 +609,7 @@ object SimilarityQueries {
     // hash-invariant vs serving from memory.
     QueryDef("ann_ivfpq_store", sqlIvfPqMultiOracle) { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val model = Similarity.ivfPqBuild(emb)
+      val model = Similarity.ivfPqBuild(emb, nProbe = 4)
       // fixed per-fixture path + overwrite: a fresh temp dir per
       // execution leaked one store copy per bench/verify pass
       val dir = graft.Scratch.dir("ivfpq-store", d) + "/codes"
@@ -624,8 +618,8 @@ object SimilarityQueries {
       // explicit schema keeps cluster_id LongType (partition-dir value
       // inference would int-ify it) and preserves the build's column order
       val stored = s.read.schema(model.codes.schema).parquet(dir)
-      Similarity.ivfPqTopKMulti(model.copy(codes = stored), emb,
-          queryIds = (0L until 4L).toSeq, topK = 5, nProbe = 4)
+      Similarity.topKMulti(model.copy(codes = stored), emb,
+          queryIds = (0L until 4L).toSeq, k = 5)
         .orderBy("query_id", "rn")
     },
 
@@ -681,9 +675,10 @@ object SimilarityQueries {
          |  FROM scored)
          |SELECT query_id, vec_id, score, rn FROM ranked WHERE rn <= 5
          |ORDER BY query_id, rn""".stripMargin) { (s, d) =>
-      Similarity.pqTopKMulti(Tables.embeddings(s, d),
-          queryIds = (0L until 6L).toSeq, topK = 5,
-          m = 16, dims = 64, k = 64, iters = 2)
+      val emb = Tables.embeddings(s, d)
+      Similarity.topKMulti(
+          Similarity.pqBuild(emb, m = 16, dims = 64, k = 64, iters = 2),
+          emb, queryIds = (0L until 6L).toSeq, k = 5)
         .orderBy("query_id", "rn")
     },
 
@@ -715,10 +710,11 @@ object SimilarityQueries {
          |  FROM scored)
          |SELECT query_id, vec_id, score, rn FROM ranked WHERE rn <= 5
          |ORDER BY query_id, rn""".stripMargin) { (s, d) =>
-      Similarity.ivfTopKMulti(Tables.embeddings(s, d),
-          queryIds = (0L until 6L).toSeq, k = 5,
-          nCentroids = 16, nProbe = 4, kmeansIters = 2)
-        .withColumnRenamed("id", "vec_id")
+      val emb = Tables.embeddings(s, d)
+      Similarity.topKMulti(Similarity.ivfBuild(emb,
+          nCentroids = 16, nProbe = 4, kmeansIters = 2),
+          emb, queryIds = (0L until 6L).toSeq, k = 5)
+        .drop("cluster_id")
         .orderBy("query_id", "rn")
     },
 

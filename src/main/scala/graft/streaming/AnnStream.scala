@@ -17,6 +17,8 @@ import org.apache.spark.sql.functions._
   * cluster_id), so a replayed batch rewrites exactly its own partitions.
   * Retraining (a new [[Similarity.ivfPqBuild]]) happens out of band when
   * drift accumulates; until then every batch is two broadcast joins.
+  * Serving is [[Similarity.topKMulti]] over the model with its codes
+  * read from the store (`model.copy(codes = …)`, see [[mergedCodes]]).
   */
 object AnnStream {
 

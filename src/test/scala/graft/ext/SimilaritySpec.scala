@@ -9,7 +9,7 @@ class SimilaritySpec extends SparkSpec {
   lazy val emb = graft.Tables.embeddings(spark, sfDir)
 
   test("annTopK returns k rows, scores in [-1,1], sorted desc") {
-    val rows = Similarity.annTopK(emb, 0L, 10)
+    val rows = Similarity.topK(Similarity.exactIndex(emb), emb, 0L, 10)
       .as[(Long, Double)].collect()
     assert(rows.length == 10)
     assert(rows.forall { case (_, s) => s >= -1.0 && s <= 1.0 })
@@ -49,11 +49,11 @@ class SimilaritySpec extends SparkSpec {
   test("trained-IVF recall@10 >= 0.9 vs exact annTopK") {
     // k-means-trained centroids + 4/16 probes must recover (nearly) the
     // exact top-10 — the recall yardstick the IVF pruning is graded on
-    val exact = Similarity.annTopK(emb, 0L, 10)
+    val exact = Similarity.topK(Similarity.exactIndex(emb), emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSet
-    val ivf = Similarity.ivfTopK(emb, 0L, 10,
-        nCentroids = 16, nProbe = 4, kmeansIters = 2)
-      .select("id").as[Long].collect().toSet
+    val ivf = Similarity.topK(Similarity.ivfBuild(emb,
+        nCentroids = 16, nProbe = 4, kmeansIters = 2), emb, 0L, 10)
+      .select("vec_id").as[Long].collect().toSet
     val recall = exact.intersect(ivf).size.toDouble / exact.size
     assert(recall >= 0.9, s"recall@10 = $recall (ivf=$ivf exact=$exact)")
   }
@@ -68,10 +68,10 @@ class SimilaritySpec extends SparkSpec {
     val vecs = (0L until 12L).map { i =>
       (i, Array.tabulate(64)(d => ((i * 31 + d * 7) % 13 - 6).toFloat / 8f))
     }.toDF("vec_id", "embedding")
-    val exact = Similarity.annTopK(vecs, 0L, 11)
+    val exact = Similarity.topK(Similarity.exactIndex(vecs), vecs, 0L, 11)
       .select("vec_id", "score").as[(Long, Double)].collect().toSet
-    val pq = Similarity.pqTopK(vecs, 0L, 11, m = 8, dims = 64, k = 12,
-        iters = 1)
+    val pq = Similarity.topK(Similarity.pqBuild(vecs, m = 8, dims = 64,
+        k = 12, iters = 1), vecs, 0L, 11)
       .as[(Long, Double)].collect().toSet
     assert(pq == exact, s"pq=$pq exact=$exact")
   }
@@ -83,16 +83,19 @@ class SimilaritySpec extends SparkSpec {
     // at sf0.01 — the geometry the ann_pq_topk query runs; (32,64)
     // gives 0.8 on both). Lossy by construction; the floor pins that
     // the codebooks actually carry signal, not a luck draw.
-    val exact = Similarity.annTopK(emb, 0L, 10)
+    val exact = Similarity.topK(Similarity.exactIndex(emb), emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSet
-    val pq = Similarity.pqTopK(emb, 0L, 10, m = 32, k = 64)
+    val pq = Similarity.topK(Similarity.pqBuild(emb, m = 32, k = 64), emb,
+        0L, 10)
       .select("vec_id").as[Long].collect().toSet
     val recall = exact.intersect(pq).size.toDouble / exact.size
     assert(recall >= 0.7, s"recall@10 = $recall (pq=$pq exact=$exact)")
     // determinism under repartitioning, at the query's geometry
-    val a = Similarity.pqTopK(emb, 0L, 10, m = 16, k = 64)
+    val a = Similarity.topK(Similarity.pqBuild(emb, m = 16, k = 64), emb,
+        0L, 10)
       .select("vec_id").as[Long].collect().toSet
-    val b = Similarity.pqTopK(emb.repartition(7), 0L, 10, m = 16, k = 64)
+    val b = Similarity.topK(Similarity.pqBuild(emb.repartition(7),
+        m = 16, k = 64), emb.repartition(7), 0L, 10)
       .select("vec_id").as[Long].collect().toSet
     assert(a == b, "PQ ranking must be partition-independent")
   }
@@ -119,9 +122,9 @@ class SimilaritySpec extends SparkSpec {
     assert(ex.getMessage.contains("bandedPairs"),
       s"guard must name the scale path: ${ex.getMessage}")
     val ex2 = intercept[IllegalArgumentException] {
-      Similarity.annTopK(emb, 0L, 10, maxRows = 5)
+      Similarity.exactIndex(emb, maxRows = 5)
     }
-    assert(ex2.getMessage.contains("ivfTopK"),
+    assert(ex2.getMessage.contains("ivfBuild"),
       s"guard must name the scale path: ${ex2.getMessage}")
   }
 
@@ -278,47 +281,97 @@ class SimilaritySpec extends SparkSpec {
     assert(got((1L, 0L)) == 1000000L && got((1L, 1L)) == 500000L)
   }
 
-  test("pqTopKMulti: a one-query batch reproduces pqTopK exactly " +
-    "(same codebooks, same integer ADC fold)") {
-    val single = Similarity.pqTopK(emb, 0L, 10, m = 16, k = 64)
+  /** The serve contract of every trained model: a one-query
+    * `topKMulti` batch reproduces `topK` exactly, and one build serves
+    * successive batches with only the serve-side pass. */
+  private def checkServe(model: Similarity.AnnModel, tag: String): Unit = {
+    val single = Similarity.topK(model, emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSeq
-    val multi = Similarity.pqTopKMulti(emb, Seq(0L), 10, m = 16, k = 64)
+    val multi = Similarity.topKMulti(model, emb, Seq(0L), 10)
       .orderBy("rn").select("vec_id").as[Long].collect().toSeq
     assert(multi == single, s"multi=$multi single=$single")
-    spark.catalog.clearCache()
-  }
-
-  test("ivfPqTopKMulti: a one-query batch reproduces ivfPqTopK exactly, " +
-    "and one build serves successive batches with only the ADC fold") {
-    val single = Similarity.ivfPqTopK(emb, 0L, 10)
-      .select("vec_id").as[Long].collect().toSeq
-    val model = Similarity.ivfPqBuild(emb)
-    val multi = Similarity.ivfPqTopKMulti(model, emb, Seq(0L), 10)
-      .orderBy("rn").select("vec_id").as[Long].collect().toSeq
-    assert(multi == single, s"multi=$multi single=$single")
-    // one build, second batch: per-query marginal is the serve-side ADC
-    // fold, not training. A wall-clock ratio here would race with CPU
+    // one build, second batch: per-query marginal is the serve-side
+    // pass, not training. A wall-clock ratio here would race with CPU
     // steal on a shared box (the Bench comment documents exactly that
     // failure mode) — count Spark JOBS instead: serving Q queries is
     // one probe-collect plus one action regardless of Q, while a
     // rebuild-per-query regression would add the Lloyd/collect job
     // train per extra query. Deterministic under load.
-    model.codes.persist(); model.codes.count()
-    def jobs(tag: String)(f: => Unit): Int = {
-      val group = s"ivfpq-serve-jobs-$tag"
+    def jobs(n: String)(f: => Unit): Int = {
+      val group = s"$tag-serve-jobs-$n"
       spark.sparkContext.setJobGroup(group, group)
       try f finally spark.sparkContext.clearJobGroup()
       spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     }
-    val j1 = jobs("one")(Similarity.ivfPqTopKMulti(model, emb, Seq(1L), 5)
+    val j1 = jobs("one")(Similarity.topKMulti(model, emb, Seq(1L), 5)
       .write.format("noop").mode("overwrite").save())
-    val j4 = jobs("four")(Similarity.ivfPqTopKMulti(model, emb,
+    val j4 = jobs("four")(Similarity.topKMulti(model, emb,
         Seq(2L, 3L, 4L, 5L), 5)
       .write.format("noop").mode("overwrite").save())
     assert(j4 <= j1 + 2,
       s"4-query serve launched $j4 jobs vs $j1 for 1 query — batch size " +
         "must not multiply the job count (training is paid at build)")
+  }
+
+  test("pqTopKMulti: a one-query batch reproduces pqTopK exactly " +
+    "(same codebooks, same integer ADC fold)") {
+    checkServe(Similarity.pqBuild(emb, m = 16, k = 64), "pq")
     spark.catalog.clearCache()
+  }
+
+  test("ivfPqTopKMulti: a one-query batch reproduces ivfPqTopK exactly, " +
+    "and one build serves successive batches with only the ADC fold") {
+    val model = Similarity.ivfPqBuild(emb)
+    model.codes.persist(); model.codes.count()
+    checkServe(model, "ivfpq")
+    spark.catalog.clearCache()
+  }
+
+  test("IVF serve: a one-query topKMulti batch reproduces topK exactly, " +
+    "and one build serves successive batches with only the probed scan") {
+    checkServe(Similarity.ivfBuild(emb), "ivf")
+  }
+
+  // every trained model releases what its build persisted: the flag
+  // says whether the build persists anything (IVF persists nothing, so
+  // its check is that serving it leaves nothing behind either)
+  Seq[(String, Boolean, () => Similarity.AnnModel)](
+    ("IVF", false, () => Similarity.ivfBuild(emb)),
+    ("PQ", true, () => Similarity.pqBuild(emb, m = 16, k = 64)),
+    ("IVF-PQ", true, () => Similarity.ivfPqBuild(emb))
+  ).foreach { case (name, persists, build) =>
+    test(s"$name model: release() after serving leaves no cache entry " +
+      "and no new persistent RDD, without clearCache()") {
+      spark.catalog.clearCache()
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val model = build()
+      Similarity.topKMulti(model, emb, Seq(0L, 1L), 5)
+        .write.format("noop").mode("overwrite").save()
+      assert(spark.sharedState.cacheManager.isEmpty != persists,
+        s"$name build expected to persist: $persists")
+      model.release()
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name release() must drop every cache entry its build made")
+      // RDDs persistent before the build may be dropped meanwhile by the
+      // ContextCleaner; what must not exist is one the build added
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, s"$name release() left persistent RDDs $left")
+    }
+  }
+
+  test("Similarity has one top-k serve path: no def other than topK / " +
+    "topKMulti is named *TopK or *TopKMulti") {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(sys.props("user.dir"), "src", "main", "scala",
+      "graft", "ext", "Similarity.scala")
+    val text = new String(Files.readAllBytes(src), "UTF-8")
+    val topKDefs = """\bdef\s+(\w+)""".r.findAllMatchIn(text)
+      .map(_.group(1))
+      .filter(n => n.endsWith("TopK") || n.endsWith("TopKMulti") ||
+        n == "topK" || n == "topKMulti")
+      .toSet
+    assert(topKDefs == Set("topK", "topKMulti"),
+      s"top-k siblings are back in $src: ${topKDefs -- Set("topK", "topKMulti")}")
   }
 
   test("ivfPqAdd: new vectors encode against the frozen model — " +
@@ -338,10 +391,10 @@ class SimilaritySpec extends SparkSpec {
     val grown = model.copy(
       codes = model.codes.unionByName(Similarity.ivfPqAdd(model, odd)))
     val gotGrown = Similarity
-      .ivfPqTopKMulti(grown, emb, Seq(0L), 10, nProbe = 16)
+      .topKMulti(grown.copy(nProbe = 16), emb, Seq(0L), 10)
       .select("vec_id").as[Long].collect().toSet
     val gotOld = Similarity
-      .ivfPqTopKMulti(model, emb, Seq(0L), 10, nProbe = 16)
+      .topKMulti(model.copy(nProbe = 16), emb, Seq(0L), 10)
       .select("vec_id").as[Long].collect().toSet
     assert(gotOld.forall(_ % 2 == 0), "old index knows only even vectors")
     assert(gotGrown.exists(_ % 2 == 1),
@@ -378,11 +431,10 @@ class SimilaritySpec extends SparkSpec {
     val nParts = spark.read.parquet(dir)
       .select("cluster_id").distinct().count()
     val fromStore = Similarity
-      .ivfPqTopKMulti(model.copy(codes = stored), emb, Seq(0L), 10,
-        nProbe = 4)
+      .topKMulti(model.copy(codes = stored, nProbe = 4), emb, Seq(0L), 10)
     val got = fromStore.orderBy("rn")
       .select("vec_id").as[Long].collect().toSeq
-    val mem = Similarity.ivfPqTopKMulti(model, emb, Seq(0L), 10, nProbe = 4)
+    val mem = Similarity.topKMulti(model.copy(nProbe = 4), emb, Seq(0L), 10)
       .orderBy("rn").select("vec_id").as[Long].collect().toSeq
     assert(got == mem, s"store serve must equal in-memory serve: $got / $mem")
     // the serve plan's literal IN predicate IS partition pruning here:
@@ -407,9 +459,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF-PQ: coarse pruning + residual ADC — recall vs exact, " +
     "partition-independence, and the cluster_id scan filter") {
-    val exact = Similarity.annTopK(emb, 0L, 10)
+    val exact = Similarity.topK(Similarity.exactIndex(emb), emb, 0L, 10)
       .select("vec_id").as[Long].collect().toSet
-    val df = Similarity.ivfPqTopK(emb, 0L, 10)
+    val df = Similarity.topK(Similarity.ivfPqBuild(emb), emb, 0L, 10)
     val got = df.select("vec_id").as[Long].collect().toSet
     val recall = exact.intersect(got).size.toDouble / exact.size
     // measured 0.8 on this corpus at the DEFAULT m=16 geometry — the
@@ -419,7 +471,8 @@ class SimilaritySpec extends SparkSpec {
     // gain survives scanning only nProbe/nCentroids = 4/16 of the codes
     assert(recall >= 0.7, s"recall@10 = $recall (got=$got exact=$exact)")
     // determinism under repartitioning
-    val b = Similarity.ivfPqTopK(emb.repartition(7), 0L, 10)
+    val b = Similarity.topK(Similarity.ivfPqBuild(emb.repartition(7)),
+        emb.repartition(7), 0L, 10)
       .select("vec_id").as[Long].collect().toSet
     assert(got == b, "IVF-PQ ranking must be partition-independent")
     // plan contract: the code-table side is filtered by a LITERAL
@@ -435,7 +488,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("cache hygiene: pqTopK's persisted slice table is caller-owned " +
     "and clearCache() (the Bench/Verify contract) drops it") {
-    val r = Similarity.pqTopK(emb, 0L, 5, m = 16, k = 64)
+    val r = Similarity.topK(Similarity.pqBuild(emb, m = 16, k = 64), emb,
+      0L, 5)
     r.write.format("noop").mode("overwrite").save()
     // the slice table is legitimately cached while the query lives...
     assert(!spark.sharedState.cacheManager.isEmpty,

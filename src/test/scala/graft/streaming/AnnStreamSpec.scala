@@ -62,7 +62,8 @@ class AnnStreamSpec extends SparkSpec {
     // the grown index serves the streamed vectors
     val grown = model.copy(
       codes = model.codes.unionByName(AnnStream.readCodes(spark, storeDir)))
-    val top = Similarity.ivfPqTopKMulti(grown, emb, Seq(0L), 10, nProbe = 16)
+    val top = Similarity.topKMulti(grown.copy(nProbe = 16), emb, Seq(0L),
+      10)
       .select("vec_id").as[Long].collect().toSet
     assert(top.exists(_ % 2 == 1),
       s"grown index must surface streamed odd vectors: $top")
