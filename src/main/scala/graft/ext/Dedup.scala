@@ -195,29 +195,17 @@ object Dedup {
 
   /** End-to-end MinHash/LSH near-dup join under a [[DedupProfile]]:
     * shingle index -> signatures -> banded candidates -> exact Jaccard
-    * re-rank -> threshold filter. `bitsetRerank` picks the
-    * small-vocabulary popcount fast path ([[candidateJaccardBitset]],
-    * guarded in [[tokenMasks]]) vs the general posting-list re-rank
-    * ([[candidateJaccard]]). */
+    * re-rank ([[candidateJaccard]]) -> threshold filter. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-      profile: DedupProfile = DedupProfile.default,
-      bitsetRerank: Boolean = true): DataFrame = {
+      profile: DedupProfile = DedupProfile.default): DataFrame = {
     // the token index (corpus tokenize + shingle explode + one md5 per
-    // (doc, shingle)) feeds the banded-candidate pass AND both stages of
-    // the mask build (vocabulary count, mask aggregate) — materialize it
-    // once instead of re-running the shingling per consumer
+    // (doc, shingle)) feeds the banded-candidate pass AND the re-rank
+    // (vocabulary count, then masks or postings) — materialize it once
+    // instead of re-running the shingling per consumer
     val idx = Materialize(tokenIndex(df, idCol, textCol, profile.shingleN),
       eager = true)
-    val cand = lshCandidatesFromIndex(idx, profile)
-    val reranked =
-      // masks feed both the id_a and id_b sides of the re-rank join —
-      // materialize once so the vocab + mask pipeline doesn't plan and
-      // run once per side (same dedup as jaccardPairsBitset)
-      if (bitsetRerank)
-        candidateJaccardBitset(cand,
-          Materialize(tokenMasks(idx), eager = true))
-      else candidateJaccard(cand, idx)
-    reranked.filter(col("jaccard") >= profile.threshold)
+    candidateJaccard(lshCandidatesFromIndex(idx, profile), idx)
+      .filter(col("jaccard") >= profile.threshold)
   }
 
   // -------- 4. SimHash --------
@@ -259,10 +247,8 @@ object Dedup {
     // shingling + one md5-derived hash per (doc, shingle) is the
     // compute-heavy leaf of every signature pipeline — spread it by
     // compute rather than inheriting byte-sized upstream splits
-    graft.ops.Spread.forCompute(df, col(idCol))
-      .select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
-      .withColumn("n_sh", size(col("sh")).cast("long"))
-      .select(col("id"), col("n_sh"), explode(col("sh")).as("shingle"))
+    explodeSets(shingleSets(graft.ops.Spread.forCompute(df, col(idCol)),
+        idCol, textCol, n))
       .withColumn("h", TextAnalysis.tokenHash31(col("shingle")))
 
   /** MinHash signatures as one hash-agg over the token index:
@@ -335,7 +321,7 @@ object Dedup {
     require(window > 0 && passes >= 1 && passes <= 24)
     val w = window.toLong
     // persist the two stages every pass re-reads: `idx` feeds the SimHash
-    // pass AND the bitset re-rank, `sh` feeds one PrefixSum per pass —
+    // pass AND the exact re-rank, `sh` feeds one PrefixSum per pass —
     // without these the tokenize pipeline re-evaluates passes+1 times.
     // The method is made eager (result localCheckpoint) so both can be
     // unpersisted before returning — no cache entries leak to the caller.
@@ -366,7 +352,7 @@ object Dedup {
     val cand =
       if (passes == 1) candPasses.head
       else candPasses.reduce(_ unionByName _).distinct()
-    val result = Materialize(candidateJaccardBitset(cand, tokenMasks(idx))
+    val result = Materialize(candidateJaccard(cand, idx)
       .filter(col("jaccard") >= threshold),
       eager = true)
     idx.unpersist(false)
@@ -459,120 +445,105 @@ object Dedup {
     // for docs shorter than n.
     else graft.functions.WordShingles(text, n)
 
-  /** Exact Jaccard for a given candidate-pair set, via the token index
-    * (two codegen'd joins + hash agg; no interpreted array ops):
-    * intersection = count of shingles shared by the pair. */
-  def candidateJaccard(cand: DataFrame, index: DataFrame): DataFrame = {
-    val ia = index.select(col("id").as("id_a"), col("n_sh").as("na"),
-      col("shingle"))
-    val ib = index.select(col("id").as("id_b"), col("n_sh").as("nb"),
-      col("shingle"))
-    cand.join(ia, Seq("id_a"))
-      .join(ib, Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b", "na", "nb")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("un", col("na") + col("nb") - col("inter"))
-      .withColumn("jaccard", col("inter").cast("double") / col("un"))
-      .select("id_a", "id_b", "inter", "un", "jaccard")
+  // Exact Jaccard comes in two shapes, all pairs ([[jaccardPairs]]) and
+  // a given candidate set ([[candidateJaccard]]), and each has two legs
+  // picked by the measured shingle vocabulary ([[Vocabulary.bitset]]).
+  // While the vocabulary packs into one 64-word mask per doc,
+  // intersections are Σ popcount(a&b) over masks built by a single hash
+  // aggregate; above that, PPJoin prefix filtering (all pairs) or the
+  // posting-list join (candidates) wins. The measured cross-over is in
+  // SCALE.md §8c.
+
+  /** A token index's measured vocabulary: its materialized shingle
+    * frequency table `freq` (shingle, __tf) and that table's row count
+    * `size`, taken in the one job that stores it. */
+  private[ext] final case class Vocabulary(freq: DataFrame, size: Long) {
+    /** The one bitset-or-not decision: at most 4096 distinct shingles
+      * pack each doc into one 64-word mask built by one aggregate. */
+    def bitset: Boolean = size <= 4096L
+    /** 64-bit words per mask (at least one: an empty vocabulary plans). */
+    def maskWords: Int = math.max(1L, (size + 63) / 64).toInt
   }
 
-  // -------- bitset Jaccard (small-vocabulary fast path) --------
-  //
-  // When the DISTINCT shingle vocabulary is small (≤ a few thousand —
-  // decided by inspecting `index.select("shingle").distinct().count()`,
-  // the same kind of stats-driven choice as broadcast-vs-shuffle), each
-  // doc's shingle set packs into an array<long> bitmask and intersection
-  // cardinality becomes Σ popcount(a&b) — a codegen'd per-pair O(vocab/64)
-  // loop instead of a posting-list join. The fixture's ~40-token
-  // vocabulary means ONE long per doc; the posting-list variant
-  // ([[jaccardPairs]]) remains the general-corpus path.
-
-  /** Per-doc bitmasks over the global shingle vocabulary: (id, n_sh,
-    * mask array<long>). Vocabulary indexed by sorted order
-    * (deterministic); masks are DENSE (every word slot present, zeros
-    * for empty words) so element i of any two masks refers to the same
-    * vocabulary slice. The one driver-side action (vocab count) is the
-    * stats inspection that justifies choosing this path at all. */
-  def tokenMasks(index: DataFrame): DataFrame =
-    tokenMasksWithWidth(index)._1
-
-  /** [[tokenMasks]] plus the driver-known mask width in 64-bit words —
-    * callers that size the mask relation (the broadcast gate in
-    * [[jaccardPairsBitset]]) read the width here instead of probing a
-    * mask row with an extra job. */
-  private[ext] def tokenMasksWithWidth(index: DataFrame)
-      : (DataFrame, Int) = {
-    import org.apache.spark.sql.expressions.Window
-    val distinctSh = index.select("shingle").distinct()
-    val nVocab = distinctSh.count() // the stats inspection (scaladoc)
-    // this whole code path only exists for SMALL vocabularies (dense
-    // O(vocab/64) masks per doc + a broadcast of the vocab — both blow
-    // up long before the numbering would); big vocabularies belong on
-    // the posting-list path, so enforce the contract rather than
-    // half-scaling one step of it
-    require(nVocab <= (1L << 20),
-      s"tokenMasks is the small-vocabulary fast path (got $nVocab distinct " +
-        "shingles); use jaccardPairs / candidateJaccard for large vocabularies")
-    // vocabulary ordinal, sized by the count just taken: at <= 4096
-    // rows a row_number() window is ONE task over a trivially bounded
-    // input (constant work at ANY corpus scale — the vocabulary, not
-    // the corpus, is what's sorted) and costs one exchange; above that
-    // the range-partitioned PrefixSum ordinal takes over so the sort
-    // never funnels — 2^20 rows on one task is real serial time and
-    // the exact shape WindowExec warns about. Both assign bit =
-    // sorted position - 1, so masks are byte-identical either way.
-    val vocab =
-      if (nVocab <= 4096L)
-        distinctSh.withColumn("bit",
-          row_number().over(Window.orderBy("shingle")) - 1)
-          .select(col("shingle"), col("bit").cast("long").as("bit"))
-      else
-        graft.ops.PrefixSum.withOrdinal(distinctSh, "__ord",
-            Seq(col("shingle")))
-          .select(col("shingle"), (col("__ord") - 1L).as("bit"))
-    val numWords = ((nVocab + 63) / 64).toInt
-    val joined = index.join(broadcast(vocab), Seq("shingle"))
-    val masks = if (numWords <= 64) {
-      // ONE keyed exchange instead of two: numWords is driver-known and
-      // small, so the dense mask builds as per-word conditional bit_or
-      // aggregates in a single hash aggregate keyed on the doc — the
-      // (id, n_sh, word) pre-aggregation exchange and the interpreted
-      // map_from_entries/transform tail disappear from every consumer's
-      // plan. Word w of a doc with no tokens in that slice bit_ors only
-      // zeros, which equals the old path's coalesce(missing, 0).
-      val aggs = (0 until numWords).map { w =>
-        bit_or(when((col("bit") / 64).cast("int") === w,
-          expr("shiftleft(1L, cast(bit % 64 AS int))")).otherwise(0L))
-          .as(s"__w$w")
-      }
-      joined.groupBy("id", "n_sh").agg(aggs.head, aggs.tail: _*)
-        .select(col("id"), col("n_sh"),
-          array((0 until numWords).map(w => col(s"__w$w")): _*).as("mask"))
-    } else {
-      // wide-vocab fallback: numWords conditional aggregates would blow
-      // up the generated code. ONE id-keyed aggregate collects the
-      // doc's bit positions and a codegen'd expression densifies them —
-      // this replaces the old two-level (word-keyed exchange + id-keyed
-      // exchange) aggregate whose `transform(sequence...)` tail was
-      // CodegenFallback (interpreted per word, 16384 closure dispatches
-      // per doc at the 2^20 vocab bound).
-      joined
-        .groupBy("id", "n_sh")
-        .agg(collect_list(col("bit")).as("__bits"))
-        .select(col("id"), col("n_sh"),
-          graft.functions.LongBitsetFromPositions(col("__bits"), numWords)
-            .as("mask"))
-    }
-    (masks, numWords)
+  private[ext] def vocabulary(index: DataFrame): Vocabulary = {
+    val (freq, size) = Materialize.counted(shingleFreq(index))
+    Vocabulary(freq, size)
   }
 
-  /** EXACT all-pairs Jaccard >= threshold via bitmask block-nested join.
-    * Same results as [[jaccardPairs]]; applicable when the vocabulary is
-    * small enough to pack (an n² candidate space bounded by doc count —
-    * use inside blocks/bands at scale). */
-  def jaccardPairsBitset(
+  /** EXACT all-pairs Jaccard similarity join: (id_a, id_b, inter, un,
+    * jaccard) for every pair with J >= threshold, id_a < id_b. The token
+    * index is materialized once and its [[vocabulary]] measured: a small
+    * one takes the bitmask pair join ([[bitsetPairs]]), a larger one
+    * the prefix leg ([[jaccardPairsPrefix]]), which orders tokens by
+    * the measured frequencies. */
+  def jaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 1, threshold: Double = 0.9): DataFrame = {
+    // the index feeds the measurement AND the mask build — materialize
+    // once instead of shingling per consumer
+    val idx = Materialize(tokenIndex(df, idCol, textCol, n), eager = true)
+    val vocab = vocabulary(idx)
+    if (vocab.bitset) {
+      val pairs = bitsetPairs(idx, vocab, threshold)
+      Materialize.release(vocab.freq)
+      pairs
+    } else {
+      Materialize.release(idx)
+      prefixPairs(shingleSets(df, idCol, textCol, n), vocab.freq, threshold)
+    }
+  }
+
+  /** Exact Jaccard for a candidate-pair set (id_a, id_b) over a token
+    * index: (id_a, id_b, inter, un, jaccard). The index's measured
+    * [[vocabulary]] picks the popcount re-rank over materialized masks
+    * or the posting-list re-rank. `index` is read by both the
+    * measurement and the re-rank: pass a materialized or persisted one. */
+  def candidateJaccard(cand: DataFrame, index: DataFrame): DataFrame = {
+    val vocab = vocabulary(index)
+    // masks feed both the id_a and id_b sides of the re-rank join —
+    // materialize once so the mask pipeline doesn't plan and run once
+    // per side
+    val masks = if (vocab.bitset)
+      Some(Materialize(tokenMasks(index, vocab), eager = true)) else None
+    Materialize.release(vocab.freq)
+    masks.fold(postingRerank(cand, index))(popcountRerank(cand, _))
+  }
+
+  /** Per-doc bitmasks over a measured [[Vocabulary]] of `index`: (id,
+    * n_sh, mask array<long>). Vocabulary indexed by sorted order
+    * (deterministic); masks are DENSE (every word slot present, zeros
+    * for empty words) so element i of any two masks refers to the same
+    * vocabulary slice. */
+  private[ext] def tokenMasks(index: DataFrame, vocab: Vocabulary)
+      : DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    // vocabulary ordinal: a row_number() window is ONE task over the
+    // vocabulary — not the corpus — which [[Vocabulary.bitset]] bounds,
+    // so the work is constant at any corpus scale
+    val bits = vocab.freq
+      .withColumn("bit", row_number().over(Window.orderBy("shingle")) - 1)
+      .select(col("shingle"), col("bit").cast("long").as("bit"))
+    // ONE keyed exchange: the word count is driver-known, so the dense
+    // mask builds as per-word conditional bit_or aggregates in a single
+    // hash aggregate keyed on the doc. Word w of a doc with no tokens
+    // in that slice bit_ors only zeros.
+    val aggs = (0 until vocab.maskWords).map { w =>
+      bit_or(when((col("bit") / 64).cast("int") === w,
+        expr("shiftleft(1L, cast(bit % 64 AS int))")).otherwise(0L))
+        .as(s"__w$w")
+    }
+    index.join(broadcast(bits), Seq("shingle"))
+      .groupBy("id", "n_sh").agg(aggs.head, aggs.tail: _*)
+      .select(col("id"), col("n_sh"),
+        array(aggs.indices.map(w => col(s"__w$w")): _*).as("mask"))
+  }
+
+  /** All-pairs leg over masks: bitmask block-nested join (an n²
+    * candidate space bounded by doc count — use inside blocks/bands at
+    * scale). `idx` is the materialized token index, `vocab` its
+    * measured [[vocabulary]]; the masks are stored before this returns. */
+  private[ext] def bitsetPairs(idx: DataFrame, vocab: Vocabulary,
+      threshold: Double): DataFrame = {
     // masks feed BOTH sides of the pair join: materialize once (the
     // vocab + mask aggregate pipeline otherwise plans and runs twice —
     // once streamed, once through the broadcast build), and spread the
@@ -583,30 +554,26 @@ object Dedup {
     // stream would run in ONE task regardless of cluster size (the
     // work here scales with PAIRS, not with the input bytes AQE sizes
     // partitions by).
-    // the token index feeds both mask-build stages (vocabulary count +
-    // mask aggregate) — materialize once, same rationale as
-    // minhashLshPairs
-    val idx = Materialize(tokenIndex(df, idCol, textCol, n), eager = true)
-    val (rawMasks, maskWords) = tokenMasksWithWidth(idx)
-    val (masks, nDocs) = Materialize.counted(rawMasks
-      .repartition(df.sparkSession.sparkContext.defaultParallelism))
+    val spark = idx.sparkSession
+    val (masks, nDocs) = Materialize.counted(tokenMasks(idx, vocab)
+      .repartition(spark.sparkContext.defaultParallelism))
     val a = masks.select(col("id").as("id_a"), col("n_sh").as("na"),
       col("mask").as("mask_a"))
     val b = masks.select(col("id").as("id_b"), col("n_sh").as("nb"),
       col("mask").as("mask_b"))
     val tNum = math.floor(threshold * 10000).toLong
     // size-gate the forced broadcast of the mask table: one row per doc,
-    // numWords longs each — fine for the blocked/small-n corpora this
+    // maskWords longs each — fine for the blocked/small-n corpora this
     // exact all-pairs operator is contracted for, fatal (driver/executor
     // OOM, 8 GB relation cap) if a large-n caller ever reaches it. The
     // count comes from the job that stored the masks and the width is
-    // driver-known from the mask build; past the bound the
-    // hint is dropped and the planner degrades to its own non-equi
-    // strategy (cartesian — slow but memory-safe) instead of OOMing.
-    val maxBcastBytes = scala.util.Try(df.sparkSession.conf
+    // driver-known from the vocabulary; past the bound the hint is
+    // dropped and the planner degrades to its own non-equi strategy
+    // (cartesian — slow but memory-safe) instead of OOMing.
+    val maxBcastBytes = scala.util.Try(spark.conf
       .get("spark.graft.bitsetBroadcast.maxBytes").toLong)
       .getOrElse(256L * 1024L * 1024L)
-    val estBytes = nDocs * (maskWords.toLong * 8L + 48L)
+    val estBytes = nDocs * (vocab.maskWords.toLong * 8L + 48L)
     val bSide = if (estBytes <= maxBcastBytes) broadcast(b) else b
     a.join(bSide,
         col("id_a") < col("id_b") &&
@@ -628,9 +595,9 @@ object Dedup {
       .hint("rebalance")
   }
 
-  /** Exact Jaccard for candidate pairs via bitmasks (popcount re-rank —
-    * replaces [[candidateJaccard]]'s token join when masks fit). */
-  def candidateJaccardBitset(cand: DataFrame, masks: DataFrame): DataFrame = {
+  /** Candidate re-rank over masks: intersection = Σ popcount(a&b). */
+  private[ext] def popcountRerank(cand: DataFrame, masks: DataFrame)
+      : DataFrame = {
     val a = masks.select(col("id").as("id_a"), col("n_sh").as("na"),
       col("mask").as("mask_a"))
     val b = masks.select(col("id").as("id_b"), col("n_sh").as("nb"),
@@ -643,119 +610,20 @@ object Dedup {
       .select("id_a", "id_b", "inter", "un", "jaccard")
   }
 
-  /** EXACT all-pairs Jaccard similarity join: returns (id_a, id_b,
-    * intersection, union, jaccard) for every pair with J >= threshold,
-    * id_a < id_b.
-    *
-    * Plan: explode the shingle index (doc, shingle) -> self-join on
-    * shingle -> count per pair = |A∩B| -> J from per-doc sizes. This is
-    * the inverted-index similarity join — shuffle is bounded by the
-    * posting-list sizes, never a cross join. (On zipfian corpora add
-    * prefix filtering; the fixture's ~40-token vocabulary makes every
-    * token a full posting list, which small doc counts absorb.)
-    */
-  def jaccardPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int = 1, threshold: Double = 0.9): DataFrame = {
-    val withSh = df.select(col(idCol).as("id"),
-      shingles(col(textCol), n).as("sh"))
-      .withColumn("n_sh", size(col("sh")).cast("long"))
-    val index = withSh.select(col("id"), col("n_sh"),
-      explode(col("sh")).as("shingle"))
-    val a = index.select(col("id").as("id_a"), col("n_sh").as("na"),
+  /** Candidate re-rank over postings (two codegen'd joins + hash agg):
+    * intersection = count of shingles shared by the pair. */
+  private[ext] def postingRerank(cand: DataFrame, index: DataFrame)
+      : DataFrame = {
+    val ia = index.select(col("id").as("id_a"), col("n_sh").as("na"),
       col("shingle"))
-    val b = index.select(col("id").as("id_b"), col("n_sh").as("nb"),
-      col("shingle").as("shingle_b"))
-    // size-compatibility pruning: J >= t implies min(na,nb)/max(na,nb)
-    // >= t (inter <= min, union >= max). Integer predicate with the
-    // threshold FLOORED to 4 decimals — flooring can only under-prune,
-    // never drop a qualifying pair.
-    val tNum = math.floor(threshold * 10000).toLong
-    a.join(b, col("shingle") === col("shingle_b") &&
-        col("id_a") < col("id_b") &&
-        col("na") * tNum <= col("nb") * 10000L &&
-        col("nb") * tNum <= col("na") * 10000L)
+    val ib = index.select(col("id").as("id_b"), col("n_sh").as("nb"),
+      col("shingle"))
+    cand.join(ia, Seq("id_a"))
+      .join(ib, Seq("id_b", "shingle"))
       .groupBy("id_a", "id_b", "na", "nb")
       .agg(count(lit(1)).as("inter"))
       .withColumn("un", col("na") + col("nb") - col("inter"))
       .withColumn("jaccard", col("inter").cast("double") / col("un"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "inter", "un", "jaccard")
-  }
-
-  /** EXACT skew-resistant variant of [[jaccardPairs]] for Zipf corpora.
-    *
-    * The plain posting-list self-join sends ALL |P|² pair-rows of a hot
-    * shingle (a stopword's posting list) to ONE reducer — the 100 TB
-    * skew killer AQE cannot split (the skew is in the join output, not
-    * the input partitions). Here posting lists are profiled first
-    * (one count per shingle); lists with more than `hotCap` docs are
-    * self-joined BLOCK-WISE instead: each doc lands in a chunk
-    * c = hash(id) mod `blocks`, the left side replicates a row to block
-    * keys (c, j) for j >= c, the right side to (i, c) for i <= c, and
-    * the join keys on (shingle, i, j) — every cross-chunk pair meets on
-    * exactly one block key, same-chunk pairs meet only on the diagonal
-    * (ordered by id there), so each pair is produced EXACTLY once and
-    * the |P|² workload spreads over blocks·(blocks+1)/2 reducer keys.
-    * Chunk assignment affects only placement, never the result, so the
-    * output is bit-identical to [[jaccardPairs]] (differential-tested).
-    * Cold shingles take the plain join; both paths feed one
-    * intersection count. */
-  def jaccardPairsSalted(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int = 1, threshold: Double = 0.9,
-      hotCap: Long = 65536, blocks: Int = 8): DataFrame = {
-    require(blocks >= 2, s"jaccardPairsSalted: blocks must be >= 2 (got " +
-      s"$blocks); with one block use jaccardPairs directly")
-    val index = tokenIndex(df, idCol, textCol, n).drop("h")
-    val freq = index.groupBy("shingle").agg(count(lit(1)).as("__df"))
-    val idx = index.join(freq, Seq("shingle"))
-    val tNum = math.floor(threshold * 10000).toLong
-    def sizeCompat(na: Column, nb: Column): Column =
-      na * tNum <= nb * 10000L && nb * tNum <= na * 10000L
-
-    // cold path: the plain posting-list join of jaccardPairs
-    val cold = idx.filter(col("__df") <= hotCap)
-    val coldMatches = cold
-      .select(col("id").as("id_a"), col("n_sh").as("na"), col("shingle"))
-      .join(cold.select(col("id").as("id_b"), col("n_sh").as("nb"),
-          col("shingle").as("__shb")),
-        col("shingle") === col("__shb") && col("id_a") < col("id_b") &&
-          sizeCompat(col("na"), col("nb")))
-      .select("id_a", "id_b", "na", "nb")
-
-    // hot path: block self-join (scaladoc above)
-    val hot = idx.filter(col("__df") > hotCap)
-      .withColumn("__c", pmod(xxhash64(col("id")), lit(blocks.toLong)))
-    val hl = hot
-      .select(col("shingle"), col("id").as("__idl"), col("n_sh").as("__nl"),
-        col("__c").as("__ki"))
-      .withColumn("__kj",
-        explode(sequence(col("__ki"), lit(blocks - 1L))))
-    val hr = hot
-      .select(col("shingle"), col("id").as("__idr"), col("n_sh").as("__nr"),
-        col("__c").as("__kj"))
-      .withColumn("__ki", explode(sequence(lit(0L), col("__kj"))))
-    val hotMatches = hl.join(hr, Seq("shingle", "__ki", "__kj"))
-      // same-chunk pairs exist only on the diagonal key, ordered by id
-      // there; cross-chunk pairs meet exactly once by construction
-      .filter((col("__ki") =!= col("__kj") || col("__idl") < col("__idr")) &&
-        col("__idl") =!= col("__idr") &&
-        sizeCompat(col("__nl"), col("__nr")))
-      .select(
-        least(col("__idl"), col("__idr")).as("id_a"),
-        greatest(col("__idl"), col("__idr")).as("id_b"),
-        when(col("__idl") < col("__idr"), col("__nl")).otherwise(col("__nr"))
-          .as("na"),
-        when(col("__idl") < col("__idr"), col("__nr")).otherwise(col("__nl"))
-          .as("nb"))
-
-    coldMatches.unionByName(hotMatches)
-      .groupBy("id_a", "id_b", "na", "nb")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("un", col("na") + col("nb") - col("inter"))
-      .withColumn("jaccard", col("inter").cast("double") / col("un"))
-      .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "inter", "un", "jaccard")
   }
 
@@ -764,8 +632,8 @@ object Dedup {
     * excerpt/quote detection, the capability a Jaccard join
     * structurally MISSES: its size-compatibility pruning (and the
     * metric itself) discards exactly the size-mismatched pairs where a
-    * short document sits inside a long one. Same inverted-index shape
-    * as [[jaccardPairs]], but the size filter is one-sided (the
+    * short document sits inside a long one. An inverted-index self-join
+    * on the shingle with a one-sided size filter (the
     * container must have at least threshold·|a| distinct tokens, since
     * inter <= min(|a|,|b|)) and both orientations of each pair are
     * evaluated. Returns (contained_id, container_id, inter, na,
@@ -788,10 +656,7 @@ object Dedup {
       n: Int = 1, threshold: Double = 0.95): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containmentPairs: threshold in (0, 1] ($threshold)")
-    def index(df: DataFrame) = df.select(col(idCol).as("id"),
-      shingles(col(textCol), n).as("sh"))
-      .withColumn("n_sh", size(col("sh")).cast("long"))
-      .select(col("id"), col("n_sh"), explode(col("sh")).as("shingle"))
+    def index(df: DataFrame) = explodeSets(shingleSets(df, idCol, textCol, n))
     val tNum = math.floor(threshold * 10000).toLong
     index(contained)
       .select(col("id").as("contained_id"), col("n_sh").as("na"),
@@ -822,9 +687,10 @@ object Dedup {
     * rate gate targets the sample size, and a deterministic
     * hash-ordered top-`maxSampleDocs` cap bounds it absolutely even
     * when the rate floor binds (a profiling step, not a corpus-scale
-    * operator: at 100 TB you still sample ~100 docs; the probe
-    * collects ~maxSampleDocs²/2 pair Jaccards at the cap). Pairs
-    * sharing no token count as J=0. */
+    * operator: at 100 TB you still sample ~100 docs). The sample's
+    * shingle sets are collected once and the ~maxSampleDocs²/2 pair
+    * Jaccards computed on the driver. Pairs sharing no token count as
+    * J=0. */
   def sampleJaccardStats(df: DataFrame, idCol: String, textCol: String,
       n: Int = 1, samplePpm: Long = 20000,
       maxSampleDocs: Long = 2000): JaccardStats = {
@@ -835,10 +701,13 @@ object Dedup {
         " at any SF")
     require(maxSampleDocs >= 2 && maxSampleDocs <= 5000,
       s"sampleJaccardStats: maxSampleDocs in [2,5000]" +
-        s" ($maxSampleDocs) — the probe collects ~maxSampleDocs^2/2" +
+        s" ($maxSampleDocs) — the probe computes ~maxSampleDocs^2/2" +
         " pair Jaccards on the driver")
     val h = TextAnalysis.tokenHash31(col(idCol).cast("string"))
-    val sample = df
+    // each shingle becomes a dense int, so a doc is a sorted int array
+    // and a pair's intersection is one merge
+    val dict = scala.collection.mutable.HashMap.empty[String, Int]
+    val sets = df
       .filter(h % 1000000L < samplePpm)
       // deterministic hash-ordered cap — the ABSOLUTE bound on the
       // quadratic probe (a rate floor alone lets the sample grow with
@@ -846,13 +715,22 @@ object Dedup {
       // identical under any partitioning and SQL-replayable
       .orderBy(h, col(idCol))
       .limit(maxSampleDocs.toInt)
-      .select(col(idCol), col(textCol))
-    val nDocs = sample.count()
+      .select(shingles(col(textCol), n))
+      .collect().map { r =>
+        if (r.isNullAt(0)) Array.emptyIntArray
+        else r.getSeq[String](0).map(dict.getOrElseUpdate(_, dict.size))
+          .toArray.sorted
+      }
+    val nDocs = sets.length.toLong
     require(nDocs >= 2, s"sampleJaccardStats: sample has $nDocs docs; " +
       "raise samplePpm")
-    val shared = jaccardPairs(sample, idCol, textCol, n, threshold = 1e-12)
-      .select(col("jaccard"))
-      .collect().map(_.getDouble(0)).sorted
+    val shared = (for {
+      i <- sets.indices.iterator
+      j <- (i + 1 until sets.length).iterator
+      inter = sortedIntersection(sets(i), sets(j))
+      if inter > 0
+    } yield inter.toDouble / (sets(i).length + sets(j).length - inter))
+      .toArray.sorted
     val nPairs = nDocs * (nDocs - 1) / 2
     val zeroes = nPairs - shared.length
     def quantile(q: Double): Double = {
@@ -869,9 +747,24 @@ object Dedup {
       maxJ = if (shared.nonEmpty) shared.last else 0.0)
   }
 
-  /** EXACT prefix-filtered variant of [[jaccardPairs]] (PPJoin-style
+  /** |a ∩ b| of two strictly ascending int arrays. */
+  private def sortedIntersection(a: Array[Int], b: Array[Int]): Int = {
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
+  }
+
+  /** EXACT prefix-filtered all-pairs Jaccard join (PPJoin-style
     * candidate generation — Xiao et al., "Efficient Similarity Joins
-    * for Near Duplicate Detection", WWW 2008).
+    * for Near Duplicate Detection", WWW 2008): the leg [[jaccardPairs]]
+    * takes above the bitset vocabulary, and public so a caller can
+    * name it directly. Same output as [[jaccardPairs]].
     *
     * Order every document's token set canonically by ascending global
     * document frequency (ties by token). For J >= t a pair must share
@@ -881,17 +774,17 @@ object Dedup {
     * common token therefore lies in BOTH prefixes, and joining prefix
     * against prefix finds every qualifying pair.
     *
-    * Why this is the 100 TB path: the posting-list self-join of
-    * [[jaccardPairs]] touches every shared token — a stopword shared by
+    * Why this is the 100 TB path: a plain posting-list self-join
+    * touches every shared token — a stopword shared by
     * 1% of a corpus alone contributes 10^14 pair-rows at 10^9 docs.
     * Rare-first canonical ordering puts exactly those hot tokens LAST,
     * outside every prefix: candidate generation only ever joins the
     * rarest ~(1-t) fraction of each document, so the Zipf head never
-    * reaches a reducer (structural skew immunity, stronger than the
-    * block-salting of [[jaccardPairsSalted]] which spreads the hot work
-    * instead of eliminating it). Verification is one candidate-keyed
+    * reaches a reducer (structural skew immunity: the hot work is
+    * eliminated, not spread). Verification is one candidate-keyed
     * `array_intersect` re-rank — exact, so the result is bit-identical
-    * to [[jaccardPairs]] (differential-tested, same oracle).
+    * to the bitset leg (differential-tested against a brute-force set
+    * Jaccard).
     *
     * ceil(t·n) uses the integer under-approximation
     * floor(t·10⁴)·n ceil-divided by 10⁴, which can only LENGTHEN the
@@ -899,13 +792,31 @@ object Dedup {
   def jaccardPairsPrefix(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 1, threshold: Double = 0.9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val docs = df.select(col(idCol).as("id"),
-      shingles(col(textCol), n).as("sh"))
+    val docs = shingleSets(df, idCol, textCol, n)
+    prefixPairs(docs, shingleFreq(explodeSets(docs)), threshold)
+  }
+
+  /** Each doc's distinct shingles: (id, sh, n_sh). */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
+    df.select(col(idCol).as("id"), shingles(col(textCol), n).as("sh"))
       .withColumn("n_sh", size(col("sh")).cast("long"))
-    val index = docs.select(col("id"), col("n_sh"),
-      explode(col("sh")).as("shingle"))
-    val freq = index.groupBy("shingle").agg(count(lit(1)).as("__tf"))
+
+  /** [[shingleSets]] exploded to one (id, n_sh, shingle) row per shingle. */
+  private def explodeSets(docs: DataFrame): DataFrame =
+    docs.select(col("id"), col("n_sh"), explode(col("sh")).as("shingle"))
+
+  /** Document frequency of every shingle of an exploded index:
+    * (shingle, __tf), one row per vocabulary word. */
+  private def shingleFreq(index: DataFrame): DataFrame =
+    index.groupBy("shingle").agg(count(lit(1)).as("__tf"))
+
+  /** The prefix leg over [[shingleSets]] `docs` and their
+    * [[shingleFreq]] `freq` (scaladoc of [[jaccardPairsPrefix]]). */
+  private def prefixPairs(docs: DataFrame, freq: DataFrame,
+      threshold: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val index = explodeSets(docs)
     val tNum = math.floor(threshold * 10000).toLong
     // canonical position of each token within its document: rarest
     // first — a per-doc window, keyed on id

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * cardinality of the intersection of the two bitsets.
   *
   * Companion to [[LongArrayDot]]: the set-intersection hot path of the
-  * bitset Jaccard join ([[graft.ext.Dedup.jaccardPairsBitset]]), executed
+  * bitset legs of exact Jaccard ([[graft.ext.Dedup.jaccardPairs]] and
+  * [[graft.ext.Dedup.candidateJaccard]] at small vocabularies), executed
   * per candidate PAIR — a tight codegen'd loop instead of a
   * posting-list join.
   */

@@ -70,7 +70,7 @@ object DedupQueries {
 
   /** Shared CTE chain: exact unigram-Jaccard pairs (J >= 0.9) over the
     * English documents — `jp(id_a, id_b, inter, un, jaccard)`. Mirrors
-    * [[Dedup.jaccardPairsBitset]]. */
+    * [[Dedup.jaccardPairs]]. */
   private val sqlJaccardEnCtes =
     """d AS (
       |  SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
@@ -131,10 +131,10 @@ object DedupQueries {
       // scale path: one hash per (doc, token), signatures + candidates +
       // re-rank all as codegen'd joins/aggregates (Dedup scaladoc),
       // parameterized by the corpus profile (defaults = the constants
-      // this oracle unrolls; bitset re-rank = the fixture's ~40-token
-      // vocab packs into one long/doc, same values as the token join)
+      // this oracle unrolls; the fixture's ~31-token vocabulary takes
+      // the bitset re-rank, one mask word per doc)
       Dedup.minhashLshPairs(Tables.documents(s, d), "doc_id", "text",
-          graft.ext.DedupProfile.default, bitsetRerank = true)
+          graft.ext.DedupProfile.default)
         .orderBy("id_a", "id_b")
     },
 
@@ -183,7 +183,7 @@ object DedupQueries {
       def isTrain(c: org.apache.spark.sql.Column) =
         TextAnalysis.tokenHash31(c.cast("string")) % 100L < 90L
       val cx = Dedup.minhashLshPairs(Tables.documents(s, d), "doc_id",
-          "text", graft.ext.DedupProfile.default, bitsetRerank = true)
+          "text", graft.ext.DedupProfile.default)
         .withColumn("ta", isTrain(col("id_a")))
         .withColumn("tb", isTrain(col("id_b")))
         .filter(col("ta") =!= col("tb"))
@@ -288,14 +288,15 @@ object DedupQueries {
       val docs = Tables.documents(s, d)
       // count-derived PPM sample rate (targets ~100 sampled docs at
       // ANY SF; the hash-ordered cap inside the probe is the absolute
-      // backstop once the rate floor binds)
-      val ppm = graft.ext.Similarity.derivedSamplePpm(docs.count())
+      // backstop once the rate floor binds). A plain RDD count is one
+      // job; Dataset.count's aggregate exchange is two under AQE.
+      val ppm = graft.ext.Similarity.derivedSamplePpm(
+        docs.select(lit(1)).rdd.count())
       val stats = Dedup.sampleJaccardStats(docs, "doc_id", "text",
         n = 1, samplePpm = ppm)
       val prof = graft.ext.DedupProfile.derive(k = 32, threshold = 0.95,
         backgroundJ = stats.p50J, minRecall = 0.65, maxBackground = 0.05)
-      Dedup.minhashLshPairs(docs, "doc_id", "text", prof,
-          bitsetRerank = true)
+      Dedup.minhashLshPairs(docs, "doc_id", "text", prof)
         .withColumn("bands", lit(prof.bands.toLong))
         .withColumn("rows_per_band", lit(prof.rowsPerBand.toLong))
         .orderBy("id_a", "id_b")
@@ -553,7 +554,7 @@ object DedupQueries {
       s"""WITH $sqlJaccardEnCtes
         |SELECT id_a, id_b, inter, un, jaccard
         |FROM jp ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
-      Dedup.jaccardPairsBitset(
+      Dedup.jaccardPairs(
           Tables.documents(s, d).filter(col("lang") === "en"),
           "doc_id", "text", n = 1, threshold = 0.9)
         .orderBy("id_a", "id_b")
@@ -561,14 +562,16 @@ object DedupQueries {
 
     // 6b. the same exact Jaccard join via PPJoin prefix filtering:
     // candidates only from each doc's rarest (1-t)-fraction of tokens
-    // under a global rare-first canonical order. Identical results to
-    // the plain join — SAME oracle shape, which is the semantics-
-    // preservation proof. Graded on a bounded slice: prefix filtering
-    // pays off in proportion to vocabulary size (real corpora: 10^6+
-    // tokens, prefixes hit the Zipf tail), and the fixture's ~31-token
-    // vocabulary is its structural worst case — EVERY token is hot, so
-    // prefixes cannot prune and candidate volume reverts to quadratic
-    // (SCALE.md §8c; the full-corpus differential lives in DedupSpec).
+    // under a global rare-first canonical order. Called by name: on
+    // this vocabulary jaccardPairs takes its bitset leg, so this query
+    // is the oracle check (same oracle shape) of the leg jaccardPairs
+    // takes above 4096 shingles. Graded on a bounded slice: prefix
+    // filtering pays off in proportion to vocabulary size (real
+    // corpora: 10^6+ tokens, prefixes hit the Zipf tail), and the
+    // fixture's ~31-token vocabulary is its structural worst case —
+    // EVERY token is hot, so prefixes cannot prune and candidate volume
+    // reverts to quadratic (SCALE.md §8c; the differentials on both
+    // sides of 4096 live in DedupSpec).
     QueryDef("dedup_jaccard_prefix",
       s"""WITH $sqlJaccardPrefixCtes
         |SELECT id_a, id_b, inter, un, jaccard
@@ -608,7 +611,7 @@ object DedupQueries {
         |FROM assign a JOIN sizes s ON s.cluster_rep = a.cluster_rep
         |ORDER BY a.doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).filter(col("lang") === "en")
-      val pairs = Dedup.jaccardPairsBitset(docs, "doc_id", "text",
+      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
         n = 1, threshold = 0.9)
       graft.ops.ConnectedComponents
         .assignClusters(docs, "doc_id", pairs, "id_a", "id_b")
@@ -646,7 +649,7 @@ object DedupQueries {
         |SELECT cluster_rep, doc_id, n_chars FROM w WHERE rn = 1
         |ORDER BY cluster_rep""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).filter(col("lang") === "en")
-      val pairs = Dedup.jaccardPairsBitset(docs, "doc_id", "text",
+      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
         n = 1, threshold = 0.9)
       val assign = graft.ops.ConnectedComponents
         .assignClusters(docs, "doc_id", pairs, "id_a", "id_b")
@@ -721,7 +724,7 @@ object DedupQueries {
         |SELECT id AS doc_id, label AS community FROM l2
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).filter(col("lang") === "en")
-      val pairs = Dedup.jaccardPairsBitset(docs, "doc_id", "text",
+      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
         n = 1, threshold = 0.9)
       graft.ops.LabelPropagation
         .run(docs.select(col("doc_id"), col("doc_id").as("community")),
@@ -808,7 +811,7 @@ object DedupQueries {
         |  UNION ALL SELECT z FROM tri)
         |GROUP BY node ORDER BY doc_id""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d).filter(col("lang") === "en")
-      val pairs = Dedup.jaccardPairsBitset(docs, "doc_id", "text",
+      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
         n = 1, threshold = 0.9)
       graft.ops.Triangles.perVertex(pairs, "id_a", "id_b")
         .withColumnRenamed("node", "doc_id")
@@ -842,7 +845,7 @@ object DedupQueries {
          |FROM g16 GROUP BY a ORDER BY doc_id""".stripMargin
     }) { (s, d) =>
       val docs = Tables.documents(s, d).filter(col("lang") === "en")
-      val pairs = Dedup.jaccardPairsBitset(docs, "doc_id", "text",
+      val pairs = Dedup.jaccardPairs(docs, "doc_id", "text",
         n = 1, threshold = 0.9)
       graft.ops.KCore.core(pairs, "id_a", "id_b", k = 3)
         .withColumnRenamed("id", "doc_id")
@@ -880,7 +883,7 @@ object DedupQueries {
         |ORDER BY anchor, positive, neg_rank""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
-      val pairs = Dedup.jaccardPairsBitset(
+      val pairs = Dedup.jaccardPairs(
           docs.filter(col("lang") === "en"), "doc_id", "text",
           n = 1, threshold = 0.9)
         .select(col("id_a").as("anchor"), col("id_b").as("positive"))

@@ -355,8 +355,9 @@ object SimilarityQueries {
       val emb = Tables.embeddings(s, d)
       // count-derived PPM sample rate (targets ~100 sampled vectors at
       // ANY SF; the hash-ordered cap inside the probe is the absolute
-      // backstop once the rate floor binds)
-      val ppm = Similarity.derivedSamplePpm(emb.count())
+      // backstop once the rate floor binds). A plain RDD count is one
+      // job; Dataset.count's aggregate exchange is two under AQE.
+      val ppm = Similarity.derivedSamplePpm(emb.select(lit(1)).rdd.count())
       val par = col("vec_id") % 2
       val planted = transform(sequence(lit(0), lit(63)),
         i => when((i + par) % 7 === 0, lit(-0.5d)).otherwise(lit(0.5d)))

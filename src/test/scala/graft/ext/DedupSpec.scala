@@ -1,10 +1,77 @@
 package graft.ext
 
 import graft.SparkSpec
+import graft.ops.Materialize
+import org.apache.spark.CountJobs
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The differential reference for every exact-Jaccard leg: set
+    * Jaccard of each id pair, brute force on the driver — (id_a, id_b,
+    * inter, un) for the pairs sharing a shingle with J >= threshold. */
+  private def bruteJaccard(df: DataFrame, n: Int, threshold: Double)
+      : Set[(Long, Long, Long, Long)] = {
+    val sets = df.select(col("doc_id"), Dedup.shingles(col("text"), n))
+      .as[(Long, Seq[String])].collect()
+      .map { case (id, sh) => (id, Option(sh).getOrElse(Nil).toSet) }
+      .sortBy(_._1)
+    (for {
+      i <- sets.indices
+      j <- i + 1 until sets.length
+      (ia, a) = sets(i)
+      (ib, b) = sets(j)
+      inter = a.intersect(b).size.toLong
+      un = a.size + b.size - inter
+      if inter > 0 && inter.toDouble / un >= threshold
+    } yield (ia, ib, inter, un)).toSet
+  }
+
+  private def pairKeys(df: DataFrame): Set[(Long, Long, Long, Long)] =
+    df.select("id_a", "id_b", "inter", "un")
+      .as[(Long, Long, Long, Long)].collect().toSet
+
+  /** Every id_a < id_b pair of the index's docs: the candidate set
+    * under which a re-rank leg is an all-pairs join. */
+  private def allPairs(idx: DataFrame): DataFrame = {
+    val ids = idx.select("id").distinct()
+    ids.select(col("id").as("id_a"))
+      .crossJoin(ids.select(col("id").as("id_b")))
+      .filter(col("id_a") < col("id_b"))
+  }
+
+  /** Each exact-Jaccard leg, called directly, and both entries equal
+    * [[bruteJaccard]] on `df`; returns the measured vocabulary. */
+  private def assertLegsMatchBruteForce(df: DataFrame, n: Int,
+      thresholds: Seq[Double]): Long = {
+    val idx = Materialize(Dedup.tokenIndex(df, "doc_id", "text", n),
+      eager = true)
+    val vocab = Dedup.vocabulary(idx)
+    val cand = allPairs(idx)
+    val masks = Dedup.tokenMasks(idx, vocab)
+    for (t <- thresholds) {
+      val want = bruteJaccard(df, n, t)
+      assert(want.nonEmpty, s"t=$t n=$n: the reference must have pairs")
+      val atT = col("jaccard") >= t
+      Seq(
+        "bitsetPairs" -> Dedup.bitsetPairs(idx, vocab, t),
+        "jaccardPairsPrefix" ->
+          Dedup.jaccardPairsPrefix(df, "doc_id", "text", n, t),
+        "popcountRerank" -> Dedup.popcountRerank(cand, masks).filter(atT),
+        "postingRerank" -> Dedup.postingRerank(cand, idx).filter(atT),
+        "jaccardPairs" -> Dedup.jaccardPairs(df, "doc_id", "text", n, t),
+        "candidateJaccard" -> Dedup.candidateJaccard(cand, idx).filter(atT)
+      ).foreach { case (leg, out) =>
+        val got = pairKeys(out)
+        assert(got == want, s"$leg at t=$t n=$n (vocabulary ${vocab.size}): " +
+          s"extra ${got -- want}, missing ${want -- got}")
+      }
+    }
+    Seq(idx, vocab.freq).foreach(Materialize.release)
+    vocab.size
+  }
 
   val docs = Seq(
     (0L, "the quick brown fox jumps over the lazy dog"),
@@ -75,25 +142,37 @@ class DedupSpec extends SparkSpec {
   }
 
   test("bitset Jaccard equals posting-list Jaccard (threshold 0.7, n=1)") {
-    val a = Dedup.jaccardPairs(docs, "doc_id", "text", 1, 0.7)
-      .select("id_a", "id_b", "inter", "un")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val b = Dedup.jaccardPairsBitset(docs, "doc_id", "text", 1, 0.7)
-      .select("id_a", "id_b", "inter", "un")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(a == b && a.nonEmpty)
+    val idx = Dedup.tokenIndex(docs, "doc_id", "text", 1)
+    val bitset = pairKeys(Dedup.bitsetPairs(idx, Dedup.vocabulary(idx), 0.7))
+    val postings = pairKeys(Dedup.postingRerank(allPairs(idx), idx)
+      .filter(col("jaccard") >= 0.7))
+    assert(bitset == postings && bitset.nonEmpty)
+    assert(bitset == bruteJaccard(docs, 1, 0.7))
   }
 
   test("bitset Jaccard equals posting-list on a fixture sample (multi-word masks)") {
     val docs100 = graft.Tables.documents(spark, sfDir)
       .filter(col("doc_id") < 100)
-    val a = Dedup.jaccardPairs(docs100, "doc_id", "text", 3, 0.5)
-      .select("id_a", "id_b", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    val b = Dedup.jaccardPairsBitset(docs100, "doc_id", "text", 3, 0.5)
-      .select("id_a", "id_b", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(a == b)   // 3-gram vocab > 64 => exercises multi-long masks
+    val idx = Dedup.tokenIndex(docs100, "doc_id", "text", 3)
+    val vocab = Dedup.vocabulary(idx)
+    assert(vocab.size > 64L,
+      s"3-gram vocabulary ${vocab.size} must span several mask words")
+    val bitset = pairKeys(Dedup.bitsetPairs(idx, vocab, 0.5))
+    val postings = pairKeys(Dedup.postingRerank(allPairs(idx), idx)
+      .filter(col("jaccard") >= 0.5))
+    assert(bitset == postings)
+    assert(bitset == bruteJaccard(docs100, 3, 0.5))
+  }
+
+  test("every exact-Jaccard leg equals a brute-force set Jaccard below " +
+    "4096 shingles (fixture documents)") {
+    val en = graft.Tables.documents(spark, sfDir)
+      .filter(col("lang") === "en" && col("doc_id") < 200)
+    val nVocab = assertLegsMatchBruteForce(en, 1, Seq(0.5, 0.9))
+    assert(nVocab <= 4096L, s"fixture vocabulary $nVocab")
+    assertLegsMatchBruteForce(en, 3, Seq(0.5))
+    // docs shorter than n: an empty vocabulary still plans, no pairs
+    assert(Dedup.jaccardPairs(docs, "doc_id", "text", 10, 0.5).isEmpty)
   }
 
   test("sorted-neighborhood: planted dups found; subset of the full join") {
@@ -139,27 +218,6 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     assert(got == Set(12L),
       s"reordered and exact dups of corpus docs must be dropped: $got")
-  }
-
-  test("salted jaccard join is bit-identical to the plain posting-list join") {
-    // fixture sample: real Zipf-ish shingle distribution (~40-word vocab
-    // => every posting list is "hot" relative to a small cap)
-    val sample = graft.Tables.documents(spark, sfDir)
-      .filter(col("lang") === "en").limit(80)
-    def key(r: (Long, Long, Long, Long, Double)) = (r._1, r._2, r._3, r._4)
-    val plain = Dedup.jaccardPairs(sample, "doc_id", "text", 1, 0.5)
-      .as[(Long, Long, Long, Long, Double)].collect().map(key).toSet
-    // every list hot (cap 0): pure block-join path
-    val allHot = Dedup.jaccardPairsSalted(sample, "doc_id", "text", 1, 0.5,
-        hotCap = 0L, blocks = 4)
-      .as[(Long, Long, Long, Long, Double)].collect().map(key).toSet
-    // mixed: some lists cold, some hot
-    val mixed = Dedup.jaccardPairsSalted(sample, "doc_id", "text", 1, 0.5,
-        hotCap = 40L, blocks = 3)
-      .as[(Long, Long, Long, Long, Double)].collect().map(key).toSet
-    assert(plain.nonEmpty, "differential base must have pairs")
-    assert(allHot == plain, s"all-hot diff: ${allHot.diff(plain)} / ${plain.diff(allHot)}")
-    assert(mixed == plain, s"mixed diff: ${mixed.diff(plain)} / ${plain.diff(mixed)}")
   }
 
   test("prefix-filtered jaccard join is bit-identical to the plain join") {
@@ -292,15 +350,20 @@ class DedupSpec extends SparkSpec {
   test("minhashLshPairs: bitset and posting-list re-ranks agree") {
     val p = DedupProfile(k = 32, bands = 2, rowsPerBand = 16,
       threshold = 0.5)
-    val bitset = Dedup.minhashLshPairs(docs, "doc_id", "text", p,
-        bitsetRerank = true)
+    val idx = Dedup.tokenIndex(docs, "doc_id", "text", 1)
+    val cand = Dedup.lshCandidatesFromIndex(idx, p)
+    def atT(df: DataFrame) = df.filter(col("jaccard") >= p.threshold)
       .select("id_a", "id_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
-    val postings = Dedup.minhashLshPairs(docs, "doc_id", "text", p,
-        bitsetRerank = false)
+    val bitset = atT(Dedup.popcountRerank(cand,
+      Dedup.tokenMasks(idx, Dedup.vocabulary(idx))))
+    val postings = atT(Dedup.postingRerank(cand, idx))
+    assert(bitset == postings && bitset.nonEmpty,
+      s"bitset $bitset != postings $postings")
+    val entry = Dedup.minhashLshPairs(docs, "doc_id", "text", p)
       .select("id_a", "id_b", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
-    assert(bitset == postings, s"bitset $bitset != postings $postings")
+    assert(entry == bitset)
   }
 
   test("substringDedup: cross-doc duplicated runs are removed from " +
@@ -566,47 +629,48 @@ class DedupSpec extends SparkSpec {
 
   test("tokenMasks bit assignment is identical across the small-vocab " +
     "window and the sorted-order contract (reorderings pack equal)") {
-    // <= 4096 distinct shingles: the numbering stays a one-task window
-    // over the require()-bounded vocabulary (constant work at any
-    // corpus scale — the vocabulary is what's sorted, not the corpus)
-    val masks = Dedup.tokenMasks(Dedup.tokenIndex(docs, "doc_id", "text", 1))
+    // <= 4096 distinct shingles: the numbering is a one-task window
+    // over the vocabulary (constant work at any corpus scale — the
+    // vocabulary is what's sorted, not the corpus)
+    val idx = Dedup.tokenIndex(docs, "doc_id", "text", 1)
+    val masks = Dedup.tokenMasks(idx, Dedup.vocabulary(idx))
     val m = masks.select(col("id"), col("mask"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(m(0L) == m(2L) && m(0L) != m(4L))
   }
 
-  test("wide-vocab (>4096 shingles) masks: vocabulary numbered without " +
-    "an unpartitioned window, fallback equals the posting-list join") {
-    // 5000-token vocabulary => the range-partitioned PrefixSum ordinal
-    // (no one-task sort funnel) and numWords > 64 => the collect_list +
-    // long_bitset_from_positions path (not the conditional-agg fast
-    // path). Deterministic coverage: 100 docs of 50 disjoint tokens
-    // each put every vocabulary word in play exactly once, so the only
-    // qualifying pair is the planted one.
+  test("above 4096 shingles every leg equals brute-force Jaccard and no " +
+    "masks are built") {
+    // 5000-token vocabulary: 100 docs of 50 disjoint tokens each put
+    // every vocabulary word in play exactly once, so the only
+    // qualifying pair is the planted one
     val wide = ((0 until 100).map { i =>
       (i.toLong, (0 until 50).map(j => s"v${i * 50 + j}").mkString(" "))
     } ++ Seq((1000L, "v1 v2 v3"), (1001L, "v3 v2 v1"))) // planted dup pair
       .toDF("doc_id", "text")
-    // force every distinct token into the vocabulary ordinal
-    val allToks = wide.select(explode(split(col("text"), " ")))
-      .distinct().count()
-    assert(allToks > 4096L, s"fixture must exceed the fast path ($allToks)")
-    val wideMasks = Dedup.tokenMasks(
-      Dedup.tokenIndex(wide, "doc_id", "text", 1))
-    graft.ops.PlanChecks.assertNoWideWindow(wideMasks)
-    val a = Dedup.jaccardPairs(wide, "doc_id", "text", 1, 0.5)
-      .select("id_a", "id_b", "inter", "un")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val b = Dedup.jaccardPairsBitset(wide, "doc_id", "text", 1, 0.5)
-      .select("id_a", "id_b", "inter", "un")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(a == b && b.contains((1000L, 1001L, 3L, 3L)))
+    val nVocab = assertLegsMatchBruteForce(wide, 1, Seq(0.5, 0.9))
+    assert(nVocab > 4096L, s"fixture must exceed the bitset cut ($nVocab)")
+    assert(pairKeys(Dedup.jaccardPairs(wide, "doc_id", "text", 1, 0.5)) ==
+      Set((1000L, 1001L, 3L, 3L)))
+    // the entry took the prefix leg: its plan verifies with
+    // array_intersect and carries no popcount over masks
+    val entryPlan = graft.ops.PlanChecks.executedPlan(
+      Dedup.jaccardPairs(wide, "doc_id", "text", 1, 0.5))
+    assert(entryPlan.contains("array_intersect") &&
+      !entryPlan.contains("long_array_popcnt_and"), entryPlan)
+    // the re-rank took postings: no popcount, no mask aggregate
+    val idx = Dedup.tokenIndex(wide, "doc_id", "text", 1).cache()
+    val rerankPlan = graft.ops.PlanChecks.executedPlan(
+      Dedup.candidateJaccard(allPairs(idx), idx))
+    assert(!rerankPlan.contains("long_array_popcnt_and") &&
+      !rerankPlan.contains("bit_or"), rerankPlan)
+    idx.unpersist()
   }
 
   test("bitset pair join beyond the broadcast bound falls back to an " +
     "unhinted join with identical results") {
     val key = "spark.graft.bitsetBroadcast.maxBytes"
-    val hinted = Dedup.jaccardPairsBitset(docs, "doc_id", "text", 1, 0.7)
+    val hinted = Dedup.jaccardPairs(docs, "doc_id", "text", 1, 0.7)
       .select("id_a", "id_b", "inter", "un")
       .as[(Long, Long, Long, Long)].collect().toSet
     spark.conf.set(key, "1")
@@ -614,10 +678,49 @@ class DedupSpec extends SparkSpec {
       // the planner may still pick its own broadcast for a tiny side —
       // the gate's contract is only that the FORCED hint is gone and
       // results are unchanged (memory safety is the planner's call now)
-      val unhinted = Dedup.jaccardPairsBitset(docs, "doc_id", "text", 1, 0.7)
+      val unhinted = Dedup.jaccardPairs(docs, "doc_id", "text", 1, 0.7)
         .select("id_a", "id_b", "inter", "un")
         .as[(Long, Long, Long, Long)].collect().toSet
       assert(unhinted == hinted && hinted.nonEmpty)
     } finally spark.conf.unset(key)
+  }
+
+  test("job floor: the entry's bitset leg on the fixture docs runs in " +
+    "11 jobs (13 before the vocabulary was measured in its own one job)") {
+    val (got, jobs) = CountJobs(
+      Dedup.jaccardPairs(docs, "doc_id", "text", 1, 0.7).collect())
+    assert(got.nonEmpty)
+    assert(jobs == 11, s"jaccardPairs ran $jobs jobs")
+  }
+
+  test("job floor: sampleJaccardStats runs in one job — one " +
+    "collect of the sample's shingle sets, no vocabulary count and no " +
+    "pair join") {
+    val en = graft.Tables.documents(spark, sfDir).filter(col("lang") === "en")
+    val (stats, jobs) = CountJobs(
+      Dedup.sampleJaccardStats(en, "doc_id", "text", samplePpm = 150000L))
+    assert(stats.nDocs >= 2)
+    assert(jobs == 1, s"sampleJaccardStats ran $jobs jobs")
+  }
+
+  test("Dedup has one exact-Jaccard surface: its public defs named " +
+    "*jaccard* are jaccardPairs, jaccardPairsPrefix, candidateJaccard " +
+    "and sampleJaccardStats") {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(sys.props("user.dir"), "src", "main", "scala",
+      "graft", "ext", "Dedup.scala")
+    val text = new String(Files.readAllBytes(src), "UTF-8")
+    val publicJaccard = """(?m)^\s*(.*?)\bdef\s+(\w+)""".r
+      .findAllMatchIn(text)
+      .filterNot(m => m.group(1).contains("private") ||
+        m.group(1).contains("protected"))
+      .map(_.group(2))
+      .filter(_.toLowerCase.contains("jaccard"))
+      .toSet
+    val want = Set("jaccardPairs", "jaccardPairsPrefix", "candidateJaccard",
+      "sampleJaccardStats")
+    assert(publicJaccard == want,
+      s"exact-Jaccard siblings in $src: extra ${publicJaccard -- want}, " +
+        s"missing ${want -- publicJaccard}")
   }
 }

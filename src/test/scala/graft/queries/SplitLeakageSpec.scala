@@ -15,14 +15,13 @@ class SplitLeakageSpec extends SparkSpec {
   test("split leakage: every reported doc is genuinely val-side, its " +
     "partner train-side, and the set matches the LSH pairs' " +
     "cross-split subset exactly") {
-    // the LSH bitset re-rank's vocabulary numbering is size-adaptive:
-    // a one-task window only while the vocabulary is <= 4096 rows
-    // (constant work at any corpus scale), the range-partitioned
-    // PrefixSum ordinal above that — so no corpus-scale sort ever
-    // funnels. The masks stage runs behind an eager localCheckpoint so
-    // the final plan can't witness it; the no-wide-window contract is
-    // asserted on the tokenMasks frame itself in DedupSpec
-    // ("wide-vocab (>4096 shingles) masks: vocabulary numbered ...")
+    // the LSH re-rank numbers a vocabulary with a one-task window only
+    // while it is <= 4096 shingles (constant work at any corpus scale)
+    // and re-ranks over postings above that — so no corpus-scale sort
+    // ever funnels. The masks stage runs behind an eager
+    // localCheckpoint so the final plan can't witness it; the
+    // mask-free wide side is asserted in DedupSpec ("above 4096
+    // shingles every leg equals brute-force Jaccard ...")
     val df = q("pipeline_split_leakage")
     val rows = df
       .select("val_doc", "n_train_partners", "best_train_doc",
