@@ -1,9 +1,10 @@
 package graft.ext
 
-import graft.ops.PrefixSum
-import org.apache.spark.sql.DataFrame
+import graft.ops.{Materialize, PrefixSum}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.CountedRelation
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed suffix-array construction and UNBOUNDED-length exact
@@ -19,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   * sort-based distributed form (Flick & Aluru, "Parallel distributed
   * memory construction of suffix and LCP arrays", SC'15), seeded at
   * width [[InitWidth]] directly from substring keys (the first
-  * log2(InitWidth) rounds replaced by one distinct-and-rank pass):
+  * log2(InitWidth) rounds replaced by one dense-rank scan):
   * O(log maxRepeat) rounds total, each a keyed self-join (rank at
   * `pos` paired with rank at `pos + width`) plus a dense re-rank via
   * the range-partitioned [[PrefixSum]] — every step is a keyed
@@ -33,68 +34,71 @@ import org.apache.spark.storage.StorageLevel
   * property the LCP step needs to never overestimate across
   * truncated tails.
   *
-  * LCP of SA-adjacent pairs descends the doubling levels (add
-  * `width` when ranks at the current offset match), then finishes
-  * the sub-InitWidth remainder by DIRECT character comparison
-  * against the width-InitWidth substring table — two joins plus a
-  * codegen'd common-prefix expression instead of log2(InitWidth)
-  * more rank-table levels.
+  * LCP of SA-adjacent pairs descends the doubling levels below the
+  * last (add `width` when ranks at the current offset match; the last
+  * level is all-distinct, so two different suffixes never match there),
+  * then finishes the sub-InitWidth remainder by DIRECT character
+  * comparison against the seed level's InitWidth-char substrings — two
+  * joins plus a codegen'd common-prefix expression instead of
+  * log2(InitWidth) more rank-table levels. When the seed is already
+  * all-distinct there is no descent at all.
   *
-  * Round state is materialized by rebuilding from the row RDD and
-  * persisting — see [[materialize]] for why neither plain persist
-  * nor localCheckpoint survives 10+ chained rounds.
+  * Each rank level is ONE ordered scan: [[PrefixSum.withDenseRankCounted]]
+  * ranks the level's keys in place (equal keys share a range partition)
+  * and returns the distinct-key count and the row count from its stats
+  * pass — no distinct, no ordinal over distinct keys, no join back and
+  * no count job. The scan's checkpoint ([[graft.ops.Materialize]],
+  * so `spark.checkpoint.dir` makes it reliable) holds the level; the
+  * level's frame is a fresh leaf over it that carries the measured row
+  * count ([[org.apache.spark.sql.graftx.CountedRelation]]), because a
+  * checkpoint leaf inherits its origin plan's join estimate and the
+  * chained self-joins would square it every round. The LCP descent
+  * (every third level) and the returned spans still [[materialize]].
   *
   * 100 TB shape: N = corpus characters + document count rows; each
-  * round is two keyed shuffles over N plus a distinct + ordinal over
-  * <= N pair keys; intermediates unpersist as soon as superseded.
-  * The final interval merge runs per document (window groups bounded
-  * by document length — the packing_layout bounded-window
-  * carve-out).
+  * round is one keyed self-join over N plus one range shuffle over N;
+  * intermediates are released as soon as superseded. The final
+  * interval merge runs per document behind one hash exchange on the
+  * document id (window groups bounded by document length — the
+  * packing_layout bounded-window carve-out).
   */
 object SuffixArray {
 
   /** Seed width: the doubling starts from substring keys of this many
-    * characters. 32 keeps the seed's distinct-key pass cheap (32
-    * chars/row) while replacing five doubling rounds and five LCP
-    * levels. */
+    * characters. 32 keeps the seed's scan cheap (32 chars/row) while
+    * replacing five doubling rounds and five LCP levels. */
   val InitWidth: Int = 32
 
-  private val debug = sys.env.contains("SPARK_GRAFT_SA_DEBUG")
-  private def dbg(msg: => String): Unit =
-    if (debug) System.err.println(s"[sa] $msg")
-  private def timed[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    dbg(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    r
-  }
-
-  /** Materialized round state. Two traps force this exact shape:
-    * (a) plain persist() leaves the LOGICAL plan nested — each round
-    * embeds two copies of the previous round's tree, so analysis cost
-    * doubles per round; (b) localCheckpoint() truncates the tree but
-    * REWRITES the new leaf's statistics from the origin plan, whose
-    * join-stats multiply — the sizeInBytes BigInt doubles its DIGIT
-    * COUNT per round and the driver ends up in 10^5-digit Toom-Cook
-    * multiplications inside stats estimation (measured 400+ s at
-    * sf0.01 vs ~20 s of real work). Rebuilding from the row RDD cuts
-    * BOTH: a fresh LogicalRDD leaf with constant default stats, then
-    * persist, and one row-RDD count over the cached plan builds every
-    * cache batch, so the cache carries the MEASURED byte size (and row
-    * count) from then on. That count is returned: it is the one job
-    * of the materialization (`Dataset.count` would plan an aggregate
-    * exchange on top — two more jobs under AQE). */
-  private def materialize(df: DataFrame): (DataFrame, Long) = {
+  /** Materialized LCP-descent state and the returned spans. Two traps
+    * force this exact shape:
+    * (a) plain persist() leaves the LOGICAL plan nested — each step
+    * embeds the previous step's tree, so analysis cost grows per step;
+    * (b) localCheckpoint() truncates the tree but REWRITES the new
+    * leaf's statistics from the origin plan, whose join-stats multiply
+    * — the sizeInBytes BigInt doubles its DIGIT COUNT per join link and
+    * the driver ends up in 10^5-digit Toom-Cook multiplications inside
+    * stats estimation (measured 400+ s at sf0.01 vs ~20 s of real
+    * work). Rebuilding from the row RDD cuts BOTH: a fresh LogicalRDD
+    * leaf with constant default stats, then persist, and one row-RDD
+    * count over the cached plan builds every cache batch, so the cache
+    * carries the MEASURED byte size from then on (`Dataset.count` would
+    * plan an aggregate exchange on top — two more jobs under AQE). */
+  private def materialize(df: DataFrame): DataFrame = {
     val cut = df.sparkSession.createDataFrame(df.rdd, df.schema)
     val p = cut.persist(StorageLevel.MEMORY_AND_DISK)
-    (p, p.queryExecution.toRdd.count())
+    p.queryExecution.toRdd.count()
+    p
   }
 
   /** One doubling level: `ranks` holds (id, pos, r) where `r`
     * separates suffixes by their first `width` extended symbols
     * (rank equality implies `width` REAL equal characters; a rank
-    * whose window crosses its document's end is unique). */
-  final case class Level(width: Long, ranks: DataFrame)
+    * whose window crosses its document's end is unique); the seed
+    * level's `ranks` also hold `sub`, the [[InitWidth]]-char substring
+    * at `pos` ("" for a sentinel). `ranks` is a counted leaf over
+    * `scan`, the level's [[PrefixSum]] frame, whose checkpoint holds
+    * the rows. */
+  final case class Level(width: Long, ranks: DataFrame, scan: DataFrame)
 
   /** Per-row array-allocation bound for [[positions]]: the position
     * explode goes through fixed-size slabs, so one very long document
@@ -106,7 +110,8 @@ object SuffixArray {
 
   /** (id, pos, sub) with `sub` = the [[InitWidth]]-char substring at
     * 0-based character position `pos`, plus per-document sentinel
-    * rows (pos = length, sub = null). Persisted — callers unpersist. */
+    * rows (pos = length, sub = null). Not materialized: the seed
+    * level's scan reads it once. */
   private def positions(df: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
     val chars = df
@@ -133,79 +138,75 @@ object SuffixArray {
       .select(col(idCol).cast("long").as("id"),
         coalesce(length(col(textCol)), lit(0)).cast("long").as("pos"),
         lit(null).cast("string").as("sub"))
-    materialize(chars.unionByName(sentinels))._1
+    chars.unionByName(sentinels)
   }
 
   /** Prefix-doubling rank tables over `pos` (a [[positions]] frame).
     * Returns every level in ascending width order; the LAST level's
     * ranks are all-distinct (the suffix array: `r` is the suffix's
     * 1-based position under a total order that keeps common-prefix
-    * runs contiguous). Levels are persisted — callers unpersist via
-    * [[unpersistLevels]]. */
+    * runs contiguous). Levels hold checkpoints — callers release them
+    * via [[unpersistLevels]]. */
   def suffixLevels(pos: DataFrame, maxRounds: Int = 40): Seq[Level] = {
     // width-InitWidth seed: key = the substring, plus an "ended"
     // discriminator (suffix shorter than InitWidth, or the sentinel)
     // carrying the doc id — ended keys are unique per suffix (a
     // document's suffixes are pairwise distinct strings), which is
     // what makes every window crossing a doc end rank uniquely
+    val ended = col("sub").isNull || length(col("sub")) < InitWidth
     val keyed = pos.select(col("id"), col("pos"),
       struct(
         coalesce(col("sub"), lit("")).as("c"),
-        when(col("sub").isNull ||
-          length(col("sub")) < InitWidth, 1).otherwise(0).as("t"),
-        when(col("sub").isNull ||
-          length(col("sub")) < InitWidth, col("id")).otherwise(0L)
-          .as("d"),
-        when(col("sub").isNull ||
-          length(col("sub")) < InitWidth, col("pos")).otherwise(0L)
-          .as("p"))
+        when(ended, 1).otherwise(0).as("t"),
+        when(ended, col("id")).otherwise(0L).as("d"),
+        when(ended, col("pos")).otherwise(0L).as("p"))
         .as("k"))
-    val (k0, k0Count) = PrefixSum.withOrdinalCounted(
-      keyed.select("k").distinct(), "r", Seq(col("k")))
-    val (seed, total) = timed("seed ranks")(materialize(
-      keyed.join(k0, Seq("k")).select(col("id"), col("pos"), col("r"))))
-    var cur = seed
+    val (seedScan, seedKeys, total) =
+      PrefixSum.withDenseRankCounted(keyed, "r", Seq(col("k")))
+    def level(width: Long, scan: DataFrame, cols: Column*): Level =
+      Level(width, CountedRelation.cut(scan.select(cols: _*), total), scan)
+    var cur = level(InitWidth.toLong, seedScan,
+      col("id"), col("pos"), col("r"), col("k.c").as("sub"))
     val levels = Seq.newBuilder[Level]
-    levels += Level(InitWidth.toLong, cur)
-    var width = InitWidth.toLong
-    var distinctRanks = k0Count
+    levels += cur
+    var distinctRanks = seedKeys
     var rounds = 0
     while (distinctRanks < total && rounds < maxRounds) {
       // pair rank(pos) with rank(pos + width); absent partner (tail
       // shorter than width) pads with -1, which sorts first
-      val shifted = cur.select(col("id"),
-        (col("pos") - width).as("pos"), col("r").as("r2"))
-      val paired = cur.join(shifted, Seq("id", "pos"), "left")
+      val ranks = cur.ranks.select(col("id"), col("pos"), col("r"))
+      val shifted = ranks.select(col("id"),
+        (col("pos") - cur.width).as("pos"), col("r").as("r2"))
+      val paired = ranks.join(shifted, Seq("id", "pos"), "left")
         .select(col("id"), col("pos"),
           struct(col("r"), coalesce(col("r2"), lit(-1L)).as("r2"))
             .as("pk"))
-      val (pk, pkCount) = PrefixSum.withOrdinalCounted(
-        paired.select("pk").distinct(), "r", Seq(col("pk")))
-      distinctRanks = pkCount
-      cur = timed(s"round w=$width")(materialize(
-        paired.join(pk, Seq("pk"))
-          .select(col("id"), col("pos"), col("r"))))._1
-      width *= 2
-      levels += Level(width, cur)
+      val (scan, keys, _) =
+        PrefixSum.withDenseRankCounted(paired, "r", Seq(col("pk")))
+      distinctRanks = keys
+      cur = level(cur.width * 2, scan, col("id"), col("pos"), col("r"))
+      levels += cur
       rounds += 1
     }
     require(distinctRanks == total,
       s"SuffixArray: ranks not unique after $rounds rounds " +
-        s"(width $width) — raise maxRounds")
+        s"(width ${cur.width}) — raise maxRounds")
     levels.result()
   }
 
-  /** Drop the cached round state. */
+  /** Release the levels' checkpoints. */
   def unpersistLevels(levels: Seq[Level]): Unit =
-    levels.foreach(_.ranks.unpersist())
+    levels.foreach(lvl => Materialize.release(lvl.scan))
 
-  /** LCP of each SA-adjacent suffix pair: descend the doubling
-    * levels (add `width` on rank match at the running offset), then
-    * close the sub-InitWidth remainder by direct character
-    * comparison against the substring table. Returns
-    * (id_a, pos_a, id_b, pos_b, lcp), persisted. */
-  private def adjacentLcp(pos: DataFrame, levels: Seq[Level])
-      : DataFrame = {
+  /** LCP of each SA-adjacent suffix pair: descend the doubling levels
+    * below the last (add `width` on rank match at the running offset),
+    * then close the sub-InitWidth remainder by direct character
+    * comparison against the seed level's substrings. Returns
+    * (id_a, pos_a, id_b, pos_b, lcp), not materialized, with the
+    * descent's last materialization, which it reads: callers unpersist
+    * that after the LCP frame's last action. */
+  private def adjacentLcp(levels: Seq[Level])
+      : (DataFrame, Option[DataFrame]) = {
     val sa = levels.last.ranks
     val next = sa.select((col("r") - 1L).as("r"),
       col("id").as("id_b"), col("pos").as("pos_b"))
@@ -216,7 +217,9 @@ object SuffixArray {
       .withColumn("l", lit(0L))
     var prev: Option[DataFrame] = None
     var sinceMaterialize = 0
-    levels.reverse.foreach { lvl =>
+    // the last level is all-distinct: at offset 0 two different
+    // suffixes never share its rank, so its step could add nothing
+    levels.init.reverse.foreach { lvl =>
       val ta = lvl.ranks.select(col("id").as("__ia"),
         col("pos").as("__pa"), col("r").as("__ra"))
       val tb = lvl.ranks.select(col("id").as("__ib"),
@@ -237,8 +240,8 @@ object SuffixArray {
           "__qa", "__qb")
       sinceMaterialize += 1
       if (sinceMaterialize == 3) { // bound the chained-join plan depth
-        p = timed(s"lcp materialize w=${lvl.width}")(materialize(p))._1
-        prev.foreach(_.unpersist())
+        p = materialize(p)
+        prev.foreach(_.unpersist(blocking = true))
         prev = Some(p)
         sinceMaterialize = 0
       }
@@ -248,26 +251,26 @@ object SuffixArray {
     // descent guarantees the true remainder is < InitWidth, so the
     // windowed comparison is exact. One linear codegen'd byte walk
     // per pair (CommonPrefixLength) — not the O(InitWidth²)
-    // filter(sequence(..)) HOF it replaced.
-    val suba = pos.select(col("id").as("__ia"), col("pos").as("__pa"),
+    // filter(sequence(..)) HOF it replaced. A sentinel's substring is
+    // "", which shares no prefix.
+    val seed = levels.head.ranks
+    val suba = seed.select(col("id").as("__ia"), col("pos").as("__pa"),
       col("sub").as("__sa"))
-    val subb = pos.select(col("id").as("__ib"), col("pos").as("__pb"),
+    val subb = seed.select(col("id").as("__ib"), col("pos").as("__pb"),
       col("sub").as("__sb"))
-    val out = materialize(p
+    val lcp = p
       .withColumn("__qa", col("pos_a") + col("l"))
       .withColumn("__qb", col("pos_b") + col("l"))
       .join(suba, col("id_a") === col("__ia") &&
         col("__qa") === col("__pa"), "left")
       .join(subb, col("id_b") === col("__ib") &&
         col("__qb") === col("__pb"), "left")
-      .withColumn("lcp", col("l") +
-        when(col("__sa").isNull || col("__sb").isNull, lit(0L))
-          .otherwise(graft.functions.CommonPrefixLength(
-            col("__sa"), col("__sb"))))
+      .withColumn("lcp", col("l") + coalesce(
+        graft.functions.CommonPrefixLength(col("__sa"), col("__sb")),
+        lit(0L)))
       .select(col("id_a"), col("pos_a"), col("id_b"), col("pos_b"),
-        col("lcp")))._1
-    prev.foreach(_.unpersist())
-    out
+        col("lcp"))
+    (lcp, prev)
   }
 
   /** Maximal duplicated spans of length >= `minLen`: every position's
@@ -283,13 +286,18 @@ object SuffixArray {
   def duplicatedSpans(df: DataFrame, idCol: String, textCol: String,
       minLen: Int): DataFrame = {
     require(minLen >= 1, s"SuffixArray.duplicatedSpans: minLen >= 1")
-    val pos = positions(df, idCol, textCol)
-    val levels = suffixLevels(pos)
-    val lcp = adjacentLcp(pos, levels)
+    val levels = suffixLevels(positions(df, idCol, textCol))
+    val (lcp, held) = adjacentLcp(levels)
+    // one read of the pairs, each bounding the repeat at both of its
+    // ends, hashed by document: the max, the window and the island
+    // merge below need no further exchange
     val replen = lcp
-      .select(col("id_a").as("id"), col("pos_a").as("pos"), col("lcp"))
-      .unionByName(lcp.select(col("id_b").as("id"),
-        col("pos_b").as("pos"), col("lcp")))
+      .select(explode(array(
+          struct(col("id_a").as("id"), col("pos_a").as("pos")),
+          struct(col("id_b").as("id"), col("pos_b").as("pos")))).as("e"),
+        col("lcp"))
+      .select(col("e.id").as("id"), col("e.pos").as("pos"), col("lcp"))
+      .repartition(col("id"))
       .groupBy("id", "pos")
       .agg(max(col("lcp")).as("replen"))
       .filter(col("replen") >= minLen.toLong)
@@ -310,10 +318,9 @@ object SuffixArray {
       .agg(min(col("pos")).as("span_start"),
         (max(col("end")) - min(col("pos"))).as("span_len"))
       .select(col("id"), col("span_start"), col("span_len"))
-    val out = materialize(spans)._1
-    lcp.unpersist()
+    val out = materialize(spans)
+    held.foreach(_.unpersist(blocking = true))
     unpersistLevels(levels)
-    pos.unpersist()
     out
   }
 

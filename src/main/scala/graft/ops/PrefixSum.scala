@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.functions.PartitionRunningSum
+import graft.functions.{PartitionRunStart, PartitionRunningSum}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, InterpretedOrdering, SortOrder}
@@ -36,8 +36,18 @@ import org.apache.spark.sql.functions._
   *
   * Jobs: two for the range exchange (sample, map stage), then ONE job
   * over the stored partitions fills the checkpoint and returns each
-  * partition's total — three before the first action on a shuffle-free
-  * input, ONE on a ranged input, with the grand total free.
+  * partition's total and row count — three before the first action on
+  * a shuffle-free input, ONE on a ranged input, with the grand total
+  * and the row count free.
+  *
+  * Dense rank ([[withDenseRankCounted]]): the running total of
+  * [[PartitionRunStart]], which is 1 where a partition starts or the key
+  * changes. Equal keys share a range partition, because the range
+  * partitioner places a row by its key alone, and a partition is
+  * sorted, so every key is one run and is counted once: the total is
+  * `dense_rank()` and the grand total the distinct-key count — a
+  * `distinct` + ordinal + join-back in one scan. The stats pass checks
+  * that no key straddles two partitions.
   *
   * Weights are cast to LONG: exact integer sums commute across
   * partitions and replay bit for bit in a SQL oracle. A null weight
@@ -59,8 +69,35 @@ object PrefixSum {
     *                 defaults to [[defaultParts]] */
   def runningTotal(df: DataFrame, totalCol: String, weight: Column,
       orderBy: Seq[Column], numParts: Int = 0): (DataFrame, Long) = {
-    val order = claimed(df, orderBy)
-    val sorted = (if (order.nonEmpty) df else {
+    val s = scan(df, totalCol, weight, orderBy, numParts, dense = false)
+    (s.frame, s.total)
+  }
+
+  /** Adds `rankCol` = the 1-based DENSE rank of the row's `orderBy` key,
+    * `dense_rank() OVER (ORDER BY orderBy)`, and returns the number of
+    * distinct keys and the number of rows with it, both from the stats
+    * pass: [[runningTotal]] with the weight
+    * [[PartitionRunStart]]`(struct(orderBy))` (see the object doc for
+    * why that is the dense rank). A key that straddles two partitions
+    * fails the call, naming both. `orderBy` holds ascending column
+    * expressions, no sort directions; rows with equal keys share a rank.
+    */
+  def withDenseRankCounted(df: DataFrame, rankCol: String,
+      orderBy: Seq[Column], numParts: Int = 0): (DataFrame, Long, Long) = {
+    val s = scan(df, rankCol, PartitionRunStart(struct(orderBy: _*)),
+      orderBy, numParts, dense = true)
+    (s.frame, s.total, s.rows)
+  }
+
+  private final case class Scan(frame: DataFrame, total: Long, rows: Long)
+
+  /** The ordered scan behind [[runningTotal]] and
+    * [[withDenseRankCounted]]; `dense` adds the check that no key
+    * straddles two partitions. */
+  private def scan(df: DataFrame, totalCol: String, weight: Column,
+      orderBy: Seq[Column], numParts: Int, dense: Boolean): Scan = {
+    val claim = claimed(df, orderBy)
+    val sorted = (if (claim.nonEmpty) df else {
       val n = if (numParts > 0) numParts else defaultParts(df.sparkSession)
       df.repartitionByRange(n, orderBy: _*)
     }).sortWithinPartitions(orderBy: _*)
@@ -74,17 +111,19 @@ object PrefixSum {
     val ranged = Materialize(sorted
       .withColumn("__local", PartitionRunningSum(weight))
       .withColumn("__pid", spark_partition_id()), eager = false)
-    // per-partition (pid, total) in ONE job over the stored partitions:
-    // a partition's total is its last local running total; an empty
-    // partition yields none (its pid is never read). On a claimed range
-    // partitioning the same pass keeps the partition's first and last
-    // rows for the driver to chain.
+    // per-partition (pid, total, rows) in ONE job over the stored
+    // partitions: a partition's total is its last local running total;
+    // an empty partition yields none (its pid is never read). On a
+    // claimed range partitioning, and for a dense rank, the same pass
+    // keeps the partition's first and last rows for the driver to chain.
     val pidAt = ranged.schema.fieldIndex("__pid")
     val localAt = ranged.schema.fieldIndex("__local")
+    val order = if (dense && claim.isEmpty) sortOrder(df, orderBy) else claim
     // the input's columns lead `ranged`'s rows, so the order binds there
     val check = if (order.isEmpty) None else Some(new InterpretedOrdering(
       order.map(BindReferences.bindReference(_, df.queryExecution.analyzed.output))))
-    val claim = order.map(_.sql).mkString(", ")
+    val keys = order.map(_.sql).mkString(", ")
+    val source = if (claim.nonEmpty) "the input claims" else "the range shuffle gives"
     val keep = check.nonEmpty
     val stats = ranged.queryExecution.toRdd.mapPartitions { rows =>
       if (!rows.hasNext) Iterator.empty
@@ -93,16 +132,20 @@ object PrefixSum {
         val pid = first.getInt(pidAt)
         val head = if (keep) first.copy() else null
         var row = first
-        while (rows.hasNext) row = rows.next()
-        Iterator.single(PartStats(pid, row.getLong(localAt), head,
+        var n = 1L
+        while (rows.hasNext) { row = rows.next(); n += 1 }
+        Iterator.single(PartStats(pid, row.getLong(localAt), n, head,
           if (keep) row.copy() else null))
       }
     }.collect().sortBy(_.pid)
     check.foreach { ord =>
       stats.zip(stats.drop(1)).foreach { case (a, b) =>
-        require(ord.compare(a.last, b.first) <= 0, "PrefixSum: the input " +
-          s"claims range partitioning on $claim but partition ${b.pid} " +
-          "breaks it")
+        val c = ord.compare(a.last, b.first)
+        require(c <= 0, s"PrefixSum: $source range partitioning on $keys " +
+          s"but partition ${b.pid} breaks it")
+        require(c < 0 || !dense, s"PrefixSum: a key of $keys straddles " +
+          s"partitions ${a.pid} and ${b.pid}, so a dense rank would count " +
+          "it twice")
       }
     }
     // exclusive prefix sum in pid order on the driver
@@ -113,13 +156,13 @@ object PrefixSum {
       .withColumn(totalCol, col("__local") +
         element_at(typedLit(offset.toSeq), col("__pid") + 1))
       .drop("__local", "__pid")
-    (out, acc)
+    Scan(out, acc, stats.map(_.rows).sum)
   }
 
-  /** One stored partition of the scan: its id, its total, and (on a
-    * claimed range partitioning only, else null) its first and last
-    * rows. */
-  private final case class PartStats(pid: Int, total: Long,
+  /** One stored partition of the scan: its id, its total, its row
+    * count, and (when the order is checked, else null) its first and
+    * last rows. */
+  private final case class PartStats(pid: Int, total: Long, rows: Long,
       first: InternalRow, last: InternalRow)
 
   /** The range partition count when the caller gives none:
@@ -147,8 +190,7 @@ object PrefixSum {
     }
     leaf(df.queryExecution.analyzed) match {
       case Some(r) if r.outputPartitioning.isInstanceOf[RangePartitioning] =>
-        val order = df.sortWithinPartitions(orderBy: _*)
-          .queryExecution.analyzed.asInstanceOf[Sort].order
+        val order = sortOrder(df, orderBy)
         // an attribute of the leaf that reaches `df` unchanged keeps its
         // id through every Project above it
         val holds = order.nonEmpty &&
@@ -159,6 +201,11 @@ object PrefixSum {
     }
   }
 
+  /** `orderBy` resolved against `df`, as `sortWithinPartitions` does. */
+  private def sortOrder(df: DataFrame, orderBy: Seq[Column]): Seq[SortOrder] =
+    df.sortWithinPartitions(orderBy: _*).queryExecution.analyzed
+      .asInstanceOf[Sort].order
+
   /** [[runningTotal]] without the grand total. */
   def withRunningTotal(df: DataFrame, totalCol: String, weight: Column,
       orderBy: Seq[Column], numParts: Int = 0): DataFrame =
@@ -166,8 +213,8 @@ object PrefixSum {
 
   /** Adds `ordCol` = 1-based ordinal of the row under `orderBy` — the
     * running total of weight 1 — and returns the row count with it, so
-    * callers (SuffixArray's termination test, the blueprints' match
-    * count) run no count job of their own. */
+    * callers (the blueprints' match count) run no count job of their
+    * own. */
   def withOrdinalCounted(df: DataFrame, ordCol: String,
       orderBy: Seq[Column], numParts: Int = 0): (DataFrame, Long) =
     runningTotal(df, ordCol, lit(1L), orderBy, numParts)

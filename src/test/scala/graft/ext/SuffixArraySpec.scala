@@ -1,6 +1,8 @@
 package graft.ext
 
 import graft.SparkSpec
+import org.apache.spark.CountJobs
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
@@ -54,12 +56,33 @@ class SuffixArraySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
 
-  test("round state carries the measured cache size and row count " +
-    "(the stats trap materialize avoids)") {
+  /** Periodic text: its repeats force doubling rounds. */
+  private val periodic = Seq((1L, "abc" * 30), (2L, "xyz" + "abc" * 20))
+
+  /** A 147-char self-overlapping repeat: three rounds (widths 64, 128,
+    * 256), so the LCP descent crosses three levels and materializes. */
+  private val longPeriodic = Seq((1L, "abc" * 50), (2L, "xyz"))
+
+  /** Planted duplicates shorter than InitWidth: no InitWidth-char
+    * window repeats, so the seed level is already all-distinct. */
+  private val planted = Seq[(Long, String)](
+    // cross-doc duplicate of length 21 embedded at different offsets
+    (1L, "xx the quick brown fox jumped zz"),
+    (2L, "aa bb the quick brown fox jumped cc"),
+    // within-doc repeat (overlapping periodic text)
+    (3L, "abcabcabcabcabcabcabc"),
+    // two docs sharing their entire tail (truncation-collision trap)
+    (4L, "unique-head shared ending run"),
+    (5L, "other-head X shared ending run"),
+    // no duplication at all
+    (6L, "entirely singular content 123456"),
+    (7L, ""))
+
+  test("round state is a counted leaf: constant-size stats that carry " +
+    "the row count (the stats trap a checkpoint leaf falls into)") {
     // a positions frame by hand: every InitWidth-char window plus one
-    // sentinel per document; the repeats force doubling rounds
-    val docs = Seq((1L, "abc" * 30), (2L, "xyz" + "abc" * 20))
-    val rows = docs.flatMap { case (id, t) =>
+    // sentinel per document
+    val rows = periodic.flatMap { case (id, t) =>
       (0 until t.length).map { p =>
         (id, p.toLong, Option(t.substring(p,
           math.min(t.length, p + SuffixArray.InitWidth))))
@@ -69,35 +92,47 @@ class SuffixArraySpec extends SparkSpec {
     try {
       assert(levels.size > 1, "fixture must run doubling rounds")
       levels.foreach { lvl =>
-        val qe = lvl.ranks.queryExecution
-        val cached = qe.withCachedData.collectFirst {
-          case r: InMemoryRelation => r.cacheBuilder
-        }.getOrElse(fail(s"width ${lvl.width}: round state not cached"))
-        assert(cached.isCachedColumnBuffersLoaded,
-          s"width ${lvl.width}: cache batches not built")
-        val stats = qe.optimizedPlan.stats
-        assert(stats.sizeInBytes ==
-          BigInt(cached.sizeInBytesStats.value.longValue))
+        val plan = lvl.ranks.queryExecution.optimizedPlan
+        assert(plan.isInstanceOf[LogicalRDD],
+          s"width ${lvl.width}: round state is not a fresh leaf\n$plan")
+        val stats = plan.stats
         assert(stats.sizeInBytes < BigInt(1L << 20), stats.sizeInBytes)
         assert(stats.rowCount.contains(BigInt(rows.size)))
       }
     } finally SuffixArray.unpersistLevels(levels)
   }
 
+  test("jobs per duplicatedSpans call: 7 for a seed-only build, 17 for " +
+    "a two-round build") {
+    // the seed scan is 3 of them (range sample, map stage, stats pass):
+    // a second seed pass or a count job per round shows here
+    val (seedOnly, seedJobs) = CountJobs(SuffixArray.duplicatedSpans(
+      planted.toDF("doc_id", "text"), "doc_id", "text", 6))
+    val (rounds, roundJobs) = CountJobs(SuffixArray.duplicatedSpans(
+      periodic.toDF("doc_id", "text"), "doc_id", "text", 6))
+    assert(seedJobs == 7 && roundJobs == 17, s"$seedJobs, $roundJobs")
+    Seq(seedOnly, rounds).foreach(_.unpersist(blocking = true))
+  }
+
+  test("duplicatedSpans leaves only the returned spans cached") {
+    val sc = spark.sparkContext
+    val before = sc.emptyRDD[Int].id
+    val spans = SuffixArray.duplicatedSpans(
+      longPeriodic.toDF("doc_id", "text"), "doc_id", "text", 6)
+    val after = sc.emptyRDD[Int].id
+    val kept = spans.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+    }.toSet
+    assert(kept.size == 1, "the spans are returned cached")
+    val left = sc.getRDDStorageInfo.map(_.id)
+      .filter(id => id > before && id < after).toSet
+    assert(left == kept, s"construction state still cached: ${left -- kept}")
+    spans.unpersist(blocking = true)
+  }
+
   test("planted duplicates: exact maximal extents, cross-doc and " +
     "within-doc, against brute force") {
-    val docs = Seq[(Long, String)](
-      // cross-doc duplicate of length 21 embedded at different offsets
-      (1L, "xx the quick brown fox jumped zz"),
-      (2L, "aa bb the quick brown fox jumped cc"),
-      // within-doc repeat (overlapping periodic text)
-      (3L, "abcabcabcabcabcabcabc"),
-      // two docs sharing their entire tail (truncation-collision trap)
-      (4L, "unique-head shared ending run"),
-      (5L, "other-head X shared ending run"),
-      // no duplication at all
-      (6L, "entirely singular content 123456"),
-      (7L, ""))
+    val docs = planted
     for (minLen <- Seq(6, 10, 15)) {
       assert(run(docs, minLen) == bruteSpans(docs, minLen),
         s"minLen=$minLen")
@@ -109,7 +144,7 @@ class SuffixArraySpec extends SparkSpec {
       (1L, "aaaaaaaaaaaaaaaa"),  // 16 a's
       (2L, "aaaaaaaa"),          // 8 a's — full doc duplicated
       (3L, "ababababab"),
-      (4L, "babababa"))
+      (4L, "babababa")) ++ longPeriodic.map { case (id, t) => (id + 4L, t) }
     for (minLen <- Seq(3, 5, 8))
       assert(run(docs, minLen) == bruteSpans(docs, minLen),
         s"minLen=$minLen")

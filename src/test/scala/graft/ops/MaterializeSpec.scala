@@ -3,6 +3,7 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.{CountJobs, WithCheckpointDir}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -16,14 +17,19 @@ class MaterializeSpec extends SparkSpec {
     df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
 
   test("release frees the blocks that Dataset.unpersist leaves resident") {
-    val baseline = cachedRdds
     val m = Materialize(spark.range(0, 200000).toDF("id"), eager = true)
-    assert(cachedRdds != baseline, "eager local checkpoint stores blocks")
+    val id = checkpointRdd(m).id
+    assert(cachedRdds.contains(id), "eager local checkpoint stores blocks")
     m.unpersist(blocking = true)
-    assert(cachedRdds.contains(checkpointRdd(m).id),
+    assert(cachedRdds.contains(id),
       "Dataset.unpersist does not reach the checkpoint's RDD")
     Materialize.release(m)
-    assert(cachedRdds == baseline)
+    assert(!cachedRdds.contains(id))
+    // a projection of a checkpoint releases the checkpoint under it
+    val p = Materialize(spark.range(0, 1000).toDF("id"), eager = true)
+    val pid = checkpointRdd(p).id
+    Materialize.release(p.select((col("id") + 1).as("next")))
+    assert(!cachedRdds.contains(pid))
     intercept[IllegalArgumentException](
       Materialize.release(spark.range(3).toDF("id")))
   }
@@ -51,7 +57,7 @@ class MaterializeSpec extends SparkSpec {
     // a shuffle under AQE: its map stage is a job of its own, so the
     // input is cut first and the checkpoint's own job is what counts
     val src = Materialize(spark.range(0, 5000, 1, 6).toDF("id")
-      .groupBy((org.apache.spark.sql.functions.col("id") % 997).as("k"))
+      .groupBy((col("id") % 997).as("k"))
       .count(), eager = true)
     val ((local, n), jobs) = CountJobs(Materialize.counted(src))
     assert(n == 997L && jobs == 1, s"count $n in $jobs jobs")

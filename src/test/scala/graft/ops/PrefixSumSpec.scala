@@ -156,6 +156,54 @@ class PrefixSumSpec extends SparkSpec {
       keys.zipWithIndex.map { case (k, i) => k -> (i + 1L) }.toMap)
   }
 
+  /** 600 rows over few distinct keys: `k` = (s, n), a string field with
+    * nulls and an int field with nulls, in `parts` input partitions. */
+  private def dupKeys(parts: Int) =
+    spark.range(0, 600, 1, parts).toDF("id")
+      .withColumn("k", struct(
+        when(col("id") % 9 =!= 4, concat(lit("s"), (col("id") % 6).cast("string")))
+          .as("s"),
+        when(col("id") % 5 =!= 0, (col("id") % 4).cast("int")).as("n")))
+
+  test("dense rank equals the dense_rank() window, with the distinct and " +
+    "row counts, over 1, 3 and 7 input partitions and 1 or 5 range " +
+    "partitions") {
+    val want = dupKeys(1)
+      .withColumn("r", dense_rank().over(Window.orderBy(col("k"))).cast("long"))
+      .select("id", "r").as[(Long, Long)].collect().toMap
+    val keys = want.values.toSet.size.toLong
+    assert(keys == dupKeys(1).select("k").distinct().count() && keys > 10)
+    for (parts <- Seq(1, 3, 7); numParts <- Seq(1, 5)) {
+      val (out, distinct, rows) = PrefixSum.withDenseRankCounted(
+        dupKeys(parts), "r", Seq(col("k")), numParts)
+      assert(distinct == keys && rows == 600L, s"$parts/$numParts")
+      assert(out.select("id", "r").as[(Long, Long)].collect().toMap == want,
+        s"$parts input partitions, $numParts range partitions")
+      Materialize.release(out)
+    }
+  }
+
+  test("dense rank over a shuffle-free input: three jobs, as " +
+    "withRunningTotal") {
+    val ((out, _, _), jobs) = CountJobs(PrefixSum.withDenseRankCounted(
+      dupKeys(5), "r", Seq(col("k")), numParts = 6))
+    assert(jobs == 3, s"$jobs jobs")
+    Materialize.release(out)
+  }
+
+  test("dense rank refuses a ranged input whose key straddles two " +
+    "partitions") {
+    // a false claim that puts key "b" at the end of partition 0 and the
+    // start of partition 1: ordered, but one key in two partitions
+    val df = RangedRelation.claim(spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq("a", "b", "b", "c").map(Row(_)), 2),
+        StructType(Seq(StructField("k", StringType)))), "k")
+    val err = intercept[IllegalArgumentException](
+      PrefixSum.withDenseRankCounted(df, "r", Seq(col("k"))))
+    assert(err.getMessage.contains("straddles partitions 0 and 1"),
+      err.getMessage)
+  }
+
   test("reliable checkpoint path: same running totals, files written") {
     val dir = specTempDir("prefix-ckpt").toString
     try {
