@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.ops.{Materialize, PrefixSum}
+import graft.ops.PrefixSum
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -196,7 +196,7 @@ object SuffixArray {
 
   /** Release the levels' checkpoints. */
   def unpersistLevels(levels: Seq[Level]): Unit =
-    levels.foreach(lvl => Materialize.release(lvl.scan))
+    levels.foreach(lvl => PrefixSum.release(lvl.scan))
 
   /** LCP of each SA-adjacent suffix pair: descend the doubling levels
     * below the last (add `width` on rank match at the running offset),

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
 
@@ -51,23 +51,19 @@ object Materialize {
 
   private val CountMetric = "__graft_materialize_count"
 
-  /** Frees the blocks under a frame returned by [[apply]], or under a
-    * projection or filter of one (a [[PrefixSum]] output is one). Call
-    * it after the frame's LAST action: a released local checkpoint
-    * cannot be recomputed. `Dataset.unpersist` does not do this — it
-    * only drops cache-manager entries, and a checkpoint's blocks belong
-    * to the RDD under its `LogicalRDD` leaf, which neither `unpersist`
-    * nor `clearCache()` reaches. */
-  def release(df: DataFrame): Unit = {
-    def leaf(p: LogicalPlan): LogicalPlan = p match {
-      case Project(_, child) => leaf(child)
-      case Filter(_, child) => leaf(child)
-      case other => other
-    }
-    leaf(df.queryExecution.analyzed) match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = true); ()
-      case other => throw new IllegalArgumentException(
-        s"Materialize.release: not a checkpointed frame (${other.nodeName})")
-    }
+  /** Frees the blocks under a frame returned by [[apply]]. Call it after
+    * the frame's LAST action: a released local checkpoint cannot be
+    * recomputed. `Dataset.unpersist` does not do this — it only drops
+    * cache-manager entries, and a checkpoint's blocks belong to the RDD
+    * under its `LogicalRDD` leaf, which neither `unpersist` nor
+    * `clearCache()` reaches. */
+  def release(df: DataFrame): Unit = releaseLeaf(df.queryExecution.logical)
+
+  /** [[release]] on the checkpoint's leaf plan itself; [[PrefixSum]]
+    * reaches its own checkpoint under its output's projections. */
+  private[ops] def releaseLeaf(plan: LogicalPlan): Unit = plan match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = true); ()
+    case other => throw new IllegalArgumentException(
+      s"Materialize.release: not a checkpointed frame (${other.nodeName})")
   }
 }

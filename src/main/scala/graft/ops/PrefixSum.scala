@@ -83,10 +83,23 @@ object PrefixSum {
     * expressions, no sort directions; rows with equal keys share a rank.
     */
   def withDenseRankCounted(df: DataFrame, rankCol: String,
-      orderBy: Seq[Column], numParts: Int = 0): (DataFrame, Long, Long) = {
+      orderBy: Seq[Column]): (DataFrame, Long, Long) = {
     val s = scan(df, rankCol, PartitionRunStart(struct(orderBy: _*)),
-      orderBy, numParts, dense = true)
+      orderBy, 0, dense = true)
     (s.frame, s.total, s.rows)
+  }
+
+  /** Frees the checkpoint under a frame returned by [[runningTotal]] or
+    * [[withDenseRankCounted]], or under a projection of one: the scan
+    * keeps its checkpoint internal, so [[Materialize.release]], which
+    * takes the checkpoint itself, cannot reach it. Call it after the
+    * frame's LAST action. */
+  def release(frame: DataFrame): Unit = {
+    def leaf(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => leaf(child)
+      case other => other
+    }
+    Materialize.releaseLeaf(leaf(frame.queryExecution.analyzed))
   }
 
   private final case class Scan(frame: DataFrame, total: Long, rows: Long)

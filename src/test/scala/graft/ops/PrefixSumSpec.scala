@@ -3,6 +3,8 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.{CountJobs, WithCheckpointDir}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.RangedRelation
@@ -165,6 +167,14 @@ class PrefixSumSpec extends SparkSpec {
           .as("s"),
         when(col("id") % 5 =!= 0, (col("id") % 4).cast("int")).as("n")))
 
+  /** `body` with `n` range partitions: the scan's [[PrefixSum.defaultParts]]
+    * reads spark.sql.shuffle.partitions. */
+  private def withShuffleParts[T](n: Int)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("dense rank equals the dense_rank() window, with the distinct and " +
     "row counts, over 1, 3 and 7 input partitions and 1 or 5 range " +
     "partitions") {
@@ -174,21 +184,31 @@ class PrefixSumSpec extends SparkSpec {
     val keys = want.values.toSet.size.toLong
     assert(keys == dupKeys(1).select("k").distinct().count() && keys > 10)
     for (parts <- Seq(1, 3, 7); numParts <- Seq(1, 5)) {
-      val (out, distinct, rows) = PrefixSum.withDenseRankCounted(
-        dupKeys(parts), "r", Seq(col("k")), numParts)
+      val (out, distinct, rows) = withShuffleParts(numParts)(
+        PrefixSum.withDenseRankCounted(dupKeys(parts), "r", Seq(col("k"))))
       assert(distinct == keys && rows == 600L, s"$parts/$numParts")
       assert(out.select("id", "r").as[(Long, Long)].collect().toMap == want,
         s"$parts input partitions, $numParts range partitions")
-      Materialize.release(out)
+      PrefixSum.release(out)
     }
   }
 
   test("dense rank over a shuffle-free input: three jobs, as " +
-    "withRunningTotal") {
-    val ((out, _, _), jobs) = CountJobs(PrefixSum.withDenseRankCounted(
-      dupKeys(5), "r", Seq(col("k")), numParts = 6))
+    "withRunningTotal; release frees the scan's checkpoint") {
+    val ((out, _, _), jobs) = withShuffleParts(6)(CountJobs(
+      PrefixSum.withDenseRankCounted(dupKeys(5), "r", Seq(col("k")))))
     assert(jobs == 3, s"$jobs jobs")
-    Materialize.release(out)
+    assert(out.rdd.getNumPartitions == 6)
+    def leaf(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => leaf(child)
+      case other => other
+    }
+    val id = leaf(out.queryExecution.analyzed).asInstanceOf[LogicalRDD].rdd.id
+    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    assert(stored.contains(id), "the stats pass fills the checkpoint")
+    intercept[IllegalArgumentException](Materialize.release(out))
+    PrefixSum.release(out)
+    assert(!stored.contains(id))
   }
 
   test("dense rank refuses a ranged input whose key straddles two " +
