@@ -1,11 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.graftx.CountJobs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
-
-import scala.collection.mutable
 
 /** Dev-only profiling CLI, on the same [[GraftSession]] that `Bench`
   * times:
@@ -96,47 +93,6 @@ object Dev {
       ts.size == reps
     }.forall(identity)
 
-  /** Counters of the jobs that start while `recording` is on. Events
-    * arrive asynchronously on the listener bus, so callers let it drain
-    * before flipping `recording` or reading the counters. */
-  private final class JobListener extends SparkListener {
-    var recording = false
-    var jobs, stages, tasks, shuffleRead, shuffleWrite = 0L
-    val jobLines = mutable.ArrayBuffer[String]()
-    private val open = mutable.Map[Int, (Long, Int, String)]()
-
-    def start(): Unit = synchronized {
-      jobs = 0; stages = 0; tasks = 0; shuffleRead = 0; shuffleWrite = 0
-      jobLines.clear(); open.clear(); recording = true
-    }
-    def stop(): Unit = synchronized { recording = false }
-
-    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
-      if (recording) {
-        jobs += 1
-        val site = j.stageInfos.map(_.name.takeWhile(_ != '\n'))
-          .mkString(" | ").take(120)
-        open(j.jobId) = (j.time, j.stageIds.size, site)
-      }
-    }
-    override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
-      open.remove(j.jobId).foreach { case (t0, st, site) =>
-        jobLines += f"job=${j.jobId}%5d ${j.time - t0}%7d ms st=$st%3d  $site"
-      }
-    }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      synchronized {
-        if (recording) { stages += 1; tasks += s.stageInfo.numTasks }
-      }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
-      val m = t.taskMetrics
-      if (recording && m != null) {
-        shuffleRead += m.shuffleReadMetrics.totalBytesRead
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-      }
-    }
-  }
-
   /** One cold and one recorded warm run per query: prints the warm run's
     * jobs (wall ms, stage count, call site) and its totals, then — when
     * more than one query ran — the totals sorted by wall time, stages
@@ -150,27 +106,17 @@ object Dev {
         f"$name%-34s $sec%6.2f s  j=$jobs%-3d st=$stages%-4d tk=$tasks%-5d " +
           f"shR=$readKiB%7d KiB shW=$writeKiB%7d KiB"
     }
-    val listener = new JobListener
-    spark.sparkContext.addSparkListener(listener)
-    val rows = try names.flatMap { n =>
+    val rows = names.flatMap { n =>
       timed(spark, dir, n)
-      // a dev tool may settle the bus by sleeping: its drain hook is
-      // private[spark]
-      Thread.sleep(400)
-      listener.start()
-      val sec = timed(spark, dir, n)
-      Thread.sleep(400)
-      listener.stop()
+      val (sec, c) = CountJobs.census(timed(spark, dir, n))
       sec.map { s =>
-        listener.synchronized {
-          listener.jobLines.foreach(l => println(s"[jobs] $n $l"))
-          val r = Row(n, s, listener.jobs, listener.stages, listener.tasks,
-            listener.shuffleRead / 1024, listener.shuffleWrite / 1024)
-          println(s"[jobs] TOTAL $r")
-          r
-        }
+        c.jobLines.foreach(l => println(s"[jobs] $n $l"))
+        val r = Row(n, s, c.jobs, c.stages, c.tasks,
+          c.shuffleReadBytes / 1024, c.shuffleWriteBytes / 1024)
+        println(s"[jobs] TOTAL $r")
+        r
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     if (rows.size > 1) {
       def table(title: String, sorted: Seq[Row]): Unit = {
         println(s"\n==== by $title ====")

@@ -132,22 +132,6 @@ object Decontamination {
       .withColumn("flagged", col("bloom_hits") > 0L)
   }
 
-  /** The GATE form of [[bloomFlags]]: keep only documents with ZERO
-    * bloom hits, all columns preserved, as a single map-only FILTER —
-    * no join back, no shuffle, streaming-legal (the shape a crawl
-    * ingest composes directly after extraction). Because the probe
-    * has no false negatives, every document with real benchmark
-    * overlap is guaranteed dropped; the price is the (fill)^k
-    * false-positive over-drop. */
-  def bloomClean(corpus: DataFrame, textCol: String,
-      bits: Array[Long], mBits: Int, k: Int, n: Int,
-      salt: String = ""): DataFrame = {
-    val isHit = bloomIsHit(bits, mBits, k)
-    corpus.filter(
-      size(filter(shingleHashes(Dedup.shingles(col(textCol), n), salt),
-        isHit)) === 0)
-  }
-
   /** Per-document n-gram overlap against `bench`: (id, n_sh, n_hits,
     * contamination = n_hits / n_sh) for corpus docs with >= 1 hit.
     * Shingles are DISTINCT ordered word n-grams ([[Dedup.shingles]]). */

@@ -228,9 +228,6 @@ object Dedup {
     when(n === 0, 0L).otherwise(sig)
   }
 
-  /** Hamming distance between two simhash values (bit_count of xor). */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   // -------- scale-path signature computation (explode + hash agg) --------
   //
   // The per-row array forms above ([[minhashes]], [[simhash]]) are
@@ -632,18 +629,13 @@ object Dedup {
     * excerpt/quote detection, the capability a Jaccard join
     * structurally MISSES: its size-compatibility pruning (and the
     * metric itself) discards exactly the size-mismatched pairs where a
-    * short document sits inside a long one. An inverted-index self-join
-    * on the shingle with a one-sided size filter (the
-    * container must have at least threshold·|a| distinct tokens, since
-    * inter <= min(|a|,|b|)) and both orientations of each pair are
-    * evaluated. Returns (contained_id, container_id, inter, na,
-    * containment). */
-  def containmentPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int = 1, threshold: Double = 0.95): DataFrame =
-    containmentPairsAcross(df, df, idCol, textCol, n, threshold)
-
-  /** Two-sided [[containmentPairs]]: excerpts drawn from `contained`,
+    * short document sits inside a long one. An inverted-index join on
+    * the shingle with a one-sided size filter (the container must have
+    * at least threshold·|a| distinct tokens, since inter <=
+    * min(|a|,|b|)). Returns (contained_id, container_id, inter, na,
+    * containment).
+    *
+    * Excerpts are drawn from `contained`,
     * containers drawn from `containers` (the corpus). Splitting the
     * sides is both the honest-domain shape (quote/contamination audits
     * ask "is THIS set quoted in the corpus", not all-vs-all) and the
@@ -1062,8 +1054,8 @@ object Dedup {
     spanDedupImpl(df, idCol, textCol, None, spanSents)
 
   /** [[spanDedup]] against PRE-EXISTING history — the incremental form
-    * a streaming ingest composes (see
-    * `CorpusStream.spanDedupBatches`): any span whose `(h1, h2)` key
+    * a freeze batch composes ([[graft.streaming.CorpusStream.freezeBatch]]):
+    * any span whose `(h1, h2)` key
     * appears in `histSpans` drops ALL its occurrences in this frame
     * (its keeper lives in history); spans new to the frame resolve
     * their keeper within the frame exactly as [[spanDedup]]. When

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Sitemap XML extraction (sitemaps.org protocol) — the frontier-seed
-  * stage that pairs with [[Robots.sitemaps]]: robots.txt names the
-  * sitemap URLs, their fetched XML yields the URL inventory (and
+  * stage: robots.txt names the sitemap URLs, their fetched XML yields the URL inventory (and
   * `<lastmod>` recrawl hints) that seeds the crawl frontier.
   *
   * Both document kinds are handled: `<urlset>` (leaf: `<url>` entries

@@ -59,9 +59,8 @@ object Sketches {
     * per-partition top-k + driver merge — never a single-partition
     * window), and Beyer et al.'s KMV set algebra over the merged
     * bottom-k yields Jaccard, union-size and intersection-size
-    * estimates (exact when both key sets fit under k). Mirrors
-    * [[Kmv.jaccardEstimate]]/[[Kmv.intersectionEstimate]] in
-    * DataFrame form so a SQL oracle replays it. Returns one row:
+    * estimates (exact when both key sets fit under k), in DataFrame
+    * form so a SQL oracle replays it. Returns one row:
     * (n_union_kept, kth_union, n_both, est_jaccard, est_union,
     * est_intersection). */
   def joinKeyOverlap(a: DataFrame, keyA: String, b: DataFrame,
@@ -138,26 +137,6 @@ object Sketches {
     def estimate: Double =
       if (values.size < k) values.size.toDouble
       else (k - 1).toDouble * M.toDouble / values.last.toDouble
-
-    /** Jaccard estimate |A∩B|/|A∪B| from two sketches (Beyer et al.'s
-      * K-min-values set algebra): over the bottom-k' of the UNION
-      * (k' = |merged|), count hashes present in BOTH input sketches.
-      * Exact when both sets fit under k; deterministic always (same
-      * hashes => same estimate on any engine). Empty∪empty => 0. */
-    def jaccardEstimate(other: Kmv): Double = {
-      val m = merge(other)
-      if (m.values.isEmpty) 0.0
-      else {
-        val a = values.toSet
-        val b = other.values.toSet
-        m.values.count(h => a(h) && b(h)).toDouble / m.values.size
-      }
-    }
-
-    /** Intersection-size estimate: Jaccard × union estimate — both from
-      * the same merged sketch, so the algebra is self-consistent. */
-    def intersectionEstimate(other: Kmv): Double =
-      jaccardEstimate(other) * merge(other).estimate
   }
 
   /** Mutable bounded aggregation buffer behind [[KmvAggregator]].
@@ -255,12 +234,13 @@ object Sketches {
     * [[kmvDistinct]] exactly. */
   final class KmvAggregator(k: Int = 256)
       extends Aggregator[Long, KmvBuf, Double] {
-    def zero: KmvBuf = KmvBuf(k, Array.emptyLongArray, 0)
-    def reduce(b: KmvBuf, a: Long): KmvBuf = b.insertMut(a)
-    def merge(b1: KmvBuf, b2: KmvBuf): KmvBuf = b1.mergeNew(b2)
-    def finish(r: KmvBuf): Double = r.estimate
-    def bufferEncoder: Encoder[KmvBuf] = Encoders.product[KmvBuf]
-    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+    override def zero: KmvBuf = KmvBuf(k, Array.emptyLongArray, 0)
+    override def reduce(b: KmvBuf, a: Long): KmvBuf = b.insertMut(a)
+    override def merge(b1: KmvBuf, b2: KmvBuf): KmvBuf = b1.mergeNew(b2)
+    override def finish(r: KmvBuf): Double = r.estimate
+    override def bufferEncoder: Encoder[KmvBuf] =
+      Encoders.product[KmvBuf]
+    override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
   /** Deterministic mergeable quantile sketch: bottom-k PRIORITY
@@ -330,15 +310,18 @@ object Sketches {
     * (e.g. [[TextAnalysis.tokenHash31]] of the doc id). */
   final class QuantileSketchAggregator(k: Int = 256)
       extends Aggregator[(Long, Double), QuantileSample, QuantileSample] {
-    def zero: QuantileSample = QuantileSample(k, Vector.empty, Vector.empty)
-    def reduce(b: QuantileSample, a: (Long, Double)): QuantileSample =
+    override def zero: QuantileSample =
+      QuantileSample(k, Vector.empty, Vector.empty)
+    override def reduce(b: QuantileSample,
+        a: (Long, Double)): QuantileSample =
       b.insert(a._1, a._2)
-    def merge(b1: QuantileSample, b2: QuantileSample): QuantileSample =
+    override def merge(b1: QuantileSample,
+        b2: QuantileSample): QuantileSample =
       b1.merge(b2)
-    def finish(r: QuantileSample): QuantileSample = r
-    def bufferEncoder: Encoder[QuantileSample] =
+    override def finish(r: QuantileSample): QuantileSample = r
+    override def bufferEncoder: Encoder[QuantileSample] =
       Encoders.product[QuantileSample]
-    def outputEncoder: Encoder[QuantileSample] =
+    override def outputEncoder: Encoder[QuantileSample] =
       Encoders.product[QuantileSample]
   }
 
@@ -409,11 +392,11 @@ object Sketches {
     * no matter the stream length. */
   final class CmsAggregator(d: Int = 4, w: Int = 256)
       extends Aggregator[Long, Cms, Cms] {
-    def zero: Cms = Cms(d, w, Vector.fill(d * w)(0L))
-    def reduce(b: Cms, h: Long): Cms = b.add(h)
-    def merge(b1: Cms, b2: Cms): Cms = b1.merge(b2)
-    def finish(r: Cms): Cms = r
-    def bufferEncoder: Encoder[Cms] = Encoders.product[Cms]
-    def outputEncoder: Encoder[Cms] = Encoders.product[Cms]
+    override def zero: Cms = Cms(d, w, Vector.fill(d * w)(0L))
+    override def reduce(b: Cms, h: Long): Cms = b.add(h)
+    override def merge(b1: Cms, b2: Cms): Cms = b1.merge(b2)
+    override def finish(r: Cms): Cms = r
+    override def bufferEncoder: Encoder[Cms] = Encoders.product[Cms]
+    override def outputEncoder: Encoder[Cms] = Encoders.product[Cms]
   }
 }

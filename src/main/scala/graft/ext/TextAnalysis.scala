@@ -20,16 +20,6 @@ object TextAnalysis {
   /** Whitespace tokenization (the corpus is space-separated tokens). */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** A BPE-ish fallback tokenizer for raw text: splits on word/punct
-    * boundaries like a byte-pair pre-tokenizer would. */
-  def regexTokens(text: Column): Column =
-    // contiguous letters+digits | single punctuation — close to GPT-2's
-    // pre-tokenizer classes, without lookahead (unsupported in RE2/ICU).
-    // call_function keeps the real Column (toString-interpolated SQL
-    // breaks on qualified/lambda-bound columns).
-    call_function("regexp_extract_all", text,
-      lit("[\\p{L}\\p{N}]+|[^\\p{L}\\p{N}\\s]"), lit(0))
-
   /** Stable 31-bit token hash: first 15 hex chars of md5, parsed base-16,
     * reduced mod 2^31-1. Reproducible in any SQL engine. */
   def tokenHash31(tok: Column): Column =
@@ -208,99 +198,6 @@ object TextAnalysis {
         col("start_tok").cast("long").as("start_tok"),
         size(col("chunk")).cast("long").as("n_chunk_tokens"),
         array_join(col("chunk"), " ").as("chunk"))
-  }
-
-  /** Greedy BPE segmentation of one whitespace word under a learned
-    * merge-rank table: start from characters, repeatedly merge the
-    * adjacent pair with the LOWEST rank (left-to-right on rank ties)
-    * until no adjacent pair is in the table — the standard BPE apply
-    * loop, deterministic by construction. */
-  def bpeSegment(word: String,
-      ranks: Map[(String, String), Int]): Vector[String] = {
-    var syms = word.map(_.toString).toVector
-    var done = syms.length < 2
-    while (!done) {
-      var bestIdx = -1
-      var bestRank = Int.MaxValue
-      var i = 0
-      while (i < syms.length - 1) {
-        val r = ranks.getOrElse((syms(i), syms(i + 1)), Int.MaxValue)
-        if (r < bestRank) { bestRank = r; bestIdx = i }
-        i += 1
-      }
-      if (bestIdx < 0) done = true
-      else {
-        syms = (syms.take(bestIdx) :+ (syms(bestIdx) + syms(bestIdx + 1))) ++
-          syms.drop(bestIdx + 2)
-        done = syms.length < 2
-      }
-    }
-    syms
-  }
-
-  /** Learn `nMerges` BPE merges from the corpus — the iterate-on-
-    * aggregate pattern: the corpus stays distributed (one explode +
-    * pair hash-agg per round, under partial aggregation), while the
-    * only driver state is the merge table itself (nMerges rows, the
-    * MLlib-style small-model shape). Each round re-segments under the
-    * merges so far via a broadcast, counts adjacent symbol pairs, and
-    * takes the global argmax with a deterministic tie-break (count
-    * desc, pair asc) through a TakeOrdered(1) — no full sort. Stops
-    * early when no pair repeats. */
-  def bpeLearn(df: org.apache.spark.sql.DataFrame, textCol: String,
-      nMerges: Int): Seq[((String, String), Long)] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    require(nMerges >= 1, s"bpeLearn: nMerges must be >= 1 ($nMerges)")
-    val words = df.select(explode(tokens(col(textCol))).as("w")).as[String]
-    var merges = Vector.empty[((String, String), Long)]
-    var rounds = 0
-    while (rounds < nMerges) {
-      val ranks = merges.map(_._1).zipWithIndex.toMap
-      val bc = spark.sparkContext.broadcast(ranks)
-      val best = words
-        .flatMap { w =>
-          val syms = bpeSegment(w, bc.value)
-          syms.iterator.zip(syms.iterator.drop(1)).map {
-            case (a, b) => (a, b) }.toSeq
-        }
-        .groupBy("_1", "_2").agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
-        .orderBy(col("n").desc, col("_1"), col("_2"))
-        .limit(1)
-        .as[(String, String, Long)].collect()
-      bc.destroy()
-      best.headOption match {
-        case Some((a, b, n)) => merges :+= ((a, b), n); rounds += 1
-        case None => rounds = nMerges // converged: nothing repeats
-      }
-    }
-    merges
-  }
-
-  /** Apply a learned merge list corpus-wide: partition-batched typed
-    * map (the tokenizer-apply step a training pipeline runs over every
-    * document; the broadcast merge table is the only shared state).
-    * Returns (idCol, n_words, n_bpe_tokens, bpe_tokens). */
-  def bpeApply(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String,
-      merges: Seq[(String, String)]): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(merges.zipWithIndex.toMap)
-    // per-word merge segmentation is compute-bound — spread by compute
-    graft.ops.Spread.forCompute(df, col(idCol))
-      .select(col(idCol).cast("long"), col(textCol))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val ranks = bc.value
-        it.map { case (id, text) =>
-          val toks = text.split(" ", -1).toSeq
-            .flatMap(w => bpeSegment(w, ranks))
-          (id, text.split(" ", -1).length.toLong, toks.length.toLong, toks)
-        }
-      }
-      .toDF(idCol, "n_words", "n_bpe_tokens", "bpe_tokens")
   }
 
   /** Epoch-mixture materialization: replicate each document according
@@ -706,8 +603,8 @@ object TextAnalysis {
 
   /** Score documents against a PRE-AGGREGATED raw-corpus feature count
     * table — the serving half of [[dsirWeights]] split out for count
-    * tables maintained OUT of band (e.g. incrementally over a stream,
-    * [[graft.streaming.DsirStream]]): same target counts, same add-one
+    * tables maintained OUT of band (e.g. a batch-partitioned count
+    * store, as `text_dsir_store` serves): same target counts, same add-one
     * ratio, same sorted product fold, so scoring the counts' own corpus
     * reproduces `dsirWeights` bit for bit (spec-pinned). `rawCnt` must
     * be (f, rcnt) over the same `buckets` hash space. A document
@@ -1229,8 +1126,11 @@ object TextAnalysis {
     *    and the BPE merge table) and are inlined each iteration as a
     *    LITERAL array into a codegen'd `aggregate` over the per-doc
     *    feature array — no weight join, no id-keyed shuffle;
-    *  - each iteration is ONE map-only scan of the persisted per-doc
-    *    feature frame ([[groupedFeatures]]): margin and per-bucket
+    *  - each iteration is ONE map-only scan of the per-doc feature
+    *    frame (a [[logisticFeatures]] frame, ideally persisted — extra
+    *    columns pass through untouched, so a split flag can ride along
+    *    and the caller can train on `feats.filter(...)` without
+    *    rebuilding features): margin and per-bucket
     *    gradient contributions come straight off the local array, the
     *    only shuffle is the bucket-keyed gradient agg (≤ `dim` rows
     *    per map task after partial aggregation), then a `dim`-row
@@ -1244,20 +1144,6 @@ object TextAnalysis {
     *
     * Returns the weight table (b, w_fp) at 1e6 fixed point. Learning
     * rate is `lrPermil`/1000 per mean-gradient step. */
-  def logisticTrain(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, labelCol: String, dim: Int = 1024,
-      iters: Int = 8, lrPermil: Int = 500)
-      : org.apache.spark.sql.DataFrame = {
-    val docs = groupedFeatures(df, idCol, textCol, Some(labelCol), dim)
-      .persist()
-    try logisticTrainOn(docs, dim, iters, lrPermil)
-    finally { docs.unpersist(); () }
-  }
-
-  /** The GD loop itself, over a PRE-BUILT (and ideally persisted)
-    * [[logisticFeatures]] frame — extra columns pass through untouched,
-    * so a split flag can ride along and the caller can train on
-    * `feats.filter(...)` without rebuilding features. */
   def logisticTrainOn(feats: org.apache.spark.sql.DataFrame,
       dim: Int, iters: Int, lrPermil: Int)
       : org.apache.spark.sql.DataFrame = {
@@ -1290,25 +1176,6 @@ object TextAnalysis {
     spark.createDataFrame(
         (0 until dim).map(b => (b.toLong, w(b))))
       .toDF("b", "w_fp")
-  }
-
-  /** APPLY step: margin, probability, and accept flag per document
-    * against a [[logisticTrain]] weight table (collected to a literal
-    * array — the model is dim-bounded driver state, the same carve-out
-    * as the training loop itself). Documents with no tokens carry
-    * margin 0 (p = 0.5). Returns (idCol, margin_fp, prob, accept). */
-  def logisticScore(df: org.apache.spark.sql.DataFrame, idCol: String,
-      textCol: String, model: org.apache.spark.sql.DataFrame,
-      dim: Int = 1024): org.apache.spark.sql.DataFrame = {
-    val margins = logisticScoreOn(
-        groupedFeatures(df, idCol, textCol, None, dim), model, dim)
-      .select(col("id"), col("margin_fp"))
-    df.select(col(idCol)).distinct()
-      .join(margins.withColumnRenamed("id", idCol), Seq(idCol), "left_outer")
-      .na.fill(0L, Seq("margin_fp"))
-      .withColumn("prob", lit(1.0d) /
-        (lit(1.0d) + exp(-col("margin_fp") / 1000000.0d)))
-      .withColumn("accept", col("margin_fp") >= 0L)
   }
 
   /** MAP-ONLY scoring over a pre-built [[logisticFeatures]] frame:

@@ -294,19 +294,4 @@ object Warc {
     gz.write(payload); gz.close()
     bos.toByteArray
   }
-
-  /** Serialize one well-formed WET record (spec/builder helper; the
-    * graded query synthesizes the same framing in-plan with SQL string
-    * functions so DuckDB can recompute the expected fields). */
-  def wetRecordBytes(uri: String, date: String, recordId: String,
-      payload: Array[Byte], warcType: String = "conversion"): Array[Byte] = {
-    val h = new StringBuilder
-    h ++= "WARC/1.0\r\n"
-    h ++= s"WARC-Type: $warcType\r\n"
-    h ++= s"WARC-Target-URI: $uri\r\n"
-    h ++= s"WARC-Date: $date\r\n"
-    h ++= s"WARC-Record-ID: $recordId\r\n"
-    h ++= s"Content-Length: ${payload.length}\r\n\r\n"
-    h.toString.getBytes("UTF-8") ++ payload ++ "\r\n\r\n".getBytes("UTF-8")
-  }
 }

@@ -16,9 +16,6 @@ object BlueprintError {
   final case class NoMatchesFound(pattern: String)
       extends BlueprintError(200, s"No files matching $pattern found")
 
-  final case class InvalidFilePath(path: String)
-      extends BlueprintError(201, s"Invalid file path: $path")
-
   final case class DeleteError(path: String, cause: Throwable)
       extends BlueprintError(202, s"Delete failed for $path")
 
@@ -30,8 +27,4 @@ object BlueprintError {
     * (`upload_file.py:188-190`, azure ResourceExistsError). */
   final case class DestinationExists(path: String)
       extends BlueprintError(1, s"File already exists: $path")
-
-  /** Missing container/folder (`upload_file.py:185-187`). */
-  final case class ContainerNotFound(name: String)
-      extends BlueprintError(1, s"Container $name does not exist")
 }

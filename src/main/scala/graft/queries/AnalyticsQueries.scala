@@ -988,9 +988,8 @@ object AnalyticsQueries {
     },
 
     // CDC compaction / keep-latest: collapse the event stream to the
-    // most recent row per (user, type) — the batch twin of the
-    // streaming foreachBatch upsert (CorpusStream.upsertBatches); one
-    // key-partitioned window over a total (ts, event_id) order
+    // most recent row per (user, type); one key-partitioned window
+    // over a total (ts, event_id) order
     QueryDef("q49_cdc_compact",
       """SELECT user_id, event_type, ts_us, event_id, value FROM (
         |  SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
@@ -1555,8 +1554,8 @@ object AnalyticsQueries {
     // property under test: an ALIGNED run of 4^k consecutive keys is an
     // exact 2^k x 2^k tile, so every tile's (min, max) in BOTH dims
     // spans <= 63 — the file-statistics bound that makes multi-dim
-    // skipping work after OPTIMIZE-ZORDER-style layout
-    // (ops.ZOrder.layout). Pure integer bit algebra in both dialects.
+    // skipping work after OPTIMIZE-ZORDER-style layout. Pure integer
+    // bit algebra in both dialects.
     QueryDef("q52_zorder_tiles", {
       val zsql = graft.ops.ZOrder.zkeySql(
         "(o_custkey % 1024)", "(o_orderkey % 1024)", 10)

@@ -606,16 +606,10 @@ FROM pc ORDER BY chunk_id, seg_id""") { (s, d) =>
       // so the cluster interleaves their tiny argmax stages instead of
       // idling between one loop's driver round-trips (the
       // dedup_suffix_cross_shard per-shard placement, applied here)
-      val (a, b) = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fa = Future(Bpe.train(
-          Bpe.wordFreq(docs.filter(col("source") === "src0"), "text"), K))
-        val fb = Future(Bpe.train(
-          Bpe.wordFreq(docs.filter(col("source") === "src1"), "text"), K))
-        (Await.result(fa, scala.concurrent.duration.Duration.Inf),
-          Await.result(fb, scala.concurrent.duration.Duration.Inf))
-      }
+      val Seq(a, b) = graft.ops.Concurrently(Seq("src0", "src1").map {
+        src => () => Bpe.train(
+          Bpe.wordFreq(docs.filter(col("source") === src), "text"), K)
+      })
       Bpe.mergeTable(s, a)
         .select(col("merge_rank"), col("lhs").as("lhs_a"),
           col("rhs").as("rhs_a"))
@@ -1122,14 +1116,8 @@ FROM enc, mc ORDER BY doc_id"""
       // the k=12 and k=8192 encode passes are independent actions over
       // the checkpointed surface — submit them concurrently (the
       // dedup_suffix_cross_shard placement)
-      val (t12, tBig) = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val f12 = Future(total(big.take(12)))
-        val fBig = Future(total(big))
-        (Await.result(f12, scala.concurrent.duration.Duration.Inf),
-          Await.result(fBig, scala.concurrent.duration.Duration.Inf))
-      }
+      val Seq(t12, tBig) = graft.ops.Concurrently(
+        Seq(() => total(big.take(12)), () => total(big)))
       val out = compressionGuard(
         Seq((big.size.toLong, words.count(), nChars, t12, tBig))
           .toDF("merges_learned", "vocab_rows", "n_chars",

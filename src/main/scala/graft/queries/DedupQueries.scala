@@ -1332,25 +1332,16 @@ object DedupQueries {
       // concurrently: each drives its own prefix-doubling round loop
       // and the cluster interleaves their stages instead of idling
       // between one shard's driver round-trips.
-      val survivors = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val jobs = Seq(0L, 1L).map { sh =>
-          Future {
-            val slice = docs.filter(col("shard") === sh)
-              .select("doc_id", "text")
-            val spans = graft.ext.SuffixArray.duplicatedSpans(
-              slice, "doc_id", "text", minLen = 20)
-            graft.ext.SuffixArray.removeSpans(slice, "doc_id", "text",
-              spans)
-          }
-        }
-        // stage 2 + the final join both read it
-        Materialize(
-          jobs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-            .reduce(_ unionByName _),
-          eager = false)
-      }
+      val shards = graft.ops.Concurrently(Seq(0L, 1L).map { sh => () =>
+        val slice = docs.filter(col("shard") === sh)
+          .select("doc_id", "text")
+        val spans = graft.ext.SuffixArray.duplicatedSpans(
+          slice, "doc_id", "text", minLen = 20)
+        graft.ext.SuffixArray.removeSpans(slice, "doc_id", "text", spans)
+      })
+      // stage 2 + the final join both read it
+      val survivors =
+        Materialize(shards.reduce(_ unionByName _), eager = false)
       // stage 2: cross-shard fixed-L token-gram pass over the union
       // of shard survivors (keep-first; one keyed gram shuffle)
       val fin = graft.ext.Dedup.substringDedup(

@@ -1456,9 +1456,8 @@ object TextQueries {
     // DSIR weights served from a MAINTAINED count store — the 100 TB
     // shape as the graded path (the text twin of ann_ivfpq_store): the
     // corpus's hash-bounded feature counts land in a batch-partitioned
-    // parquet store (two pseudo-batches here — the layout the streaming
-    // maintainer DsirStream produces), are merged back by exact integer
-    // sum, and scoring runs against the merged table. The oracle is
+    // parquet store (two pseudo-batches here), are merged back by exact
+    // integer sum, and scoring runs against the merged table. The oracle is
     // text_dsir_weights' verbatim: counts-then-merge is sum-invariant,
     // so serving from the store is hash-identical to the one-shot path.
     QueryDef("text_dsir_store",
@@ -1476,7 +1475,9 @@ object TextQueries {
         .select("f", "cnt", "batch_id")
         .write.mode("overwrite").partitionBy("batch_id").parquet(dir)
       TextAnalysis.dsirScoreAgainstCounts(docs,
-          graft.streaming.DsirStream.readCounts(s, dir),
+          // explicit schema: partition inference would int-ify batch_id
+          s.read.schema("f LONG, cnt LONG, batch_id LONG").parquet(dir)
+            .groupBy("f").agg(sum("cnt").as("rcnt")),
           docs.filter(col("source").isin("src0", "src1")),
           "doc_id", "text")
         .orderBy("doc_id")

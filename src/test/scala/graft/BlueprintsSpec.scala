@@ -1,7 +1,8 @@
 package graft
 
 import graft.ops.{BlueprintError, ExactMatch, RegexMatch, Transfer}
-import org.apache.spark.{CountJobs, ResultTaskReads}
+import org.apache.spark.ResultTaskReads
+import org.apache.spark.graftx.CountJobs
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._

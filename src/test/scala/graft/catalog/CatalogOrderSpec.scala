@@ -2,7 +2,7 @@ package graft.catalog
 
 import graft.{Blueprints, SparkSpec}
 import graft.ops.{PrefixSum, RegexMatch}
-import org.apache.spark.CountJobs
+import org.apache.spark.graftx.CountJobs
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

@@ -70,7 +70,7 @@ class BpeSpec extends SparkSpec {
     val df = Bpe.encode(docs, "doc_id", "text",
       Seq(Bpe.Merge(1, "a", "b", 5L), Bpe.Merge(2, "a", "ab", 3L)))
     df.collect()
-    assert(graft.ops.Bucketing.shuffleExchanges(df) == 0,
+    assert(graft.ops.PlanChecks.shuffleExchanges(df) == 0,
       df.queryExecution.executedPlan.toString)
   }
 
@@ -225,7 +225,7 @@ class BpeSpec extends SparkSpec {
       .as[(Long, Seq[String])].collect().toMap
     val scaled = Bpe.encodeScalable(docs, "doc_id", "text", merges)
     assert(scaled.as[(Long, Seq[String])].collect().toMap == ref)
-    assert(graft.ops.Bucketing.shuffleExchanges(scaled) == 0,
+    assert(graft.ops.PlanChecks.shuffleExchanges(scaled) == 0,
       scaled.queryExecution.executedPlan.toString)
   }
 

@@ -114,11 +114,6 @@ class DecontaminationSpec extends SparkSpec {
       .select("doc_id", "bloom_hits").as[(Long, Long)].collect().toMap
     assert(wrongSalt(12L) < 5L,
       s"mismatched salt must not reproduce the keyed probes: $wrongSalt")
-    // gate form under a salt: keeps exactly the zero-hit docs
-    val cleaned = Decontamination.bloomClean(corpus, "text", salted,
-      4096, 3, 5, salt = "s3cr3t")
-      .select("doc_id").as[Long].collect().toSet
-    assert(cleaned == Set(11L))
   }
 
   test("bloom probe is map-only on the corpus side: the only " +
@@ -129,7 +124,7 @@ class DecontaminationSpec extends SparkSpec {
     val df = Decontamination.bloomFlags(corpus, "doc_id", "text",
       bits, 4096, 3, 5)
     df.collect()
-    assert(graft.ops.Bucketing.shuffleExchanges(df) == 0,
+    assert(graft.ops.PlanChecks.shuffleExchanges(df) == 0,
       df.queryExecution.executedPlan.toString)
   }
 }

@@ -2,7 +2,7 @@ package graft.ext
 
 import graft.SparkSpec
 import graft.ops.Materialize
-import org.apache.spark.CountJobs
+import org.apache.spark.graftx.CountJobs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -256,7 +256,7 @@ class DedupSpec extends SparkSpec {
       (2L, "x y z a b c d e f g"),         // container
       (3L, "p q r")                        // unrelated
     ).toDF("doc_id", "text")
-    val got = Dedup.containmentPairs(df, "doc_id", "text", 1, 1.0)
+    val got = Dedup.containmentPairsAcross(df, df, "doc_id", "text", 1, 1.0)
       .as[(Long, Long, Long, Long, Double)].collect().toSeq
     assert(got == Seq((1L, 2L, 3L, 3L, 1.0)), got.toString)
     // the same pair is invisible to a Jaccard join: J = 3/10
@@ -278,7 +278,7 @@ class DedupSpec extends SparkSpec {
         "doc_id", "text", 1, 1.0)
       .select("contained_id", "container_id").as[(Long, Long)]
       .collect().toSet
-    val self = Dedup.containmentPairs(df, "doc_id", "text", 1, 1.0)
+    val self = Dedup.containmentPairsAcross(df, df, "doc_id", "text", 1, 1.0)
       .select("contained_id", "container_id").as[(Long, Long)]
       .collect().toSet
       .filter(p => p._1 <= 2 && p._2 > 2)

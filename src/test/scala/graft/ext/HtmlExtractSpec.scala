@@ -112,7 +112,7 @@ class HtmlExtractSpec extends SparkSpec {
     val df = HtmlExtract.extractLines(
       Seq((1L, "<p>x</p>")).toDF("id", "html"), "id", "html")
     df.collect()
-    assert(graft.ops.Bucketing.shuffleExchanges(df) == 0,
+    assert(graft.ops.PlanChecks.shuffleExchanges(df) == 0,
       df.queryExecution.executedPlan.toString)
   }
 
@@ -152,7 +152,7 @@ class HtmlExtractSpec extends SparkSpec {
       Seq((1L, "<a href=\"https://a.example/\">x</a>")).toDF("id", "html"),
       "id", "html")
     df.collect()
-    assert(graft.ops.Bucketing.shuffleExchanges(df) == 0,
+    assert(graft.ops.PlanChecks.shuffleExchanges(df) == 0,
       df.queryExecution.executedPlan.toString)
   }
 
@@ -278,7 +278,7 @@ class HtmlExtractSpec extends SparkSpec {
         "<p>3 < 5 and the rest</p>")).toDF("id", "html"),
       "id", "html", JxStop.toDF("word"))
     df.collect()
-    assert(graft.ops.Bucketing.shuffleExchanges(df) == 0,
+    assert(graft.ops.PlanChecks.shuffleExchanges(df) == 0,
       df.queryExecution.executedPlan.toString)
   }
 }

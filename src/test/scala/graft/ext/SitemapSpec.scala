@@ -61,7 +61,7 @@ class SitemapSpec extends SparkSpec {
       "<urlset><url><loc>https://h.example/x</loc></url></urlset>"))
       .toDF("host", "xml"))
     df.collect()
-    assert(graft.ops.Bucketing.shuffleExchanges(df) == 0,
+    assert(graft.ops.PlanChecks.shuffleExchanges(df) == 0,
       df.queryExecution.executedPlan.toString)
   }
 }

@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
-import org.apache.spark.CountJobs
+import org.apache.spark.graftx.CountJobs
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._

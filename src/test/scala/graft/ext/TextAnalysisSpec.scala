@@ -24,12 +24,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got == 419982666956583591L % 2147483647L)
   }
 
-  test("regexTokens splits words and punctuation BPE-style") {
-    val got = Seq("Hello, world! x2").toDF("t")
-      .select(TextAnalysis.regexTokens(col("t"))).as[Seq[String]].collect()(0)
-    assert(got == Seq("Hello", ",", "world", "!", "x2"))
-  }
-
   test("quality score is in [0,1] and favors diverse long docs") {
     val df = Seq(
       (1L, "the " + (1 to 99).map(i => s"tok$i").mkString(" ")), // diverse
@@ -183,44 +177,6 @@ class TextAnalysisSpec extends SparkSpec {
       Map("drop" -> 0, "up" -> 2500), defaultPermil = 1000)
     assert(out.select("id", "epoch_copy").collect().toSet ==
       again.select("id", "epoch_copy").collect().toSet)
-  }
-
-  test("BPE: learned merges match the hand-computed classic example") {
-    val df = Seq((1L, "aaab aaab ab")).toDF("id", "text")
-    val merges = TextAnalysis.bpeLearn(df, "text", nMerges = 2)
-    // round 1 pair counts: (a,a)=4 beats (a,b)=3 -> merge "aa"
-    // round 2 over [aa,a,b] [aa,a,b] [a,b]: (a,b)=3 beats (aa,a)=2
-    assert(merges.map(_._1) == Seq(("a", "a"), ("a", "b")), merges)
-    assert(merges.map(_._2) == Seq(4L, 3L), merges)
-    val applied = TextAnalysis.bpeApply(df, "id", "text",
-        merges.map(_._1))
-      .as[(Long, Long, Long, Seq[String])].collect().head
-    // "aaab" -> [aa, a, b] -> [aa, ab]; "ab" -> [ab]
-    assert(applied._4 == Seq("aa", "ab", "aa", "ab", "ab"), applied)
-    assert(applied._2 == 3L && applied._3 == 5L)
-  }
-
-  test("BPE learn converges early when nothing repeats") {
-    val df = Seq((1L, "xy")).toDF("id", "text")
-    val merges = TextAnalysis.bpeLearn(df, "text", nMerges = 5)
-    assert(merges.isEmpty, merges)
-  }
-
-  test("BPE apply is deterministic under repartitioning") {
-    val docs = graft.Tables.documents(spark, sfDir).limit(100)
-    val merges = TextAnalysis.bpeLearn(docs, "text", nMerges = 4)
-    assert(merges.nonEmpty)
-    val a = TextAnalysis.bpeApply(docs, "doc_id", "text", merges.map(_._1))
-      .select("doc_id", "n_bpe_tokens").as[(Long, Long)].collect().toSet
-    val b = TextAnalysis.bpeApply(docs.repartition(7), "doc_id", "text",
-        merges.map(_._1))
-      .select("doc_id", "n_bpe_tokens").as[(Long, Long)].collect().toSet
-    assert(a == b)
-    // merging can only shorten the character-level segmentation
-    val chars = docs.select(col("doc_id"),
-      length(regexp_replace(col("text"), " ", "")).cast("long").as("nc"))
-      .as[(Long, Long)].collect().toMap
-    assert(a.forall { case (id, n) => n <= chars(id) })
   }
 
   test("bm25Scores: query-dense docs outrank sparse ones, misses drop") {
@@ -699,6 +655,13 @@ class TextAnalysisSpec extends SparkSpec {
     assert(a == b)
   }
 
+  /** The gate's training: per-doc features of (doc_id, text, y), then
+    * the GD loop (8 iterations at learning rate 0.5). */
+  private def logisticTrain(df: org.apache.spark.sql.DataFrame,
+      dim: Int = 1024): org.apache.spark.sql.DataFrame =
+    TextAnalysis.logisticTrainOn(TextAnalysis.logisticFeatures(
+      df, "doc_id", "text", Some("y"), dim), dim, iters = 8, lrPermil = 500)
+
   test("logisticTrain separates planted labels and is partition-stable") {
     val s2 = spark
     import s2.implicits._
@@ -707,33 +670,19 @@ class TextAnalysisSpec extends SparkSpec {
       val marker = if (y) "good good" else "bad bad"
       (i, s"common filler tokens here $marker", y)
     }.toDF("doc_id", "text", "y")
-    val m = TextAnalysis.logisticTrain(docs, "doc_id", "text", "y",
-      dim = 64, iters = 8, lrPermil = 500)
-    val scored = TextAnalysis.logisticScore(docs, "doc_id", "text", m,
-        dim = 64)
+    val m = logisticTrain(docs, dim = 64)
+    val scored = TextAnalysis.logisticScoreOn(
+        TextAnalysis.logisticFeatures(docs, "doc_id", "text", None, 64),
+        m, dim = 64)
+      .select(col("id").as("doc_id"), col("accept"))
       .join(docs.select("doc_id", "y"), Seq("doc_id")).collect()
     assert(scored.forall(r => r.getAs[Boolean]("accept") ==
       r.getAs[Boolean]("y")), "trained gate must separate the markers")
     // bit-identical weights under a different partitioning
-    val m2 = TextAnalysis.logisticTrain(docs.repartition(7), "doc_id",
-      "text", "y", dim = 64, iters = 8, lrPermil = 500)
+    val m2 = logisticTrain(docs.repartition(7), dim = 64)
     val w1 = m.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val w2 = m2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(w1 == w2)
-  }
-
-  test("logisticScore: tokenless docs default to margin 0, p=0.5") {
-    val s2 = spark
-    import s2.implicits._
-    val train = Seq((0L, "good", true), (1L, "bad", false))
-      .toDF("doc_id", "text", "y")
-    val m = TextAnalysis.logisticTrain(train, "doc_id", "text", "y",
-      dim = 16, iters = 4)
-    val out = TextAnalysis.logisticScore(
-        Seq((9L, "")).toDF("doc_id", "text"), "doc_id", "text", m,
-        dim = 16).head()
-    assert(out.getAs[Long]("margin_fp") == 0L)
-    assert(out.getAs[Double]("prob") == 0.5d)
   }
 
   test("logisticTrain rejects bad arguments and empty corpora") {
@@ -741,11 +690,10 @@ class TextAnalysisSpec extends SparkSpec {
     import s2.implicits._
     val d = Seq((0L, "x", true)).toDF("doc_id", "text", "y")
     intercept[IllegalArgumentException] {
-      TextAnalysis.logisticTrain(d, "doc_id", "text", "y", dim = 0)
+      logisticTrain(d, dim = 0)
     }
     intercept[IllegalArgumentException] {
-      TextAnalysis.logisticTrain(d.filter("doc_id < 0"), "doc_id",
-        "text", "y")
+      logisticTrain(d.filter("doc_id < 0"))
     }
   }
 

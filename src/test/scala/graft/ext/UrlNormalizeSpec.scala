@@ -83,7 +83,7 @@ class UrlNormalizeSpec extends SparkSpec {
     val df = Seq((1L, "/x")).toDF("id", "u")
       .select(UrlNormalize.canonicalUrl(col("u"), lit("h.example")))
     df.collect()
-    assert(graft.ops.Bucketing.shuffleExchanges(df) == 0,
+    assert(graft.ops.PlanChecks.shuffleExchanges(df) == 0,
       df.queryExecution.executedPlan.toString)
     intercept[IllegalArgumentException] {
       UrlNormalize.canonicalUrl(col("u"), lit("h"), baseScheme = "ftp")

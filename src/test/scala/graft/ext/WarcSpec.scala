@@ -13,6 +13,21 @@ import graft.SparkSpec
 class WarcSpec extends SparkSpec {
   import Warc._
 
+  /** Serialize one well-formed WET record (the graded query builds the
+    * same framing in-plan with SQL string functions so DuckDB can
+    * recompute the expected fields). */
+  private def wetRecordBytes(uri: String, date: String, recordId: String,
+      payload: Array[Byte], warcType: String = "conversion"): Array[Byte] = {
+    val h = new StringBuilder
+    h ++= "WARC/1.0\r\n"
+    h ++= s"WARC-Type: $warcType\r\n"
+    h ++= s"WARC-Target-URI: $uri\r\n"
+    h ++= s"WARC-Date: $date\r\n"
+    h ++= s"WARC-Record-ID: $recordId\r\n"
+    h ++= s"Content-Length: ${payload.length}\r\n\r\n"
+    h.toString.getBytes("UTF-8") ++ payload ++ "\r\n\r\n".getBytes("UTF-8")
+  }
+
   private def rec(uri: String, payload: String,
       date: String = "2026-01-01T00:00:00Z",
       rid: String = "<urn:uuid:1>"): Array[Byte] =

@@ -37,9 +37,9 @@ class BucketingSpec extends SparkSpec {
     assert(gotB.map(key).sorted.toSeq == gotP.map(key).sorted.toSeq)
     // THE contract: co-located bucketed sides join with ZERO exchanges;
     // the identical logical join over bare parquet shuffles both sides
-    assert(Bucketing.shuffleExchanges(bucketed) == 0,
+    assert(PlanChecks.shuffleExchanges(bucketed) == 0,
       s"bucketed join must not shuffle:\n${bucketed.queryExecution}")
-    assert(Bucketing.shuffleExchanges(plain) >= 2,
+    assert(PlanChecks.shuffleExchanges(plain) >= 2,
       s"sanity: the unbucketed twin must shuffle both sides:\n" +
         s"${plain.queryExecution}")
     // same-session overwrite converges (the graded query re-runs in

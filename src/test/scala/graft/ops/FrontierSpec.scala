@@ -28,19 +28,6 @@ class FrontierSpec extends SparkSpec {
       "c.example" -> 9.0)) // d unparseable, e other-agent-only: absent
   }
 
-  test("sitemaps: group-independent, distinct, full URL value kept") {
-    val robots = Seq(
-      ("a.example", "Sitemap: https://a.example/s1.xml\n" +
-        "User-agent: *\nDisallow: /\n" +
-        "Sitemap: https://a.example/s1.xml\n" +
-        "Sitemap: https://a.example/s2.xml"))
-      .toDF("host", "robots_txt")
-    val got = Robots.sitemaps(robots).collect()
-      .map(_.getString(1)).sorted.toSeq
-    assert(got == Seq("https://a.example/s1.xml",
-      "https://a.example/s2.xml"))
-  }
-
   test("plan: waves sequence per host, slots honor per-host delay") {
     val urls = Seq(
       (0L, 30L, "a.example", "https://a.example/x"),
@@ -174,7 +161,7 @@ class FrontierSpec extends SparkSpec {
     val df = Frontier.plan(urls, delays, Seq(col("prio").desc, col("id")))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    assert(graft.ops.Bucketing.shuffleExchanges(df) == 1, plan)
+    assert(graft.ops.PlanChecks.shuffleExchanges(df) == 1, plan)
     assert(plan.contains("BroadcastHashJoin") ||
       plan.contains("BroadcastNestedLoopJoin"), plan)
   }

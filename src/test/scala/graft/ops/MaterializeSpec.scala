@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.{CountJobs, WithCheckpointDir}
+import org.apache.spark.WithCheckpointDir
+import org.apache.spark.graftx.CountJobs
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 

@@ -114,4 +114,20 @@ object PlanChecks {
       line.matches(raw".*\*\(\d+\)\s.*" + java.util.regex.Pattern.quote(op)
         + ".*")
   }
+
+  /** Number of shuffle exchanges in the EXECUTED plan (AQE-final —
+    * call after an action so the adaptive plan is settled). The
+    * bucketed-join contract is that this is ZERO for the join stage. */
+  def shuffleExchanges(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def count(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case q: QueryStageExec => count(q.plan)
+      case e: ShuffleExchangeLike => 1 + e.children.map(count).sum
+      case other => other.children.map(count).sum
+    }
+    count(df.queryExecution.executedPlan)
+  }
 }

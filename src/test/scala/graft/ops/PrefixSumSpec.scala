@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.{CountJobs, WithCheckpointDir}
+import org.apache.spark.WithCheckpointDir
+import org.apache.spark.graftx.CountJobs
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
 
 /** The freeze-export differential: `pipeline_freeze_export` routes the
   * corpus through three incremental `freezeBatch` micro-batches and
@@ -35,7 +36,7 @@ class FreezeExportSpec extends SparkSpec {
       .select("shard_id", "n_docs", "total_tokens", "checksum")
       .as[(Long, Long, Long, Long)].collect().toSet
     val mf = graft.Scratch.dir("freeze-export", sfDir) + "/mf"
-    val folded = graft.streaming.CorpusStream.foldManifest(spark, mf)
+    val folded = FreezeExportSpec.foldManifest(spark, mf)
       .select(col("shard_id").cast("long"), col("n_docs"),
         col("total_tokens"), col("checksum"))
       .as[(Long, Long, Long, Long)].collect().toSet
@@ -47,4 +48,19 @@ class FreezeExportSpec extends SparkSpec {
     graft.ops.PlanChecks.assertNoCartesian(
       SparkEntry.queries("pipeline_freeze_export")(spark, sfDir))
   }
+}
+
+object FreezeExportSpec {
+
+  /** Fold a freeze manifest store to per-shard totals (distinct on
+    * (batch_id, shard_id) first — replays are bit-identical, so dedup
+    * is exact). The result equals the batch-side integrity manifest's
+    * (n_docs, total_tokens, checksum) over all batches' rows. */
+  def foldManifest(spark: SparkSession, storeDir: String): DataFrame =
+    spark.read.parquet(storeDir)
+      .dropDuplicates("batch_id", "shard_id")
+      .groupBy("shard_id")
+      .agg(sum("n_docs").cast("long").as("n_docs"),
+        sum("total_tokens").cast("long").as("total_tokens"),
+        sum("checksum").cast("long").as("checksum"))
 }

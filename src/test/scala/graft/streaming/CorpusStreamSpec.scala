@@ -1,690 +1,18 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, explode, lit}
+import graft.queries.FreezeExportSpec
+import org.apache.spark.sql.functions.{col, lit}
 
+/** [[CorpusStream.freezeBatch]], the incremental data freeze that
+  * `pipeline_freeze_export` runs once per pseudo-batch. */
 class CorpusStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  test("streaming incremental dedup vs static corpus and the stream itself") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog"),
-      (1L, "completely different text about spark engines")
-    ).toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = CorpusStream.incrementalDedup(docs, corpus, "text")
-      .writeStream.format("memory").queryName("inc_dedup")
-      .outputMode("append").start()
-    try {
-      // batch 1: one corpus dup (reordering), one novel doc
-      mem.addData(
-        (10L, "dog lazy the over jumps fox brown quick the"), // dup of 0
-        (11L, "a genuinely new document about streaming joins"))
-      q.processAllAvailable()
-      // batch 2: stream-dup of 11 (reordered) + another novel doc
-      mem.addData(
-        (12L, "joins streaming about document new genuinely a"), // dup of 11
-        (13L, "yet another unseen piece of text entirely"))
-      q.processAllAvailable()
-      val got = spark.table("inc_dedup")
-        .select("doc_id").as[Long].collect().toSet
-      assert(got == Set(11L, 13L),
-        s"corpus dup 10 and stream dup 12 must be dropped: $got")
-    } finally q.stop()
-  }
-
-  test("watermark-bounded variant keeps the same survivors on in-order data") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq((0L, "aa bb cc")).toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = CorpusStream.incrementalDedup(docs, corpus, "text",
-        watermark = Some("ts" -> "10 minutes"))
-      .writeStream.format("memory").queryName("inc_dedup_wm")
-      .outputMode("append").start()
-    try {
-      def ts(min: Int) = new java.sql.Timestamp(1700000000000L + min * 60000L)
-      mem.addData((1L, ts(0), "cc bb aa"), (2L, ts(1), "dd ee ff"))
-      q.processAllAvailable()
-      mem.addData((3L, ts(2), "ff ee dd")) // stream dup of 2, in window
-      q.processAllAvailable()
-      val got = spark.table("inc_dedup_wm")
-        .select("doc_id").as[Long].collect().toSet
-      assert(got == Set(2L), s"only the novel doc survives: $got")
-    } finally q.stop()
-  }
-
-  test("streaming image dedup: decode pipeline + pHash keep-first") {
-    implicit val sqlCtx = spark.sqlContext
-    def png(f: (Int, Int) => Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(16, 16,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 16; x <- 0 until 16) img.setRGB(x, y, f(x, y))
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-    val base = png((x, _) => if (x < 8) 0x101010 else 0xf0f0f0)
-    val tweak = png((x, y) =>
-      if (x == 5 && y == 5) 0x181818
-      else if (x < 8) 0x101010 else 0xf0f0f0)
-    val inverse = png((x, _) => if (x < 8) 0xf0f0f0 else 0x101010)
-    val mem = MemoryStream[(Long, Array[Byte])]
-    val docs = mem.toDF().toDF("doc_id", "payload")
-    val q = CorpusStream.incrementalImageDedup(docs)
-      .writeStream.format("memory").queryName("img_dedup")
-      .outputMode("append").start()
-    try {
-      mem.addData((1L, base))
-      q.processAllAvailable()
-      // later batch: a visually-identical re-encode (one-pixel tweak
-      // pools to the same 64 cells) and a genuinely different image
-      mem.addData((2L, tweak), (3L, inverse))
-      q.processAllAvailable()
-      val got = spark.table("img_dedup")
-        .select("doc_id").as[Long].collect().toSet
-      assert(got == Set(1L, 3L),
-        s"the near-identical re-encode 2 must be dropped: $got")
-    } finally q.stop()
-  }
-
-  test("streaming upsert: micro-batches MERGE into the parquet " +
-    "snapshot, in-batch dups keep the highest version") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = specTempDir("upsert").toString
-    val mem = MemoryStream[(Long, Long, String)]
-    val docs = mem.toDF().toDF("k", "ver", "v")
-    val q = CorpusStream.upsertBatches(docs, s"$dir/snap", "k", "ver",
-      s"$dir/ckpt")
-    try {
-      // batch 1: keys 1,2 \u2014 key 2 arrives twice, ver 2 must win
-      mem.addData((1L, 1L, "a1"), (2L, 1L, "b1"), (2L, 2L, "b2"))
-      q.processAllAvailable()
-      val s1 = spark.read.parquet(s"$dir/snap")
-        .as[(Long, Long, String)].collect().toSet
-      assert(s1 == Set((1L, 1L, "a1"), (2L, 2L, "b2")), s1.toString)
-      // batch 2: update key 2, insert key 3; key 1 untouched
-      mem.addData((2L, 3L, "b3"), (3L, 1L, "c1"))
-      q.processAllAvailable()
-      val s2 = spark.read.parquet(s"$dir/snap")
-        .as[(Long, Long, String)].collect().toSet
-      assert(s2 == Set((1L, 1L, "a1"), (2L, 3L, "b3"), (3L, 1L, "c1")),
-        s2.toString)
-    } finally q.stop()
-  }
-
-  test("streaming upsert: crash between the two swap renames is " +
-    "recovered from the parked __old copy") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = specTempDir("upsertRec").toString
-    val snapDir = s"$dir/snap"
-    val mem = MemoryStream[(Long, Long, String)]
-    val docs = mem.toDF().toDF("k", "ver", "v")
-    val q = CorpusStream.upsertBatches(docs, snapDir, "k", "ver",
-      s"$dir/ckpt")
-    try {
-      mem.addData((1L, 1L, "a1"), (2L, 1L, "b1"))
-      q.processAllAvailable()
-      // simulate a crash exactly between `snap -> __old` and
-      // `tmp -> snap`: the live dir is gone, the complete previous
-      // snapshot is parked aside
-      val conf = spark.sparkContext.hadoopConfiguration
-      val snap = new org.apache.hadoop.fs.Path(snapDir)
-      val old = new org.apache.hadoop.fs.Path(snapDir + "__old")
-      val fs = snap.getFileSystem(conf)
-      assert(fs.rename(snap, old) && !fs.exists(snap))
-      // next batch must restore the parked copy as its merge base \u2014
-      // key 1 from the 'lost' snapshot must survive
-      mem.addData((3L, 1L, "c1"))
-      q.processAllAvailable()
-      val s = spark.read.parquet(snapDir)
-        .as[(Long, Long, String)].collect().toSet
-      assert(s == Set((1L, 1L, "a1"), (2L, 1L, "b1"), (3L, 1L, "c1")),
-        s.toString)
-      assert(!fs.exists(old), "parked copy must be cleaned up")
-    } finally q.stop()
-  }
-
-  test("streaming upsert: version ties resolve by content hash, not " +
-    "partition layout") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = specTempDir("upsertTie").toString
-    val mem = MemoryStream[(Long, Long, String)]
-    val docs = mem.toDF().toDF("k", "ver", "v")
-    val q = CorpusStream.upsertBatches(docs, s"$dir/snap", "k", "ver",
-      s"$dir/ckpt")
-    try {
-      // same key, same version, different payloads \u2014 the survivor must
-      // be the row the content-hash order picks, independent of arrival
-      mem.addData((7L, 5L, "x"), (7L, 5L, "y"))
-      q.processAllAvailable()
-      val got = spark.read.parquet(s"$dir/snap")
-        .as[(Long, Long, String)].collect().toSeq
-      assert(got.size == 1 && got.head._1 == 7L && got.head._2 == 5L)
-      import org.apache.spark.sql.functions.xxhash64
-      val expect = Seq((5L, "x"), (5L, "y")).toDF("ver", "v")
-        .select(col("v"), xxhash64(col("ver"), col("v")).as("h"))
-        .as[(String, Long)].collect().minBy(_._2)._1
-      assert(got.head._3 == expect, s"got ${got.head._3}, want $expect")
-    } finally q.stop()
-  }
-
-  test("streaming near-dedup: band keys suppress history dups and " +
-    "in-batch dups by min-id claim; store grows by content diversity") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = specTempDir("neardd").toString
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = CorpusStream.nearDedupBatches(docs, s"$dir/store",
-      s"$dir/out", s"$dir/ckpt")
-    try {
-      // batch 1: doc 2 is doc 1's token-set reorder (all bands collide);
-      // doc 3 is fresh content
-      mem.addData((1L, "alpha beta gamma delta"),
-        (2L, "delta gamma beta alpha"),
-        (3L, "zeta eta theta iota"))
-      q.processAllAvailable()
-      // batch 2: doc 4 repeats doc 1's set (HISTORY dup), doc 5 is
-      // fresh, doc 6 repeats doc 5's set (in-batch dup, larger id)
-      mem.addData((4L, "beta alpha delta gamma"),
-        (5L, "kappa lambda mu nu"),
-        (6L, "nu mu lambda kappa"))
-      q.processAllAvailable()
-      val out = spark.read.parquet(s"$dir/out/batch-0")
-        .unionByName(spark.read.parquet(s"$dir/out/batch-1"))
-        .select("doc_id").as[Long].collect().toSet
-      assert(out == Set(1L, 3L, 5L), out.toString)
-      // store holds bands x distinct contents, nothing per dropped dup
-      val store = spark.read.parquet(s"$dir/store")
-        .select("band").distinct().count()
-      assert(store == 2L * 3L, s"expected 6 distinct band keys, $store")
-    } finally q.stop()
-  }
-
-  test("streaming near-dedup: a REPLAYED batch never collides with its " +
-    "own first-attempt band append (store rows are batch-stamped)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ext.{Dedup, DedupProfile}
-    val dir = specTempDir("nearddRep").toString
-    val profile = DedupProfile.default
-    val docs0 = Seq((1L, "alpha beta gamma delta"),
-      (3L, "zeta eta theta iota")).toDF("doc_id", "text")
-    // simulate the crash window the ADVICE flagged: batch 0's first
-    // attempt appended its bands to the store, then died BEFORE the
-    // streaming checkpoint committed \u2014 on restart foreachBatch replays
-    // batch 0 against a store that already holds its own keys
-    Dedup.minhashSignatures(
-        Dedup.tokenIndex(docs0, "doc_id", "text", profile.shingleN),
-        profile.bands * profile.rowsPerBand)
-      .select(explode(
-        Dedup.bandKeyCols(profile.bands, profile.rowsPerBand)).as("band"))
-      .distinct()
-      .withColumn("batch_id", lit(0L))
-      .write.parquet(s"$dir/store")
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.nearDedupBatches(mem.toDF().toDF("doc_id", "text"),
-      s"$dir/store", s"$dir/out", s"$dir/ckpt")
-    try {
-      mem.addData((1L, "alpha beta gamma delta"),
-        (3L, "zeta eta theta iota"))
-      q.processAllAvailable()
-      val out = spark.read.parquet(s"$dir/out/batch-0")
-        .select("doc_id").as[Long].collect().toSet
-      assert(out == Set(1L, 3L),
-        s"replayed batch must re-emit its survivors, not flag itself dup: $out")
-    } finally q.stop()
-  }
-
-  test("streaming near-dedup retention window: bands older than the " +
-    "window re-admit, in-window dedup unaffected, store compacts") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = specTempDir("nearddTtl").toString
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.nearDedupBatches(mem.toDF().toDF("doc_id", "text"),
-      s"$dir/store", s"$dir/out", s"$dir/ckpt",
-      retentionBatches = Some(1L), compactEvery = 2)
-    try {
-      mem.addData((1L, "alpha beta gamma delta"))
-      q.processAllAvailable()                       // batch 0
-      mem.addData((10L, "kappa lambda mu nu"))
-      q.processAllAvailable()                       // batch 1
-      // batch 2: doc 20 repeats batch-0 content \u2014 batch 0 is OUTSIDE
-      // the 1-batch window, so it re-admits; doc 21 repeats batch-1
-      // content \u2014 in-window, still suppressed
-      mem.addData((20L, "delta gamma beta alpha"),
-        (21L, "nu mu lambda kappa"))
-      q.processAllAvailable()
-      val out2 = spark.read.parquet(s"$dir/out/batch-2")
-        .select("doc_id").as[Long].collect().toSet
-      assert(out2 == Set(20L),
-        s"out-of-window dup re-admits, in-window dup drops: $out2")
-      // compaction ran at batch-2 start (compactEvery = 2): expired
-      // batch-0 rows are physically gone, disk tracks the window
-      val ids = spark.read.parquet(s"$dir/store")
-        .select("batch_id").distinct().as[Long].collect().toSet
-      assert(ids.forall(_ >= 1L),
-        s"batch-0 rows must be compacted away, store has batches $ids")
-    } finally q.stop()
-  }
-
-  test("streaming near-dedup: a crash-replay landing EXACTLY on a " +
-    "compaction boundary (batchId % compactEvery == 0) converges \u2014 " +
-    "compaction keeps the attempt's own rows, replay still excludes them") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ext.{Dedup, DedupProfile}
-    val dir = specTempDir("nearddRepCmp").toString
-    val profile = DedupProfile.default
-    val mem = MemoryStream[(Long, String)]
-    def start() = CorpusStream.nearDedupBatches(
-      mem.toDF().toDF("doc_id", "text"), s"$dir/store", s"$dir/out",
-      s"$dir/ckpt", retentionBatches = Some(1L), compactEvery = 2)
-    val q1 = start()
-    try {
-      mem.addData((1L, "alpha beta gamma delta"))
-      q1.processAllAvailable()                      // batch 0
-      mem.addData((10L, "kappa lambda mu nu"))
-      q1.processAllAvailable()                      // batch 1
-    } finally q1.stop()
-    // simulate batch 2's FIRST ATTEMPT: bands appended, then crash
-    // before the streaming checkpoint committed. At batchId = 2 with a
-    // 1-batch retention window, batch-0 is expired, so the attempt
-    // appended bands for BOTH the fresh content (doc 20) and the
-    // re-admitted batch-0 content (doc 21)
-    def bandsOf(text: String) = Dedup.minhashSignatures(
-        Dedup.tokenIndex(Seq((99L, text)).toDF("doc_id", "text"),
-          "doc_id", "text", profile.shingleN),
-        profile.bands * profile.rowsPerBand)
-      .select(explode(
-        Dedup.bandKeyCols(profile.bands, profile.rowsPerBand)).as("band"))
-    bandsOf("zeta eta theta iota")
-      .unionByName(bandsOf("delta gamma beta alpha"))
-      .distinct().withColumn("batch_id", lit(2L))
-      .write.mode("append").parquet(s"$dir/store")
-    // restart from the SAME checkpoint: the new data replays as batch 2
-    // \u2014 the compaction boundary (2 % 2 == 0) and the replay coincide
-    mem.addData((20L, "zeta eta theta iota"),
-      (21L, "delta gamma beta alpha"),
-      (22L, "nu mu lambda kappa"))
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      // identical survivor set to a crash-free batch 2: 20 fresh, 21
-      // re-admitted (its only prior bands are expired batch-0 rows and
-      // the attempt's OWN batch-2 rows, which replay must ignore), 22
-      // suppressed by in-window batch-1 history
-      val out2 = spark.read.parquet(s"$dir/out/batch-2")
-        .select("doc_id").as[Long].collect().toSet
-      assert(out2 == Set(20L, 21L),
-        s"replay on a compaction boundary must re-emit {20, 21}: $out2")
-      // compaction DID run at the replayed batch's start: expired
-      // batch-0 rows are physically gone, the attempt's batch-2 rows
-      // survived the rewrite (in-window), no parked dir left behind
-      val ids = spark.read.parquet(s"$dir/store")
-        .select("batch_id").distinct().as[Long].collect().toSet
-      assert(ids == Set(1L, 2L),
-        s"store after boundary compaction should hold {1, 2}: $ids")
-      val fs = new org.apache.hadoop.fs.Path(s"$dir/store")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/store__old")),
-        "compaction must clean up its parked copy")
-      // post-replay store serves batch 3 correctly: batch-2 content is
-      // in-window history now, so its reorder is suppressed
-      mem.addData((30L, "iota theta eta zeta"))
-      q2.processAllAvailable()
-      val out3 = spark.read.parquet(s"$dir/out/batch-3")
-        .select("doc_id").as[Long].collect().toSet
-      assert(out3 == Set.empty[Long],
-        s"batch-2 content must suppress its reorder post-replay: $out3")
-    } finally q2.stop()
-  }
-
-  test("streaming upsert: orphaned __tmp-* side dirs from a crashed " +
-    "batch are swept on the next batch") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = specTempDir("upsertTmp").toString
-    val snapDir = s"$dir/snap"
-    // a crash before the rename leaves a fully-written side dir behind
-    val orphan = new java.io.File(snapDir + "__tmp-99")
-    assert(orphan.mkdirs())
-    java.nio.file.Files.writeString(
-      orphan.toPath.resolve("part-junk"), "leftover")
-    val mem = MemoryStream[(Long, Long, String)]
-    val q = CorpusStream.upsertBatches(mem.toDF().toDF("k", "ver", "v"),
-      snapDir, "k", "ver", s"$dir/ckpt")
-    try {
-      mem.addData((1L, 1L, "a1"))
-      q.processAllAvailable()
-      assert(!orphan.exists(), "stale __tmp dir must be deleted")
-      val s = spark.read.parquet(snapDir)
-        .as[(Long, Long, String)].collect().toSet
-      assert(s == Set((1L, 1L, "a1")), s.toString)
-    } finally q.stop()
-  }
-
-  test("streaming PII scrub: stateless redaction + per-batch counts " +
-    "match the batch expressions") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val docs = mem.toDF().toDF("doc_id", "text")
-    val q = CorpusStream.redactPii(docs, "text")
-      .writeStream.format("memory").queryName("pii_scrub")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        (1L, "mail a@b.io from 10.0.0.1"),
-        (2L, "nothing sensitive here"))
-      q.processAllAvailable()
-      val got = spark.table("pii_scrub")
-        .select("doc_id", "text", "n_email", "n_ipv4", "pii_total")
-        .as[(Long, String, Long, Long, Long)].collect()
-        .map(r => r._1 -> r).toMap
-      assert(got(1L)._2 == "mail <EMAIL> from <IP>", got(1L).toString)
-      assert(got(1L)._3 == 1L && got(1L)._4 == 1L && got(1L)._5 == 2L)
-      assert(got(2L)._2 == "nothing sensitive here" && got(2L)._5 == 0L)
-    } finally q.stop()
-  }
-
-  test("streaming language gate: frozen classifier keeps only target " +
-    "languages, store equals the batch-side gate") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ext.TextAnalysis
-    val fr = Seq("bonjour", "chateau", "fromage", "montagne", "riviere",
-      "oiseau", "jardin", "lumiere")
-    val de = Seq("schloss", "strasse", "bergwerk", "flugzeug", "schnell",
-      "zeitung", "gemuese", "fenster")
-    def mk(words: Seq[String], lang: String, base: Long) =
-      (0 until 10).map { i =>
-        (base + i, lang,
-          (0 until 16).map(j => words((i + j) % words.length))
-            .mkString(" "))
-      }
-    val train = (mk(fr, "fr", 0L) ++ mk(de, "de", 100L))
-      .toDF("doc_id", "lang", "text")
-    // live lineage on purpose: langIdGateBatches freezes it internally
-    val model = TextAnalysis.langIdTrain(train, "text", "lang")
-    val root = specTempDir("langid-gate")
-    val storeDir = root.resolve("kept").toString
-    // stream: mixed fr/de docs (disjoint ids from the seed corpus)
-    val s1 = Seq((200L, mk(fr, "fr", 0L)(3)._3), (201L, mk(de, "de", 0L)(4)._3))
-    val s2 = Seq((202L, mk(de, "de", 0L)(7)._3), (203L, mk(fr, "fr", 0L)(8)._3))
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.langIdGateBatches(
-      mem.toDF().toDF("doc_id", "text"), model, Set("fr"),
-      storeDir, root.resolve("ckpt").toString)
-    try {
-      mem.addData(s1: _*); q.processAllAvailable()
-      mem.addData(s2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val kept = spark.read.parquet(storeDir)
-    val ids = kept.select("doc_id").as[Long].collect().toSet
-    assert(ids == Set(200L, 203L),
-      s"only the French docs may survive the gate: $ids")
-    // store rows carry the prediction metadata for mixture accounting
-    assert(kept.columns.toSet ==
-      Set("doc_id", "text", "predicted", "score", "batch_id"))
-    assert(kept.select("predicted").as[String].collect().toSet == Set("fr"))
-    // differential: the store equals the batch-side gate over all docs
-    val allDocs = (s1 ++ s2).toDF("doc_id", "text")
-    val batchKept = TextAnalysis
-      .langIdLinear(allDocs, "doc_id", "text", model)
-      .filter(col("predicted") === "fr")
-      .select("doc_id").as[Long].collect().toSet
-    assert(batchKept == ids)
-  }
-
-  test("streaming wordlist gate: frozen blocklist filters per batch, " +
-    "store equals the batch-side filter; HTML extraction runs NATIVELY " +
-    "mid-stream (stateless projection + generator)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ext.TextAnalysis
-    val words = Seq("blocked").toDF("word")
-    val root = specTempDir("wl-gate")
-    val storeDir = root.resolve("kept").toString
-    val s1 = Seq((1L, "clean text here"), (2L, "very blocked content"))
-    val s2 = Seq((3L, "also clean"), (4L, "blocked blocked blocked"))
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.wordlistGateBatches(
-      mem.toDF().toDF("doc_id", "text"), words,
-      storeDir, root.resolve("ckpt").toString)
-    try {
-      mem.addData(s1: _*); q.processAllAvailable()
-      mem.addData(s2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val kept = spark.read.parquet(storeDir)
-    assert(kept.select("doc_id").as[Long].collect().toSet == Set(1L, 3L))
-    // differential vs the batch-side gate
-    val batchKept = TextAnalysis.wordlistFilter(
-        (s1 ++ s2).toDF("doc_id", "text"), "doc_id", "text", words, 0)
-      .select("doc_id").as[Long].collect().toSet
-    assert(batchKept == Set(1L, 3L))
-
-    // HtmlExtract is a pure projection + generator: it plans directly
-    // on a streaming frame (no foreachBatch needed) \u2014 the whole
-    // extract stage of the crawl ingest runs inside the stream
-    val htmlMem = MemoryStream[(Long, String)]
-    val extracted = graft.ext.HtmlExtract.extractLines(
-      htmlMem.toDF().toDF("doc_id", "html"), "doc_id", "html")
-    val outDir = root.resolve("lines").toString
-    val q2 = extracted.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", root.resolve("ckpt2").toString)
-      .start()
-    try {
-      htmlMem.addData((7L, "<p>first</p><li><a href=x>Nav</a></li>"))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val lines = spark.read.parquet(outDir)
-      .select("doc_id", "line", "link_permil")
-      .as[(Long, String, Long)].collect().toSet
-    assert(lines == Set((7L, "first", 0L), (7L, "Nav", 1000L)),
-      lines.toString)
-  }
-  test("streaming jusText extraction: per-batch classify+revise+" +
-    "reassemble equals the batch-side justextText; replayed batch " +
-    "overwrites its own partition") {
-    implicit val sqlCtx = spark.sqlContext
-    val stop = Seq("the", "a", "of", "and").toDF("word")
-    val prose = ("the cat sat of the mat and " * 12).trim
-    val root = specTempDir("jx-stream")
-    val storeDir = root.resolve("prose").toString
-    val mkDoc = (id: Long) =>
-      (id, s"<p>$prose</p><p>caption $id</p><p>$prose</p>" +
-        "<li><a href='/n'>Nav</a></li>")
-    val allBoiler = (99L, "<li><a href='/n'>Nav Only</a></li>")
-    val s1 = Seq(mkDoc(1L), allBoiler)
-    val s2 = Seq(mkDoc(2L), mkDoc(3L))
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.justextExtractBatches(
-      mem.toDF().toDF("doc_id", "html"), stop,
-      storeDir, root.resolve("ckpt").toString)
-    try {
-      mem.addData(s1: _*); q.processAllAvailable()
-      mem.addData(s2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(storeDir)
-      .select("doc_id", "n_blocks", "n_kept", "text")
-      .as[(Long, Long, Long, String)].collect().sortBy(_._1).toSeq
-    // differential vs the batch-side operator over the same docs
-    val batch = graft.ext.HtmlExtract.justextText(
-        (s1 ++ s2).toDF("doc_id", "html"), "doc_id", "html", stop)
-      .select("doc_id", "n_blocks", "n_kept", "text")
-      .as[(Long, Long, Long, String)].collect().sortBy(_._1).toSeq
-    assert(got == batch, s"stream=$got batch=$batch")
-    assert(got.map(_._1) == Seq(1L, 2L, 3L)) // all-boilerplate dropped
-    assert(got.forall { case (_, nb, nk, t) =>
-      nb == 4L && nk == 3L && t.startsWith(prose) })
-  }
-
-  test("streaming bloom decontamination gate: frozen bitmap drops " +
-    "every overlapping doc per batch, store equals the batch-side " +
-    "bloomClean, crash-replay idempotent by partition identity") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ext.Decontamination
-    val bench = Seq((1L, "the quick brown fox jumps over the lazy dog"))
-      .toDF("bid", "text")
-    val bits = Decontamination.bloomBits(bench, "text", n = 5,
-      mBits = 4096, k = 3)
-    val root = specTempDir("bloom-gate")
-    val storeDir = root.resolve("kept").toString
-    val s1 = Seq(
-      (10L, "a quick brown fox jumps over fences daily"), // 1 real hit
-      (11L, "completely unrelated words with zero shared grams here"))
-    val s2 = Seq(
-      (12L, "the quick brown fox jumps over the lazy dog"), // full copy
-      (13L, "another clean document nothing in common at all today"))
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.bloomGateBatches(
-      mem.toDF().toDF("doc_id", "text"), bits, 4096, 3, 5,
-      storeDir, root.resolve("ckpt").toString)
-    try {
-      mem.addData(s1: _*); q.processAllAvailable()
-      mem.addData(s2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val kept = spark.read.parquet(storeDir)
-    val ids = kept.select("doc_id").as[Long].collect().toSet
-    assert(ids == Set(11L, 13L),
-      s"docs 10 (one 5-gram hit) and 12 (full copy) must drop: $ids")
-    assert(kept.columns.toSet == Set("doc_id", "text", "batch_id"))
-    // differential: store == batch-side gate over the same docs
-    val batchClean = Decontamination.bloomClean(
-        (s1 ++ s2).toDF("doc_id", "text"), "text", bits, 4096, 3, 5)
-      .select("doc_id").as[Long].collect().toSet
-    assert(batchClean == ids)
-    // the two micro-batches landed as distinct batch_id partitions
-    assert(kept.select("batch_id").as[Long].collect().toSet == Set(0L, 1L))
-  }
-
-  test("streaming per-domain quota: ranks continue across micro-" +
-    "batches, only under-cap docs emit, state is one counter per " +
-    "domain; matches the batch window when arrival respects doc order") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.domainQuota(
-        mem.toDF().toDF("doc_id", "domain"), "domain", "doc_id", cap = 3L)
-      .writeStream.format("memory").queryName("dq_out")
-      .outputMode("append").start()
-    try {
-      // batch 1: a.com gets 2 (unordered arrival), b.org gets 1
-      mem.addData((12L, "a.com"), (10L, "a.com"), (20L, "b.org"))
-      q.processAllAvailable()
-      // batch 2: a.com gets 2 more (ranks 3,4 -> only 13 kept), b 1
-      mem.addData((14L, "a.com"), (13L, "a.com"), (21L, "b.org"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("dq_out")
-      .as[(Long, String, Long)].collect().toSet
-    assert(got == Set(
-      (10L, "a.com", 1L), (12L, "a.com", 2L), (13L, "a.com", 3L),
-      (20L, "b.org", 1L), (21L, "b.org", 2L)),
-      s"doc 14 (rank 4 > cap) must be dropped: $got")
-    // differential: equals the batch-side domain-cap window over the
-    // same rows (arrival order respected doc order per domain)
-    val all = Seq((12L, "a.com"), (10L, "a.com"), (20L, "b.org"),
-      (14L, "a.com"), (13L, "a.com"), (21L, "b.org"))
-      .toDF("doc_id", "domain")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("domain").orderBy("doc_id")
-    val batchKept = all
-      .withColumn("domain_rank",
-        org.apache.spark.sql.functions.row_number().over(w).cast("long"))
-      .filter(col("domain_rank") <= 3L)
-      .as[(Long, String, Long)].collect().toSet
-    assert(batchKept == got)
-  }
-
-  test("streaming C4 span dedup: batches dedup against the span store, " +
-    "within-batch keepers resolve like the batch form, and the union " +
-    "of batch outputs EQUALS one global spanDedup over all docs") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = specTempDir("span-stream")
-    val spanStore = root.resolve("spans").toString
-    val store = root.resolve("clean").toString
-    val ckpt = root.resolve("ckpt").toString
-    val b1 = Seq((1L, "a1. b1. c1. d1."), (2L, "x1. b1. c1. d1."))
-    val b2 = Seq((3L, "z. b1. c1. d1."), // span seen in batch 1
-      (4L, "u. v."), // short: passes whole
-      (5L, "n1. n2. n3. tail."), // new spans
-      (6L, "m0. n1. n2. n3.")) // dup of doc 5's first span, same batch
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.spanDedupBatches(
-      mem.toDF().toDF("doc_id", "text"), spanStore, store, ckpt)
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(store)
-      .select("doc_id", "n_sentences", "n_dropped", "kept_text")
-      .as[(Long, Long, Long, String)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    // cross-batch drop: doc 3 loses the historical span's 3 sentences
-    assert(got(3L) == ((4L, 3L, "z.")))
-    // within-batch keeper: doc 5 keeps, doc 6 drops its covered tail
-    assert(got(5L) == ((4L, 0L, "n1. n2. n3. tail.")))
-    assert(got(6L) == ((4L, 3L, "m0.")))
-    // differential: identical to the batch form over the union (ids
-    // increase across batches, so keepers coincide)
-    val batchForm = graft.ext.Dedup.spanDedup(
-        (b1 ++ b2).toDF("doc_id", "text"), "doc_id", "text")
-      .as[(Long, Long, Long, String)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(got == batchForm)
-    // the store holds each span key once (dup span registered by its
-    // keeper batch only)
-    val keys = spark.read.parquet(spanStore).select("h1", "h2")
-      .as[(Long, Long)].collect()
-    assert(keys.length == keys.distinct.length)
-  }
-
-  test("streaming C4 span dedup: re-running a micro-batch under the " +
-    "same batch_id (crash replay) leaves both stores byte-identical \u2014 " +
-    "the span store holds each key once") {
-    val root = specTempDir("span-replay")
-    val spanStore = root.resolve("spans").toString
-    val store = root.resolve("clean").toString
-    val b1 = Seq((1L, "a1. b1. c1. d1."), (2L, "x1. b1. c1. d1."))
-      .toDF("doc_id", "text")
-    val b2 = Seq((3L, "z. b1. c1. d1."), (5L, "n1. n2. n3. tail."))
-      .toDF("doc_id", "text")
-    CorpusStream.spanDedupBatch(b1, 0L, spanStore, store)
-    CorpusStream.spanDedupBatch(b2, 1L, spanStore, store)
-    def snap() = (
-      spark.read.parquet(spanStore).select("h1", "h2")
-        .as[(Long, Long)].collect().sorted.toSeq,
-      spark.read.parquet(store).select("doc_id", "kept_text")
-        .as[(Long, String)].collect().sorted.toSeq)
-    val before = snap()
-    // crash between the span-key write and the checkpoint commit:
-    // batch 1 re-runs under its old batch_id. A mode(append) key write
-    // would duplicate every batch-1 key here (the history read excludes
-    // the current batch_id, so the anti-join cannot see the first
-    // attempt); the dynamic partition overwrite replaces the partition.
-    CorpusStream.spanDedupBatch(b2, 1L, spanStore, store)
-    assert(snap() == before)
-    assert(before._1.length == before._1.distinct.length,
-      "span store must hold each (h1, h2) key exactly once")
-  }
-
-  test("store-format guards: a pre-r13 plain-append span store and a " +
-    "pre-r14 text-key store without `len` are refused with the " +
-    "upgrade instruction instead of wedging the stream or silently " +
+  test("store-format guard: a pre-r14 text-key store without `len` is " +
+    "refused with the upgrade instruction instead of silently " +
     "re-admitting historical duplicates") {
     val root = specTempDir("legacy-store")
-    // legacy span store: part files at the store ROOT (batch_id as a
-    // data column) — the pre-r13 plain-append layout
-    val spanStore = root.resolve("spans").toString
-    Seq((1L, 2L, 0L)).toDF("h1", "h2", "batch_id")
-      .write.parquet(spanStore)
-    val clean = root.resolve("clean").toString
-    val e1 = intercept[IllegalArgumentException] {
-      CorpusStream.spanDedupBatch(
-        Seq((9L, "a1. b1. c1. d1.")).toDF("doc_id", "text"),
-        1L, spanStore, clean)
-    }
-    assert(e1.getMessage.contains("pre-r13"), e1.getMessage)
     // legacy freeze text-key store: partitioned layout but no `len`
     // column — a schema-padded read would null it and the history
     // anti-join would match nothing
@@ -692,137 +20,19 @@ class CorpusStreamSpec extends SparkSpec {
     Seq((1L, 2L, 0L)).toDF("h1", "h2", "batch_id")
       .write.partitionBy("batch_id").parquet(tk)
     val dirs = Seq("sk", "fz", "mf").map(root.resolve(_).toString)
-    val e2 = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       CorpusStream.freezeBatch(
         Seq((9L, "a1. b1. c1. d1.")).toDF("doc_id", "text"), 1L,
         lit(true), Seq(graft.ext.Bpe.Merge(1, "a", "1", 1L)),
         tk, dirs(0), dirs(1), dirs(2), "s", 2)
     }
-    assert(e2.getMessage.contains("len"), e2.getMessage)
+    assert(e.getMessage.contains("len"), e.getMessage)
   }
 
-  test("streaming per-domain TOKEN budget: inclusive running cost " +
-    "continues across batches, an over-budget doc blocks everything " +
-    "after it in its domain, and the cut equals the batch window") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)]
-    val q = CorpusStream.domainTokenQuota(
-        mem.toDF().toDF("doc_id", "domain", "cost"),
-        "domain", "doc_id", "cost", budget = 100L)
-      .writeStream.format("memory").queryName("dtq_out")
-      .outputMode("append").start()
-    try {
-      // batch 1 (unordered arrival): a.com spends 40+30=70 of 100;
-      // b.org's FIRST doc alone blows the budget (120 > 100) \u2014 dropped,
-      // and its cost still counts (the batch window sums all rows)
-      mem.addData((12L, "a.com", 30L), (10L, "a.com", 40L),
-        (20L, "b.org", 120L))
-      q.processAllAvailable()
-      // batch 2: a.com doc 13 fits exactly (70+30=100, inclusive cap);
-      // doc 14 overflows; b.org doc 21 is small but arrives AFTER the
-      // blown budget \u2014 no skip-ahead, stays dropped
-      mem.addData((14L, "a.com", 1L), (13L, "a.com", 30L),
-        (21L, "b.org", 5L))
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.table("dtq_out")
-      .as[(Long, String, Long, Long)].collect().toSet
-    assert(got == Set(
-      (10L, "a.com", 40L, 40L), (12L, "a.com", 30L, 70L),
-      (13L, "a.com", 30L, 100L)),
-      s"14 overflows, 20 blows the budget, 21 may not skip ahead: $got")
-    // differential: equals the batch-side inclusive-prefix-sum window
-    // over the same rows
-    val all = Seq((12L, "a.com", 30L), (10L, "a.com", 40L),
-      (20L, "b.org", 120L), (14L, "a.com", 1L), (13L, "a.com", 30L),
-      (21L, "b.org", 5L)).toDF("doc_id", "domain", "cost")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("domain").orderBy("doc_id")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val batchKept = all
-      .withColumn("domain_cum",
-        org.apache.spark.sql.functions.sum(col("cost")).over(w))
-      .filter(col("domain_cum") <= 100L)
-      .as[(Long, String, Long, Long)].collect().toSet
-    assert(batchKept == got)
-    intercept[IllegalArgumentException] {
-      CorpusStream.domainTokenQuota(all, "domain", "doc_id", "cost", 0L)
-    }
-  }
-
-  test("streaming JSONL ingest: typed rows to the corpus store, " +
-    "malformed and identity-less lines to the quarantine with the " +
-    "raw line preserved \u2014 never fail, never silently drop") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = specTempDir("jsonl-ingest")
-    val store = root.resolve("corpus").toString
-    val quar = root.resolve("quarantine").toString
-    val good1 = """{"doc_id": 1, "text": "alpha", "lang": "en", "source": "s0"}"""
-    val noId = """{"text": "orphan", "lang": "en", "source": "s0"}"""
-    val broken = """{"doc_id": 2, "text": "unterminated"""
-    val good2 = """{"doc_id": 3, "text": "beta", "lang": "fr", "source": "s1"}"""
-    val mem = MemoryStream[String]
-    val q = CorpusStream.jsonlIngestBatches(
-      mem.toDF().toDF("line"), store, quar,
-      root.resolve("ckpt").toString)
-    try {
-      mem.addData(good1, noId); q.processAllAvailable()
-      mem.addData(broken, good2); q.processAllAvailable()
-    } finally q.stop()
-    val corpus = spark.read.parquet(store)
-    assert(corpus.select("doc_id").as[Long].collect().toSet ==
-      Set(1L, 3L))
-    assert(corpus.filter(col("doc_id") === 3L).select("lang")
-      .as[String].head() == "fr")
-    val raws = spark.read.parquet(quar).select("raw")
-      .as[String].collect().toSet
-    assert(raws == Set(noId, broken), s"raw lines must survive: $raws")
-  }
-
-  test("streaming integrity manifest: per-batch rows FOLD to the " +
-    "batch-side manifest over the union \u2014 order-independent checksums " +
-    "compose across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val root = specTempDir("manifest")
-    val store = root.resolve("m").toString
-    val b1 = Seq((1L, "alpha words here"), (2L, "beta text body"))
-    val b2 = Seq((3L, "gamma content line"), (4L, "delta tail piece"))
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.manifestBatches(
-      mem.toDF().toDF("doc_id", "text"), store,
-      root.resolve("ckpt").toString, seed = "e1", numShards = 4)
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val folded = CorpusStream.foldManifest(spark, store)
-      .select("shard_id", "n_docs", "total_tokens", "checksum")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val batchSide = graft.ops.ShardShuffle.integrityManifest(
-        (b1 ++ b2).toDF("doc_id", "text"), "doc_id", "text",
-        graft.ext.TextAnalysis.nTokens(col("text")), "e1", 4)
-      .select("shard_id", "n_docs", "total_tokens", "checksum")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(folded == batchSide, s"folded=$folded batch=$batchSide")
-    assert(folded.toSeq.map(_._2).sum == 4L) // every doc accounted for
-  }
-
-  test("streaming stores survive an EMPTY first batch: a batch with " +
-    "no spans (all-short docs) or nothing past the gate writes a " +
-    "part-file-less store, and the next batch's history read must " +
-    "not die on schema inference") {
+  test("freeze stores survive an EMPTY first batch: a batch with " +
+    "nothing past the gate writes part-file-less stores, and the next " +
+    "batch's history read must not die on schema inference") {
     val root = specTempDir("freeze-empty")
-    // span-dedup store: batch 0 all-short (no 3-sentence spans)
-    val spanStore = root.resolve("spans").toString
-    val clean = root.resolve("clean").toString
-    CorpusStream.spanDedupBatch(
-      Seq((1L, "u. v.")).toDF("doc_id", "text"), 0L, spanStore, clean)
-    // would throw 'Unable to infer schema' before the explicit schema
-    CorpusStream.spanDedupBatch(
-      Seq((2L, "a1. b1. c1. d1.")).toDF("doc_id", "text"), 1L,
-      spanStore, clean)
-    assert(spark.read.parquet(clean).count() == 2L)
     // freeze: batch 0 entirely gated out -> empty text-key AND
     // span-key stores; batch 1 must proceed and freeze normally
     val merges = Seq(graft.ext.Bpe.Merge(1, "a", "1", 1L))
@@ -847,13 +57,11 @@ class CorpusStreamSpec extends SparkSpec {
     "every store byte-identical") {
     import graft.ext.{Bpe, Dedup, TextAnalysis}
     import org.apache.spark.sql.functions.{concat_ws, length, min, size}
-    implicit val sqlCtx = spark.sqlContext
     val root = specTempDir("freeze-stream")
     val textStore = root.resolve("textkeys").toString
     val spanStore = root.resolve("spankeys").toString
     val store = root.resolve("frozen").toString
     val manifest = root.resolve("manifest").toString
-    val ckpt = root.resolve("ckpt").toString
     val b1 = Seq(
       (1L, "a1. b1. c1. d1."), // keeper of span (b1,c1,d1)
       (2L, "bad \ufffd doc. x. y. z."), // gated out up front
@@ -868,15 +76,11 @@ class CorpusStreamSpec extends SparkSpec {
     // train) \u2014 both sides encode under the SAME table
     val merges = Bpe.trainLocal(
       Bpe.wordFreq((b1 ++ b2).toDF("doc_id", "text"), "text"), 6)
-    val mem = MemoryStream[(Long, String)]
-    val q = CorpusStream.freezeBatches(
-      mem.toDF().toDF("doc_id", "text"), gate, merges,
-      textStore, spanStore, store, manifest, ckpt,
-      seed = "fz1", numShards = 4)
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
+    // one call per micro-batch, as the graded export runs it
+    Seq(b1, b2).zipWithIndex.foreach { case (b, batchId) =>
+      CorpusStream.freezeBatch(b.toDF("doc_id", "text"), batchId.toLong,
+        gate, merges, textStore, spanStore, store, manifest, "fz1", 4)
+    }
     def frozenSnap() = spark.read.parquet(store)
       .select("doc_id", "text", "n_tokens")
       .as[(Long, String, Long)].collect().toSet
@@ -902,7 +106,7 @@ class CorpusStreamSpec extends SparkSpec {
     assert(got.find(_._1 == 11L).get._2 == "z9.")
     // folded manifest equals the batch integrity manifest over the
     // frozen union, token-weighted
-    val folded = CorpusStream.foldManifest(spark, manifest)
+    val folded = FreezeExportSpec.foldManifest(spark, manifest)
       .select("shard_id", "n_docs", "total_tokens", "checksum")
       .as[(Long, Long, Long, Long)].collect().toSet
     val batchSide = graft.ops.ShardShuffle.integrityManifest(
@@ -916,68 +120,17 @@ class CorpusStreamSpec extends SparkSpec {
     def keysSnap(dir: String) = spark.read.parquet(dir)
       .select("h1", "h2").as[(Long, Long)].collect().sorted.toSeq
     val before = (frozenSnap(), keysSnap(textStore), keysSnap(spanStore),
-      CorpusStream.foldManifest(spark, manifest)
+      FreezeExportSpec.foldManifest(spark, manifest)
         .as[(Long, Long, Long, Long)].collect().toSet)
     CorpusStream.freezeBatch(b2.toDF("doc_id", "text"), 1L, gate,
       merges, textStore, spanStore, store, manifest, "fz1", 4)
     val after = (frozenSnap(), keysSnap(textStore), keysSnap(spanStore),
-      CorpusStream.foldManifest(spark, manifest)
+      FreezeExportSpec.foldManifest(spark, manifest)
         .as[(Long, Long, Long, Long)].collect().toSet)
     assert(after == before)
     assert(before._2.distinct.size == before._2.size,
       "text-key store holds each key once")
     assert(before._3.distinct.size == before._3.size,
       "span-key store holds each key once")
-  }
-
-  test("streaming mixture gate: frozen rate plan, stateless selection " +
-    "equals the batch predicate, replayed batch stays idempotent") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ext.TextAnalysis
-    // plan: src0 keeps ~40%, src1 everything
-    val plan = Seq(("src0", 400L), ("src1", 1000L))
-      .toDF("source", "rate_permil")
-    val root = specTempDir("mix-gate")
-    val storeDir = root.resolve("kept").toString
-    val s1 = (0L until 40L).map(i =>
-      (i, if (i % 2 == 0) "src0" else "src1", s"doc number $i"))
-    val s2 = (40L until 80L).map(i =>
-      (i, if (i % 2 == 0) "src0" else "src1", s"doc number $i"))
-    val mem = MemoryStream[(Long, String, String)]
-    val q = graft.streaming.CorpusStream.mixtureGateBatches(
-      mem.toDF().toDF("doc_id", "source", "text"), plan,
-      storeDir, root.resolve("ckpt").toString)
-    try {
-      mem.addData(s1: _*); q.processAllAvailable()
-      mem.addData(s2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val kept = spark.read.parquet(storeDir)
-    assert(kept.columns.toSet ==
-      Set("doc_id", "source", "text", "batch_id"))
-    val ids = kept.select("doc_id").as[Long].collect().toSet
-    // differential: the stream's union equals the batch predicate
-    val all = (s1 ++ s2).toDF("doc_id", "source", "text")
-    val batchIds = all.join(plan, Seq("source"))
-      .filter(TextAnalysis.tokenHash31(
-        org.apache.spark.sql.functions.concat(lit("mix#"),
-          col("doc_id").cast("string"))) % 1000L < col("rate_permil"))
-      .select("doc_id").as[Long].collect().toSet
-    assert(ids == batchIds && ids.nonEmpty && ids.size < 80)
-    // src1 keeps everything, src0 genuinely thins
-    val bySrc = kept.groupBy("source").count()
-      .as[(String, Long)].collect().toMap
-    assert(bySrc("src1") == 40L && bySrc.getOrElse("src0", 0L) < 40L)
-    // replay idempotency: re-running batch 1's content as a NEW query
-    // instance with the same store overwrites its partition, not
-    // appends (dynamic overwrite contract)
-    val mem2 = MemoryStream[(Long, String, String)]
-    val q2 = graft.streaming.CorpusStream.mixtureGateBatches(
-      mem2.toDF().toDF("doc_id", "source", "text"), plan,
-      storeDir, root.resolve("ckpt2").toString)
-    try { mem2.addData(s1: _*); q2.processAllAvailable() }
-    finally q2.stop()
-    val after = spark.read.parquet(storeDir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(after == ids, "replay changed the kept set")
   }
 }

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 /** Runs `body` and returns its result with the shuffle records each
   * result task of its jobs read, one entry per task: how evenly a
   * shuffle dealt the rows a final stage works on. Jobs are told apart
-  * by a local-property tag, as in [[CountJobs]]. */
+  * by a local-property tag, as in [[graftx.CountJobs]]. */
 object ResultTaskReads {
   private val Tag = "graft.test.readsTag"
 
