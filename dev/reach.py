@@ -86,6 +86,36 @@ ALLOW = {
         "reserved-id table mirrors Bpe.SftSpecials position for position",
     "graft.ext.Sft.UnkId":
         "reserved-id table mirrors Bpe.SftSpecials position for position",
+    # spec-pinned API that no verb calls yet: each still needs a caller
+    # or a deletion (ROADMAP item 8)
+    "graft.ext.Sketches.Kmv.jaccardEstimate":
+        "per-sketch form of joinKeyOverlap's KMV set algebra; SketchesSpec",
+    "graft.ext.Sketches.Kmv.intersectionEstimate":
+        "per-sketch form of joinKeyOverlap's KMV set algebra; SketchesSpec",
+    "graft.ops.ZOrder.layout":
+        "z-order write layout over zkey; ZOrderSpec checks disjoint ranges",
+    "graft.ext.Robots.sitemaps":
+        "host-level Sitemap directives; FrontierSpec",
+    "graft.ext.Similarity.semanticDedupPairs":
+        "audit view of the pairs semanticDedupSurvivors drops; "
+        "SimilaritySpec checks it against brute force",
+    "graft.ext.Similarity.ivfPqAdd":
+        "encode new vectors against a frozen IVF-PQ model; SimilaritySpec",
+    "graft.ext.TextAnalysis.regexTokens":
+        "raw-text word/punctuation pre-tokenizer; TextAnalysisSpec",
+    "graft.ext.TextAnalysis.logisticScore":
+        "scores every doc, tokenless ones at margin 0; TextAnalysisSpec",
+    "graft.ops.RangeJoin.pointInIntervalAuto":
+        "pointInInterval with a median-span width; RangeJoinSpec",
+    "graft.ops.ShardShuffle.repartitionByShard":
+        "one-exchange write shape of the shard shuffle; ShardShuffleSpec",
+    "graft.ops.Transfer.syncPlan":
+        "source-EXCEPT-destination catalog diff for a sync verb; "
+        "SkewAndSinksSpec",
+    "graft.ops.Transfer.compact":
+        "small-file rewrite of one parquet directory; SkewAndSinksSpec",
+    "graft.ops.Transfer.compactionPlan":
+        "whole-catalog merge-group plan via packIntoBins; TransferSpec",
 }
 
 DEF_RE = re.compile(

@@ -121,6 +121,15 @@ object Robots {
       .agg(max("delay").as("crawl_delay_sec"))
   }
 
+  /** Host-level `Sitemap` URLs (group-independent per the protocol).
+    * Returns (host, sitemap_url), distinct. */
+  def sitemaps(robots: DataFrame, hostCol: String = "host",
+      contentCol: String = "robots_txt"): DataFrame =
+    groupedDirectives(robots, hostCol, contentCol, Seq("sitemap"))
+      .filter(col("value") =!= "")
+      .select(col("host"), col("value").as("sitemap_url"))
+      .distinct()
+
   /** Does `path` match the RFC pattern in `pattern`? Prefix semantics,
     * `*` wildcard, trailing-`$` end anchor. Literal prefixes (no
     * metacharacter) stay a codegen'd `startswith`. */

@@ -425,6 +425,18 @@ object Similarity {
       .select("id", "cluster_id")
   }
 
+  /** The qualifying same-cluster near-dup pairs behind
+    * [[semanticDedupSurvivors]]: (id_a, id_b, cluster_id, score) with
+    * id_a < id_b and quantized cosine >= `threshold`. Exposed separately
+    * so audits can inspect WHAT was deduplicated, not just what
+    * survived. */
+  def semanticDedupPairs(
+      emb: DataFrame, threshold: Double,
+      nCentroids: Int = 16, kmeansIters: Int = 2,
+      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
+    pairsWithinClusters(ivfBuild(emb, nCentroids, kmeansIters = kmeansIters,
+      idCol = idCol, embCol = embCol).assign, threshold)
+
   /** Cosine-threshold pairs restricted to one cluster — an equi-join on
     * `cluster_id`, never a cartesian. */
   private def pairsWithinClusters(assign: DataFrame,
@@ -734,6 +746,35 @@ object Similarity {
     e.unpersist()
     IvfPqModel(ivf.centroids, books, codes, m, dims, nProbe, cache,
       idCol, embCol)
+  }
+
+  /** Incremental index maintenance: encode NEW vectors into an existing
+    * [[IvfPqModel]] without retraining — assign each to its nearest
+    * coarse centroid, residual-encode with the FROZEN codebooks, return
+    * code rows with the same schema as `model.codes` (append them to
+    * the cluster-partitioned store, or union for an in-memory model).
+    * This is how a production ANN index absorbs a stream of fresh
+    * embeddings: encoding a batch costs two broadcast joins and zero
+    * shuffles of the existing corpus; retraining happens only when
+    * drift accumulates. Deterministic: re-adding the build corpus
+    * reproduces `model.codes` exactly (spec-pinned).
+    *
+    * PRECONDITION when unioning the result with `model.codes` (or a
+    * store read) for serving: ids must be DISJOINT from the build
+    * corpus — an id present in both contributes two encodings, which
+    * double-counts ADC partial sums in the same cluster or returns the
+    * id twice from different clusters. For re-emitted ids (recomputed
+    * embeddings) keep one encoding per id, the newest, before the
+    * union. */
+  def ivfPqAdd(model: IvfPqModel, newEmb: DataFrame,
+      idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
+    val spark = newEmb.sparkSession
+    import spark.implicits._
+    val e = quantized(newEmb, idCol, embCol)
+    val resid = residuals(assignTo(e, model.centroids), model.centroids)
+    encodeSlices(subspaceSlices(resid, model.m, model.dims,
+        extraCols = Seq("cluster_id")),
+      model.books.as[(Long, Long, Seq[Long])].collect().toSeq).drop("qs")
   }
 
   /** Residual per vector, r = q - c by exact long subtraction, as

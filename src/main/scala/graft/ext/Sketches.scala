@@ -59,8 +59,9 @@ object Sketches {
     * per-partition top-k + driver merge — never a single-partition
     * window), and Beyer et al.'s KMV set algebra over the merged
     * bottom-k yields Jaccard, union-size and intersection-size
-    * estimates (exact when both key sets fit under k), in DataFrame
-    * form so a SQL oracle replays it. Returns one row:
+    * estimates (exact when both key sets fit under k). Mirrors
+    * [[Kmv.jaccardEstimate]]/[[Kmv.intersectionEstimate]] in
+    * DataFrame form so a SQL oracle replays it. Returns one row:
     * (n_union_kept, kth_union, n_both, est_jaccard, est_union,
     * est_intersection). */
   def joinKeyOverlap(a: DataFrame, keyA: String, b: DataFrame,
@@ -137,6 +138,26 @@ object Sketches {
     def estimate: Double =
       if (values.size < k) values.size.toDouble
       else (k - 1).toDouble * M.toDouble / values.last.toDouble
+
+    /** Jaccard estimate |A∩B|/|A∪B| from two sketches (Beyer et al.'s
+      * K-min-values set algebra): over the bottom-k' of the UNION
+      * (k' = |merged|), count hashes present in BOTH input sketches.
+      * Exact when both sets fit under k; deterministic always (same
+      * hashes => same estimate on any engine). Empty∪empty => 0. */
+    def jaccardEstimate(other: Kmv): Double = {
+      val m = merge(other)
+      if (m.values.isEmpty) 0.0
+      else {
+        val a = values.toSet
+        val b = other.values.toSet
+        m.values.count(h => a(h) && b(h)).toDouble / m.values.size
+      }
+    }
+
+    /** Intersection-size estimate: Jaccard × union estimate — both from
+      * the same merged sketch, so the algebra is self-consistent. */
+    def intersectionEstimate(other: Kmv): Double =
+      jaccardEstimate(other) * merge(other).estimate
   }
 
   /** Mutable bounded aggregation buffer behind [[KmvAggregator]].

@@ -20,6 +20,16 @@ object TextAnalysis {
   /** Whitespace tokenization (the corpus is space-separated tokens). */
   def tokens(text: Column): Column = split(text, " ")
 
+  /** A BPE-ish fallback tokenizer for raw text: splits on word/punct
+    * boundaries like a byte-pair pre-tokenizer would. */
+  def regexTokens(text: Column): Column =
+    // contiguous letters+digits | single punctuation — close to GPT-2's
+    // pre-tokenizer classes, without lookahead (unsupported in RE2/ICU).
+    // call_function keeps the real Column (toString-interpolated SQL
+    // breaks on qualified/lambda-bound columns).
+    call_function("regexp_extract_all", text,
+      lit("[\\p{L}\\p{N}]+|[^\\p{L}\\p{N}\\s]"), lit(0))
+
   /** Stable 31-bit token hash: first 15 hex chars of md5, parsed base-16,
     * reduced mod 2^31-1. Reproducible in any SQL engine. */
   def tokenHash31(tok: Column): Column =
@@ -1176,6 +1186,25 @@ object TextAnalysis {
     spark.createDataFrame(
         (0 until dim).map(b => (b.toLong, w(b))))
       .toDF("b", "w_fp")
+  }
+
+  /** APPLY step: margin, probability, and accept flag per document
+    * against a [[logisticTrainOn]] weight table (collected to a literal
+    * array — the model is dim-bounded driver state, the same carve-out
+    * as the training loop itself). Documents with no tokens carry
+    * margin 0 (p = 0.5). Returns (idCol, margin_fp, prob, accept). */
+  def logisticScore(df: org.apache.spark.sql.DataFrame, idCol: String,
+      textCol: String, model: org.apache.spark.sql.DataFrame,
+      dim: Int = 1024): org.apache.spark.sql.DataFrame = {
+    val margins = logisticScoreOn(
+        groupedFeatures(df, idCol, textCol, None, dim), model, dim)
+      .select(col("id"), col("margin_fp"))
+    df.select(col(idCol)).distinct()
+      .join(margins.withColumnRenamed("id", idCol), Seq(idCol), "left_outer")
+      .na.fill(0L, Seq("margin_fp"))
+      .withColumn("prob", lit(1.0d) /
+        (lit(1.0d) + exp(-col("margin_fp") / 1000000.0d)))
+      .withColumn("accept", col("margin_fp") >= 0L)
   }
 
   /** MAP-ONLY scoring over a pre-built [[logisticFeatures]] frame:

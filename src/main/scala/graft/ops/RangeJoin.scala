@@ -62,6 +62,26 @@ object RangeJoin {
       .drop("__pb", "__ib")
   }
 
+  /** [[pointInInterval]] with a STATS-DRIVEN width: samples the interval
+    * spans and uses their median (clamped to >= 1), so each interval
+    * covers <= 2 buckets while buckets stay selective — the same
+    * inspect-then-choose pattern as broadcast-vs-shuffle decisions. Runs
+    * one small aggregation job over `intervals` before planning. */
+  def pointInIntervalAuto(
+      points: DataFrame, pointCol: String,
+      intervals: DataFrame, startCol: String, endCol: String,
+      maxBucketsPerInterval: Long = 100000L): DataFrame = {
+    val spans = intervals
+      .filter(col(endCol) > col(startCol))
+      .select((col(endCol) - col(startCol)).cast("double").as("span"))
+    val width = spans.stat.approxQuantile("span", Array(0.5), 0.01) match {
+      case Array(m) if m >= 1.0 => m.toLong
+      case _ => 1L // no non-empty intervals: width is irrelevant
+    }
+    pointInInterval(points, pointCol, intervals, startCol, endCol,
+      width, maxBucketsPerInterval)
+  }
+
   /** Joins rows of `left` to rows of `right` whose half-open ranges
     * OVERLAP: [s1,e1) ∩ [s2,e2) ≠ ∅, i.e. s1 < e2 AND s2 < e1. Both
     * sides explode to covered buckets and equi-join on bucket id; a pair

@@ -53,6 +53,17 @@ object ShardShuffle {
       .withColumn(shardCol, pmod(h, lit(numShards.toLong)))
   }
 
+  /** The physical write shape: one partition per shard, rows in epoch
+    * order within each — `df.write.partitionBy(shardCol)` (or a plain
+    * per-partition writer) then emits exactly `numShards` run-length
+    * files in permuted order. One exchange, one sort, both bounded by
+    * shard size rather than corpus size. */
+  def repartitionByShard(df: DataFrame, idCol: String, seed: String,
+      numShards: Int): DataFrame =
+    assign(df, idCol, seed, numShards)
+      .repartition(numShards, col("shard_id"))
+      .sortWithinPartitions(col("epoch_key"), col(idCol))
+
   /** Per-shard manifest: counts, token totals, and the first/last
     * document of each shard's epoch order (deterministic via the
     * tie-broken key). This is the bounded metadata a trainer needs to

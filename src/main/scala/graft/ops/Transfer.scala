@@ -114,6 +114,89 @@ object Transfer {
     }
   }
 
+  /** Catalog diff for incremental sync: files present in `src` but absent
+    * from (or differently sized in) `dst`, by relative `name` — the
+    * SURVEY.md §2.4 "source EXCEPT dest" primitive. A left-anti/outer
+    * join on the two catalog scans: one shuffle keyed on name, no data
+    * movement until the resulting manifest is executed. */
+  def syncPlan(srcCatalog: DataFrame, dstCatalog: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val s = srcCatalog.select(col("path").as("src_path"), col("name"),
+      col("size").as("src_size"))
+    val d = dstCatalog.select(col("name"), col("size").as("dst_size"))
+    s.join(d, Seq("name"), "left_outer")
+      .filter(col("dst_size").isNull || col("dst_size") =!= col("src_size"))
+      .select(col("src_path"), col("name"), col("src_size"),
+        when(col("dst_size").isNull, lit("missing")).otherwise(lit("changed"))
+          .as("reason"))
+  }
+
+  /** Small-file compaction: rewrite a parquet directory into
+    * ~`targetBytes`-sized files (ceil(total/target) output files).
+    * The 100 TB maintenance primitive for streaming-ingest landing zones
+    * (FileStreamSink and per-batch uploads accrete small files that
+    * degrade scan parallelism and NameNode/listing pressure). Returns
+    * (filesBefore, filesAfter); (0, 0) when there is nothing to compact.
+    *
+    * The swap is TWO renames (dir -> bak, tmp -> dir), not atomic:
+    * readers racing the swap can see a missing directory for an instant,
+    * so run compaction in the pipeline's maintenance window. Every
+    * rename result is checked; on failure the original is rolled back
+    * and the backup is never deleted until the new directory is in
+    * place. A leftover backup from a crashed prior run aborts the
+    * operation (manual recovery beats silently picking a side). */
+  def compact(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(path)
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    if (parts.isEmpty) return (0, 0)
+    val bak = new Path(path.getParent, path.getName + "__compact_bak")
+    if (fs.exists(bak)) throw new IllegalStateException(
+      s"stale backup $bak from a previous compact run — recover it first")
+    val totalBytes = parts.map(_.getLen).sum
+    val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+    val tmp = new Path(path.getParent, path.getName + "__compact_tmp")
+    spark.read.parquet(dir).repartition(nOut)
+      .write.mode("overwrite").parquet(tmp.toString)
+    if (!fs.rename(path, bak)) throw new java.io.IOException(
+      s"compact: could not move $path aside; directory untouched")
+    if (!fs.rename(tmp, path)) {
+      // roll the original back before failing — never leave dir missing
+      fs.rename(bak, path)
+      throw new java.io.IOException(
+        s"compact: could not install $tmp; original restored")
+    }
+    fs.delete(bak, true)
+    val after = fs.listStatus(path)
+      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    (parts.length, after)
+  }
+
+  /** Distributed compaction PLAN over an arbitrary file catalog: assign
+    * every file to a merge group of ~`targetBytes` by cumulative size in
+    * path order ([[PrefixSum.packIntoBins]] — range partition, one
+    * scan of the sorted partitions, a ≤numParts-value driver offset
+    * sum). Where
+    * [[compact]] physically rewrites ONE directory it can list on the
+    * driver, this plans a whole-catalog maintenance pass: 10^8 catalog
+    * rows stay distributed end to end, and each group is an independent
+    * rewrite task. Oversized files get their own group(s); groups are
+    * contiguous in path order so merged files stay range-readable. */
+  def compactionPlan(catalog: DataFrame,
+      targetBytes: Long = 128L * 1024 * 1024): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    PrefixSum.packIntoBins(
+        catalog.select(col("path"), col("size")),
+        weight = col("size"), budget = targetBytes,
+        orderBy = Seq(col("path")), binCol = "group_id")
+      .select(col("path"), col("size"), col("start_offset"),
+        col("group_id"))
+  }
+
   /** Copies one file, creating the destination's parent directories.
     * Without `overwrite` an existing destination raises
     * [[BlueprintError.DestinationExists]]; on a local destination the

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Morton (Z-order) keys — the multi-dimensional data-LAYOUT operator.
@@ -43,4 +43,15 @@ object ZOrder {
     (0 until bits).map { i =>
       s"((($a >> $i) & 1) << ${2 * i}) + ((($b >> $i) & 1) << ${2 * i + 1})"
     }.mkString("(", " + ", ")")
+
+  /** Lay a frame out in z-order: range-partition on the key (each
+    * output file covers one contiguous z-range = a bounded tile in both
+    * dims), sort within partitions so row groups inherit the bound.
+    * `partitions` ~ target file count; the z column is kept for
+    * inspection and dropped by writers that don't want it. */
+  def layout(df: DataFrame, a: Column, b: Column, bits: Int,
+      partitions: Int, zCol: String = "z_key"): DataFrame =
+    df.withColumn(zCol, zkey(a, b, bits))
+      .repartitionByRange(partitions, col(zCol))
+      .sortWithinPartitions(zCol)
 }

@@ -230,6 +230,24 @@ class SimilaritySpec extends SparkSpec {
     assert(got == Set((0L, 1L, 1000L)), got.toString)
   }
 
+  test("semanticDedup: pairs are same-cluster brute-force pairs; " +
+    "survivors + dropped partition the corpus") {
+    val brute = Similarity.bruteForcePairs(emb, 0.35)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val pairs = Similarity.semanticDedupPairs(emb, 0.35)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs.subsetOf(brute),
+      s"semantic pairs must be exact pairs too: ${pairs.diff(brute).take(3)}")
+    val survivors = Similarity.semanticDedupSurvivors(emb, 0.35)
+      .select("id").as[Long].collect().toSet
+    val dropped = pairs.map(_._2)
+    val all = emb.select("vec_id").as[Long].collect().toSet
+    assert(survivors.intersect(dropped).isEmpty)
+    assert(survivors ++ dropped == all)
+    // every dropped id has a surviving-or-dropped LOWER id witness
+    assert(dropped.forall(d => pairs.exists { case (a, b) => b == d && a < d }))
+  }
+
   test("semanticDedup drops an exact planted duplicate (same cluster, cos 1)") {
     val v0 = emb.filter(col("vec_id") === 0L)
       .select("embedding").as[Seq[Float]].collect()(0)
@@ -354,6 +372,34 @@ class SimilaritySpec extends SparkSpec {
       .toSet
     assert(topKDefs == Set("topK", "topKMulti"),
       s"top-k siblings are back in $src: ${topKDefs -- Set("topK", "topKMulti")}")
+  }
+
+  test("ivfPqAdd: new vectors encode against the frozen model — " +
+    "re-adding the build corpus reproduces its codes, and a grown index " +
+    "serves the added vectors") {
+    val even = emb.filter(col("vec_id") % 2 === 0)
+    val odd = emb.filter(col("vec_id") % 2 === 1)
+    val model = Similarity.ivfPqBuild(even)
+    // determinism: the add path IS the build's encode path
+    val readd = Similarity.ivfPqAdd(model, even)
+      .orderBy("id", "sub").collect().toSeq
+    val built = model.codes.orderBy("id", "sub").collect().toSeq
+    assert(readd == built,
+      "re-encoding the build corpus must reproduce the built codes")
+    // grow the index with the odd half; a query must now retrieve odd
+    // neighbours it could not before
+    val grown = model.copy(
+      codes = model.codes.unionByName(Similarity.ivfPqAdd(model, odd)))
+    val gotGrown = Similarity
+      .topKMulti(grown.copy(nProbe = 16), emb, Seq(0L), 10)
+      .select("vec_id").as[Long].collect().toSet
+    val gotOld = Similarity
+      .topKMulti(model.copy(nProbe = 16), emb, Seq(0L), 10)
+      .select("vec_id").as[Long].collect().toSet
+    assert(gotOld.forall(_ % 2 == 0), "old index knows only even vectors")
+    assert(gotGrown.exists(_ % 2 == 1),
+      s"grown index must surface added odd vectors in top-10: $gotGrown")
+    spark.catalog.clearCache()
   }
 
   test("IVF-PQ encode is a MAP-ONLY projection over the cached slice " +

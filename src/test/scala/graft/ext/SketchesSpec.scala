@@ -83,6 +83,33 @@ class SketchesSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("set algebra: exact Jaccard/intersection below k, close above") {
+    def sketchOf(tokens: Seq[String], k: Int = 256): Sketches.Kmv =
+      tokens.toDF("t").select(TextAnalysis.tokenHash31(col("t")))
+        .as[Long].collect()
+        .foldLeft(Sketches.Kmv(k, Vector.empty))(_ insert _)
+    // small sets (both fit under k): estimates are EXACT
+    val a = sketchOf((1 to 30).map(i => s"tok-$i"))
+    val b = sketchOf((21 to 50).map(i => s"tok-$i"))
+    assert(a.jaccardEstimate(b) == 10.0 / 50.0)
+    assert(a.intersectionEstimate(b) == 10.0)
+    assert(a.jaccardEstimate(b) == b.jaccardEstimate(a), "symmetric")
+    // disjoint and identical edge cases
+    val c = sketchOf((100 to 120).map(i => s"other-$i"))
+    assert(a.jaccardEstimate(c) == 0.0)
+    assert(a.jaccardEstimate(a) == 1.0)
+    assert(Sketches.Kmv(16, Vector.empty)
+      .jaccardEstimate(Sketches.Kmv(16, Vector.empty)) == 0.0)
+    // large overlapping sets (beyond k): estimate within tolerance
+    val big1 = sketchOf((1 to 2000).map(i => s"big-$i"), k = 128)
+    val big2 = sketchOf((1001 to 3000).map(i => s"big-$i"), k = 128)
+    val trueJ = 1000.0 / 3000.0
+    val estJ = big1.jaccardEstimate(big2)
+    assert(math.abs(estJ - trueJ) < 0.15, s"J est $estJ vs $trueJ")
+    val estI = big1.intersectionEstimate(big2)
+    assert(math.abs(estI - 1000.0) / 1000.0 < 0.5, s"∩ est $estI vs 1000")
+  }
+
   test("duplicate values do not perturb the sketch") {
     val agg = new Sketches.KmvAggregator(8)
     val a = Seq(5L, 3L, 9L, 3L, 5L, 1L).foldLeft(agg.zero)(agg.reduce)

@@ -24,6 +24,12 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got == 419982666956583591L % 2147483647L)
   }
 
+  test("regexTokens splits words and punctuation BPE-style") {
+    val got = Seq("Hello, world! x2").toDF("t")
+      .select(TextAnalysis.regexTokens(col("t"))).as[Seq[String]].collect()(0)
+    assert(got == Seq("Hello", ",", "world", "!", "x2"))
+  }
+
   test("quality score is in [0,1] and favors diverse long docs") {
     val df = Seq(
       (1L, "the " + (1 to 99).map(i => s"tok$i").mkString(" ")), // diverse
@@ -656,11 +662,11 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   /** The gate's training: per-doc features of (doc_id, text, y), then
-    * the GD loop (8 iterations at learning rate 0.5). */
+    * the GD loop (8 iterations by default, at learning rate 0.5). */
   private def logisticTrain(df: org.apache.spark.sql.DataFrame,
-      dim: Int = 1024): org.apache.spark.sql.DataFrame =
+      dim: Int = 1024, iters: Int = 8): org.apache.spark.sql.DataFrame =
     TextAnalysis.logisticTrainOn(TextAnalysis.logisticFeatures(
-      df, "doc_id", "text", Some("y"), dim), dim, iters = 8, lrPermil = 500)
+      df, "doc_id", "text", Some("y"), dim), dim, iters, lrPermil = 500)
 
   test("logisticTrain separates planted labels and is partition-stable") {
     val s2 = spark
@@ -683,6 +689,19 @@ class TextAnalysisSpec extends SparkSpec {
     val w1 = m.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val w2 = m2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(w1 == w2)
+  }
+
+  test("logisticScore: tokenless docs default to margin 0, p=0.5") {
+    val s2 = spark
+    import s2.implicits._
+    val train = Seq((0L, "good", true), (1L, "bad", false))
+      .toDF("doc_id", "text", "y")
+    val m = logisticTrain(train, dim = 16, iters = 4)
+    val out = TextAnalysis.logisticScore(
+        Seq((9L, "")).toDF("doc_id", "text"), "doc_id", "text", m,
+        dim = 16).head()
+    assert(out.getAs[Long]("margin_fp") == 0L)
+    assert(out.getAs[Double]("prob") == 0.5d)
   }
 
   test("logisticTrain rejects bad arguments and empty corpora") {

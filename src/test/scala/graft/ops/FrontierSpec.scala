@@ -28,6 +28,19 @@ class FrontierSpec extends SparkSpec {
       "c.example" -> 9.0)) // d unparseable, e other-agent-only: absent
   }
 
+  test("sitemaps: group-independent, distinct, full URL value kept") {
+    val robots = Seq(
+      ("a.example", "Sitemap: https://a.example/s1.xml\n" +
+        "User-agent: *\nDisallow: /\n" +
+        "Sitemap: https://a.example/s1.xml\n" +
+        "Sitemap: https://a.example/s2.xml"))
+      .toDF("host", "robots_txt")
+    val got = Robots.sitemaps(robots).collect()
+      .map(_.getString(1)).sorted.toSeq
+    assert(got == Seq("https://a.example/s1.xml",
+      "https://a.example/s2.xml"))
+  }
+
   test("plan: waves sequence per host, slots honor per-host delay") {
     val urls = Seq(
       (0L, 30L, "a.example", "https://a.example/x"),

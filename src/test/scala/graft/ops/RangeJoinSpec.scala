@@ -47,6 +47,24 @@ class RangeJoinSpec extends SparkSpec {
     assert(got == Set(1L, 2L, 3L))
   }
 
+  test("auto-width matches an explicit-width join") {
+    val rnd = new scala.util.Random(67)
+    val points = (1 to 300).map(i => (i.toLong, rnd.nextInt(2000).toLong))
+      .toDF("pid", "p")
+    val intervals = (1 to 40).map { i =>
+      val s = rnd.nextInt(2000).toLong
+      (i.toLong, s, s + 20 + rnd.nextInt(80).toLong)
+    }.toDF("iid", "s", "e")
+    val auto = RangeJoin.pointInIntervalAuto(points, "p", intervals, "s", "e")
+      .select("pid", "iid").as[(Long, Long)].collect().toSet
+    val explicit = RangeJoin.pointInInterval(points, "p", intervals, "s", "e", 60L)
+      .select("pid", "iid").as[(Long, Long)].collect().toSet
+    assert(auto == explicit)
+    // degenerate: no non-empty intervals
+    val none = Seq((1L, 5L, 5L)).toDF("iid", "s", "e")
+    assert(RangeJoin.pointInIntervalAuto(points, "p", none, "s", "e").count() == 0)
+  }
+
   test("intervalOverlap differential vs naive, exactly once per pair") {
     val rnd = new scala.util.Random(47)
     def mk(n: Int, pre: String) = (1 to n).map { i =>

@@ -47,6 +47,18 @@ class ShardShuffleSpec extends SparkSpec {
       s"skewed shards: ${sizes.mkString(",")}")
   }
 
+  test("repartitionByShard: numShards partitions, epoch-ordered within") {
+    val out = ShardShuffle.repartitionByShard(docs(4), "doc_id", "epoch-1", 8)
+    assert(out.rdd.getNumPartitions == 8)
+    val perPartitionSorted = out.select("epoch_key")
+      .mapPartitions { it =>
+        val keys = it.map(_.getLong(0)).toVector
+        Iterator.single(keys == keys.sorted)
+      }(org.apache.spark.sql.Encoders.scalaBoolean)
+      .collect()
+    assert(perPartitionSorted.forall(identity))
+  }
+
   test("manifest first/last docs are the epoch-order endpoints") {
     val asg = ShardShuffle.assign(docs(4), "doc_id", "epoch-1", 16)
       .select("doc_id", "epoch_key", "shard_id").collect()
@@ -70,7 +82,7 @@ class ShardShuffleSpec extends SparkSpec {
     }
   }
 
-  test("plan contract: assignment is map-only") {
+  test("plan contracts: assignment map-only, write shape one exchange") {
     val s2 = spark
     import s2.implicits._
     // no fixture repartition here: the contract is that ASSIGN adds no
@@ -81,5 +93,10 @@ class ShardShuffleSpec extends SparkSpec {
     asg.collect()
     assert(graft.ops.PlanChecks.shuffleExchanges(asg) == 0,
       asg.queryExecution.executedPlan.toString)
+    val rep = ShardShuffle.repartitionByShard(flat, "doc_id",
+      "epoch-1", 8)
+    rep.collect()
+    assert(graft.ops.PlanChecks.shuffleExchanges(rep) == 1,
+      rep.queryExecution.executedPlan.toString)
   }
 }

@@ -45,6 +45,22 @@ class SkewAndSinksSpec extends SparkSpec {
       want.map(r => (r(0), r(1), r(2))))
   }
 
+  test("syncPlan finds missing and changed files only") {
+    import graft.catalog.FileCatalog
+    val a = specTempDir("sync-a")
+    val b = specTempDir("sync-b")
+    Files.writeString(a.resolve("same.txt"), "xx")
+    Files.writeString(b.resolve("same.txt"), "xx")
+    Files.writeString(a.resolve("changed.txt"), "longer content")
+    Files.writeString(b.resolve("changed.txt"), "short")
+    Files.writeString(a.resolve("missing.txt"), "new")
+    val plan = Transfer.syncPlan(
+      FileCatalog.list(spark, a.toUri.toString),
+      FileCatalog.list(spark, b.toUri.toString))
+      .select("name", "reason").as[(String, String)].collect().toMap
+    assert(plan == Map("changed.txt" -> "changed", "missing.txt" -> "missing"))
+  }
+
   test("approx_count_distinct tracks exact within 5% on orders") {
     val o = graft.Tables.orders(spark, sfDir)
     val exact = o.select(countDistinct("o_custkey")).as[Long].collect()(0)
@@ -68,5 +84,25 @@ class SkewAndSinksSpec extends SparkSpec {
         col("p").getItem(1).as("n"))
     assert(back.orderBy("k").as[(Int, String)].collect().toSeq ==
       df.orderBy("r_regionkey").as[(Int, String)].collect().toSeq)
+  }
+
+  test("compact rewrites a many-file parquet dir preserving data") {
+    val dir = specTempDir("compact").resolve("t").toString
+    graft.Tables.orders(spark, sfDir).repartition(24).write.parquet(dir)
+    val before = graft.Tables.load(spark, sfDir, "orders").count()
+    val (nBefore, nAfter) = Transfer.compact(spark, dir, targetBytes = 1L << 30)
+    assert(nBefore >= 24 && nAfter == 1, s"$nBefore -> $nAfter")
+    assert(spark.read.parquet(dir).count() == before)
+  }
+
+  test("compact: empty dir is a no-op; stale backup aborts") {
+    val empty = specTempDir("compact-empty")
+    assert(Transfer.compact(spark, empty.toString) == (0, 0))
+    val dir = specTempDir("compact-stale").resolve("t")
+    graft.Tables.region(spark, sfDir).write.parquet(dir.toString)
+    Files.createDirectory(dir.getParent.resolve("t__compact_bak"))
+    intercept[IllegalStateException] {
+      Transfer.compact(spark, dir.toString)
+    }
   }
 }

@@ -192,4 +192,38 @@ class TransferSpec extends SparkSpec {
     }
     assert(err.exitCode == 200)
   }
+
+  test("compactionPlan: empty catalog plans zero groups") {
+    import spark.implicits._
+    val empty = Seq.empty[(String, Long)].toDF("path", "size")
+    assert(Transfer.compactionPlan(empty, 100L).count() == 0)
+  }
+
+  test("compactionPlan: contiguous size-bounded merge groups") {
+    import spark.implicits._
+    // 1 oversized file + many small ones, shuffled input order
+    val files = (1 to 40).map(i => (f"dir/part-$i%03d", 30L)) :+
+      ("dir/part-900-huge", 450L)
+    val cat = scala.util.Random.shuffle(files).toDF("path", "size")
+      .repartition(5)
+    val plan = Transfer.compactionPlan(cat, targetBytes = 100L)
+      .orderBy("path").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(3)))
+    // groups are contiguous in path order
+    val groups = plan.map(_._3)
+    assert(groups.sameElements(groups.sorted), groups.mkString(","))
+    // every group of small files stays within budget; the oversized
+    // file sits in its own group(s)
+    val bySize = plan.groupBy(_._3).values
+    for (g <- bySize if g.forall(_._2 < 100L))
+      assert(g.map(_._2).sum <= 100L + 30L, g.mkString(","))
+    val hugeGroup = plan.find(_._1.endsWith("huge")).get._3
+    assert(plan.count(_._3 == hugeGroup) == 1,
+      "an oversized file must not share its group")
+    // deterministic under any partitioning
+    val again = Transfer.compactionPlan(cat.repartition(2), 100L)
+      .orderBy("path").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(3)))
+    assert(plan.sameElements(again))
+  }
 }

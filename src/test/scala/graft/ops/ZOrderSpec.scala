@@ -46,6 +46,24 @@ class ZOrderSpec extends SparkSpec {
     assert(viaSql == viaCol)
   }
 
+  test("layout: range partitions carry disjoint z-ranges (file stats " +
+    "would prune)") {
+    val grid = (for { a <- 0 until 64; b <- 0 until 64 }
+      yield (a.toLong, b.toLong)).toDF("a", "b")
+    val laid = ZOrder.layout(grid, col("a"), col("b"), bits = 6,
+      partitions = 8)
+    val ranges = laid
+      .select(org.apache.spark.sql.functions.spark_partition_id()
+        .as("pid"), col("z_key"))
+      .groupBy("pid").agg(min("z_key").as("lo"), max("z_key").as("hi"))
+      .as[(Int, Long, Long)].collect().sortBy(_._2)
+    assert(ranges.length > 1)
+    ranges.sliding(2).foreach { case Array(x, y) =>
+      assert(x._3 < y._2,
+        s"partition z-ranges must be disjoint: $x vs $y")
+    }
+  }
+
   /** Rows the parquet reader actually MATERIALIZES for `pred` over
     * `path` — the FileSourceScan's own numOutputRows metric, i.e. rows
     * surviving footer-stat (row-group/page) skipping, measured BELOW
@@ -96,10 +114,11 @@ class ZOrderSpec extends SparkSpec {
     val zDir = s"$root/z"; val linDir = s"$root/lin"
     // DETERMINISTIC aligned tiling for the measurement: a global sort
     // collapsed to one writer task, cut into exact 1024-row files.
-    // A sampled repartitionByRange would derive its boundaries from the
-    // session's RDD-id history — in the full suite the draw shifts,
-    // files straddle extra tiles, and the skip counts drift over the
-    // assertion thresholds (observed 7194 → 8202).
+    // ZOrder.layout's repartitionByRange is the right production path
+    // (covered by the disjoint-ranges test) but its sampled boundaries
+    // derive from the session's RDD-id history — in the full suite the
+    // draw shifts, files straddle extra tiles, and the skip counts
+    // drift over the assertion thresholds (observed 7194 → 8202).
     grid.select(ZOrder.zkey(col("a"), col("b"), 7).as("z_key"),
         col("a"), col("b"))
       .orderBy("z_key").coalesce(1)
